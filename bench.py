@@ -329,14 +329,12 @@ def main() -> None:
     # raw, noisier run); any other core count gates against its own per-cpu
     # record, because a CPU-bound query is legitimately slower at 8 cores
     # than the committed 32-core warm and comparing across counts would
-    # trip the 2x gate on every such entry.
+    # trip the 2x gate on every such entry. A first run at another core
+    # count has no record of its own and runs ungated.
     prior_warm: dict[str, float] = {}
-    candidates = [
-        os.path.join(bench_dir, f"bench_sf{sf_tag}_c{cpus_tag}.json"),
-        os.path.join(bench_dir, f"bench_sf{sf_tag}.json"),
-    ]
+    candidates = [os.path.join(bench_dir, f"bench_sf{sf_tag}_c{cpus_tag}.json")]
     if cpus_tag == "32":
-        candidates.reverse()
+        candidates.insert(0, os.path.join(bench_dir, f"bench_sf{sf_tag}.json"))
     for cand in candidates:
         if os.path.exists(cand):
             try:

@@ -74,6 +74,70 @@ def test_single_reducer_matches_many(engine):
     assert engine.get_result(job1) == engine.get_result(job2)
 
 
+def _group_jobs(spark, group):
+    """Job ids of ``group`` once the status store has seen every event."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return sorted(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize(
+    "job_type,reducer_num",
+    [("wordcount", 1), ("wordcount", 2), ("wordcount", 4), ("empty-map", 2)],
+)
+def test_launch_is_one_spark_job(engine, spark, job_type, reducer_num):
+    """A launch fires exactly one Spark job of at most two stages (map,
+    then groupByKey + reduce): no emptiness probe, no sortByKey count/sample
+    jobs. The job group is the caller's, carried into the job thread."""
+    sc = spark.sparkContext
+    group = f"one-job-{job_type}-{reducer_num}"
+    sc.setJobGroup(group, group)
+    try:
+        job_id = engine.launch("oj", job_type, KVS, mapper_num=2, reducer_num=reducer_num)
+        assert engine.wait(job_id, timeout=60) is JobStage.FINISHED
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description",
+                     "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    jobs = _group_jobs(spark, group)
+    assert len(jobs) == 1, jobs
+    assert len(sc.statusTracker().getJobInfo(jobs[0]).stageIds) <= 2
+
+
+def test_empty_map_never_calls_reduce(spark):
+    """With no map output there is no group, so a raising reduce_fn is
+    never called: the job returns [] and reaches FINISHED
+    (master.cc:624-627)."""
+    from tmapreduce_spark.registry import JobRegistry, empty_map
+
+    def bad_reduce(key, values):
+        raise RuntimeError("reduce must not run")
+
+    reg = JobRegistry()
+    reg.register("empty-bad-reduce", empty_map, bad_reduce)
+    engine = MapReduceEngine(spark, registry=reg)
+    job_id = engine.launch("e", "empty-bad-reduce", KVS, mapper_num=2, reducer_num=3)
+    assert engine.wait(job_id, timeout=60) is JobStage.FINISHED
+    assert engine.get_result(job_id) == []
+
+
+@pytest.mark.parametrize("job_type", ["identity", "wordcount+c", "invertedindex"])
+def test_partition_counts_beyond_data_match_single_reducer(engine, job_type):
+    """More reduce partitions than distinct keys (some reduce partitions get
+    nothing) and more mappers than payload pairs must both give the
+    reducer_num=1 result."""
+    kvs = [("d2", "b a b"), ("d1", "a c"), ("d3", "c a")]
+    runs = [(1, 1), (2, 64), (len(kvs) + 5, 2)]
+    ids = [engine.launch("p", job_type, kvs, mapper_num=m, reducer_num=r)
+           for m, r in runs]
+    for i in ids:
+        assert engine.wait(i, timeout=60) is JobStage.FINISHED
+    results = [engine.get_result(i) for i in ids]
+    assert results[0]
+    assert results[1] == results[0]
+    assert results[2] == results[0]
+
+
 def test_validation_errors(engine):
     """master.cc:530-535 / gateway.cc:15-51 admission rules."""
     with pytest.raises(LaunchError):
@@ -189,7 +253,7 @@ def test_async_launch_observable_lifecycle(spark):
     deadline = _time.time() + 10
     while engine.stage_of(job_id) is JobStage.INIT and _time.time() < deadline:
         _time.sleep(0.01)
-    assert engine.stage_of(job_id) in (JobStage.MAPPING, JobStage.MERGING, JobStage.REDUCING)
+    assert engine.stage_of(job_id) is JobStage.MAPPING
     with pytest.raises(ResultError, match="not finished"):
         engine.get_result(job_id, token="t")
 
@@ -218,10 +282,9 @@ def test_async_launch_error_surfaces(spark):
 
 
 def test_failed_reduce_unpersists_cached_rdd(spark):
-    """A reduce-stage failure must not leak the cached map RDD: the
-    try/finally around the post-cache pipeline guarantees unpersist() even
-    when the collect raises, so failed jobs can't accumulate pinned executor
-    memory across a long-lived session."""
+    """A reduce-stage failure must not leave a persisted RDD behind: the
+    launch path persists nothing at all, so failed jobs can't accumulate
+    pinned executor memory across a long-lived session."""
     from tmapreduce_spark.registry import JobRegistry, charcount_map
 
     def bad_reduce(key, values):
@@ -237,6 +300,16 @@ def test_failed_reduce_unpersists_cached_rdd(spark):
     job_id = engine.launch("bad", "bad-reduce", KVS, token="t")
     with pytest.raises(Exception, match="boom in reduce"):
         engine.wait(job_id, timeout=60)
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
+
+
+def test_finished_launch_persists_no_rdd(engine, spark):
+    """Success-path twin of the failed-reduce check: a finished launch
+    leaves the session's persisted-RDD count where it was."""
+    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    job_id = engine.launch("ok", "charcount", KVS, mapper_num=2, reducer_num=2)
+    assert engine.wait(job_id, timeout=60) is JobStage.FINISHED
+    assert engine.get_result(job_id) == expected_charcount(KVS)
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
 
 

@@ -10,6 +10,7 @@ take the fallback.
 from __future__ import annotations
 
 import numpy as np
+import pytest
 
 from tests.conftest import SF_SMOKE
 
@@ -78,6 +79,18 @@ def test_residue_bucket_expr_non64_width_takes_fallback(spark):
     want = _buckets_of(Q).tolist()
     for (i, _), w in zip(rows, want):
         assert got[i] == w, (i, got[i], w)
+
+
+def test_residue_bucket_expr_rejects_dim_below_seven():
+    """Below width 7 some residue class has no term, which would render
+    an empty ``()`` sum; the builder refuses with a Python error instead of
+    leaving a Catalyst parse failure for plan time."""
+    from tmapreduce_spark.functions.similarity import residue_bucket_expr
+
+    for dim in (0, 1, 6):
+        with pytest.raises(ValueError, match="dim >= 7"):
+            residue_bucket_expr("qe", dim, "0")
+    assert "()" not in residue_bucket_expr("qe", 7, "0")
 
 
 def test_jw_char_prune_never_drops_a_match():

@@ -240,7 +240,10 @@ def residue_bucket_expr(col: str, dim: int, fallback: str) -> str:
     code, far under the Janino 64 KB limit that forbids the naive
     8 x dim-term unroll (r9 lesson). A size() CASE keeps ``fallback`` (the
     HOF form) for any other width; both branches are pure int64 and
-    bit-identical (property-tested against _buckets_of)."""
+    bit-identical (property-tested against _buckets_of). ``dim`` must be at
+    least 7 so that every residue class has a term."""
+    if dim < 7:
+        raise ValueError(f"residue_bucket_expr needs dim >= 7, got {dim}")
     f = [(3 * m) % 7 - 3 for m in range(7)]
     g = [
         "(" + " + ".join(f"{col}[{i}]" for i in range(m, dim, 7)) + ")"

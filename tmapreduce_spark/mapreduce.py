@@ -1,10 +1,10 @@
 """Reference-parity MapReduce job API on Spark.
 
 Implements the reference's complete engine-executed dataflow (SURVEY.md §2A
-items 1-10) as one Spark lineage:
+items 1-10) as ONE Spark job of two stages per launch:
 
     validate -> sort-by-key -> contiguous partition -> flatMap(map_fn)
-      -> groupByKey -> key-sort -> flatMap(reduce_fn) -> ordered collect
+      -> groupByKey -> flatMap(reduce_fn) -> collect -> driver key-sort
 
 Reference semantics preserved (file:line into /root/reference/):
 
@@ -18,17 +18,20 @@ Reference semantics preserved (file:line into /root/reference/):
   (``src/tmapreduce/job.cc:10-43``).
 - **Map**: per-pair flatMap of the user function (C wrapper loop,
   ``src/tmapreduce/wrapper.cc:10-31``).
-- **Shuffle/Merge**: group values by key, key-sorted output
-  (``src/tmapreduce/job.cc:45-66``); within-key value order is
+- **Shuffle/Merge**: group values by key (``src/tmapreduce/job.cc:45-66``)
+  in the job's only shuffle; within-key value order is
   (map-subjob index, emission order) — reproduced here by tagging each map
   output with ``(partition_index, emission_seq)`` and sorting the group
   (``job.cc:51-59`` ordering contract, SURVEY §1.4).
-- **Empty-shuffle short-circuit**: zero map output pairs skips reduce and
-  finishes with an empty result (``master.cc:624-627``).
+- **Empty-shuffle short-circuit**: zero map output pairs form no group, so
+  reduce never runs and the result is empty (``master.cc:624-627``).
 - **Reduce**: per-group flatMap of the user function
-  (``src/tmapreduce/wrapper.cc:33-55``).
-- **Finish**: results concatenated in key-sorted subjob order into one flat
-  string array (``src/tmapreduce/job.cc:68-77``).
+  (``src/tmapreduce/wrapper.cc:33-55``), emitting one ``(key, outputs)`` pair
+  per group.
+- **Finish**: the collected groups are sorted by key on the driver and
+  concatenated into one flat string array (``src/tmapreduce/job.cc:68-77``,
+  a master-side merge in the reference too). Nothing is cached or persisted.
+  No emptiness probe and no ``sortByKey`` run, so a launch is one Spark job.
 - **Result lifecycle**: per-job bearer token checked at get_result
   (``master.cc:691-693``, ``src/tmapreduce/job.h:93``); finished results GC'd
   after 3600 s (``master.cc:449-463``, ``master.h:27``).
@@ -71,7 +74,9 @@ JOB_RESULT_TIMEOUT_SECOND = 3600.0
 class JobStage(Enum):
     """Mirror of the reference's job stage machine for observability
     (``/root/reference/src/tmapreduce/job.h:26-39``); Spark collapses the
-    wait/partition states into its own DAG scheduling."""
+    wait/partition states into its own DAG scheduling. ``launch`` runs map,
+    merge and reduce inside one Spark job, so it reports only MAPPING and
+    FINISHED; MERGING and REDUCING are kept for the reference's vocabulary."""
 
     INIT = "INIT"
     MAPPING = "MAPPING"
@@ -129,9 +134,10 @@ class MapReduceEngine:
         responds as soon as the job is admitted (``gateway.cc:131-157``,
         ``master.cc:489-514``) and the client polls get_result until the
         master stops answering "job not finished"
-        (``example/word_count/word_count_client.cc:54``). Stage transitions
-        (MAPPING/MERGING/REDUCING, ``job.h:26-39``) are observable from other
-        threads via :meth:`stage_of`; use :meth:`wait` to block."""
+        (``example/word_count/word_count_client.cc:54``). The stage
+        (``job.h:26-39``) is observable from other threads via
+        :meth:`stage_of`: MAPPING while the launch's single Spark job runs,
+        FINISHED after it; use :meth:`wait` to block."""
         self._validate(job_type, kvs, mapper_num, reducer_num)
         jt = self.registry.get(job_type)  # unknown type rejected at admission
         with self._lock:
@@ -229,39 +235,22 @@ class MapReduceEngine:
 
             mapped = mapped.mapPartitionsWithIndex(run_combine)
 
-        # Cache before the emptiness probe: isEmpty() would otherwise run the
-        # map (and combine) stage once for the probe and again for the real
-        # shuffle — wasteful, and a non-deterministic user map_fn could make
-        # the probe disagree with the run.  try/finally so a failing
-        # groupByKey/collect or user reduce_fn can't leak the cached RDD for
-        # the session (failed jobs would otherwise pin executor memory).
-        mapped = mapped.cache()
-        try:
-            # Empty-shuffle short-circuit (master.cc:624-627).
-            if mapped.isEmpty():
-                job.stage = JobStage.FINISHED
-                job.results = []
-                job.finish_time = time.time()
-                return
+        # Merge (job.cc:45-66) and Reduce in ONE shuffle: groupByKey, then
+        # reduce each group in place. Each group yields a single
+        # (key, outputs) pair so Finish can order whole groups by key.
+        def run_reduce(kv):
+            k, tagged = kv
+            values = [v for _p, _s, v in sorted(tagged, key=lambda t: (t[0], t[1]))]
+            return [(k, list(reduce_fn(k, values)))]
 
-            job.stage = JobStage.MERGING
-            # Merge: group by key + global key sort (job.cc:45-66). sortByKey's
-            # range partitioner yields key-ordered partitions, so collect()
-            # concatenates in key order == Job::Finish (job.cc:68-77).
-            grouped = mapped.groupByKey(numPartitions=max(reducer_num, 1)).sortByKey(
-                numPartitions=max(reducer_num, 1)
-            )
-
-            job.stage = JobStage.REDUCING
-
-            def run_reduce(kv):
-                k, tagged = kv
-                values = [v for _p, _s, v in sorted(tagged, key=lambda t: (t[0], t[1]))]
-                return list(reduce_fn(k, values))
-
-            job.results = grouped.flatMap(run_reduce).collect()
-        finally:
-            mapped.unpersist()
+        reduced = mapped.groupByKey(numPartitions=reducer_num).flatMap(run_reduce)
+        # Finish (job.cc:68-77) on the driver, which holds the whole result by
+        # contract (job.h:86-88): keys are unique after groupByKey, so sorting
+        # the collected groups by key and concatenating them gives the
+        # reference's key-ordered flat array. No map output means no group,
+        # so reduce_fn never runs (master.cc:624-627).
+        groups = sorted(reduced.collect(), key=lambda kv: kv[0])
+        job.results = [out for _k, outs in groups for out in outs]
         job.stage = JobStage.FINISHED
         job.finish_time = time.time()
 
