@@ -269,7 +269,7 @@ HEADLINE = [
 
 def main() -> None:
     from tmapreduce_spark.catalog import build_catalog
-    from tmapreduce_spark.session import get_spark
+    from tmapreduce_spark.session import get_spark, noop_run
 
     spark = get_spark(app_name="tmapreduce-bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -289,26 +289,9 @@ def main() -> None:
 
     def run_pass(tag: str, repeats: int = 1) -> dict[str, float]:
         times: dict[str, float] = {}
-        jsc = spark.sparkContext._jsc
         for name in bench_set:
-            spec = catalog[name]
-            best = float("inf")
-            for _ in range(repeats):
-                before = set(jsc.getPersistentRDDs().keySet().toArray())
-                t0 = time.perf_counter()
-                spec.fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-                best = min(best, time.perf_counter() - t0)
-                # free this query's localCheckpoint RDDs OUTSIDE the timed
-                # window — the iterative graph/dedup entries each pin a few
-                # checkpointed RDDs, and across 300+ queries x 3 executions
-                # the accumulation raises executor GC pressure enough to
-                # inflate the WARM pass past cold (observed on the r06
-                # record). Blocking unpersist (r06 advice): a non-blocking
-                # release bleeds into the NEXT query's timed window.
-                m = jsc.getPersistentRDDs()
-                for rid in list(m.keySet().toArray()):
-                    if rid not in before:
-                        m.get(rid).unpersist(True)
+            fn = catalog[name].fn
+            best = min(noop_run(spark, fn, SF_DIR) for _ in range(repeats))
             times[name] = round(best, 3)
             print(f"# {tag} {name}: {times[name]:.3f}s", file=sys.stderr)
         return times

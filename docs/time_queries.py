@@ -19,7 +19,6 @@ from __future__ import annotations
 import argparse
 import os
 import sys
-import time
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -34,7 +33,7 @@ def main() -> int:
 
     from tmapreduce_spark.catalog import build_catalog
     from tmapreduce_spark.plans.explain import physical_plan
-    from tmapreduce_spark.session import get_spark
+    from tmapreduce_spark.session import get_spark, noop_run
 
     spark = get_spark(app_name="tmapreduce-time-queries")
     spark.sparkContext.setLogLevel("ERROR")
@@ -62,16 +61,7 @@ def main() -> int:
             for rid in list(m.keySet().toArray()):
                 m.get(rid).unpersist(True)
         spark.sparkContext.setJobDescription(f"time: {name}")
-        reps = []
-        for _ in range(args.reps):
-            before = set(jsc.getPersistentRDDs().keySet().toArray())
-            t0 = time.perf_counter()
-            spec.fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-            reps.append(time.perf_counter() - t0)
-            m = jsc.getPersistentRDDs()
-            for rid in list(m.keySet().toArray()):
-                if rid not in before:
-                    m.get(rid).unpersist(True)
+        reps = [noop_run(spark, spec.fn, SF_DIR) for _ in range(args.reps)]
         spark.sparkContext.setJobDescription(None)
         rep_s = " ".join(f"{t:.3f}" for t in reps)
         print(f"{name}: min={min(reps):.3f}  reps=[{rep_s}]")

@@ -4,6 +4,7 @@ can never drift again (r04 verdict #3)."""
 
 from __future__ import annotations
 
+import json
 import re
 from pathlib import Path
 
@@ -91,7 +92,6 @@ def _folded_record() -> dict:
     just re-folded), else walk git history for the most recent committed blob
     that does. Fall back to the working-tree file only if git is unavailable.
     """
-    import json
     import subprocess
 
     path = SURVEY.parent / ".benchmarks" / "bench_sf0.1.json"
@@ -158,30 +158,86 @@ def test_driver_enumeration_rotation_invariants():
     """The catalog's driver enumeration order IS the verification-budget
     policy (r09 verdict #2): never-driver-checked entries first (so new
     operators get rows before anything else), then covered entries from
-    STALEST green round to freshest (so coverage debt drains oldest-first),
-    with the terminal no-oracle sketches dead last. Pin the three
-    invariants so a refactor can't silently break the rotation."""
-    from tmapreduce_spark.catalog import (
-        _COVERED_ROUND,
-        _NO_ORACLE_TERMINAL,
-        build_catalog,
-    )
+    STALEST green round to freshest (so coverage debt drains oldest-first).
+    Pin the three invariants so a refactor can't silently break the
+    rotation."""
+    from tmapreduce_spark.catalog import _last_green_round, build_catalog
 
     names = list(build_catalog())
-    term = [n for n in names if n in _NO_ORACLE_TERMINAL]
-    if term:  # empty since r11 (the three sketches became oracle-backed)
-        assert names[-len(term):] == term, "terminal sketches must come last"
-    body = names[: len(names) - len(term)]
-    classes = [0 if n not in _COVERED_ROUND else 1 for n in body]
+    verified = _last_green_round()
+    classes = [0 if n not in verified else 1 for n in names]
     assert classes == sorted(classes), "never-covered must precede covered"
-    covered_rounds = [_COVERED_ROUND[n] for n in body if n in _COVERED_ROUND]
+    covered_rounds = [verified[n] for n in names if n in verified]
     assert covered_rounds == sorted(covered_rounds), (
         "covered entries must enumerate stalest-first"
     )
     # the current window: every entry the driver samples next round is
     # either brand new or came from the two stalest cohorts
     head = names[:50]
-    stale = [_COVERED_ROUND.get(n) for n in head]
-    assert all(r is None or r <= min(
-        rr for rr in covered_rounds if rr is not None
-    ) + 1 for r in stale)
+    stale = [verified.get(n) for n in head]
+    assert all(r is None or r <= min(covered_rounds) + 1 for r in stale)
+
+
+def _write_record(records_dir: Path, rnd: str, rows: dict[str, bool]) -> None:
+    record = {
+        name: {"rows_match": True, "schema_match": True, "hash_match": green}
+        for name, green in rows.items()
+    }
+    (records_dir / f"CORRECTNESS_{rnd}.json").write_text(json.dumps(record))
+
+
+def test_driver_order_follows_synthetic_records(tmp_path):
+    """The window is derived from whatever CORRECTNESS_r*.json records sit in
+    the records directory, so each new round rotates it."""
+    from tmapreduce_spark.catalog import (
+        QuerySpec,
+        _driver_priority_order,
+        _last_green_round,
+    )
+
+    def order(records_dir):
+        return list(_driver_priority_order(catalog, _last_green_round(records_dir)))
+
+    catalog = {
+        n: QuerySpec(fn=None, oracle="select 1", category=cat)
+        for n, cat in [("a1", "a"), ("a2", "a"), ("b1", "b"), ("b2", "b"), ("c1", "c")]
+    }
+    # no records at all: category round-robin over the whole catalog
+    assert _last_green_round(tmp_path / "missing") == {}
+    assert order(tmp_path) == ["a1", "b1", "c1", "a2", "b2"]
+
+    _write_record(tmp_path, "r01", {"a1": True, "a2": True, "b1": True})
+    _write_record(tmp_path, "r02", {"b2": True})
+    assert order(tmp_path) == ["c1", "a1", "a2", "b1", "b2"]
+
+    # a new round moves its green entries to the back
+    _write_record(tmp_path, "r03", {"a1": True, "c1": True})
+    assert order(tmp_path) == ["a2", "b1", "b2", "a1", "c1"]
+
+    # an entry whose newest row is red goes back to the never-verified front
+    _write_record(tmp_path, "r04", {"c1": False})
+    assert "c1" not in _last_green_round(tmp_path)
+    assert order(tmp_path) == ["c1", "a2", "b1", "b2", "a1"]
+
+    # rounds order as numbers: r10 is newer than r9 (names sort the other way)
+    _write_record(tmp_path, "r9", {"b1": False})
+    _write_record(tmp_path, "r10", {"b1": True})
+    (tmp_path / "CORRECTNESS_r10_c8.json").write_text("not a record")
+    assert _last_green_round(tmp_path)["b1"] == 10
+    assert order(tmp_path)[-1] == "b1"
+
+
+def test_committed_window_skips_the_newest_record():
+    """With the committed records, the next driver window holds no entry the
+    newest CORRECTNESS_r*.json already proved green."""
+    from tmapreduce_spark.catalog import _GREEN, _RECORD_NAME, build_catalog
+
+    records = [
+        (int(m.group(1)), p)
+        for p in SURVEY.parent.glob("CORRECTNESS_r*.json")
+        if (m := _RECORD_NAME.fullmatch(p.name))
+    ]
+    newest = json.loads(max(records)[1].read_text())
+    green = {n for n, row in newest.items() if all(row.get(k) is True for k in _GREEN)}
+    head = list(build_catalog())[:50]
+    assert not set(head) & green, sorted(set(head) & green)

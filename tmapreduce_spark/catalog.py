@@ -14,8 +14,11 @@ Parity conventions (keep these or hashes break):
 
 from __future__ import annotations
 
+import json
+import re
 from collections.abc import Callable
 from dataclasses import dataclass
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -29,325 +32,36 @@ class QuerySpec:
     category: str
 
 
-# Names with a green driver CORRECTNESS row, keyed by the LAST round that
-# verified them (r01-r04; enumeration is capped at ~50 rows/round).
-# Refreshed each round. Ordering built from this: never-checked entries
-# first, then oldest-verified (stalest green) entries for re-verification,
-# with the permanently-no-oracle sketch entries dead last so the driver's
-# 50-row budget is never burned on rows that can only ever say `no_oracle`.
-_COVERED_R1: frozenset[str] = frozenset(
-    {
-        # --- round 1 (CORRECTNESS_r01.json, all green) ---
-        "q1_pricing_summary", "q3_shipping_priority", "q5_local_supplier_volume",
-        "q6_forecast_revenue", "filter_project", "join_broadcast_dim",
-        "join_left_outer", "join_semi", "join_anti", "join_full_outer",
-        "join_range_theta", "agg_distinct", "agg_rollup", "agg_cube",
-        "agg_conditional", "agg_stats", "topk_orders", "scalar_string",
-        "scalar_date", "scalar_math", "scalar_json", "events_tumbling_10min",
-        "agg_grouping_sets", "scalar_array_map", "agg_decimal_exact",
-        "scalar_date_trunc", "scalar_null_semantics", "events_sliding_10x5",
-        "events_sessions", "q2_min_cost_supplier", "q11_important_stock",
-        "q20_part_promotion", "q4_order_priority", "q7_volume_shipping",
-        "q8_market_share", "q9_product_profit", "q12_ship_delay",
-        "q13_customer_distribution", "q15_top_supplier", "q17_small_quantity",
-        "q21_waiting_supplier", "q22_sales_opportunity", "join_asof_events",
-        "pivot_status_priority", "percentiles_price", "subquery_above_avg",
-        "subquery_exists", "q18_large_orders", "q14_promo_share",
-        "q16_supplier_part_count",
-    }
-)
-# round 2 (CORRECTNESS_r02.json: 48 green)
-_COVERED_R2: frozenset[str] = frozenset(
-    {
-        "dedup_ngram_jaccard", "scalar_struct", "agg_string_agg",
-        "events_pattern_burst", "join_null_safe", "sample_weighted_bernoulli",
-        "q19_disjunctive", "q10_returned_items", "window_running_distinct",
-        "agg_mode", "agg_histogram", "agg_percentile_disc", "ann_topk_cosine",
-        "charcount", "dedup_cc_twophase",
-        "dedup_cluster_resolve", "dedup_span_exact", "embedding_norms",
-        "events_funnel", "events_gapfill_ffill", "events_retention",
-        "join_fuzzy_name", "join_fuzzy_symdel", "join_lateral_topn",
-        "mr_charcount", "mr_charcount_combined", "mr_wordcount",
-        "multimodal_decode_stats", "multimodal_embed_ann",
-        "multimodal_feature_extract", "pipeline_chunk_documents",
-        "pipeline_merge_scd", "pipeline_pack_sequences", "scalar_bitwise",
-        "scalar_posexplode", "scalar_url_parse", "set_intersect",
-        "set_union_all", "set_union_distinct", "similarity_pairs_blocked",
-        "text_bigram_topk", "text_inverted_index", "udf_mapinarrow",
-        "udf_pandas_grouped_agg", "udf_pandas_scalar", "window_ignore_nulls",
-        "window_rank_topn", "wordcount",
-    }
-)
-# round 3 (CORRECTNESS_r03.json: 49 green)
-_COVERED_R3: frozenset[str] = frozenset(
-    {
-        "pipeline_corpus_e2e",
-        "text_repetition_stats", "graph_pagerank_neardup",
-        "ann_ivf_topk_probe2", "pipeline_pii_scrub",
-        "window_range_frame", "set_except", "token_stats",
-        "dedup_embedding_cosine", "ann_lsh_topk", "multimodal_meta_stats",
-        "udf_udtf_tokens", "scalar_regex", "salted_token_counts",
-        "events_time_rollup", "join_salted_skew", "pipeline_decontaminate",
-        "window_frame_following", "set_except_all", "token_bpe_ish",
-        "dedup_exact_groups", "ann_ivf_topk", "multimodal_resize",
-        "udf_python_scalar", "sample_stratified_fixed", "window_range_centered",
-        "set_intersect_all", "text_quality", "dedup_exact_keep_first",
-        "ann_pq_topk", "multimodal_frame_sample", "udf_grouped_demean",
-        "pipeline_upsert_latest", "window_percentiles", "distinct_pairs",
-        "lang_id_heuristic", "dedup_minhash_signature",
-        "udf_mapinpandas_running", "pipeline_quality_filter",
-        "window_rank_dense", "doc_fingerprint", "dedup_minhash_pairs",
-        "sample_hash_bucket", "window_running_sum", "dedup_simhash",
-        "pipeline_clean_corpus", "window_lag_lead", "window_moving_avg",
-        "window_ntile",
-    }
-)
-# round 4 (CORRECTNESS_r04.json: 49 green)
-_COVERED_R4: frozenset[str] = frozenset(
-    {
-        "agg_bool_bitwise", "agg_covar_regr", "agg_histogram", "agg_max_min_by",
-        "agg_mode", "agg_percentile_disc", "agg_string_agg", "ann_range_search",
-        "dedup_corpus_materialize", "dedup_incremental_admit",
-        "dedup_simhash_pairs", "dedup_url_canonical",
-        "diag_key_skew", "embedding_quantize_int8", "events_anomaly_mad",
-        "events_funnel",
-        "events_gapfill_ffill", "events_interval_join", "events_ohlc_hourly",
-        "events_pattern_burst",
-        "events_retention", "events_sessionize_islands", "events_time_rollup",
-        "join_bloom_prefilter",
-        "join_existence_flag", "join_null_safe", "layout_zorder_key",
-        "pipeline_dataset_card",
-        "pipeline_domain_filter", "pipeline_shard_output",
-        "pipeline_snapshot_diff", "pipeline_train_val_split",
-        "q1_pricing_summary", "q3_shipping_priority", "q5_local_supplier_volume",
-        "q6_forecast_revenue",
-        "reshape_unpivot", "sample_domain_mix", "sample_weighted_bernoulli",
-        "scalar_bitwise",
-        "scalar_posexplode", "scalar_regex", "scalar_struct",
-        "scalar_try_functions",
-        "scalar_url_parse", "text_heavy_hitters_mg", "text_ngram_lm_score",
-        "text_pmi_topk",
-        "text_tfidf_topk",
-    }
-)
+# Driver verification window. The correctness driver checks only the first
+# ~50 entries of build_catalog() each round and commits what it saw as
+# CORRECTNESS_r<N>.json at the repo root. The order is derived from those
+# records: entries without a green row come first (round-robin across
+# categories, so every family is sampled under any cap), then green entries
+# from the oldest last-green round to the newest, so each round re-checks the
+# stalest proofs. Without the records (an installed copy of the package) every
+# entry counts as never verified.
+_RECORDS_DIR = Path(__file__).resolve().parents[1]
+_RECORD_NAME = re.compile(r"CORRECTNESS_r(\d+)\.json")
+_GREEN = ("rows_match", "schema_match", "hash_match")
 
-# round 5 (CORRECTNESS_r05.json: 50 green)
-_COVERED_R5: frozenset[str] = frozenset(
-    {
-        "agg_benford_profile", "agg_gini_concentration", "agg_weighted_median",
-        "ann_ivf_pq_topk", "dedup_chunk_exact", "dedup_cross_source_matrix",
-        "dedup_methods_overlap", "dedup_minhash_est_vs_exact", "diag_column_ndv",
-        "diag_distribution_drift", "diag_join_explosion", "embedding_dim_stats",
-        "embedding_kmeans_iterate", "embedding_pca_power",
-        "embedding_prefix_recall", "events_attribution_last_touch",
-        "events_attribution_multi_touch", "events_cohort_ltv",
-        "events_drawdown_max", "events_gap_burstiness",
-        "events_interval_join_mixed", "events_markov_transitions",
-        "events_rfm_segments", "events_survival_curve", "events_user_path_topk",
-        "graph_degree_stats", "join_asof_nearest", "join_asof_tolerance",
-        "join_interval_overlap", "layout_hilbert_key", "mr_grep",
-        "mr_inverted_index", "multimodal_decode_real", "multimodal_phash_dedup",
-        "orders_market_basket", "pipeline_contamination_report",
-        "pipeline_importance_weights", "pipeline_interleave_order",
-        "pipeline_quality_ablate", "pipeline_seqlen_histogram",
-        "pipeline_token_budget_mix", "skyline_pareto_orders",
-        "text_bigram_lm_score", "text_novelty_score", "text_nucleus_vocab",
-        "text_quality_classifier", "text_vocab_oov_rate", "window_rolling_mad_flag",
-        "window_rolling_median", "window_streak_longest",
+
+def _last_green_round(records_dir: Path = _RECORDS_DIR) -> dict[str, int]:
+    """name -> round of its newest driver row, for entries whose newest row
+    is green (all three checks true)."""
+    rounds = sorted(
+        (int(m.group(1)), path)
+        for path in records_dir.glob("CORRECTNESS_r*.json")
+        if (m := _RECORD_NAME.fullmatch(path.name))
+    )
+    latest: dict[str, tuple[int, dict]] = {}
+    for rnd, path in rounds:
+        for name, row in json.loads(path.read_text()).items():
+            latest[name] = (rnd, row)
+    return {
+        name: rnd
+        for name, (rnd, row) in latest.items()
+        if all(row.get(k) is True for k in _GREEN)
     }
-)
-
-# round 6 (CORRECTNESS_r06.json: 50 green — the full round-5 backlog sample)
-_COVERED_R6: frozenset[str] = frozenset(
-    {
-        "agg_abc_classification", "agg_equidepth_histogram", "agg_mann_whitney",
-        "agg_ols_two_feature", "dedup_audit_sample", "dedup_cluster_keep_best",
-        "dedup_ngram_containment", "dedup_semdedup", "dedup_winnowing_fingerprint",
-        "dedup_winnowing_pairs", "diag_ks_drift", "diag_pk_uniqueness",
-        "diag_psi_drift", "diag_referential_orphans", "embedding_cluster_balance",
-        "embedding_outlier_zscore", "embedding_pq_distortion", "eval_ndcg_ivf",
-        "events_active_users_rolling", "events_bot_score", "events_change_point",
-        "events_feature_rollup", "events_funnel_ttc", "events_growth_accounting",
-        "events_hourweek_profile", "events_rate_spike", "events_snapshot_asof",
-        "events_type_diversity", "graph_component_sizes", "graph_reachability_bfs",
-        "graph_triangle_count", "lineitem_open_daily", "mr_join", "mr_sort",
-        "multimodal_wav_energy", "multimodal_wav_resample",
-        "orders_cohort_repeat_rate", "pipeline_dedup_rate_curve",
-        "pipeline_mix_temperature", "sketch_countmin_exact",
-        "text_lexical_diversity", "text_zipf_fit", "tokenizer_apply_fertility",
-        "tokenizer_bpe_merges", "window_cusum_detect", "window_ewma",
-        "window_forecast_backtest", "window_holt_forecast", "window_mean_gap",
-        "window_zscore_rolling",
-    }
-)
-
-# round 7 (CORRECTNESS_r07.json: 50 green — the full round-6 backlog sample)
-_COVERED_R7: frozenset[str] = frozenset(
-    {
-        "agg_bootstrap_ci", "agg_cramers_v", "agg_hdr_latency_percentiles",
-        "agg_mutual_information", "agg_spearman_corr", "agg_theil_sen_trend",
-        "agg_welch_ttest", "agg_winsorized_stats", "diag_null_profile",
-        "embedding_silhouette", "eval_calibration_bins",
-        "eval_confusion_multiclass", "eval_isotonic_calibration", "eval_pass_at_k",
-        "eval_rank_kendall", "eval_threshold_sweep", "events_autocorrelation",
-        "events_cuped_adjusted_lift", "events_lag_features_asof",
-        "events_seasonal_decompose", "events_sessionized_funnel",
-        "events_spectral_energy", "events_srm_check", "events_survival_km",
-        "events_xcorr_leadlag", "graph_kcore", "graph_label_propagation",
-        "graph_link_prediction", "graph_modularity", "join_geo_grid_knn",
-        "join_ip_cidr_lpm", "join_jaro_winkler", "layout_skipping_audit",
-        "multimodal_patch_features", "multimodal_wav_tone_probe",
-        "orders_assoc_rules", "pipeline_compaction_plan", "pipeline_cv_folds",
-        "pipeline_dataset_hash", "pipeline_dp_counts", "pipeline_kanonymity_audit",
-        "pipeline_truncation_loss", "retrieval_rrf_hybrid", "scalar_variant",
-        "source_python_custom", "text_bm25_search", "text_bm25_topk",
-        "text_readability", "udf_udtf_analyze", "window_bollinger_bands",
-    }
-)
-
-# round 8 (CORRECTNESS_r08.json: 50 green — the 13-entry r7 backlog + the
-# 3 r8 defer entries + 34 stalest round-1 greens)
-_COVERED_R8: frozenset[str] = frozenset(
-    {
-        "agg_skew_kurtosis", "window_peak_detect", "events_attribution_markov",
-        "eval_auc_roc", "text_keyword_rake", "graph_clustering_coeff",
-        "embedding_mmr_rerank", "agg_mann_kendall", "window_rolling_p90",
-        "eval_pr_auc", "dedup_lsh_scurve", "agg_permutation_test",
-        "eval_brier_decomposition", "pipeline_cdc_upsert_orders",
-        "pipeline_scd2_orders_status", "retrieval_hard_negatives",
-        "filter_project", "join_broadcast_dim", "join_left_outer", "join_semi",
-        "join_anti", "join_full_outer", "join_range_theta", "agg_distinct",
-        "agg_rollup", "agg_cube", "agg_conditional", "agg_stats", "topk_orders",
-        "scalar_string", "scalar_date", "scalar_math", "scalar_json",
-        "events_tumbling_10min", "agg_grouping_sets", "scalar_array_map",
-        "agg_decimal_exact", "scalar_date_trunc", "scalar_null_semantics",
-        "events_sliding_10x5", "events_sessions", "q2_min_cost_supplier",
-        "q11_important_stock", "q20_part_promotion", "q4_order_priority",
-        "q7_volume_shipping", "q8_market_share", "q9_product_profit",
-        "q12_ship_delay", "q13_customer_distribution",
-    }
-)
-
-# round 9 (CORRECTNESS_r09.json: 50 green, all three checks, 0 err — the 33
-# round-9 additions + 17 stalest-green rotations)
-_COVERED_R9: frozenset[str] = frozenset(
-    {
-        "agg_anova_oneway", "agg_bartlett_test", "agg_cochran_armitage",
-        "agg_friedman", "agg_grubbs_test", "agg_herfindahl",
-        "agg_jarque_bera", "agg_kruskal_wallis",
-        "agg_levene_brown_forsythe", "agg_tukey_hsd",
-        "agg_wilcoxon_signed_rank", "dedup_boundary_stitch",
-        "embedding_jl_distortion", "eval_cohens_kappa",
-        "eval_mcnemar_dedup", "eval_mrr_dual_ranker",
-        "events_conversion_ztest", "events_cuped_lift",
-        "events_did_event_study", "events_did_lift",
-        "events_experiment_power_mde", "events_ljung_box",
-        "events_peak_over_threshold", "graph_assortativity",
-        "join_asof_events", "join_fuzzy_name", "join_fuzzy_symdel",
-        "join_lateral_topn", "join_scd2_point_in_time",
-        "layout_bucketed_join", "mr_secondary_sort", "percentiles_price",
-        "pipeline_deletion_cascade", "pipeline_incremental_rollup",
-        "pipeline_leakage_safe_split", "pivot_status_priority",
-        "q14_promo_share", "q15_top_supplier", "q16_supplier_part_count",
-        "q17_small_quantity", "q18_large_orders", "q21_waiting_supplier",
-        "q22_sales_opportunity", "retrieval_prf_expansion",
-        "retrieval_query_likelihood", "sketch_bloom_fpr_audit",
-        "subquery_above_avg", "subquery_exists", "text_char_entropy",
-        "text_source_kl_divergence",
-    }
-)
-
-# round 10 (CORRECTNESS_r10.json: 50 green, all three checks, 0 err — the 18
-# round-10 additions + 32 stalest-green rotations, draining the r02 backlog)
-_COVERED_R10: frozenset[str] = frozenset(
-    {
-        "agg_durbin_watson", "agg_gtest_independence", "agg_mad_robust",
-        "agg_runs_test", "ann_topk_cosine", "charcount",
-        "dedup_cc_twophase", "dedup_cluster_resolve", "dedup_ngram_jaccard",
-        "dedup_span_exact", "embedding_norms",
-        "eval_capture_recapture_dedup", "eval_exposure_fairness",
-        "events_circadian_profile", "events_haar_energy",
-        "events_slo_burn_rate", "layout_bucketed_groupby", "mr_charcount",
-        "mr_charcount_combined", "mr_wordcount", "multimodal_decode_stats",
-        "multimodal_embed_ann", "multimodal_feature_extract",
-        "multimodal_hist_equalize", "pipeline_chunk_documents",
-        "pipeline_merge_scd", "pipeline_pack_sequences",
-        "pipeline_span_corruption", "q10_returned_items", "q19_disjunctive",
-        "set_intersect", "set_union_all", "set_union_distinct",
-        "similarity_pairs_blocked", "sketch_kmv_jaccard",
-        "subquery_select_scalar", "text_bigram_topk", "text_burrows_delta",
-        "text_cross_perplexity", "text_heaps_law_fit",
-        "text_inverted_index", "udf_mapinarrow", "udf_pandas_grouped_agg",
-        "udf_pandas_scalar", "window_cume_dist", "window_ignore_nulls",
-        "window_range_frame", "window_rank_topn", "window_running_distinct",
-        "wordcount",
-    }
-)
-
-# round 11 (CORRECTNESS_r11.json: 50 green, all three checks, 0 err — the 3
-# reworked-and-renamed sketches + the entire 46-entry r03-stale cohort + the
-# oldest r04 row; zero new entries by design, rotation-only round)
-_COVERED_R11: frozenset[str] = frozenset(
-    {
-        "ann_ivf_topk", "ann_ivf_topk_probe2", "ann_lsh_topk",
-        "ann_pq_topk", "dedup_embedding_cosine", "dedup_exact_groups",
-        "dedup_exact_keep_first", "dedup_minhash_pairs",
-        "dedup_minhash_signature", "dedup_simhash", "distinct_pairs",
-        "doc_fingerprint", "events_ohlc_hourly",
-        "graph_pagerank_neardup", "join_salted_skew",
-        "lang_id_heuristic", "multimodal_frame_sample",
-        "multimodal_meta_stats", "multimodal_resize",
-        "pipeline_clean_corpus", "pipeline_corpus_e2e",
-        "pipeline_decontaminate", "pipeline_pii_scrub",
-        "pipeline_quality_filter", "pipeline_upsert_latest",
-        "salted_token_counts", "sample_hash_bucket",
-        "sample_stratified_fixed", "set_except", "set_except_all",
-        "set_intersect_all", "sketch_hll_md5_merge",
-        "sketch_kmv_distinct", "sketch_sample_quantiles",
-        "text_quality", "text_repetition_stats", "token_bpe_ish",
-        "token_stats", "udf_grouped_demean", "udf_mapinpandas_running",
-        "udf_python_scalar", "udf_udtf_tokens",
-        "window_frame_following", "window_lag_lead",
-        "window_moving_avg", "window_ntile", "window_percentiles",
-        "window_range_centered", "window_rank_dense",
-        "window_running_sum",
-    }
-)
-
-# Terminal rows-only entries: no oracle BY DESIGN. EMPTY since r11 — the three
-# engine-native sketches (approx_distinct / approx_quantiles / hll_partition_
-# merge) that lived here through r10 were reworked onto md5-derived
-# deterministic estimators (the sketch_kmv_jaccard pattern), so DuckDB now
-# recomputes their estimates exactly and they re-enter the normal rotation as
-# never-green entries. Kept as a mechanism: a future genuinely-unverifiable
-# entry goes here and enumerates dead last.
-_NO_ORACLE_TERMINAL: frozenset[str] = frozenset()
-
-# Entries added AFTER the current round's backlog ordering was frozen: they
-# enumerate behind the earlier never-sampled backlog (which is sized/sequenced
-# to the driver's ~50-row window) so a late addition can never push an older
-# unproven entry out of the verification window. The round-8 defer list folded
-# into the normal backlog when _COVERED_R8 landed (all 3 got green r08 rows);
-# round-9 additions go here.
-_BACKLOG_DEFER: frozenset[str] = frozenset()
-
-# name -> last round with a green driver row (later rounds win).
-_COVERED_ROUND: dict[str, int] = {}
-for _rnd, _names in (
-    (1, _COVERED_R1),
-    (2, _COVERED_R2),
-    (3, _COVERED_R3),
-    (4, _COVERED_R4),
-    (5, _COVERED_R5),
-    (6, _COVERED_R6),
-    (7, _COVERED_R7),
-    (8, _COVERED_R8),
-    (9, _COVERED_R9),
-    (10, _COVERED_R10),
-    (11, _COVERED_R11),
-):
-    for _n in _names:
-        _COVERED_ROUND[_n] = _rnd
 
 
 def _round_robin(by_cat: dict[str, list[str]]) -> list[str]:
@@ -359,28 +73,20 @@ def _round_robin(by_cat: dict[str, list[str]]) -> list[str]:
     return out
 
 
-def _driver_priority_order(catalog: dict[str, QuerySpec]) -> dict[str, QuerySpec]:
-    """Reorder the catalog for driver enumeration (the driver verifies ~the
-    first 50 entries): entries without any driver CORRECTNESS row yet come
-    first, round-robin across categories so family coverage survives any cap;
-    already-proven entries follow oldest-verified-first (stalest green gets
-    re-checked soonest); the terminal no-oracle sketches come dead last."""
+def _driver_priority_order(
+    catalog: dict[str, QuerySpec], verified: dict[str, int]
+) -> dict[str, QuerySpec]:
+    """Reorder the catalog for the driver's verification window: entries not
+    in ``verified`` first, round-robin across categories; then verified
+    entries, oldest last-green round first, catalog position breaking ties."""
     backlog_by_cat: dict[str, list[str]] = {}
-    deferred: list[str] = []
     for name, spec in catalog.items():
-        if name not in _COVERED_ROUND and name not in _NO_ORACLE_TERMINAL:
-            if name in _BACKLOG_DEFER:
-                deferred.append(name)
-            else:
-                backlog_by_cat.setdefault(spec.category, []).append(name)
+        if name not in verified:
+            backlog_by_cat.setdefault(spec.category, []).append(name)
 
     ordered = _round_robin(backlog_by_cat)
-    ordered.extend(deferred)
-    covered = [n for n in catalog if n in _COVERED_ROUND]
-    pos = {n: i for i, n in enumerate(catalog)}
-    covered.sort(key=lambda n: (_COVERED_ROUND[n], pos[n]))
-    ordered.extend(covered)
-    ordered.extend(n for n in catalog if n in _NO_ORACLE_TERMINAL)
+    # sorted() is stable, so catalog position breaks ties within a round
+    ordered.extend(sorted((n for n in catalog if n in verified), key=verified.get))
     return {name: catalog[name] for name in ordered}
 
 
@@ -419,4 +125,4 @@ def build_catalog() -> dict[str, QuerySpec]:
             if name in catalog:
                 raise ValueError(f"duplicate query name {name!r}")
             catalog[name] = spec
-    return _driver_priority_order(catalog)
+    return _driver_priority_order(catalog, _last_green_round())

@@ -71,6 +71,25 @@ _APPLY_DF_SCHEMA = StructType(
 JOB_RESULT_TIMEOUT_SECOND = 3600.0
 
 
+def _combiner(combine_fn):
+    """Map-side combine for ``mapPartitions``: group one partition's map
+    output by key and pre-aggregate it BEFORE the shuffle, so the shuffle
+    carries one partial per (partition, key) instead of every map emission —
+    the optimization the reference structurally lacks (all map output
+    transits the master, worker.cc:311-315). Result-identical for the
+    associative reducers a combiner is registered for."""
+
+    def combine(it):
+        groups: dict[str, list[str]] = {}
+        for k, v in it:
+            groups.setdefault(k, []).append(v)
+        for k, vs in groups.items():
+            for v in combine_fn(k, vs):
+                yield k, v
+
+    return combine
+
+
 class JobStage(Enum):
     """Mirror of the reference's job stage machine for observability
     (``/root/reference/src/tmapreduce/job.h:26-39``); Spark collapses the
@@ -201,39 +220,24 @@ class MapReduceEngine:
         mapper_num = min(mapper_num, len(kvs_sorted))
 
         job.stage = JobStage.MAPPING
-        # Contiguous near-equal slices == Job::Partition (job.cc:10-43).
-        indexed = sc.parallelize(list(enumerate(kvs_sorted)), mapper_num)
-
-        def run_map(part_idx: int, it):
-            # One C-wrapper loop per subjob slice (wrapper.cc:10-31); tag each
-            # emission with (subjob index, emission seq) to reproduce the
-            # reference's deterministic within-key value order (job.cc:51-59).
-            seq = 0
-            for _i, (k, v) in it:
-                for out_k, out_v in map_fn(k, v):
-                    yield out_k, (part_idx, seq, out_v)
-                    seq += 1
-
-        mapped = indexed.mapPartitionsWithIndex(run_map)
-
+        # Contiguous near-equal slices == Job::Partition (job.cc:10-43); one
+        # C-wrapper loop per subjob slice (wrapper.cc:10-31).
+        mapped = sc.parallelize(kvs_sorted, mapper_num).flatMap(
+            lambda kv: map_fn(kv[0], kv[1])
+        )
         if jt.combine_fn is not None:
-            combine_fn = jt.combine_fn
+            # Registering a combiner asserts the reducer is insensitive to
+            # within-key value order.
+            mapped = mapped.mapPartitions(_combiner(jt.combine_fn))
 
-            # Map-side combine (see apply_df): per-partition pre-aggregation
-            # before the shuffle. Combined values keep the (subjob, seq) tag
-            # shape so downstream is unchanged; registering a combiner
-            # asserts the reducer is insensitive to within-key value order.
-            def run_combine(part_idx: int, it):
-                groups: dict[str, list[str]] = {}
-                for k, (_p, _s, v) in it:
-                    groups.setdefault(k, []).append(v)
-                seq = 0
-                for k, vs in groups.items():
-                    for v in combine_fn(k, vs):
-                        yield k, (part_idx, seq, v)
-                        seq += 1
+        def tag(part_idx: int, it):
+            # Tag each emission with (subjob index, emission seq) to reproduce
+            # the reference's deterministic within-key value order
+            # (job.cc:51-59).
+            for seq, (k, v) in enumerate(it):
+                yield k, (part_idx, seq, v)
 
-            mapped = mapped.mapPartitionsWithIndex(run_combine)
+        mapped = mapped.mapPartitionsWithIndex(tag)
 
         # Merge (job.cc:45-66) and Reduce in ONE shuffle: groupByKey, then
         # reduce each group in place. Each group yields a single
@@ -323,21 +327,7 @@ class MapReduceEngine:
         rdd = df.select("key", "value").rdd.map(lambda r: (r[0], r[1]))
         mapped = rdd.flatMap(lambda kv: map_fn(kv[0], kv[1]))
         if combine_fn is not None:
-            # map-side combine: per-partition grouping BEFORE the shuffle,
-            # so the shuffle carries one partial per (partition, key) instead
-            # of every map emission — the optimization the reference
-            # structurally lacks (all map output transits the master,
-            # worker.cc:311-315). Result-identical for the associative
-            # reducers a combiner is registered for.
-            def combine_partition(it):
-                groups: dict[str, list[str]] = {}
-                for k, v in it:
-                    groups.setdefault(k, []).append(v)
-                for k, vs in groups.items():
-                    for v in combine_fn(k, vs):
-                        yield k, v
-
-            mapped = mapped.mapPartitions(combine_partition)
+            mapped = mapped.mapPartitions(_combiner(combine_fn))
         if ordered:
             # TeraSort shape: sort the MAP output once and reduce contiguous
             # key runs in-partition. sortByKey range-partitions (all equal

@@ -1526,9 +1526,8 @@ def join_jaro_winkler(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-letter counts are computed ONCE per part row inside the
     # broadcast dims, not per pair; the per-pair work is one least()
     # fold — nanoseconds against the ~µs Python crossing it saves. At
-    # sf1 (10x parts per (brand, token) bucket → ~100x pairs) this cut
-    # the entry 105 s → [see OPTIMIZATION_r13.md]; the Arrow stage sees
-    # only plausible pairs.
+    # sf1 (10x parts per (brand, token) bucket → ~100x pairs) the Arrow
+    # stage then sees only plausible pairs.
     _chars = "abcdefghijklmnopqrstuvwxyz "
     _cv = "array(" + ", ".join(
         f"CAST(length(p_name) - length(replace(p_name, '{ch}', '')) AS BIGINT)"

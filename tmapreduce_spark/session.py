@@ -12,8 +12,10 @@ cluster via ``SPARK_GRAFT_SHUFFLE_PARTITIONS``.
 from __future__ import annotations
 
 import os
+import time
+from collections.abc import Callable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -68,3 +70,24 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
     return builder.getOrCreate()
+
+
+def noop_run(
+    spark: SparkSession, fn: Callable[[SparkSession, str], DataFrame], sf_dir: str
+) -> float:
+    """Build one catalog query and run it through the ``noop`` sink; return
+    the wall seconds of build + execution. RDDs the run persisted (its
+    ``localCheckpoint``s) are then unpersisted, blocking, outside the timed
+    window: pinned checkpoints accumulate executor GC pressure across
+    hundreds of queries, and a non-blocking release bleeds into the next
+    query's timed window."""
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet().toArray())
+    t0 = time.perf_counter()
+    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    elapsed = time.perf_counter() - t0
+    m = jsc.getPersistentRDDs()
+    for rid in list(m.keySet().toArray()):
+        if rid not in before:
+            m.get(rid).unpersist(True)
+    return elapsed

@@ -18,6 +18,8 @@ Rules that make bucketing effective (asserted by tests/test_plans.py):
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession
 
 from tmapreduce_spark.sources.catalog import load_table
@@ -91,6 +93,15 @@ def _cleanup_at_exit(path: str) -> None:
     atexit.register(shutil.rmtree, path, ignore_errors=True)
 
 
+def _session_layout(spark: SparkSession, sf_dir: str) -> tuple[str, str, str]:
+    """``(sf_tag, app, base)`` for a catalog entry's bucketed tables; the
+    session's directory under ``base`` is removed at process exit."""
+    sf_tag = sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
+    app = re.sub(r"[^a-zA-Z0-9_]", "_", spark.sparkContext.applicationId)
+    _cleanup_at_exit(f"/tmp/tmrs_bucketed/{app}")
+    return sf_tag, app, f"/tmp/tmrs_bucketed/{app}/{sf_tag}"
+
+
 # ---------------------------------------------------------------------------
 # Catalog entry: the bucketed fact-fact join, driver-proven — round 9
 # ---------------------------------------------------------------------------
@@ -118,15 +129,10 @@ def layout_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     or two drivers) at the same SF never race on the saveAsTable overwrite
     of a shared name/path; re-runs within one session overwrite their own
     tables idempotently."""
-    import re
-
     from pyspark.sql import functions as F
 
-    sf_tag = sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
-    app = re.sub(r"[^a-zA-Z0-9_]", "_", spark.sparkContext.applicationId)
-    base = f"/tmp/tmrs_bucketed/{app}/{sf_tag}"
+    sf_tag, app, base = _session_layout(spark, sf_dir)
     o_tbl, l_tbl = f"orders_bkt_{sf_tag}_{app}", f"lineitem_bkt_{sf_tag}_{app}"
-    _cleanup_at_exit(f"/tmp/tmrs_bucketed/{app}")
     write_bucketed(
         load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderpriority"
@@ -181,17 +187,12 @@ def layout_bucketed_groupby(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: at 100 TB the per-orderkey aggregate is the expensive pass and
     it is exchange-free; the histogram shuffle moves one row per distinct
     order size (~7 at TPC-H)."""
-    import re
-
     from pyspark.sql import functions as F
 
     from tmapreduce_spark.parity import cents
 
-    sf_tag = sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
-    app = re.sub(r"[^a-zA-Z0-9_]", "_", spark.sparkContext.applicationId)
-    base = f"/tmp/tmrs_bucketed/{app}/{sf_tag}"
+    sf_tag, app, base = _session_layout(spark, sf_dir)
     l_tbl = f"lineitem_bkt_gb_{sf_tag}_{app}"
-    _cleanup_at_exit(f"/tmp/tmrs_bucketed/{app}")
     write_bucketed(
         load_table(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_extendedprice", "l_discount"
@@ -342,17 +343,12 @@ def layout_ann_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     The reference has no similarity surface at all; this extends the engine
     along SURVEY §2B's LLM-pipeline axis (its payloads live in master RAM,
     ``src/tmapreduce/job.h:86-88`` — no at-rest layout exists to compare)."""
-    import re
-
     from pyspark.sql import functions as F
 
     from tmapreduce_spark.functions.similarity import topk_ranked
 
-    sf_tag = sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
-    app = re.sub(r"[^a-zA-Z0-9_]", "_", spark.sparkContext.applicationId)
-    base = f"/tmp/tmrs_bucketed/{app}/{sf_tag}"
+    sf_tag, app, base = _session_layout(spark, sf_dir)
     tbl = f"embeddings_annbkt_{sf_tag}_{app}"
-    _cleanup_at_exit(f"/tmp/tmrs_bucketed/{app}")
 
     corpus = (
         load_table(spark, sf_dir, "embeddings")
