@@ -36,3 +36,14 @@ def register_duck_views(con, sf_dir: str) -> None:
         con.execute(
             f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
         )
+
+
+@pytest.fixture(scope="module")
+def in_driver_max_chars():
+    """The launch gate the MapReduce tests build their engines with: the
+    default, so small payloads run in the driver.
+    ``tests/test_mapreduce_spark_path.py`` overrides it with 0 to re-run the
+    same tests on the Spark path."""
+    from tmapreduce_spark.mapreduce import IN_DRIVER_MAX_CHARS
+
+    return IN_DRIVER_MAX_CHARS

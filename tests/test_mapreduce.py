@@ -23,8 +23,13 @@ KVS = [
 
 
 @pytest.fixture(scope="module")
-def engine(spark):
-    return MapReduceEngine(spark)
+def engine(spark, in_driver_max_chars):
+    return MapReduceEngine(spark, in_driver_max_chars=in_driver_max_chars)
+
+
+def _path(in_driver_max_chars):
+    """The path a small test payload takes under this module's gate."""
+    return "driver" if in_driver_max_chars else "spark"
 
 
 def expected_charcount(kvs):
@@ -44,6 +49,7 @@ def test_charcount_golden(engine):
     assert engine.wait(job_id) is JobStage.FINISHED
     result = engine.get_result(job_id, token="tk")
     assert result == expected_charcount(KVS)
+    assert engine._jobs[job_id].path == _path(engine.in_driver_max_chars)
 
 
 def test_identity_ordering_contract(engine):
@@ -74,23 +80,12 @@ def test_single_reducer_matches_many(engine):
     assert engine.get_result(job1) == engine.get_result(job2)
 
 
-def _group_jobs(spark, group):
-    """Job ids of ``group`` once the status store has seen every event."""
+def _launch_in_group(spark, engine, group, job_type, reducer_num=2):
+    """Launch under the caller's job group ``group`` and wait; returns the
+    job and the Spark job ids of the group once the status store has seen
+    every event. The engine's InheritableThread carries the group into the
+    job thread."""
     sc = spark.sparkContext
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return sorted(sc.statusTracker().getJobIdsForGroup(group))
-
-
-@pytest.mark.parametrize(
-    "job_type,reducer_num",
-    [("wordcount", 1), ("wordcount", 2), ("wordcount", 4), ("empty-map", 2)],
-)
-def test_launch_is_one_spark_job(engine, spark, job_type, reducer_num):
-    """A launch fires exactly one Spark job of at most two stages (map,
-    then groupByKey + reduce): no emptiness probe, no sortByKey count/sample
-    jobs. The job group is the caller's, carried into the job thread."""
-    sc = spark.sparkContext
-    group = f"one-job-{job_type}-{reducer_num}"
     sc.setJobGroup(group, group)
     try:
         job_id = engine.launch("oj", job_type, KVS, mapper_num=2, reducer_num=reducer_num)
@@ -99,12 +94,58 @@ def test_launch_is_one_spark_job(engine, spark, job_type, reducer_num):
         for prop in ("spark.jobGroup.id", "spark.job.description",
                      "spark.job.interruptOnCancel"):
             sc.setLocalProperty(prop, None)
-    jobs = _group_jobs(spark, group)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return engine._jobs[job_id], sorted(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize(
+    "job_type,reducer_num",
+    [("wordcount", 1), ("wordcount", 2), ("wordcount", 4), ("empty-map", 2)],
+)
+def test_launch_is_one_spark_job(spark, job_type, reducer_num):
+    """With the in-driver gate at 0, a launch fires exactly one Spark job of
+    at most two stages (map, then groupByKey + reduce): no emptiness probe,
+    no sortByKey count/sample jobs."""
+    engine = MapReduceEngine(spark, in_driver_max_chars=0)
+    job, jobs = _launch_in_group(
+        spark, engine, f"one-job-{job_type}-{reducer_num}", job_type,
+        reducer_num=reducer_num)
+    assert job.path == "spark"
     assert len(jobs) == 1, jobs
-    assert len(sc.statusTracker().getJobInfo(jobs[0]).stageIds) <= 2
+    tracker = spark.sparkContext.statusTracker()
+    assert len(tracker.getJobInfo(jobs[0]).stageIds) <= 2
 
 
-def test_empty_map_never_calls_reduce(spark):
+@pytest.mark.parametrize("job_type", ["wordcount", "wordcount+c", "empty-map"])
+def test_small_launch_runs_no_spark_job(spark, job_type):
+    """Under the default gate a small payload runs in the driver (uber
+    mode): the caller's job group sees no Spark job at all."""
+    engine = MapReduceEngine(spark)
+    job, jobs = _launch_in_group(spark, engine, f"no-job-{job_type}", job_type)
+    assert job.path == "driver"
+    assert jobs == []
+
+
+def test_gate_boundary_is_inclusive(spark):
+    """A payload of exactly ``in_driver_max_chars`` characters
+    (``sum(len(key) + len(value))``) runs in the driver; one character more
+    runs on Spark, with the same result. A negative gate is rejected."""
+    with pytest.raises(ValueError):
+        MapReduceEngine(spark, in_driver_max_chars=-1)
+    size = sum(len(k) + len(v) for k, v in KVS)
+    engine = MapReduceEngine(spark, in_driver_max_chars=size)
+    at = engine.launch("at", "charcount", KVS)
+    over_kvs = KVS[:-1] + [(KVS[-1][0], KVS[-1][1] + "z")]
+    over = engine.launch("over", "charcount", over_kvs)
+    for job_id in (at, over):
+        assert engine.wait(job_id, timeout=60) is JobStage.FINISHED
+    assert engine._jobs[at].path == "driver"
+    assert engine._jobs[over].path == "spark"
+    assert engine.get_result(at) == expected_charcount(KVS)
+    assert engine.get_result(over) == expected_charcount(over_kvs)
+
+
+def test_empty_map_never_calls_reduce(spark, in_driver_max_chars):
     """With no map output there is no group, so a raising reduce_fn is
     never called: the job returns [] and reaches FINISHED
     (master.cc:624-627)."""
@@ -115,7 +156,7 @@ def test_empty_map_never_calls_reduce(spark):
 
     reg = JobRegistry()
     reg.register("empty-bad-reduce", empty_map, bad_reduce)
-    engine = MapReduceEngine(spark, registry=reg)
+    engine = MapReduceEngine(spark, registry=reg, in_driver_max_chars=in_driver_max_chars)
     job_id = engine.launch("e", "empty-bad-reduce", KVS, mapper_num=2, reducer_num=3)
     assert engine.wait(job_id, timeout=60) is JobStage.FINISHED
     assert engine.get_result(job_id) == []
@@ -210,11 +251,8 @@ def test_apply_df_construction_launches_no_jobs(engine, spark):
     ]
 
 
-def test_combiner_results_identical_to_plain(spark):
+def test_combiner_results_identical_to_plain(engine):
     """The map-side combiner must not change results — only shuffle volume."""
-    from tmapreduce_spark.mapreduce import MapReduceEngine
-
-    engine = MapReduceEngine(spark)
     kvs = [("d1", "aab bb a"), ("d2", "bb cc aab"), ("d3", "a a a")]
     pj = engine.launch("p", "wordcount", kvs, 3, 2, token="t")
     cj = engine.launch("c", "wordcount+c", kvs, 3, 2, token="t")
@@ -223,7 +261,7 @@ def test_combiner_results_identical_to_plain(spark):
     combined = engine.get_result(cj, token="t")
     assert plain == combined
 
-def test_async_launch_observable_lifecycle(spark):
+def test_async_launch_observable_lifecycle(spark, in_driver_max_chars):
     """launch returns before the job finishes (gateway.cc:131-157): another
     thread can observe intermediate stages, and get_result refuses with
     'job not finished' while the job runs (master.cc:685-699) — the exact
@@ -245,7 +283,7 @@ def test_async_launch_observable_lifecycle(spark):
 
     reg = JobRegistry()
     reg.register("slow-charcount", slow_map, charcount_reduce)
-    engine = MapReduceEngine(spark, registry=reg)
+    engine = MapReduceEngine(spark, registry=reg, in_driver_max_chars=in_driver_max_chars)
 
     job_id = engine.launch("slow", "slow-charcount", KVS, token="t")
     # launch returned while the map stage is blocked on the gate: the job
@@ -263,7 +301,7 @@ def test_async_launch_observable_lifecycle(spark):
     assert engine.get_result(job_id, token="t") == expected_charcount(KVS)
 
 
-def test_async_launch_error_surfaces(spark):
+def test_async_launch_error_surfaces(spark, in_driver_max_chars):
     """A user-function failure is captured on the background thread and
     re-raised to the caller (wait and get_result)."""
     from tmapreduce_spark.registry import JobRegistry, charcount_reduce
@@ -273,7 +311,7 @@ def test_async_launch_error_surfaces(spark):
 
     reg = JobRegistry()
     reg.register("bad-map", bad_map, charcount_reduce)
-    engine = MapReduceEngine(spark, registry=reg)
+    engine = MapReduceEngine(spark, registry=reg, in_driver_max_chars=in_driver_max_chars)
     job_id = engine.launch("bad", "bad-map", KVS, token="t")
     with pytest.raises(Exception, match="boom in map"):
         engine.wait(job_id, timeout=60)
@@ -281,7 +319,7 @@ def test_async_launch_error_surfaces(spark):
         engine.get_result(job_id, token="t")
 
 
-def test_failed_reduce_unpersists_cached_rdd(spark):
+def test_failed_reduce_unpersists_cached_rdd(spark, in_driver_max_chars):
     """A reduce-stage failure must not leave a persisted RDD behind: the
     launch path persists nothing at all, so failed jobs can't accumulate
     pinned executor memory across a long-lived session."""
@@ -292,7 +330,7 @@ def test_failed_reduce_unpersists_cached_rdd(spark):
 
     reg = JobRegistry()
     reg.register("bad-reduce", charcount_map, bad_reduce)
-    engine = MapReduceEngine(spark, registry=reg)
+    engine = MapReduceEngine(spark, registry=reg, in_driver_max_chars=in_driver_max_chars)
     # relative check: other tests in the shared session may hold legitimate
     # persistent RDDs (localCheckpoint lineage truncation); the invariant is
     # that THIS failed job leaves no NEW one behind
@@ -332,7 +370,7 @@ def _http(method, port, path, body=None):
         return resp.status, raw.decode(errors="replace")
 
 
-def test_gateway_end_to_end_wordcount(spark):
+def test_gateway_end_to_end_wordcount(spark, in_driver_max_chars):
     """POST /launch -> poll GET /getresult until the job stops answering
     'job not finished' -> key-ordered flat results, matching the reference
     client's loop (word_count_client.cc:54-63)."""
@@ -341,7 +379,8 @@ def test_gateway_end_to_end_wordcount(spark):
     from tmapreduce_spark.gateway import Gateway
     from tmapreduce_spark.mapreduce import MapReduceEngine
 
-    with Gateway(MapReduceEngine(spark)) as gw:
+    engine = MapReduceEngine(spark, in_driver_max_chars=in_driver_max_chars)
+    with Gateway(engine) as gw:
         status, body = _http("GET", gw.port, "/helloworld")
         assert (status, body) == (200, "Hello world.")
 
@@ -410,6 +449,67 @@ def test_gateway_error_paths(spark):
         job_id = body["job_id"]
         status, body = _http("GET", gw.port, f"/getresult?job_id={job_id}&token=bad")
         assert status == 500 and "wrong token" in body["message"]
+
+
+@pytest.mark.parametrize("where", ["map", "reduce"])
+def test_failed_job_contract(spark, in_driver_max_chars, where):
+    """A raising map_fn or reduce_fn: /getresult answers 500 {"ok": false}
+    with "job failed" in the message, the job leaves no new persisted RDD,
+    and the 3600 s result TTL (master.cc:449-463) collects the failed job as
+    it collects finished ones."""
+    from tmapreduce_spark.gateway import Gateway
+    from tmapreduce_spark.registry import (
+        JobRegistry,
+        charcount_map,
+        charcount_reduce,
+    )
+
+    def boom(*_args):
+        raise RuntimeError(f"boom in {where}")
+
+    reg = JobRegistry()
+    reg.register("bad", boom if where == "map" else charcount_map,
+                 boom if where == "reduce" else charcount_reduce)
+    engine = MapReduceEngine(spark, registry=reg, in_driver_max_chars=in_driver_max_chars)
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = persisted().size()
+    with Gateway(engine) as gw:
+        status, body = _http("POST", gw.port, "/launch", {
+            "name": "bad", "type": "bad", "mapper_num": 2, "reducer_num": 2,
+            "token": "t", "kvs": [{"key": k, "value": v} for k, v in KVS],
+        })
+        assert status == 200 and body["ok"] is True
+        job_id = body["job_id"]
+        with pytest.raises(Exception, match=f"boom in {where}"):
+            engine.wait(job_id, timeout=60)
+        status, body = _http("GET", gw.port, f"/getresult?job_id={job_id}&token=t")
+    assert status == 500 and body["ok"] is False, body
+    assert "job failed" in body["message"], body
+    assert persisted().size() == before
+    job = engine._jobs[job_id]
+    assert job.path == _path(in_driver_max_chars)
+    assert engine.gc(now=job.finish_time + JOB_RESULT_TIMEOUT_SECOND - 1) == 0
+    assert engine.gc(now=job.finish_time + JOB_RESULT_TIMEOUT_SECOND + 1) == 1
+    assert job_id not in engine._jobs
+
+
+@pytest.mark.parametrize("length", ["-1", "ten"])
+def test_gateway_bad_content_length_is_400(spark, length):
+    """A negative or non-integer Content-Length is a shape violation: a bare
+    400 without reading the body (gateway.cc:15-51). Reading with length -1
+    would block until the client closed the socket."""
+    import socket
+
+    from tmapreduce_spark.gateway import Gateway
+
+    with Gateway(MapReduceEngine(spark)) as gw:
+        with socket.create_connection(("127.0.0.1", gw.port), timeout=5) as sock:
+            sock.sendall(
+                f"POST /launch HTTP/1.1\r\nHost: localhost\r\n"
+                f"Content-Length: {length}\r\n\r\n".encode()
+            )
+            status_line = sock.makefile("rb").readline()
+    assert status_line.split()[1] == b"400", status_line
 
 
 def test_gateway_spool_failure_never_500s_a_launched_job(spark):

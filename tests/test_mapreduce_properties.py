@@ -19,7 +19,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from tmapreduce_spark.mapreduce import MapReduceEngine
-from tmapreduce_spark.registry import JobRegistry
+from tmapreduce_spark.registry import JobRegistry, default_registry
 
 
 def wide_map(key: str, value: str):
@@ -50,10 +50,10 @@ def model(kvs: list[tuple[str, str]]) -> list[str]:
 
 
 @pytest.fixture(scope="module")
-def engine(spark):
+def prop_engine(spark, in_driver_max_chars):
     reg = JobRegistry()
     reg.register("prop", wide_map, count_join_reduce)
-    return MapReduceEngine(spark, registry=reg)
+    return MapReduceEngine(spark, registry=reg, in_driver_max_chars=in_driver_max_chars)
 
 
 kv_strategy = st.lists(
@@ -72,10 +72,69 @@ kv_strategy = st.lists(
     suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
 )
 @given(kvs=kv_strategy, mapper_num=st.integers(1, 5), reducer_num=st.integers(1, 5))
-def test_engine_matches_reference_model(engine, kvs, mapper_num, reducer_num):
+def test_engine_matches_reference_model(prop_engine, kvs, mapper_num, reducer_num):
+    engine = prop_engine
     job_id = engine.launch("prop-job", "prop", kvs, mapper_num, reducer_num, token="t")
     engine.wait(job_id)
     assert engine.get_result(job_id, token="t") == model(kvs)
+
+
+PARTS = [1, 2, 4, 64]
+# Words for the registered types: "spark" for grep-spark, a non-ASCII letter,
+# and an NBSP that wordcount must not split on.
+WORDS = ["spark", "sparkle", "a", "bb", "a1", "\u00e9", "x\u00a0y", ""]
+
+
+def _shaped(job_type: str, kvs: list[tuple[str, str]]) -> list[tuple[str, str]]:
+    """Values in the form the relation-tagged job types expect."""
+    if job_type == "reducejoin":
+        return [(k, ("N:" if i % 2 else "C:") + v) for i, (k, v) in enumerate(kvs)]
+    if job_type == "secondarysort":
+        return [(k, f"{i:03d}|{v}") for i, (k, v) in enumerate(kvs)]
+    return kvs
+
+
+doc_strategy = st.lists(
+    st.tuples(
+        st.text(alphabet="ab01\u00e9", min_size=1, max_size=3),
+        st.lists(st.sampled_from(WORDS), max_size=6).map(" ".join),
+    ),
+    min_size=1,
+    max_size=30,
+)
+
+
+TYPES = default_registry().types()
+
+
+@pytest.mark.parametrize("job_type", TYPES)
+@settings(
+    max_examples=1,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
+)
+@given(kvs=doc_strategy)
+def test_driver_and_spark_paths_identical(spark, job_type, kvs):
+    """Both launch executors return the identical result array for every
+    registered job type, at mapper_num and reducer_num 1/2/4/64. The driver
+    runs all 16 (mapper_num, reducer_num) pairs. Spark runs four of them (a
+    64-way reduce stage costs seconds here): a Latin square, rotated per job
+    type so the types cover all 16 pairs between them. Partitioning changes
+    no result, so every result must equal every other."""
+    kvs = _shaped(job_type, kvs)
+    rot = TYPES.index(job_type)
+    on_driver = MapReduceEngine(spark)
+    on_spark = MapReduceEngine(spark, in_driver_max_chars=0)
+    launched = [(on_spark, on_spark.launch("bi", job_type, kvs, m, PARTS[(i + rot) % 4]))
+                for i, m in enumerate(PARTS)]
+    launched += [(on_driver, on_driver.launch("bi", job_type, kvs, m, r))
+                 for m in PARTS for r in PARTS]
+    results = []
+    for e, job_id in launched:
+        e.wait(job_id, timeout=120)
+        assert e._jobs[job_id].path == ("spark" if e is on_spark else "driver")
+        results.append(e.get_result(job_id))
+    assert all(got == results[0] for got in results), job_type
 
 
 def test_msum2_engine_parity_on_adversarial_values(spark):

@@ -162,30 +162,26 @@ def test_ann_bucketed_corpus_never_shuffles_for_external_queries(spark):
     exchange-free (its bucketed layout already satisfies the join's
     distribution requirement); exactly one Exchange may sit on the query
     side of the SortMergeJoin."""
-    import re
-
     from pyspark.sql import functions as F
 
     from tmapreduce_spark.sources.bucketing import (
         ANN_LAYOUT_BUCKETS,
-        _cleanup_at_exit,
+        _session_layout,
         _spark_bucket_expr,
         _spark_quant_expr,
         write_bucketed,
     )
     from tmapreduce_spark.sources.catalog import load_table
 
-    app = re.sub(r"[^a-zA-Z0-9_]", "_", spark.sparkContext.applicationId)
+    _sf_tag, app, base = _session_layout(spark, SF_SMOKE)
     tbl = f"embeddings_annbkt_ext_{app}"
-    _cleanup_at_exit(f"/tmp/tmrs_bucketed/{app}")
     corpus = (
         load_table(spark, SF_SMOKE, "embeddings")
         .select("vec_id", F.expr(_spark_quant_expr("embedding")).alias("qe"))
         .select("vec_id", "qe", F.expr(_spark_bucket_expr()).alias("bucket"))
     )
     write_bucketed(
-        corpus, tbl, "bucket", ANN_LAYOUT_BUCKETS,
-        f"/tmp/tmrs_bucketed/{app}/{tbl}",
+        corpus, tbl, "bucket", ANN_LAYOUT_BUCKETS, f"{base}/{tbl}",
     )
     # external query batch: a plain in-memory frame, NOT from the table
     ext = spark.range(8).select(

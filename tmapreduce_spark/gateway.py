@@ -121,8 +121,15 @@ class Gateway:
                     return self._reply(404)
                 try:
                     n = int(self.headers.get("Content-Length", "0"))
+                except ValueError:
+                    n = -1
+                if n < 0:
+                    # rfile.read(-1) would block until the client closes the
+                    # socket; a bad length is a shape violation like any other.
+                    return self._reply(400)
+                try:
                     doc = json.loads(self.rfile.read(n) or b"null")
-                except (ValueError, json.JSONDecodeError):
+                except ValueError:  # JSONDecodeError and bad UTF-8 alike
                     doc = None
                 if not _check_launch_request(doc):
                     return self._reply(400)

@@ -1,10 +1,19 @@
 """Reference-parity MapReduce job API on Spark.
 
 Implements the reference's complete engine-executed dataflow (SURVEY.md §2A
-items 1-10) as ONE Spark job of two stages per launch:
+items 1-10) as one dataflow with two executors:
 
-    validate -> sort-by-key -> contiguous partition -> flatMap(map_fn)
-      -> groupByKey -> flatMap(reduce_fn) -> collect -> driver key-sort
+    validate -> sort-by-key -> contiguous partition -> map side per slice
+      (flatMap(map_fn), optional combiner, (slice, seq) tag)
+      -> group by key -> reduce per group -> driver key-sort
+
+- **Spark** (payloads over ``in_driver_max_chars``): ONE Spark job of two
+  stages, ``parallelize -> mapPartitionsWithIndex -> groupByKey -> flatMap
+  -> collect``.
+- **Driver** (payloads within the gate; Hadoop's uber-task mode,
+  MAPREDUCE-1220): the same map-side and reduce functions called in the
+  driver on ``Job::Partition`` slices, with a dict as the shuffle. A Spark
+  job costs about 0.6 s however small the payload; this path starts none.
 
 Reference semantics preserved (file:line into /root/reference/):
 
@@ -13,16 +22,17 @@ Reference semantics preserved (file:line into /root/reference/):
   values rejected (``src/tmapreduce/gateway.cc:15-51``).
 - **Ingest key-sort**: payload sorted by key before partitioning
   (``master.cc:736-738``).
-- **Contiguous partitioning**: ``sc.parallelize`` slices the sorted list into
-  near-equal contiguous runs exactly like ``Job::Partition()``
-  (``src/tmapreduce/job.cc:10-43``).
+- **Contiguous partitioning**: the sorted list is cut into near-equal
+  contiguous runs like ``Job::Partition()`` (``src/tmapreduce/job.cc:10-43``)
+  — by ``sc.parallelize`` on Spark, by ``p*n//m`` slicing in the driver.
 - **Map**: per-pair flatMap of the user function (C wrapper loop,
   ``src/tmapreduce/wrapper.cc:10-31``).
 - **Shuffle/Merge**: group values by key (``src/tmapreduce/job.cc:45-66``)
-  in the job's only shuffle; within-key value order is
-  (map-subjob index, emission order) — reproduced here by tagging each map
-  output with ``(partition_index, emission_seq)`` and sorting the group
-  (``job.cc:51-59`` ordering contract, SURVEY §1.4).
+  in the Spark job's only shuffle, or a dict in the driver; within-key value
+  order is (map-subjob index, emission order) — reproduced here by tagging
+  each map output with ``(partition_index, emission_seq)`` and sorting the
+  group (``job.cc:51-59`` ordering contract, SURVEY §1.4). Since slices are
+  contiguous, that order is payload emission order on both paths.
 - **Empty-shuffle short-circuit**: zero map output pairs form no group, so
   reduce never runs and the result is empty (``master.cc:624-627``).
 - **Reduce**: per-group flatMap of the user function
@@ -31,7 +41,8 @@ Reference semantics preserved (file:line into /root/reference/):
 - **Finish**: the collected groups are sorted by key on the driver and
   concatenated into one flat string array (``src/tmapreduce/job.cc:68-77``,
   a master-side merge in the reference too). Nothing is cached or persisted.
-  No emptiness probe and no ``sortByKey`` run, so a launch is one Spark job.
+  No emptiness probe and no ``sortByKey`` run, so a Spark-path launch is one
+  Spark job and a driver-path launch is none.
 - **Result lifecycle**: per-job bearer token checked at get_result
   (``master.cc:691-693``, ``src/tmapreduce/job.h:93``); finished results GC'd
   after 3600 s (``master.cc:449-463``, ``master.h:27``).
@@ -54,6 +65,7 @@ import threading
 import time
 from dataclasses import dataclass, field
 from enum import Enum
+from itertools import chain, starmap
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StringType, StructField, StructType
@@ -69,6 +81,14 @@ _APPLY_DF_SCHEMA = StructType(
 # Reference operational constant: finished-job result TTL
 # (/root/reference/src/tmapreduce/master.h:27).
 JOB_RESULT_TIMEOUT_SECOND = 3600.0
+
+# Default uber-task gate in payload characters (MapReduceEngine docstring):
+# the smallest Spark-vs-driver crossover over every registered job type,
+# rounded down. Measured with launch + wait on 4 cores at mapper_num =
+# reducer_num = 4 (Spark's best case there): wordcount broke even near
+# 4.6 M chars (15,000 documents of ~300 chars); every type ran faster in the
+# driver at 3.0 M chars and below.
+IN_DRIVER_MAX_CHARS = 4_000_000
 
 
 def _combiner(combine_fn):
@@ -90,12 +110,49 @@ def _combiner(combine_fn):
     return combine
 
 
+def _map_side(map_fn, combine_fn):
+    """One map subjob's work, shared by both launch executors:
+    ``map_side(part_idx, pairs)`` runs ``map_fn`` over the slice (the C
+    wrapper loop, wrapper.cc:10-31), then the optional combiner, and tags
+    each emission ``(key, (part_idx, seq, value))`` so grouping can restore
+    the reference's within-key (subjob, emission) value order
+    (job.cc:51-59)."""
+    combine = _combiner(combine_fn) if combine_fn is not None else None
+
+    def map_side(part_idx: int, it):
+        mapped = chain.from_iterable(starmap(map_fn, it))
+        if combine is not None:
+            # Registering a combiner asserts the reducer is insensitive to
+            # within-key value order.
+            mapped = combine(mapped)
+        for seq, (k, v) in enumerate(mapped):
+            yield k, (part_idx, seq, v)
+
+    return map_side
+
+
+def _reducer(reduce_fn):
+    """One reduce group's work, shared by both launch executors: order the
+    tagged values by (subjob, seq) and emit a single ``(key, outputs)`` pair,
+    so Finish can order whole groups by key."""
+
+    def run_reduce(kv):
+        k, tagged = kv
+        # (part_idx, seq) is unique, so plain tuple order never reaches v.
+        values = [v for _p, _s, v in sorted(tagged)]
+        return [(k, list(reduce_fn(k, values)))]
+
+    return run_reduce
+
+
 class JobStage(Enum):
     """Mirror of the reference's job stage machine for observability
     (``/root/reference/src/tmapreduce/job.h:26-39``); Spark collapses the
     wait/partition states into its own DAG scheduling. ``launch`` runs map,
-    merge and reduce inside one Spark job, so it reports only MAPPING and
-    FINISHED; MERGING and REDUCING are kept for the reference's vocabulary."""
+    merge and reduce as one step (one Spark job, or one pass in the driver
+    for payloads under the in-driver gate), so it reports only MAPPING and
+    FINISHED on both paths; MERGING and REDUCING are kept for the
+    reference's vocabulary."""
 
     INIT = "INIT"
     MAPPING = "MAPPING"
@@ -124,15 +181,35 @@ class _Job:
     finish_time: float | None = None
     error: BaseException | None = None
     thread: threading.Thread | None = None
+    # Executor the job ran on: "driver" or "spark" ("" until it starts).
+    path: str = ""
 
 
 class MapReduceEngine:
     """Driver-side job manager: the master+gateway capability surface as a
-    plain Python API over Spark lineages."""
+    plain Python API over Spark lineages.
 
-    def __init__(self, spark: SparkSession, registry: JobRegistry | None = None):
+    ``in_driver_max_chars`` is the uber-task gate (Hadoop's
+    ``mapreduce.job.ubertask.enable``, MAPREDUCE-1220): a launch whose
+    payload size, ``sum(len(key) + len(value))``, is at most this many
+    characters runs in the driver instead of as a Spark job; ``0`` sends
+    every launch to Spark. A Spark job costs about 0.6 s however small the
+    payload, and the default sits below the measured crossover where Spark's
+    parallelism starts to pay for it. Trade-off: in-driver user map and
+    reduce code runs in the driver process, as Hadoop's uber mode runs it in
+    the ApplicationMaster, and in-driver jobs share the driver's GIL."""
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        registry: JobRegistry | None = None,
+        in_driver_max_chars: int = IN_DRIVER_MAX_CHARS,
+    ):
+        if in_driver_max_chars < 0:
+            raise ValueError("in_driver_max_chars must be >= 0")
         self.spark = spark
         self.registry = registry if registry is not None else default_registry()
+        self.in_driver_max_chars = in_driver_max_chars
         self._jobs: dict[int, _Job] = {}
         self._next_id = 0
         self._lock = threading.Lock()
@@ -155,9 +232,11 @@ class MapReduceEngine:
         master stops answering "job not finished"
         (``example/word_count/word_count_client.cc:54``). The stage
         (``job.h:26-39``) is observable from other threads via
-        :meth:`stage_of`: MAPPING while the launch's single Spark job runs,
-        FINISHED after it; use :meth:`wait` to block."""
-        self._validate(job_type, kvs, mapper_num, reducer_num)
+        :meth:`stage_of`: MAPPING while the map, merge and reduce run (one
+        Spark job, or one pass in the driver when the payload is within
+        ``in_driver_max_chars``), FINISHED after it; use :meth:`wait` to
+        block."""
+        payload_chars = self._validate(job_type, kvs, mapper_num, reducer_num)
         jt = self.registry.get(job_type)  # unknown type rejected at admission
         with self._lock:
             job_id = self._next_id
@@ -167,7 +246,7 @@ class MapReduceEngine:
 
         def run() -> None:
             try:
-                self._run_job(job, jt, kvs, mapper_num, reducer_num)
+                self._run_job(job, jt, kvs, mapper_num, reducer_num, payload_chars)
             except BaseException as exc:  # surfaced via wait()/get_result()
                 job.error = exc
                 job.stage = JobStage.FINISHED
@@ -204,10 +283,8 @@ class MapReduceEngine:
         kvs: list[tuple[str, str]],
         mapper_num: int,
         reducer_num: int,
+        payload_chars: int,
     ) -> None:
-        map_fn, reduce_fn = jt.map_fn, jt.reduce_fn
-        sc = self.spark.sparkContext
-
         # Ingest key-sort (master.cc:736-738). Python's sort is stable, so
         # equal keys keep payload order, matching std::sort's effect on the
         # observable contract (values later re-ordered by subjob/emission tag).
@@ -218,42 +295,39 @@ class MapReduceEngine:
         # fan-out, and an empty subjob emits nothing, so clamping is
         # observationally identical (same emissions, same (part, seq) tags).
         mapper_num = min(mapper_num, len(kvs_sorted))
+        map_side = _map_side(jt.map_fn, jt.combine_fn)
+        run_reduce = _reducer(jt.reduce_fn)
 
+        gate = self.in_driver_max_chars
+        job.path = "driver" if gate > 0 and payload_chars <= gate else "spark"
         job.stage = JobStage.MAPPING
-        # Contiguous near-equal slices == Job::Partition (job.cc:10-43); one
-        # C-wrapper loop per subjob slice (wrapper.cc:10-31).
-        mapped = sc.parallelize(kvs_sorted, mapper_num).flatMap(
-            lambda kv: map_fn(kv[0], kv[1])
-        )
-        if jt.combine_fn is not None:
-            # Registering a combiner asserts the reducer is insensitive to
-            # within-key value order.
-            mapped = mapped.mapPartitions(_combiner(jt.combine_fn))
-
-        def tag(part_idx: int, it):
-            # Tag each emission with (subjob index, emission seq) to reproduce
-            # the reference's deterministic within-key value order
-            # (job.cc:51-59).
-            for seq, (k, v) in enumerate(it):
-                yield k, (part_idx, seq, v)
-
-        mapped = mapped.mapPartitionsWithIndex(tag)
-
-        # Merge (job.cc:45-66) and Reduce in ONE shuffle: groupByKey, then
-        # reduce each group in place. Each group yields a single
-        # (key, outputs) pair so Finish can order whole groups by key.
-        def run_reduce(kv):
-            k, tagged = kv
-            values = [v for _p, _s, v in sorted(tagged, key=lambda t: (t[0], t[1]))]
-            return [(k, list(reduce_fn(k, values)))]
-
-        reduced = mapped.groupByKey(numPartitions=reducer_num).flatMap(run_reduce)
+        if job.path == "driver":
+            # Uber mode: the same map side per Job::Partition slice
+            # (job.cc:10-43), a dict as the shuffle, the same reduce per group.
+            n = len(kvs_sorted)
+            grouped: dict[str, list] = {}
+            for p in range(mapper_num):
+                part = kvs_sorted[p * n // mapper_num : (p + 1) * n // mapper_num]
+                for k, tagged in map_side(p, part):
+                    grouped.setdefault(k, []).append(tagged)
+            groups = [g for kv in grouped.items() for g in run_reduce(kv)]
+        else:
+            # One Spark job: contiguous near-equal parallelize slices
+            # (Job::Partition), the map side per slice, then Merge
+            # (job.cc:45-66) and Reduce in ONE shuffle.
+            groups = (
+                self.spark.sparkContext.parallelize(kvs_sorted, mapper_num)
+                .mapPartitionsWithIndex(map_side)
+                .groupByKey(numPartitions=reducer_num)
+                .flatMap(run_reduce)
+                .collect()
+            )
         # Finish (job.cc:68-77) on the driver, which holds the whole result by
-        # contract (job.h:86-88): keys are unique after groupByKey, so sorting
-        # the collected groups by key and concatenating them gives the
-        # reference's key-ordered flat array. No map output means no group,
-        # so reduce_fn never runs (master.cc:624-627).
-        groups = sorted(reduced.collect(), key=lambda kv: kv[0])
+        # contract (job.h:86-88): keys are unique after grouping, so sorting
+        # the groups by key and concatenating them gives the reference's
+        # key-ordered flat array. No map output means no group, so reduce_fn
+        # never runs (master.cc:624-627).
+        groups.sort(key=lambda kv: kv[0])
         job.results = [out for _k, outs in groups for out in outs]
         job.stage = JobStage.FINISHED
         job.finish_time = time.time()
@@ -373,11 +447,13 @@ class MapReduceEngine:
     @staticmethod
     def _validate(
         job_type: str, kvs: list[tuple[str, str]], mapper_num: int, reducer_num: int
-    ) -> None:
+    ) -> int:
+        """Admission checks; returns the payload size in characters."""
         if mapper_num <= 0 or reducer_num <= 0:
             raise LaunchError("mapper_num and reducer_num must be > 0")
         if not kvs:
             raise LaunchError("empty kvs")
+        chars = 0
         for kv in kvs:
             if (
                 not isinstance(kv, tuple)
@@ -388,3 +464,5 @@ class MapReduceEngine:
                 # gateway.cc:15-51 — every element must be a {key,value} pair
                 # of strings.
                 raise LaunchError(f"invalid kv element: {kv!r}")
+            chars += len(kv[0]) + len(kv[1])
+        return chars

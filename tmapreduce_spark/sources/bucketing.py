@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import re
 
+from pyspark import SparkFiles
 from pyspark.sql import DataFrame, SparkSession
 
 from tmapreduce_spark.sources.catalog import load_table
@@ -76,30 +77,14 @@ def bucketed_order_revenue(spark: SparkSession, o_tbl: str, l_tbl: str) -> DataF
     )
 
 
-_CLEANUP_REGISTERED: set[str] = set()
-
-
-def _cleanup_at_exit(path: str) -> None:
-    """Best-effort removal of this session's bucketed-layout directory at
-    process exit (r09 ADVICE: the fixed path was never cleaned up). The
-    session-catalog tables die with the session's metastore; the on-disk
-    bytes need an explicit sweep."""
-    if path in _CLEANUP_REGISTERED:
-        return
-    _CLEANUP_REGISTERED.add(path)
-    import atexit
-    import shutil
-
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
-
-
 def _session_layout(spark: SparkSession, sf_dir: str) -> tuple[str, str, str]:
-    """``(sf_tag, app, base)`` for a catalog entry's bucketed tables; the
-    session's directory under ``base`` is removed at process exit."""
+    """``(sf_tag, app, base)`` for a catalog entry's bucketed tables. ``base``
+    lies under the session's own scratch root (``SparkFiles`` root directory,
+    created under ``spark.local.dir``), which Spark deletes when the session
+    stops; the session-catalog tables die with the session's metastore."""
     sf_tag = sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
     app = re.sub(r"[^a-zA-Z0-9_]", "_", spark.sparkContext.applicationId)
-    _cleanup_at_exit(f"/tmp/tmrs_bucketed/{app}")
-    return sf_tag, app, f"/tmp/tmrs_bucketed/{app}/{sf_tag}"
+    return sf_tag, app, f"{SparkFiles.getRootDirectory()}/tmrs_bucketed/{sf_tag}"
 
 
 # ---------------------------------------------------------------------------
