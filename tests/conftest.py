@@ -29,6 +29,22 @@ def duck():
     con.close()
 
 
+def jobs_in_group(spark, group: str, fn) -> list[int]:
+    """Run ``fn()`` under the Spark job group ``group``, then return the ids
+    of the group's jobs once the status store has seen every event. Threads
+    started with ``InheritableThread`` inside ``fn`` inherit the group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description",
+                     "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return sorted(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def register_duck_views(con, sf_dir: str) -> None:
     from tmapreduce_spark.sources.catalog import TABLES
 

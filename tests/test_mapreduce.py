@@ -7,6 +7,7 @@ from collections import Counter
 
 import pytest
 
+from tests.conftest import jobs_in_group
 from tmapreduce_spark.mapreduce import (
     JOB_RESULT_TIMEOUT_SECOND,
     JobStage,
@@ -82,20 +83,17 @@ def test_single_reducer_matches_many(engine):
 
 def _launch_in_group(spark, engine, group, job_type, reducer_num=2):
     """Launch under the caller's job group ``group`` and wait; returns the
-    job and the Spark job ids of the group once the status store has seen
-    every event. The engine's InheritableThread carries the group into the
-    job thread."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        job_id = engine.launch("oj", job_type, KVS, mapper_num=2, reducer_num=reducer_num)
-        assert engine.wait(job_id, timeout=60) is JobStage.FINISHED
-    finally:
-        for prop in ("spark.jobGroup.id", "spark.job.description",
-                     "spark.job.interruptOnCancel"):
-            sc.setLocalProperty(prop, None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return engine._jobs[job_id], sorted(sc.statusTracker().getJobIdsForGroup(group))
+    job and the Spark job ids of the group. The engine's InheritableThread
+    carries the group into the job thread."""
+    launched = []
+
+    def launch():
+        launched.append(engine.launch("oj", job_type, KVS, mapper_num=2,
+                                      reducer_num=reducer_num))
+        assert engine.wait(launched[0], timeout=60) is JobStage.FINISHED
+
+    jobs = jobs_in_group(spark, group, launch)
+    return engine._jobs[launched[0]], jobs
 
 
 @pytest.mark.parametrize(
@@ -114,6 +112,22 @@ def test_launch_is_one_spark_job(spark, job_type, reducer_num):
     assert len(jobs) == 1, jobs
     tracker = spark.sparkContext.statusTracker()
     assert len(tracker.getJobInfo(jobs[0]).stageIds) <= 2
+
+
+def test_spark_reduce_tasks_capped_at_parallelism(spark):
+    """On the Spark path a client's reducer_num beyond the session's
+    parallelism runs at most ``defaultParallelism`` reduce tasks, with the
+    same result as a single reducer."""
+    engine = MapReduceEngine(spark, in_driver_max_chars=0)
+    parallelism = spark.sparkContext.defaultParallelism
+    job, jobs = _launch_in_group(spark, engine, "reduce-cap", "wordcount",
+                                 reducer_num=8 * parallelism)
+    one, _ = _launch_in_group(spark, engine, "reduce-one", "wordcount", reducer_num=1)
+    assert job.path == "spark" and len(jobs) == 1, jobs
+    tracker = spark.sparkContext.statusTracker()
+    tasks = [tracker.getStageInfo(s).numTasks for s in tracker.getJobInfo(jobs[0]).stageIds]
+    assert max(tasks) <= parallelism, tasks
+    assert job.results == one.results
 
 
 @pytest.mark.parametrize("job_type", ["wordcount", "wordcount+c", "empty-map"])

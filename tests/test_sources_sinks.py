@@ -3,18 +3,41 @@ analog, FIXTURES §1), parquet write round-trips, partitioned writes."""
 
 from __future__ import annotations
 
+import functools
 import json
 import os
+import shutil
 
-from tests.conftest import SF_SMOKE
-from tmapreduce_spark.sources.catalog import (
-    load_table,
-    read_kv_csv,
-    read_kv_json,
-    read_kv_text,
-)
+import pytest
+from pyspark.sql import DataFrame, SparkSession
+
+from tests.conftest import SF_SMOKE, jobs_in_group
+from tmapreduce_spark.sources.catalog import TABLES, load_table, parquet_schema
 
 KVS = [("1", "alpha"), ("2", "bravo"), ("3", "charlie")]
+
+
+def read_kv_json(spark: SparkSession, path: str) -> DataFrame:
+    """JSON-lines KV ingestion — the scan analog of the reference's REST
+    ``/launch`` payload shape (``gateway.cc:43-48``: string key, string value)."""
+    df = spark.read.json(path)
+    return df.selectExpr("CAST(key AS STRING) AS key", "CAST(value AS STRING) AS value")
+
+
+def read_kv_csv(spark: SparkSession, path: str) -> DataFrame:
+    df = spark.read.option("header", "true").csv(path)
+    return df.selectExpr("CAST(key AS STRING) AS key", "CAST(value AS STRING) AS value")
+
+
+def read_kv_text(spark: SparkSession, path: str) -> DataFrame:
+    """Whole-line text source; the reference client keys by file name
+    (``word_count_client.cc:30-43``), so each line keys by its source file."""
+    from pyspark.sql import functions as F
+
+    return spark.read.text(path).select(
+        F.input_file_name().alias("key"),
+        F.col("value").cast("string").alias("value"),
+    )
 
 
 def test_read_kv_json(spark, tmp_path):
@@ -37,6 +60,104 @@ def test_read_kv_text(spark, tmp_path):
     rows = read_kv_text(spark, str(p)).collect()
     assert sorted(r["value"] for r in rows) == ["line one", "line two"]
     assert all(r["key"].endswith("doc.txt") for r in rows)
+
+
+def _job_sites(spark, group, fn):
+    """Run ``fn()`` under job group ``group``; the call sites of the Spark
+    jobs it ran."""
+    store = spark.sparkContext._jsc.sc().statusStore()
+    return [store.job(j).name() for j in jobs_in_group(spark, group, fn)]
+
+
+def test_schema_inferred_once_per_file(spark, tmp_path):
+    """The first load of a table infers its schema in a parquet footer job;
+    a second load of the unchanged file runs no Spark job at all."""
+    shutil.copy(os.path.join(SF_SMOKE, "orders.parquet"), tmp_path)
+    load = functools.partial(load_table, spark, str(tmp_path), "orders")
+    first = _job_sites(spark, "schema-first-load", load)
+    second = _job_sites(spark, "schema-second-load", load)
+    assert any(site.startswith("parquet") for site in first), first
+    assert second == []
+
+
+def test_directory_table_keyed_on_its_files(spark, tmp_path):
+    """A table stored as a directory of part files is resolved once, and
+    inferred again once a part file is added."""
+    region = load_table(spark, SF_SMOKE, "region")
+    out = str(tmp_path / "region.parquet")
+    region.write.parquet(out)
+    load = functools.partial(load_table, spark, str(tmp_path), "region")
+    assert any(s.startswith("parquet") for s in _job_sites(spark, "dir-first-load", load))
+    assert _job_sites(spark, "dir-second-load", load) == []
+    region.write.mode("append").parquet(out)
+    assert any(s.startswith("parquet") for s in _job_sites(spark, "dir-grown-load", load))
+    assert load().count() == 2 * region.count()
+
+
+def test_rewritten_file_is_inferred_again(spark, tmp_path):
+    """A file rewritten in place with another ts footer is inferred again:
+    the second load sees the new footer, and both normalise ts to the same
+    instants."""
+    from pyspark.sql import functions as F
+
+    from tests.test_footer_variants import ROWS, _write_events
+
+    path = os.path.join(str(tmp_path), "events.parquet")
+    got = {}
+    for unit, native in (("ns", "bigint"), ("us", "timestamp_ntz")):
+        _write_events(str(tmp_path), unit)
+        df = load_table(spark, str(tmp_path), "events")
+        assert parquet_schema(spark, path)["ts"].dataType.simpleString() == native
+        assert dict(df.dtypes)["ts"] == "timestamp"
+        got[unit] = sorted(
+            tuple(r) for r in df.select("event_id", F.unix_micros("ts")).collect()
+        )
+    assert got["ns"] == got["us"] == sorted((r[0], r[1]) for r in ROWS)
+
+
+def test_decode_confs_key_the_schema(spark, tmp_path):
+    """A session conf that changes how parquet types decode gets its own
+    schema, never one inferred under another value."""
+    from tests.test_footer_variants import _write_events
+
+    paths = {}
+    for unit in ("ns", "us"):
+        (tmp_path / unit).mkdir()
+        paths[unit] = os.path.join(_write_events(str(tmp_path / unit), unit), "events.parquet")
+    nanos, ntz = ("spark.sql.legacy.parquet.nanosAsLong",
+                  "spark.sql.parquet.inferTimestampNTZ.enabled")
+    saved = {k: spark.conf.get(k) for k in (nanos, ntz)}
+    try:
+        # TIMESTAMP(NANOS) only decodes under nanosAsLong: off must fail
+        # each time, even after a LONG schema was resolved with it on.
+        for value in ("false", "true", "false"):
+            spark.conf.set(nanos, value)
+            if value == "false":
+                with pytest.raises(Exception, match="PARQUET_TYPE_ILLEGAL"):
+                    parquet_schema(spark, paths["ns"])
+            else:
+                assert parquet_schema(spark, paths["ns"])["ts"].dataType.simpleString() == "bigint"
+        spark.conf.set(nanos, "true")
+        for value, native in (("true", "timestamp_ntz"), ("false", "timestamp"),
+                              ("true", "timestamp_ntz")):
+            spark.conf.set(ntz, value)
+            assert parquet_schema(spark, paths["us"])["ts"].dataType.simpleString() == native
+            assert parquet_schema(spark, paths["us"]) == spark.read.parquet(paths["us"]).schema
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+
+
+def test_pinned_schema_reads_match_inferred(spark):
+    """For every catalog table a read through the resolved schema has the
+    schema and row count of a freshly inferred read."""
+    for name in TABLES:
+        path = os.path.join(SF_SMOKE, f"{name}.parquet")
+        fresh = spark.read.parquet(path)
+        pinned = spark.read.schema(parquet_schema(spark, path)).parquet(path)
+        assert pinned.dtypes == fresh.dtypes, name
+        assert pinned.schema == fresh.schema, name
+        assert pinned.count() == fresh.count(), name
 
 
 def test_parquet_roundtrip(spark, tmp_path):

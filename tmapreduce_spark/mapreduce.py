@@ -314,11 +314,17 @@ class MapReduceEngine:
         else:
             # One Spark job: contiguous near-equal parallelize slices
             # (Job::Partition), the map side per slice, then Merge
-            # (job.cc:45-66) and Reduce in ONE shuffle.
+            # (job.cc:45-66) and Reduce in ONE shuffle. Like the mapper_num
+            # clamp above, reducer_num is capped, here at the session's
+            # parallelism: results are identical at any partition count
+            # (groups are key-sorted below), but each partition is one Python
+            # reduce task, and a client's reducer_num must not queue more of
+            # them than the session can run at once.
+            sc = self.spark.sparkContext
             groups = (
-                self.spark.sparkContext.parallelize(kvs_sorted, mapper_num)
+                sc.parallelize(kvs_sorted, mapper_num)
                 .mapPartitionsWithIndex(map_side)
-                .groupByKey(numPartitions=reducer_num)
+                .groupByKey(numPartitions=min(reducer_num, sc.defaultParallelism))
                 .flatMap(run_reduce)
                 .collect()
             )

@@ -12,6 +12,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -28,6 +29,59 @@ TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+# Session confs that change how Spark decodes parquet physical types into
+# Catalyst types; an inferred schema is only valid under the values it was
+# inferred with.
+_DECODE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+)
+
+# (path, decode conf values) -> (file version, inferred schema).
+_SCHEMAS: dict[tuple, tuple[tuple, StructType]] = {}
+
+
+def _file_version(path: str) -> tuple | None:
+    """Identity of the bytes at ``path``: inode, size and mtime of a file, or
+    every file's (relative name, size, mtime) under a directory. ``None``
+    when the path cannot be stat'ed locally."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    if not os.path.isdir(path):
+        return (st.st_ino, st.st_size, st.st_mtime_ns)
+    version = []
+    for root, _dirs, files in os.walk(path):
+        for f in files:
+            full = os.path.join(root, f)
+            fst = os.stat(full)
+            version.append((os.path.relpath(full, path), fst.st_size, fst.st_mtime_ns))
+    return tuple(sorted(version))
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema ``spark.read.parquet(path)`` infers, resolved once per file
+    version and decode-conf setting, as a metastore would hold it.
+
+    Inference reads the parquet footers in a Spark job; a pinned schema
+    (``spark.read.schema(...)``) needs none. This caches metadata only:
+    every read of the returned schema still plans and scans the data. A file
+    rewritten in place changes its version and is inferred again, and a
+    session that decodes the footer differently gets its own entry. A path
+    that cannot be stat'ed is inferred on every call."""
+    key = (path, tuple(spark.conf.get(c) for c in _DECODE_CONFS))
+    version = _file_version(path)
+    hit = _SCHEMAS.get(key)
+    if hit is not None and version is not None and hit[0] == version:
+        return hit[1]
+    schema = spark.read.parquet(path).schema
+    if version is not None:
+        _SCHEMAS[key] = (version, schema)
+    return schema
+
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
@@ -37,7 +91,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # events footer is TIMESTAMP(NANOS), which Spark only reads (as LONG)
         # under this session-scoped legacy flag — set it defensively here.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    df = spark.read.schema(parquet_schema(spark, path)).parquet(path)
     if name == "events":
         # Normalize events.ts to TIMESTAMP (LTZ) whatever the parquet footer
         # holds — generated testdata has shipped it two ways across rounds:
@@ -92,33 +147,6 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     against the same names DuckDB's oracle uses."""
     for name in TABLES:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
-def read_kv_json(spark: SparkSession, path: str) -> DataFrame:
-    """JSON-lines KV ingestion — the scan analog of the reference's REST
-    ``/launch`` payload shape (``gateway.cc:43-48``: string key, string value)."""
-    df = spark.read.json(path)
-    return df.selectExpr("CAST(key AS STRING) AS key", "CAST(value AS STRING) AS value")
-
-
-def read_kv_csv(spark: SparkSession, path: str) -> DataFrame:
-    df = spark.read.option("header", "true").csv(path)
-    return df.selectExpr("CAST(key AS STRING) AS key", "CAST(value AS STRING) AS value")
-
-
-def read_kv_text(spark: SparkSession, path: str) -> DataFrame:
-    """Whole-line text source: key = file path + line offset surrogate is not
-    needed for parity — the reference client keys by file name
-    (``word_count_client.cc:30-43``); here each line keys by its source file."""
-    from pyspark.sql import functions as F
-
-    return (
-        spark.read.text(path)
-        .select(
-            F.input_file_name().alias("key"),
-            F.col("value").cast("string").alias("value"),
-        )
-    )
 
 
 def write_jsonl_shards(

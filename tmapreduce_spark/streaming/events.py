@@ -21,6 +21,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from tmapreduce_spark.parity import SPARK, mround, msum2
+from tmapreduce_spark.sources.catalog import parquet_schema
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -36,19 +37,19 @@ def events_stream_schema(spark: SparkSession, sf_dir: str):
     Streaming file sources need an explicit schema, and the generated
     testdata has shipped events.ts two ways across rounds (TIMESTAMP(NANOS)
     → LONG under nanosAsLong; timestamp[us] without UTC adjustment →
-    TIMESTAMP_NTZ).  A footer-only batch probe (no data scan — schema comes
-    from the parquet footer) tells us how THIS session decodes the column;
-    ``normalize`` then brings ts to a proper TIMESTAMP exactly like
-    ``sources.catalog.load_table`` does for batch, so every downstream plan
-    sees one canonical instant type in both modes."""
+    TIMESTAMP_NTZ).  The footer schema batch reads resolve
+    (``sources.catalog.parquet_schema``, inferred once per file version) tells
+    us how THIS session decodes the column; ``normalize`` then brings ts to a
+    proper TIMESTAMP exactly like ``sources.catalog.load_table`` does for
+    batch, so every downstream plan sees one canonical instant type in both
+    modes."""
     # A caller-provided session may lack the legacy long read for nanos
     # footers (get_spark sets it, arbitrary sessions don't). Deliberately NOT
     # restored: the lazy scan needs the flag at every micro-batch, not just
     # at definition time (documented in read_stream).
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    native = dict(
-        spark.read.parquet(os.path.join(sf_dir, "events.parquet")).dtypes
-    )["ts"]
+    events_path = os.path.join(sf_dir, "events.parquet")
+    native = parquet_schema(spark, events_path)["ts"].dataType.simpleString()
     if native == "bigint":  # TIMESTAMP(NANOS) footer read as LONG nanos
         ts_type = LongType()
 
