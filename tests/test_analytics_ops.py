@@ -202,14 +202,38 @@ def test_gini_bounds_and_equal_distribution_zero(spark):
     assert out[0]["gini"] == 0.0
 
 
+def _hilbert_spark(x: str, y: str, bits: int) -> str:
+    """Spark expression: Hilbert d-index of ``bits``-bit (x, y) via the standard
+    xy2d bit loop folded over aggregate() with a (x, y, d) struct state —
+    integer-only, so bit-identical across engines."""
+    return f"""
+aggregate(
+  sequence({bits - 1}, 0, -1),
+  named_struct('x', CAST({x} AS BIGINT), 'y', CAST({y} AS BIGINT), 'd', CAST(0 AS BIGINT)),
+  (acc, i) -> named_struct(
+    'x', CASE WHEN (acc.y & shiftleft(CAST(1 AS BIGINT), i)) = 0
+              THEN (CASE WHEN (acc.x & shiftleft(CAST(1 AS BIGINT), i)) > 0
+                         THEN shiftleft(CAST(1 AS BIGINT), i) - 1 - acc.y ELSE acc.y END)
+              ELSE acc.x END,
+    'y', CASE WHEN (acc.y & shiftleft(CAST(1 AS BIGINT), i)) = 0
+              THEN (CASE WHEN (acc.x & shiftleft(CAST(1 AS BIGINT), i)) > 0
+                         THEN shiftleft(CAST(1 AS BIGINT), i) - 1 - acc.x ELSE acc.x END)
+              ELSE acc.y END,
+    'd', acc.d + shiftleft(CAST(1 AS BIGINT), i) * shiftleft(CAST(1 AS BIGINT), i)
+         * CAST((3 * (CASE WHEN (acc.x & shiftleft(CAST(1 AS BIGINT), i)) > 0 THEN 1 ELSE 0 END))
+                ^ (CASE WHEN (acc.y & shiftleft(CAST(1 AS BIGINT), i)) > 0 THEN 1 ELSE 0 END) AS BIGINT)),
+  acc -> acc.d)
+"""
+
+
+
+
 def test_hilbert_curve_is_bijective_and_grid_adjacent(spark):
     """THE Hilbert property: over a full 32×32 grid the keys are a
     permutation of 0..1023 AND consecutive keys are Manhattan-adjacent
     (step distance exactly 1) — the locality guarantee Z-order lacks.
-    Pinned via the same Spark expression the catalog entry uses, at 5
-    bits."""
-    from tmapreduce_spark.operators.advanced import _hilbert_spark
-
+    Pinned at 5 bits on the aggregate() fold of the xy2d loop that the
+    catalog entry (``layout_hilbert_key``) runs unrolled."""
     grid = spark.createDataFrame(
         [(x, y) for x in range(32) for y in range(32)], "x long, y long"
     )

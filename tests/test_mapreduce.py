@@ -9,6 +9,7 @@ import pytest
 
 from tests.conftest import jobs_in_group
 from tmapreduce_spark.mapreduce import (
+    IN_DRIVER_MAX_CHARS,
     JOB_RESULT_TIMEOUT_SECOND,
     JobStage,
     LaunchError,
@@ -83,8 +84,8 @@ def test_single_reducer_matches_many(engine):
 
 def _launch_in_group(spark, engine, group, job_type, reducer_num=2):
     """Launch under the caller's job group ``group`` and wait; returns the
-    job and the Spark job ids of the group. The engine's InheritableThread
-    carries the group into the job thread."""
+    job and the Spark job ids of the group. A Spark-path launch's
+    InheritableThread carries the group into the job thread."""
     launched = []
 
     def launch():
@@ -128,6 +129,29 @@ def test_spark_reduce_tasks_capped_at_parallelism(spark):
     tasks = [tracker.getStageInfo(s).numTasks for s in tracker.getJobInfo(jobs[0]).stageIds]
     assert max(tasks) <= parallelism, tasks
     assert job.results == one.results
+
+
+@pytest.mark.parametrize("path", ["driver", "spark"])
+def test_only_spark_launches_start_inheritable_threads(spark, monkeypatch, path):
+    """An InheritableThread copies the caller's local properties over py4j;
+    only a Spark-path launch, whose job must carry the caller's job group,
+    starts one."""
+    from pyspark import InheritableThread
+
+    starts = []
+    start = InheritableThread.start
+
+    def counting_start(self):
+        starts.append(self)
+        return start(self)
+
+    monkeypatch.setattr(InheritableThread, "start", counting_start)
+    engine = MapReduceEngine(
+        spark, in_driver_max_chars=IN_DRIVER_MAX_CHARS if path == "driver" else 0)
+    job_id = engine.launch("th", "wordcount", KVS)
+    assert engine.wait(job_id, timeout=60) is JobStage.FINISHED
+    assert engine._jobs[job_id].path == path
+    assert len(starts) == (1 if path == "spark" else 0)
 
 
 @pytest.mark.parametrize("job_type", ["wordcount", "wordcount+c", "empty-map"])

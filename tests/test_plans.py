@@ -7,6 +7,9 @@ from __future__ import annotations
 
 import re
 
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
 from tests.conftest import SF_SMOKE
 from tmapreduce_spark.operators.relational import (
     filter_project,
@@ -16,7 +19,10 @@ from tmapreduce_spark.operators.relational import (
 )
 from tmapreduce_spark.operators.windows import window_rank_topn
 from tmapreduce_spark.functions.dedup import _minhash_wide
+from tmapreduce_spark.parity import SPARK, msum2
 from tmapreduce_spark.plans import assert_plan_contains, assert_plan_lacks, physical_plan
+from tmapreduce_spark.sources.bucketing import write_bucketed
+from tmapreduce_spark.sources.catalog import load_table
 
 
 def test_q1_pushes_filter_and_prunes_columns(spark):
@@ -67,15 +73,40 @@ def test_aggregates_partial_before_shuffle(spark):
     assert "Exchange" in plan
 
 
+def bucket_order_tables(
+    spark: SparkSession, sf_dir: str, base_path: str, num_buckets: int = 8
+) -> tuple[str, str]:
+    """Write orders and lineitem co-bucketed on the order key; returns the
+    two table names. One-time ingest cost; afterwards every orderkey join or
+    aggregation over them is exchange-free."""
+    o_tbl, l_tbl = "orders_bkt", "lineitem_bkt"
+    write_bucketed(
+        load_table(spark, sf_dir, "orders"),
+        o_tbl, "o_orderkey", num_buckets, f"{base_path}/orders_bkt",
+    )
+    write_bucketed(
+        load_table(spark, sf_dir, "lineitem"),
+        l_tbl, "l_orderkey", num_buckets, f"{base_path}/lineitem_bkt",
+    )
+    return o_tbl, l_tbl
+
+
+def bucketed_order_revenue(spark: SparkSession, o_tbl: str, l_tbl: str) -> DataFrame:
+    """Per-order revenue over the co-bucketed tables — the plan must contain
+    a SortMergeJoin and ZERO Exchange nodes."""
+    o = spark.table(o_tbl)
+    l = spark.table(l_tbl)
+    return (
+        l.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
+        .groupBy("l_orderkey", "o_orderpriority")
+        .agg(F.expr(msum2("l_extendedprice * (1 - l_discount)", SPARK)).alias("revenue"))
+    )
+
+
 def test_bucketed_join_has_no_exchange(spark, tmp_path):
     """Co-bucketed orders/lineitem: the orderkey join (and the groupBy on the
     same key) must run with ZERO Exchange nodes — the at-rest layout already
     partitioned the data. This is the 100 TB fact-fact join strategy."""
-    from tmapreduce_spark.sources.bucketing import (
-        bucket_order_tables,
-        bucketed_order_revenue,
-    )
-
     o_tbl, l_tbl = bucket_order_tables(spark, SF_SMOKE, str(tmp_path), num_buckets=4)
     old_thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

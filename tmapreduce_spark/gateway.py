@@ -79,6 +79,12 @@ class Gateway:
         gateway = self
 
         class Handler(BaseHTTPRequestHandler):
+            # Buffer each reply so its headers and body leave in one send
+            # when handle_one_request flushes. Unbuffered, the headers' send
+            # hands the GIL to a driver-path job the request just launched,
+            # and the body waits out its 5 ms switch interval.
+            wbufsize = -1
+
             def log_message(self, *args):  # quiet test output
                 pass
 

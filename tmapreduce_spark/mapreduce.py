@@ -4,16 +4,17 @@ Implements the reference's complete engine-executed dataflow (SURVEY.md §2A
 items 1-10) as one dataflow with two executors:
 
     validate -> sort-by-key -> contiguous partition -> map side per slice
-      (flatMap(map_fn), optional combiner, (slice, seq) tag)
-      -> group by key -> reduce per group -> driver key-sort
+      (flatMap(map_fn), optional combiner) -> group by key
+      -> reduce per group -> driver key-sort
 
 - **Spark** (payloads over ``in_driver_max_chars``): ONE Spark job of two
   stages, ``parallelize -> mapPartitionsWithIndex -> groupByKey -> flatMap
   -> collect``.
 - **Driver** (payloads within the gate; Hadoop's uber-task mode,
-  MAPREDUCE-1220): the same map-side and reduce functions called in the
-  driver on ``Job::Partition`` slices, with a dict as the shuffle. A Spark
-  job costs about 0.6 s however small the payload; this path starts none.
+  MAPREDUCE-1220): the same map side and reduce function called in the
+  driver on ``Job::Partition`` slices, with a dict as the shuffle, on a plain
+  thread. A Spark job costs about 0.6 s however small the payload; this path
+  starts none.
 
 Reference semantics preserved (file:line into /root/reference/):
 
@@ -29,10 +30,12 @@ Reference semantics preserved (file:line into /root/reference/):
   ``src/tmapreduce/wrapper.cc:10-31``).
 - **Shuffle/Merge**: group values by key (``src/tmapreduce/job.cc:45-66``)
   in the Spark job's only shuffle, or a dict in the driver; within-key value
-  order is (map-subjob index, emission order) — reproduced here by tagging
-  each map output with ``(partition_index, emission_seq)`` and sorting the
-  group (``job.cc:51-59`` ordering contract, SURVEY §1.4). Since slices are
-  contiguous, that order is payload emission order on both paths.
+  order is (map-subjob index, emission order) (``job.cc:51-59`` ordering
+  contract, SURVEY §1.4). Spark tags each map output with
+  ``(partition_index, emission_seq)`` and sorts the group after the shuffle;
+  the driver runs the slices in order and appends to the dict, which gives
+  that order untagged. Since slices are contiguous, it is payload emission
+  order on both paths.
 - **Empty-shuffle short-circuit**: zero map output pairs form no group, so
   reduce never runs and the result is empty (``master.cc:624-627``).
 - **Reduce**: per-group flatMap of the user function
@@ -67,6 +70,7 @@ from dataclasses import dataclass, field
 from enum import Enum
 from itertools import chain, starmap
 
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StringType, StructField, StructType
 
@@ -112,29 +116,36 @@ def _combiner(combine_fn):
 
 def _map_side(map_fn, combine_fn):
     """One map subjob's work, shared by both launch executors:
-    ``map_side(part_idx, pairs)`` runs ``map_fn`` over the slice (the C
-    wrapper loop, wrapper.cc:10-31), then the optional combiner, and tags
-    each emission ``(key, (part_idx, seq, value))`` so grouping can restore
-    the reference's within-key (subjob, emission) value order
-    (job.cc:51-59)."""
+    ``map_side(pairs)`` runs ``map_fn`` over the slice (the C wrapper loop,
+    wrapper.cc:10-31), then the optional combiner, and yields ``(key,
+    value)`` in emission order."""
     combine = _combiner(combine_fn) if combine_fn is not None else None
 
-    def map_side(part_idx: int, it):
+    def map_side(it):
         mapped = chain.from_iterable(starmap(map_fn, it))
-        if combine is not None:
-            # Registering a combiner asserts the reducer is insensitive to
-            # within-key value order.
-            mapped = combine(mapped)
-        for seq, (k, v) in enumerate(mapped):
-            yield k, (part_idx, seq, v)
+        # Registering a combiner asserts the reducer is insensitive to
+        # within-key value order.
+        return combine(mapped) if combine is not None else mapped
 
     return map_side
 
 
-def _reducer(reduce_fn):
-    """One reduce group's work, shared by both launch executors: order the
-    tagged values by (subjob, seq) and emit a single ``(key, outputs)`` pair,
-    so Finish can order whole groups by key."""
+def _tagged(map_side):
+    """The Spark path's map side: tags each emission ``(key, (part_idx, seq,
+    value))`` so the reducer can restore the reference's within-key
+    (subjob, emission) value order (job.cc:51-59) after the shuffle."""
+
+    def tagged(part_idx: int, it):
+        for seq, (k, v) in enumerate(map_side(it)):
+            yield k, (part_idx, seq, v)
+
+    return tagged
+
+
+def _tagged_reducer(reduce_fn):
+    """The Spark path's work per reduce group: order the tagged values by
+    (subjob, seq) and emit a single ``(key, outputs)`` pair, so Finish can
+    order whole groups by key."""
 
     def run_reduce(kv):
         k, tagged = kv
@@ -176,13 +187,13 @@ class _Job:
     name: str
     job_type: str
     token: str
+    # Executor the job runs on: "driver" or "spark", decided at launch.
+    path: str
     stage: JobStage = JobStage.INIT
     results: list[str] = field(default_factory=list)
     finish_time: float | None = None
     error: BaseException | None = None
     thread: threading.Thread | None = None
-    # Executor the job ran on: "driver" or "spark" ("" until it starts).
-    path: str = ""
 
 
 class MapReduceEngine:
@@ -238,29 +249,40 @@ class MapReduceEngine:
         block."""
         payload_chars = self._validate(job_type, kvs, mapper_num, reducer_num)
         jt = self.registry.get(job_type)  # unknown type rejected at admission
+        gate = self.in_driver_max_chars
+        path = "driver" if gate > 0 and payload_chars <= gate else "spark"
         with self._lock:
             job_id = self._next_id
             self._next_id += 1
-            job = _Job(job_id, name, job_type, token)
+            job = _Job(job_id, name, job_type, token, path)
             self._jobs[job_id] = job
 
+        # The job thread waits until launch has started it. A driver-path
+        # job is CPU-bound Python: run at once, it holds the GIL while
+        # Thread.start() waits for it, and the caller gets the GIL back only
+        # after the 5 ms switch interval (traced mr_gateway /launch RTT:
+        # 9 ms with InheritableThread, 16 ms with a plain thread run at
+        # once). Blocked on the event, it leaves the caller the GIL to
+        # return and send its reply.
+        admitted = threading.Event()
+
         def run() -> None:
+            admitted.wait()
             try:
-                self._run_job(job, jt, kvs, mapper_num, reducer_num, payload_chars)
+                self._run_job(job, jt, kvs, mapper_num, reducer_num)
             except BaseException as exc:  # surfaced via wait()/get_result()
                 job.error = exc
                 job.stage = JobStage.FINISHED
                 job.finish_time = time.time()
 
-        # InheritableThread propagates the driver's local properties (job
-        # groups, scheduler pool) into the background Spark actions.
-        try:
-            from pyspark import InheritableThread
-
-            job.thread = InheritableThread(target=run, daemon=True)
-        except ImportError:  # pragma: no cover
-            job.thread = threading.Thread(target=run, daemon=True)
+        # A Spark-path job thread must carry the caller's local properties
+        # (job group, scheduler pool) into its Spark action, which
+        # InheritableThread does over two py4j calls. The driver path starts
+        # no Spark job, so a plain thread serves it.
+        thread_cls = InheritableThread if path == "spark" else threading.Thread
+        job.thread = thread_cls(target=run, daemon=True)
         job.thread.start()
+        admitted.set()
         return job_id
 
     def wait(self, job_id: int, timeout: float | None = None) -> JobStage:
@@ -283,34 +305,31 @@ class MapReduceEngine:
         kvs: list[tuple[str, str]],
         mapper_num: int,
         reducer_num: int,
-        payload_chars: int,
     ) -> None:
         # Ingest key-sort (master.cc:736-738). Python's sort is stable, so
         # equal keys keep payload order, matching std::sort's effect on the
-        # observable contract (values later re-ordered by subjob/emission tag).
+        # observable contract (values later ordered by subjob and emission).
         kvs_sorted = sorted(kvs, key=lambda kv: kv[0])
         # Deliberate deviation from Job::Partition (job.cc:10-43), which
         # creates EMPTY subjobs when mapper_num > len(kvs): Spark rejects
         # empty parallelize slices less gracefully than the reference's RPC
         # fan-out, and an empty subjob emits nothing, so clamping is
-        # observationally identical (same emissions, same (part, seq) tags).
+        # observationally identical (the same emissions in the same order).
         mapper_num = min(mapper_num, len(kvs_sorted))
         map_side = _map_side(jt.map_fn, jt.combine_fn)
-        run_reduce = _reducer(jt.reduce_fn)
-
-        gate = self.in_driver_max_chars
-        job.path = "driver" if gate > 0 and payload_chars <= gate else "spark"
         job.stage = JobStage.MAPPING
         if job.path == "driver":
             # Uber mode: the same map side per Job::Partition slice
-            # (job.cc:10-43), a dict as the shuffle, the same reduce per group.
+            # (job.cc:10-43), a dict as the shuffle, reduce per group. Slices
+            # run in order and a dict keeps insertion order, so each group's
+            # values arrive in (subjob, emission) order with no tag or sort.
             n = len(kvs_sorted)
-            grouped: dict[str, list] = {}
+            grouped: dict[str, list[str]] = {}
             for p in range(mapper_num):
                 part = kvs_sorted[p * n // mapper_num : (p + 1) * n // mapper_num]
-                for k, tagged in map_side(p, part):
-                    grouped.setdefault(k, []).append(tagged)
-            groups = [g for kv in grouped.items() for g in run_reduce(kv)]
+                for k, v in map_side(part):
+                    grouped.setdefault(k, []).append(v)
+            groups = [(k, list(jt.reduce_fn(k, vs))) for k, vs in grouped.items()]
         else:
             # One Spark job: contiguous near-equal parallelize slices
             # (Job::Partition), the map side per slice, then Merge
@@ -323,9 +342,9 @@ class MapReduceEngine:
             sc = self.spark.sparkContext
             groups = (
                 sc.parallelize(kvs_sorted, mapper_num)
-                .mapPartitionsWithIndex(map_side)
+                .mapPartitionsWithIndex(_tagged(map_side))
                 .groupByKey(numPartitions=min(reducer_num, sc.defaultParallelism))
-                .flatMap(run_reduce)
+                .flatMap(_tagged_reducer(jt.reduce_fn))
                 .collect()
             )
         # Finish (job.cc:68-77) on the driver, which holds the whole result by

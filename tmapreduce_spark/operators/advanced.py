@@ -1189,30 +1189,6 @@ FROM orders
 HILBERT_BITS = 10  # 1024×1024 grid — matches the Z-order entry's dims
 
 
-def _hilbert_spark(x: str, y: str, bits: int = HILBERT_BITS) -> str:
-    """Spark expression: Hilbert d-index of 10-bit (x, y) via the standard
-    xy2d bit loop folded over aggregate() with a (x, y, d) struct state —
-    integer-only, so bit-identical across engines."""
-    return f"""
-aggregate(
-  sequence({bits - 1}, 0, -1),
-  named_struct('x', CAST({x} AS BIGINT), 'y', CAST({y} AS BIGINT), 'd', CAST(0 AS BIGINT)),
-  (acc, i) -> named_struct(
-    'x', CASE WHEN (acc.y & shiftleft(CAST(1 AS BIGINT), i)) = 0
-              THEN (CASE WHEN (acc.x & shiftleft(CAST(1 AS BIGINT), i)) > 0
-                         THEN shiftleft(CAST(1 AS BIGINT), i) - 1 - acc.y ELSE acc.y END)
-              ELSE acc.x END,
-    'y', CASE WHEN (acc.y & shiftleft(CAST(1 AS BIGINT), i)) = 0
-              THEN (CASE WHEN (acc.x & shiftleft(CAST(1 AS BIGINT), i)) > 0
-                         THEN shiftleft(CAST(1 AS BIGINT), i) - 1 - acc.x ELSE acc.x END)
-              ELSE acc.y END,
-    'd', acc.d + shiftleft(CAST(1 AS BIGINT), i) * shiftleft(CAST(1 AS BIGINT), i)
-         * CAST((3 * (CASE WHEN (acc.x & shiftleft(CAST(1 AS BIGINT), i)) > 0 THEN 1 ELSE 0 END))
-                ^ (CASE WHEN (acc.y & shiftleft(CAST(1 AS BIGINT), i)) > 0 THEN 1 ELSE 0 END) AS BIGINT)),
-  acc -> acc.d)
-"""
-
-
 def layout_hilbert_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hilbert-curve clustering key over the same (customer bucket × price
     bucket) dims as `layout_zorder_key` — the strictly-better space-filling

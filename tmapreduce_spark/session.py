@@ -66,6 +66,10 @@ def get_spark(
         # native type for — read as LONG nanos; sources.catalog converts to a
         # microsecond timestamp at load (SURVEY §7 hard-part 3).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # Python workers skip re-reading unchanged zip archives on sys.path
+        # at every task start (pyworker module docstring); executors import
+        # tmapreduce_spark already, for the engine's UDFs.
+        .config("spark.python.daemon.module", "tmapreduce_spark.pyworker")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )

@@ -43,40 +43,6 @@ def write_bucketed(
     writer.saveAsTable(table_name)
 
 
-def bucket_order_tables(
-    spark: SparkSession, sf_dir: str, base_path: str, num_buckets: int = 8
-) -> tuple[str, str]:
-    """Write orders and lineitem co-bucketed on the order key; returns the
-    two table names. One-time ingest cost; afterwards every orderkey join or
-    aggregation over them is exchange-free."""
-    o_tbl, l_tbl = "orders_bkt", "lineitem_bkt"
-    write_bucketed(
-        load_table(spark, sf_dir, "orders"),
-        o_tbl, "o_orderkey", num_buckets, f"{base_path}/orders_bkt",
-    )
-    write_bucketed(
-        load_table(spark, sf_dir, "lineitem"),
-        l_tbl, "l_orderkey", num_buckets, f"{base_path}/lineitem_bkt",
-    )
-    return o_tbl, l_tbl
-
-
-def bucketed_order_revenue(spark: SparkSession, o_tbl: str, l_tbl: str) -> DataFrame:
-    """Per-order revenue over the co-bucketed tables — the plan must contain
-    a SortMergeJoin and ZERO Exchange nodes (test_plans asserts this)."""
-    from pyspark.sql import functions as F
-
-    from tmapreduce_spark.parity import SPARK, msum2
-
-    o = spark.table(o_tbl)
-    l = spark.table(l_tbl)
-    return (
-        l.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-        .groupBy("l_orderkey", "o_orderpriority")
-        .agg(F.expr(msum2("l_extendedprice * (1 - l_discount)", SPARK)).alias("revenue"))
-    )
-
-
 def _session_layout(spark: SparkSession, sf_dir: str) -> tuple[str, str, str]:
     """``(sf_tag, app, base)`` for a catalog entry's bucketed tables. ``base``
     lies under the session's own scratch root (``SparkFiles`` root directory,

@@ -43,7 +43,7 @@ _DECODE_CONFS = (
 _SCHEMAS: dict[tuple, tuple[tuple, StructType]] = {}
 
 
-def _file_version(path: str) -> tuple | None:
+def file_version(path: str) -> tuple | None:
     """Identity of the bytes at ``path``: inode, size and mtime of a file, or
     every file's (relative name, size, mtime) under a directory. ``None``
     when the path cannot be stat'ed locally."""
@@ -73,7 +73,7 @@ def parquet_schema(spark: SparkSession, path: str) -> StructType:
     session that decodes the footer differently gets its own entry. A path
     that cannot be stat'ed is inferred on every call."""
     key = (path, tuple(spark.conf.get(c) for c in _DECODE_CONFS))
-    version = _file_version(path)
+    version = file_version(path)
     hit = _SCHEMAS.get(key)
     if hit is not None and version is not None and hit[0] == version:
         return hit[1]
