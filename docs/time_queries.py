@@ -33,7 +33,7 @@ def main() -> int:
 
     from tmapreduce_spark.catalog import build_catalog
     from tmapreduce_spark.plans.explain import physical_plan
-    from tmapreduce_spark.session import get_spark, noop_run
+    from tmapreduce_spark.session import get_spark, noop_run, release_rdds
 
     spark = get_spark(app_name="tmapreduce-time-queries")
     spark.sparkContext.setLogLevel("ERROR")
@@ -47,7 +47,6 @@ def main() -> int:
     spark.read.parquet(os.path.join(SF_DIR, "lineitem.parquet")).count()
     spark.sparkContext.parallelize(range(64), 32).map(lambda x: x).count()
 
-    jsc = spark.sparkContext._jsc
     for name in args.names:
         spec = catalog[name]
         if args.explain:
@@ -57,9 +56,7 @@ def main() -> int:
                 f.write(physical_plan(df))
             # a fresh plan per timed rep below; drop any checkpoint RDDs the
             # explain build pinned
-            m = jsc.getPersistentRDDs()
-            for rid in list(m.keySet().toArray()):
-                m.get(rid).unpersist(True)
+            release_rdds(spark)
         spark.sparkContext.setJobDescription(f"time: {name}")
         reps = [noop_run(spark, spec.fn, SF_DIR) for _ in range(args.reps)]
         spark.sparkContext.setJobDescription(None)

@@ -1,17 +1,21 @@
-"""Semantic invariants for the retrieval/eval/compaction wave: BM25 vs a
-full independent pure-Python recompute, confusion-matrix sweep vs a direct
-per-threshold recount, calibration-bin mass conservation, compaction-plan
-greedy-packing equivalence, and winsorized/trimmed means vs numpy on the raw
-column."""
+"""Semantic invariants for the retrieval/eval/compaction family: BM25 vs a
+full independent pure-Python recompute, the workload rankers built on it
+(RRF fusion, PRF expansion, dual-ranker MRR, exposure fairness),
+confusion-matrix sweep vs a direct per-threshold recount, calibration-bin
+mass conservation, compaction-plan greedy-packing equivalence, and
+winsorized/trimmed means vs numpy on the raw column."""
 
 from __future__ import annotations
 
 import math
 import re
 
+import duckdb
 import numpy as np
+import pandas as pd
 
 from tests.conftest import SF_SMOKE
+from tmapreduce_spark.catalog import build_catalog
 from tmapreduce_spark.functions.text import (
     BM25_TOP_K,
     COMPACT_TARGET_BYTES,
@@ -25,6 +29,12 @@ from tmapreduce_spark.functions.text import (
 from tmapreduce_spark.operators.analytics import agg_winsorized_stats
 from tmapreduce_spark.plans import physical_plan
 from tmapreduce_spark.sources.catalog import load_table
+
+CAT = build_catalog()
+
+
+def _run(spark, name: str) -> pd.DataFrame:
+    return CAT[name].fn(spark, SF_SMOKE).toPandas()
 
 
 def _mround6(x: float) -> float:
@@ -282,3 +292,78 @@ def test_new_ops_prune_scans_and_avoid_cartesian(spark):
 
     sweep = physical_plan(eval_threshold_sweep(spark, SF_SMOKE))
     assert "CartesianProduct" not in sweep
+
+
+def test_rrf_consistent_with_component_ranks(spark):
+    got = _run(spark, "retrieval_rrf_hybrid")
+    for _, r in got.iterrows():
+        expect = 0
+        if not pd.isna(r["rank_bm25"]):
+            expect += 10**6 // (60 + int(r["rank_bm25"]))
+        if not pd.isna(r["rank_cov"]):
+            expect += 10**6 // (60 + int(r["rank_cov"]))
+        assert int(r["rrf_micro"]) == expect
+    for q, g in got.groupby("query_id"):
+        ranks = sorted(g["rank_fused"])
+        assert ranks == list(range(1, len(g) + 1)), q
+        assert len(g) <= 5
+        # fused order follows (rrf desc, doc_id asc)
+        srt = g.sort_values(["rrf_micro", "doc_id"], ascending=[False, True])
+        assert list(srt["rank_fused"]) == ranks, q
+
+
+def test_prf_expansion_semantics(spark):
+    got = _run(spark, "retrieval_prf_expansion")
+    from tmapreduce_spark.functions.text import BM25_QUERIES, PRF_FB_DOCS
+
+    assert len(got) == 5 * 5
+    # expansion never re-suggests an original query term
+    for _, r in got.iterrows():
+        assert r["term"] not in BM25_QUERIES[r["query_id"]]
+    assert (got["n_fb_docs"] <= PRF_FB_DOCS).all()
+    assert (got["weight"] > 0).all()
+    # w(t) = sum tf/dl over <= 10 feedback docs, each addend <= 1
+    assert (got["weight"] <= PRF_FB_DOCS).all()
+    # within a query, weight is non-increasing in rank
+    for _, g in got.groupby("query_id"):
+        s = g.sort_values("rank")["weight"].values
+        assert (s[:-1] >= s[1:] - 1e-9).all()
+
+
+def test_mrr_dual_ranker_semantics(spark):
+    got = _run(spark, "eval_mrr_dual_ranker").set_index("ranker")
+    assert set(got.index) == {"bm25", "ql_dirichlet"}
+    assert (got["n_queries"] == 5).all()
+    assert (got["n_hit_queries"] <= got["n_queries"]).all()
+    # MRR bounds: 0 <= mrr <= n_hit/n (each hit contributes at most 1/1)
+    for _, r in got.iterrows():
+        assert 0 <= r["mrr"] <= r["n_hit_queries"] / r["n_queries"] + 1e-9
+    # independent recompute of BM25's MRR from the catalog's own toplist:
+    # text_bm25_search is the identical ranking, qrels = strict-AND docs
+    from tmapreduce_spark.functions.text import BM25_QUERIES
+
+    top = _run(spark, "text_bm25_search")
+    toks = duckdb.sql(
+        f"""SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '\\s+')) AS tok
+            FROM '{SF_SMOKE}/documents.parquet'"""
+    ).df()
+    toks = toks[toks.tok != ""]
+    doc_toks = toks.groupby("doc_id")["tok"].apply(set)
+    rr_sum = 0.0
+    for q, terms in BM25_QUERIES.items():
+        rel = {d for d, s in doc_toks.items() if all(t in s for t in terms)}
+        g = top[top.query_id == q].sort_values("rank")
+        hit = g[g.doc_id.isin(rel)]
+        if len(hit):
+            rr_sum += 1.0 / hit.iloc[0]["rank"]
+    assert abs(got.loc["bm25", "mrr"] - rr_sum / 5) < 1e-5
+
+
+def test_exposure_fairness_identities(spark):
+    got = _run(spark, "eval_exposure_fairness")
+    assert len(got) == 20
+    assert abs(got.corpus_share.sum() - 1) < 1e-4
+    assert abs(got.exposure_share.sum() - 1) < 1e-4
+    # disparity is genuinely non-uniform on this corpus (some sources get
+    # buried, some over-exposed) — the audit has signal
+    assert got.disparity_ratio.min() < 0.9 < got.disparity_ratio.max()

@@ -195,11 +195,10 @@ def test_ann_bucketed_corpus_never_shuffles_for_external_queries(spark):
     side of the SortMergeJoin."""
     from pyspark.sql import functions as F
 
+    from tmapreduce_spark.functions.similarity import _bucket_spark, _quant_spark
     from tmapreduce_spark.sources.bucketing import (
         ANN_LAYOUT_BUCKETS,
         _session_layout,
-        _spark_bucket_expr,
-        _spark_quant_expr,
         write_bucketed,
     )
     from tmapreduce_spark.sources.catalog import load_table
@@ -208,8 +207,8 @@ def test_ann_bucketed_corpus_never_shuffles_for_external_queries(spark):
     tbl = f"embeddings_annbkt_ext_{app}"
     corpus = (
         load_table(spark, SF_SMOKE, "embeddings")
-        .select("vec_id", F.expr(_spark_quant_expr("embedding")).alias("qe"))
-        .select("vec_id", "qe", F.expr(_spark_bucket_expr()).alias("bucket"))
+        .select("vec_id", F.expr(_quant_spark("embedding")).alias("qe"))
+        .select("vec_id", "qe", F.expr(_bucket_spark()).alias("bucket"))
     )
     write_bucketed(
         corpus, tbl, "bucket", ANN_LAYOUT_BUCKETS, f"{base}/{tbl}",

@@ -4,10 +4,17 @@ rewritten one is."""
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+import textwrap
 import zipfile
 import zipimport
+from pathlib import Path
 
 from tmapreduce_spark import pyworker
+
+REPO = str(Path(__file__).resolve().parents[1])
 
 
 def _write_zip(path, members: dict[str, str]) -> None:
@@ -74,3 +81,35 @@ def test_python_tasks_keep_zip_directories(spark):
     assert any(a.endswith("pyspark.zip") for a in archives)
     assert kept
     assert installed
+
+
+def test_python_tasks_run_with_package_only_on_driver_path(tmp_path):
+    """A driver started outside the repo, with the package only on its own
+    ``sys.path`` and no ``PYTHONPATH``, still runs Python tasks: a lambda and
+    a pandas UDF."""
+    script = textwrap.dedent(
+        f"""
+        import sys
+        sys.path.insert(0, {REPO!r})
+        import pandas as pd
+        from pyspark.sql import functions as F
+        from tmapreduce_spark.session import get_spark
+
+        spark = get_spark(app_name="pyworker-path", master="local[1]")
+        spark.sparkContext.setLogLevel("ERROR")
+        assert spark.sparkContext.parallelize([1, 2], 1).map(lambda x: x + 1).collect() == [2, 3]
+
+        @F.pandas_udf("long")
+        def inc(s: pd.Series) -> pd.Series:
+            return s + 1
+
+        assert [r[0] for r in spark.range(2).select(inc("id")).collect()] == [1, 2]
+        spark.stop()
+        """
+    )
+    env = dict(os.environ, PYTHONPATH="", SPARK_GRAFT_DRIVER_MEM="1g")
+    run = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert run.returncode == 0, run.stderr[-4000:]

@@ -1,159 +1,15 @@
-"""Round-12 operators: the at-rest ANN bucket layout and PNG decode.
+"""Round-12 operators: PNG decode.
 
-Each new entry gets a brute-force pure-Python recompute (independent of both
+The entry gets a brute-force pure-Python recompute (independent of both
 Spark and DuckDB) so the two engines' agreement can never be a shared-bug
 artifact, plus the degenerate-input pins the round workflow requires.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 import pytest
 
 from tests.conftest import SF_SMOKE
-
-
-def _brute_ann_bucketed(sf_dir: str, n_queries: int, top_k: int):
-    """Pure numpy/python recompute of layout_ann_bucketed: quantize, LSH
-    bucket via the deterministic integer planes, same-bucket candidates,
-    exact int64 dot cosine on the 1e-6 grid, per-query top-k with the
-    neighbor_id tiebreak."""
-    import duckdb
-
-    from tmapreduce_spark.functions.similarity import QUANT, _buckets_of
-
-    rows = duckdb.sql(
-        f"SELECT vec_id, embedding FROM '{sf_dir}/embeddings.parquet' "
-        "ORDER BY vec_id"
-    ).fetchall()
-    ids = np.array([r[0] for r in rows], dtype=np.int64)
-    E = np.stack([np.asarray(r[1], dtype=np.float64) for r in rows])
-    Q = np.floor(E * QUANT + 0.5).astype(np.int64)
-    buckets = _buckets_of(Q)
-    nrm = np.sqrt(np.einsum("ij,ij->i", Q, Q).astype(np.float64))
-    out = []
-    for qi in range(len(ids)):
-        if ids[qi] >= n_queries:
-            continue
-        m = (buckets == buckets[qi]) & (ids != ids[qi])
-        if not m.any():
-            continue
-        dots = Q[m] @ Q[qi]
-        cos = dots.astype(np.float64) / (nrm[m] * nrm[qi])
-        cos = np.floor(cos * 1e6 + 0.5) / 1e6
-        cand = sorted(
-            zip(cos.tolist(), ids[m].tolist()), key=lambda t: (-t[0], t[1])
-        )
-        for rank, (c, nid) in enumerate(cand[:top_k], start=1):
-            out.append((int(ids[qi]), int(nid), float(c), rank))
-    return sorted(out)
-
-
-def test_layout_ann_bucketed_matches_brute_force(spark):
-    """The bucketed-layout ANN join must reproduce the brute-force
-    same-bucket top-k exactly — every (query, neighbor, cosine, rank)."""
-    from tmapreduce_spark.sources.bucketing import (
-        N_ANN_BUCKETED_QUERIES,
-        layout_ann_bucketed,
-    )
-    from tmapreduce_spark.functions.similarity import TOP_K
-
-    got = sorted(
-        (r["query_id"], r["neighbor_id"], r["cosine"], r["rank"])
-        for r in layout_ann_bucketed(spark, SF_SMOKE).collect()
-    )
-    want = _brute_ann_bucketed(SF_SMOKE, N_ANN_BUCKETED_QUERIES, TOP_K)
-    assert got == want
-
-
-def test_layout_ann_bucketed_oracle_parity(spark, duck):
-    """Spark vs DuckDB oracle, bit-exact at the smoke SF (the driver's gate
-    replicated in-tree)."""
-    from tmapreduce_spark.sources.bucketing import (
-        _layout_ann_bucketed_sql,
-        layout_ann_bucketed,
-    )
-
-    sp = sorted(tuple(r) for r in layout_ann_bucketed(spark, SF_SMOKE).collect())
-    duck.execute(
-        "CREATE OR REPLACE VIEW embeddings AS "
-        f"SELECT * FROM '{SF_SMOKE}/embeddings.parquet'"
-    )
-    orc = sorted(tuple(r) for r in duck.execute(_layout_ann_bucketed_sql()).fetchall())
-    assert sp == orc
-
-
-def test_layout_ann_bucketed_spark_bucket_bits_match_numpy(spark):
-    """The JVM bucket expression (exact int64 plane dots) must agree with
-    numpy's _buckets_of on every corpus row — the bit-exactness that makes
-    the at-rest layout and the driver-side ann_lsh_topk interchangeable."""
-    import duckdb
-
-    from pyspark.sql import functions as F
-
-    from tmapreduce_spark.functions.similarity import QUANT, _buckets_of
-    from tmapreduce_spark.sources.bucketing import (
-        _spark_bucket_expr,
-        _spark_quant_expr,
-    )
-    from tmapreduce_spark.sources.catalog import load_table
-
-    got = {
-        r["vec_id"]: r["bucket"]
-        for r in load_table(spark, SF_SMOKE, "embeddings")
-        .select("vec_id", F.expr(_spark_quant_expr("embedding")).alias("qe"))
-        .select("vec_id", F.expr(_spark_bucket_expr()).alias("bucket"))
-        .collect()
-    }
-    rows = duckdb.sql(
-        f"SELECT vec_id, embedding FROM '{SF_SMOKE}/embeddings.parquet' "
-        "ORDER BY vec_id"
-    ).fetchall()
-    Q = np.floor(
-        np.stack([np.asarray(r[1], dtype=np.float64) for r in rows]) * QUANT
-        + 0.5
-    ).astype(np.int64)
-    want = dict(zip((r[0] for r in rows), _buckets_of(Q).tolist()))
-    assert got == want
-
-
-def test_layout_ann_bucketed_lone_vector_query_emits_nothing(spark, tmp_path):
-    """Degenerate input: a query whose bucket contains only itself has no
-    candidates — it must vanish from the output (no NULL row, no self
-    pair), identically in the brute recompute."""
-    from tmapreduce_spark.sources.bucketing import layout_ann_bucketed
-
-    # vec 0 is axis-aligned on dim 0; planes give it some bucket; vecs 1-2
-    # are copies of each other but far from 0 — craft so 0 is alone in its
-    # bucket by construction (verified below, not assumed).
-    from tmapreduce_spark.functions.similarity import QUANT, _buckets_of
-
-    vecs = {
-        0: [1.0] + [0.0] * 63,
-        1: [0.0] * 62 + [1.0, -1.0],
-        2: [0.0] * 62 + [1.0, -1.0],
-    }
-    Q = np.floor(
-        np.stack([np.asarray(v) for v in vecs.values()]) * QUANT + 0.5
-    ).astype(np.int64)
-    b = _buckets_of(Q)
-    if b[0] == b[1]:
-        pytest.skip("crafted vectors unexpectedly share a bucket")
-    pd.DataFrame(
-        {
-            "vec_id": list(vecs),
-            "embedding": [np.array(v, dtype=np.float32) for v in vecs.values()],
-            "label": [0, 0, 0],
-        }
-    ).to_parquet(tmp_path / "embeddings.parquet", index=False)
-    got = layout_ann_bucketed(spark, str(tmp_path)).collect()
-    # queries 1 and 2 see each other; query 0 is absent entirely
-    assert sorted((r["query_id"], r["neighbor_id"]) for r in got) == [
-        (1, 2),
-        (2, 1),
-    ]
-    assert all(r["rank"] == 1 for r in got)
 
 
 # --------------------------- PNG decode (round 12) -------------------------

@@ -146,24 +146,6 @@ def test_isotonic_matches_sequential_pav(spark):
     assert np.abs(fit - ref).max() < 2e-6
 
 
-def test_rrf_consistent_with_component_ranks(spark):
-    got = _run(spark, "retrieval_rrf_hybrid")
-    for _, r in got.iterrows():
-        expect = 0
-        if not pd.isna(r["rank_bm25"]):
-            expect += 10**6 // (60 + int(r["rank_bm25"]))
-        if not pd.isna(r["rank_cov"]):
-            expect += 10**6 // (60 + int(r["rank_cov"]))
-        assert int(r["rrf_micro"]) == expect
-    for q, g in got.groupby("query_id"):
-        ranks = sorted(g["rank_fused"])
-        assert ranks == list(range(1, len(g) + 1)), q
-        assert len(g) <= 5
-        # fused order follows (rrf desc, doc_id asc)
-        srt = g.sort_values(["rrf_micro", "doc_id"], ascending=[False, True])
-        assert list(srt["rank_fused"]) == ranks, q
-
-
 def test_kcore_matches_python_peel_to_fixpoint(spark):
     """Independent peel WITHOUT a round bound: proves the engines' fixed
     6-round unroll reaches the fixpoint at fixture scale (slack bound)."""

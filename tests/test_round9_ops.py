@@ -121,24 +121,6 @@ def test_query_likelihood_semantics(spark):
     assert abs(score - best["score"]) < 1e-4
 
 
-def test_prf_expansion_semantics(spark):
-    got = _run(spark, "retrieval_prf_expansion")
-    from tmapreduce_spark.functions.text import BM25_QUERIES, PRF_FB_DOCS
-
-    assert len(got) == 5 * 5
-    # expansion never re-suggests an original query term
-    for _, r in got.iterrows():
-        assert r["term"] not in BM25_QUERIES[r["query_id"]]
-    assert (got["n_fb_docs"] <= PRF_FB_DOCS).all()
-    assert (got["weight"] > 0).all()
-    # w(t) = sum tf/dl over <= 10 feedback docs, each addend <= 1
-    assert (got["weight"] <= PRF_FB_DOCS).all()
-    # within a query, weight is non-increasing in rank
-    for _, g in got.groupby("query_id"):
-        s = g.sort_values("rank")["weight"].values
-        assert (s[:-1] >= s[1:] - 1e-9).all()
-
-
 def test_source_kl_nonneg_and_recompute(spark):
     got = _run(spark, "text_source_kl_divergence").set_index("source")
     assert (got["kl_nats"] >= 0).all()
@@ -259,35 +241,6 @@ def test_cuped_identities(spark):
     assert abs(got["lift_adjusted"] - lift_adj) < 1e-2
     rho = np.corrcoef(x, y)[0, 1]
     assert abs(got["var_ratio"] - (1 - rho * rho)) < 1e-3
-
-
-def test_mrr_dual_ranker_semantics(spark):
-    got = _run(spark, "eval_mrr_dual_ranker").set_index("ranker")
-    assert set(got.index) == {"bm25", "ql_dirichlet"}
-    assert (got["n_queries"] == 5).all()
-    assert (got["n_hit_queries"] <= got["n_queries"]).all()
-    # MRR bounds: 0 <= mrr <= n_hit/n (each hit contributes at most 1/1)
-    for _, r in got.iterrows():
-        assert 0 <= r["mrr"] <= r["n_hit_queries"] / r["n_queries"] + 1e-9
-    # independent recompute of BM25's MRR from the catalog's own toplist:
-    # text_bm25_search is the identical ranking, qrels = strict-AND docs
-    from tmapreduce_spark.functions.text import BM25_QUERIES
-
-    top = _run(spark, "text_bm25_search")
-    toks = duckdb.sql(
-        f"""SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '\\s+')) AS tok
-            FROM '{SF_SMOKE}/documents.parquet'"""
-    ).df()
-    toks = toks[toks.tok != ""]
-    doc_toks = toks.groupby("doc_id")["tok"].apply(set)
-    rr_sum = 0.0
-    for q, terms in BM25_QUERIES.items():
-        rel = {d for d, s in doc_toks.items() if all(t in s for t in terms)}
-        g = top[top.query_id == q].sort_values("rank")
-        hit = g[g.doc_id.isin(rel)]
-        if len(hit):
-            rr_sum += 1.0 / hit.iloc[0]["rank"]
-    assert abs(got.loc["bm25", "mrr"] - rr_sum / 5) < 1e-5
 
 
 def test_cc_min_labels_spark_equals_union_find(spark):

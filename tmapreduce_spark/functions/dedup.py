@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from tmapreduce_spark.catalog import QuerySpec
-from tmapreduce_spark.parity import mround
+from tmapreduce_spark.parity import WORD_TOKENS, mround
 from tmapreduce_spark.sources.catalog import load_table, spread
 
 # MinHash parameters: NUM_PERMS affine permutations h_i(x) = (a_i*x + b_i) % P
@@ -63,7 +63,7 @@ def _h60_duck(e: str) -> str:
 # index (measured ~2x on the minhash pipeline).
 #
 # Validity is decided ONCE per document from size(toks) instead of per shingle:
-# elements of split(trim(lower(text)), '\\s+') are non-empty and contain no
+# elements of WORD_TOKENS (parity.py) are non-empty and contain no
 # whitespace (trim kills the leading empty, \\s+ forbids interior/trailing
 # ones), so when size(toks) >= 3 EVERY window i in [0, size-3] renders as
 # exactly 'x y z' (3 parts, non-empty) and the old per-shingle re-split filter
@@ -115,7 +115,7 @@ def _shingle_rows(
     if doc_filter is not None:
         d = d.join(F.broadcast(doc_filter.select("doc_id")), "doc_id")
     d = spread(d.select(*cols, "text"), spark, "doc_id")
-    toks = d.selectExpr(*cols, r"split(trim(lower(text)), '\\s+') AS toks")
+    toks = d.selectExpr(*cols, f"{WORD_TOKENS} AS toks")
     return toks.selectExpr(
         *cols, f"explode(array_distinct({_SHINGLES_SPARK_TOKS})) AS sh"
     )
@@ -349,7 +349,7 @@ def _verified_pairs(
     # candidate-BOUNDED subtree stays; at 100 TB flip it to a checkpoint
     # (one-line change, boundary recorded in OPTIMIZATION_r13.md).
     sets = d.selectExpr(
-        "doc_id", r"split(trim(lower(text)), '\\s+') AS toks"
+        "doc_id", f"{WORD_TOKENS} AS toks"
     ).selectExpr("doc_id", f"array_distinct({_SHINGLES_SPARK_TOKS}) AS sh")
     return (
         cands.join(sets.selectExpr("doc_id AS doc_a", "sh AS sh_a"), "doc_a")
@@ -430,7 +430,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     toks = d.selectExpr(
         "doc_id",
-        r"explode(split(trim(lower(text)), '\\s+')) AS tok",
+        f"explode({WORD_TOKENS}) AS tok",
     ).filter(F.col("tok") != "")
     h = toks.selectExpr("doc_id", f"{_h60_spark('tok')} AS h32")
     # bit j of the signature is sign(sum ±1) = [2 * count(bit j set) > n]:
@@ -547,7 +547,7 @@ def _pair_intersections(
     # no shuffle, stays in whole-stage codegen, and never touches `groups`.
     d = load_table(spark, sf_dir, "documents")
     sizes = d.selectExpr(
-        "doc_id", r"split(trim(lower(text)), '\\s+') AS toks"
+        "doc_id", f"{WORD_TOKENS} AS toks"
     ).selectExpr("doc_id", f"size(array_distinct({_SHINGLES_SPARK_TOKS})) AS sz")
     # Cold shingles generate their doc pairs directly from the doc list —
     # k*(k-1)/2 pairs with k <= cap, no self-join needed. List order doesn't
@@ -850,7 +850,7 @@ def dedup_span_exact(
         "doc_id",
     )
     sh = (
-        d.selectExpr("doc_id", "source", r"split(trim(lower(text)), '\\s+') AS t")
+        d.selectExpr("doc_id", "source", f"{WORD_TOKENS} AS t")
         .filter(F.size("t") >= SPAN_W)  # sequence(1, 0) would run DESCENDING
         .selectExpr(
             "doc_id",
@@ -1444,7 +1444,7 @@ def dedup_chunk_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     n_chunks_expr = f"greatest((size(toks) + {CHUNK_TOKS - 1}) div {CHUNK_TOKS}, 1)"
     chunks = (
-        d.selectExpr("doc_id", r"split(trim(lower(text)), '\\s+') AS toks")
+        d.selectExpr("doc_id", f"{WORD_TOKENS} AS toks")
         .selectExpr(
             "doc_id",
             f"posexplode(transform(sequence(0, {n_chunks_expr} - 1), "
@@ -1874,7 +1874,7 @@ def dedup_cross_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     n_chunks_expr = f"greatest((size(toks) + {CHUNK_TOKS - 1}) div {CHUNK_TOKS}, 1)"
     chunks = (
-        d.selectExpr("source", r"split(trim(lower(text)), '\\s+') AS toks")
+        d.selectExpr("source", f"{WORD_TOKENS} AS toks")
         .selectExpr(
             "source",
             f"explode(transform(sequence(0, {n_chunks_expr} - 1), "
@@ -2141,7 +2141,7 @@ def _winnow_selected(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         "doc_id",
     )
-    toks = d.selectExpr("doc_id", r"split(trim(lower(text)), '\\s+') AS toks")
+    toks = d.selectExpr("doc_id", f"{WORD_TOKENS} AS toks")
     hs = toks.selectExpr(
         "doc_id",
         f"transform({_SHINGLES_SPARK_TOKS}, s -> {_h60_spark('s')}) AS hs",

@@ -28,7 +28,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from tmapreduce_spark.catalog import QuerySpec
-from tmapreduce_spark.parity import mround
+from tmapreduce_spark.parity import mround, mround_np
 from tmapreduce_spark.sources.catalog import load_table, spread
 
 DECODE_SCHEMA = (
@@ -775,7 +775,7 @@ def multimodal_embed_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     from tmapreduce_spark.functions.scale import _buckets_of
-    from tmapreduce_spark.functions.similarity import QUANT
+    from tmapreduce_spark.functions.similarity import l2_norms, quantize
 
     # spread: the bucketing matmul is an Arrow CPU pass over the
     # single-row-group embeddings scan (r11 scan-fan-out lesson)
@@ -787,15 +787,13 @@ def multimodal_embed_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         for pdf in batches:
             if not len(pdf):
                 continue
-            C = np.floor(
-                np.stack(pdf["embedding"].to_numpy()).astype(np.float64) * QUANT + 0.5
-            ).astype(np.int64)
+            C = quantize(pdf["embedding"])
             yield pd.DataFrame(
                 {
                     "vec_id": pdf["vec_id"].astype("int64"),
                     "qe": [c.tolist() for c in C],
                     "bucket": _buckets_of(C).astype("int64"),
-                    "nrm": np.sqrt(np.einsum("ij,ij->i", C, C).astype(np.float64)),
+                    "nrm": l2_norms(C),
                 }
             )
 
@@ -821,7 +819,7 @@ def multimodal_embed_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "fake_width": [r[1] for r in recs],
                     "dq": [d.tolist() for d in D],
                     "bucket": _buckets_of(D).astype("int64"),
-                    "dnrm": np.sqrt(np.einsum("ij,ij->i", D, D).astype(np.float64)),
+                    "dnrm": l2_norms(D),
                 }
             )
 
@@ -846,7 +844,7 @@ def multimodal_embed_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "doc_id": pdf["doc_id"].astype("int64"),
                     "fake_width": pdf["fake_width"].astype("int64"),
                     "neighbor_id": pdf["vec_id"].astype("int64"),
-                    "cosine": np.floor(cos * 1e6 + 0.5) / 1e6,
+                    "cosine": mround_np(cos, 6),
                 }
             )
 

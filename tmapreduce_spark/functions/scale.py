@@ -18,10 +18,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from tmapreduce_spark.catalog import QuerySpec
-from tmapreduce_spark.parity import DUCK, SPARK, mround, msum2
+from tmapreduce_spark.parity import DUCK, SPARK, WORD_TOKENS, mround, mround_np, msum2
 from tmapreduce_spark.functions.similarity import (
     N_PLANES,
-    QUANT,
     TOP_K,
     _ann_topk_sql,
     _bucket_duck,
@@ -31,7 +30,9 @@ from tmapreduce_spark.functions.similarity import (
     _qdot_duck,
     _quant_duck,
     ann_topk_cosine,
-    collect_query_model,
+    head_vectors,
+    l2_norms,
+    quantize,
     topk_ranked,
 )
 from tmapreduce_spark.sources.catalog import load_table, spread
@@ -66,7 +67,7 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str, probe_bits: int = 0) -> DataF
     import pandas as pd
 
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    q_ids, Qm, q_nrm = collect_query_model(e, ANN_QUERIES)
+    q_ids, Qm, q_nrm = head_vectors(e, ANN_QUERIES)
     q_buckets = _buckets_of(Qm)
 
     # probe_ok[qi, b]: does bucket b fall inside query qi's probe set?
@@ -81,11 +82,9 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str, probe_bits: int = 0) -> DataF
             if not len(pdf):
                 continue
             ids = pdf["vec_id"].to_numpy().astype(np.int64)
-            C = np.floor(
-                np.stack(pdf["embedding"].to_numpy()).astype(np.float64) * QUANT + 0.5
-            ).astype(np.int64)
+            C = quantize(pdf["embedding"])
             buckets = _buckets_of(C)
-            c_nrm = np.sqrt(np.einsum("ij,ij->i", C, C).astype(np.float64))
+            c_nrm = l2_norms(C)
             frames = []
             for qi in range(len(q_ids)):
                 m = probe_ok[qi][buckets] & (ids != q_ids[qi])
@@ -98,7 +97,7 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str, probe_bits: int = 0) -> DataF
                         {
                             "query_id": np.full(int(m.sum()), q_ids[qi]),
                             "neighbor_id": ids[m],
-                            "cosine": np.floor(cos * 1e6 + 0.5) / 1e6,
+                            "cosine": mround_np(cos, 6),
                         }
                     )
                 )
@@ -412,28 +411,23 @@ def sketch_hll_md5_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _ivf_centroid_model(e: DataFrame):
     """Collect the IVF centroid model (the first IVF_K corpus vectors on the
-    quantized grid) and return (cent_rows, centroid_ranks): centroid_ranks
+    quantized grid) and return (ids, centroid_ranks): centroid_ranks
     orders centroid ids best-first per row (cosine DESC, cid ASC — stable
     argsort, so equal cosines keep ascending-cid order, matching the
     oracle). Shared by the ANN probes and the list-balance audit so the
     assignment geometry can't drift between them."""
     import numpy as np
 
-    cent_rows = e.filter(F.col("vec_id") < IVF_K).orderBy("vec_id").collect()
-    C = np.floor(
-        np.stack([np.asarray(r["embedding"], dtype=np.float64) for r in cent_rows])
-        * 1_000_000 + 0.5
-    ).astype(np.int64)
-    c_nrm = np.sqrt(np.einsum("ij,ij->i", C, C).astype(np.float64))
+    ids, C, c_nrm = head_vectors(e, IVF_K)
 
     def centroid_ranks(Q: "np.ndarray") -> "np.ndarray":
         dots = Q @ C.T  # exact int64
-        nrm = np.sqrt(np.einsum("ij,ij->i", Q, Q).astype(np.float64))
+        nrm = l2_norms(Q)
         cos = dots.astype(np.float64) / (nrm[:, None] * c_nrm[None, :])
         return np.argsort(-cos, axis=1, kind="stable")
 
     centroid_ranks.C = C
-    return cent_rows, centroid_ranks
+    return ids, centroid_ranks
 
 
 def _ivf_assign_df(e: DataFrame, centroid_ranks) -> DataFrame:
@@ -443,8 +437,7 @@ def _ivf_assign_df(e: DataFrame, centroid_ranks) -> DataFrame:
 
     def assign(batches):
         for pdf in batches:
-            E = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            best = centroid_ranks(np.floor(E * 1_000_000 + 0.5).astype(np.int64))[:, 0]
+            best = centroid_ranks(quantize(pdf["embedding"]))[:, 0]
             yield pd.DataFrame(
                 {"vec_id": pdf["vec_id"].astype("int64"), "centroid": best.astype("int32")}
             )
@@ -475,42 +468,43 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str, nprobe: int = 1) -> DataFrame
     assert ANN_QUERIES <= IVF_K, "query assignments derive from the centroid collect"
 
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    cent_rows, centroid_ranks = _ivf_centroid_model(e)
+    cent_ids, centroid_ranks = _ivf_centroid_model(e)
     assigned = _ivf_assign_df(e, centroid_ranks)
     corpus = e.join(assigned, "vec_id")
 
     # query-side probe lists driver-side (queries ⊂ collected centroid rows):
     # one broadcast row per (query, probed centroid) keeps the candidate
     # lookup a plain equi-join.
-    q_ranks = centroid_ranks(centroid_ranks.C[:ANN_QUERIES])
+    Q = centroid_ranks.C[:ANN_QUERIES]
+    q_ranks = centroid_ranks(Q)
     q = spark.createDataFrame(
         [
-            (int(r["vec_id"]), list(r["embedding"]), int(q_ranks[i, p]))
-            for i, r in enumerate(cent_rows[:ANN_QUERIES])
+            (int(cent_ids[i]), Q[i].tolist(), int(q_ranks[i, p]))
+            for i in range(len(Q))
             for p in range(min(nprobe, IVF_K))
         ],
-        "query_id bigint, q_emb array<float>, q_centroid int",
+        "query_id bigint, q_qe array<bigint>, q_centroid int",
     )
     cand = corpus.join(
         F.broadcast(q),
         (F.col("centroid") == F.col("q_centroid")) & (F.col("vec_id") != F.col("query_id")),
-    ).select("query_id", "q_emb", F.col("vec_id").alias("neighbor_id"), "embedding")
+    ).select("query_id", "q_qe", F.col("vec_id").alias("neighbor_id"), "embedding")
 
     def score(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
-            A = np.floor(np.stack(pdf["q_emb"].to_numpy()).astype(np.float64) * 1_000_000 + 0.5).astype(np.int64)
-            B = np.floor(np.stack(pdf["embedding"].to_numpy()).astype(np.float64) * 1_000_000 + 0.5).astype(np.int64)
+            A = np.stack(pdf["q_qe"])  # already on the grid
+            B = quantize(pdf["embedding"])
             dots = np.einsum("ij,ij->i", A, B)
-            na = np.sqrt(np.einsum("ij,ij->i", A, A).astype(np.float64))
-            nb = np.sqrt(np.einsum("ij,ij->i", B, B).astype(np.float64))
+            na = l2_norms(A)
+            nb = l2_norms(B)
             cos = dots.astype(np.float64) / (na * nb)
             yield pd.DataFrame(
                 {
                     "query_id": pdf["query_id"].astype("int64"),
                     "neighbor_id": pdf["neighbor_id"].astype("int64"),
-                    "cosine": np.floor(cos * 1e6 + 0.5) / 1e6,
+                    "cosine": mround_np(cos, 6),
                 }
             )
 
@@ -575,6 +569,18 @@ PQ_M = 4  # subspaces
 PQ_K = 16  # codewords per subspace (codebook = sub-vectors of vec_id < PQ_K)
 
 
+def _pq_codebook(CB):
+    """Split a quantized (PQ_K, dim) codebook into its PQ_M subspaces:
+    (sub-vector width dm, the (PQ_K, dm) sub-codebooks, each codeword's
+    exact int64 |c|²)."""
+    import numpy as np
+
+    dm = CB.shape[1] // PQ_M
+    subcb = [CB[:, m * dm : (m + 1) * dm] for m in range(PQ_M)]
+    sub_n2 = [np.einsum("ij,ij->i", c, c) for c in subcb]
+    return dm, subcb, sub_n2
+
+
 def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ANN with ADC scoring — the memory-bounded scale
     path that completes the family (brute / LSH / IVF / PQ): each corpus
@@ -599,17 +605,8 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    cb_rows = e.filter(F.col("vec_id") < PQ_K).orderBy("vec_id").collect()
-    CB = np.floor(
-        np.stack([np.asarray(r["embedding"], dtype=np.float64) for r in cb_rows])
-        * QUANT + 0.5
-    ).astype(np.int64)  # (PQ_K, dim)
-    dim = CB.shape[1]
-    dm = dim // PQ_M
-    subcb = [CB[:, m * dm : (m + 1) * dm] for m in range(PQ_M)]  # (PQ_K, dm) each
-    sub_n2 = [np.einsum("ij,ij->i", c, c) for c in subcb]  # |codeword|² int64
-
-    q_ids, Q, q_nrm = collect_query_model(e)
+    dm, subcb, sub_n2 = _pq_codebook(head_vectors(e, PQ_K)[1])
+    q_ids, Q, q_nrm = head_vectors(e, ANN_QUERIES)
     # LUT[qi, m, c] = int64 dot(query sub-vector m, codeword c of subspace m)
     LUT = np.stack(
         [Q[:, m * dm : (m + 1) * dm] @ subcb[m].T for m in range(PQ_M)], axis=1
@@ -621,9 +618,7 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         for pdf in batches:
             if not len(pdf):
                 continue
-            V = np.floor(
-                np.stack(pdf["embedding"].to_numpy()).astype(np.float64) * QUANT + 0.5
-            ).astype(np.int64)
+            V = quantize(pdf["embedding"])
             out = {"vec_id": pdf["vec_id"].to_numpy().astype("int64")}
             rnorm2 = np.zeros(len(V), dtype=np.int64)
             for m in range(PQ_M):
@@ -650,7 +645,7 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 adc += LUT[:, m, codes[:, m]]
             rn = np.sqrt(pdf["rnorm2"].to_numpy().astype(np.float64))
             cos = adc.astype(np.float64) / (q_nrm[:, None] * rn[None, :])
-            cos = np.floor(cos * 1e6 + 0.5) / 1e6
+            cos = mround_np(cos, 6)
             k, n = cos.shape
             out_q = np.repeat(q_ids, n)
             out_n = np.tile(ids, k)
@@ -745,21 +740,13 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # model-side collects: IVF_K centroid rows (queries are a subset) + the
     # PQ codebook rows — both tiny, never the data path
-    cent_rows = e.filter(F.col("vec_id") < max(IVF_K, PQ_K)).orderBy("vec_id").collect()
-    M = np.floor(
-        np.stack([np.asarray(r["embedding"], dtype=np.float64) for r in cent_rows])
-        * QUANT + 0.5
-    ).astype(np.int64)
+    _, M, _ = head_vectors(e, max(IVF_K, PQ_K))
     C = M[:IVF_K]
-    c_nrm = np.sqrt(np.einsum("ij,ij->i", C, C).astype(np.float64))
-    CB = M[:PQ_K]
-    dim = M.shape[1]
-    dm = dim // PQ_M
-    subcb = [CB[:, m * dm : (m + 1) * dm] for m in range(PQ_M)]
-    sub_n2 = [np.einsum("ij,ij->i", c, c) for c in subcb]
+    c_nrm = l2_norms(C)
+    dm, subcb, sub_n2 = _pq_codebook(M[:PQ_K])
 
     Q = M[:ANN_QUERIES]
-    q_nrm = np.sqrt(np.einsum("ij,ij->i", Q, Q).astype(np.float64))
+    q_nrm = l2_norms(Q)
     LUT = np.stack(
         [Q[:, m * dm : (m + 1) * dm] @ subcb[m].T for m in range(PQ_M)], axis=1
     )  # (n_queries, PQ_M, PQ_K)
@@ -770,10 +757,8 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         for pdf in batches:
             if not len(pdf):
                 continue
-            V = np.floor(
-                np.stack(pdf["embedding"].to_numpy()).astype(np.float64) * QUANT + 0.5
-            ).astype(np.int64)
-            v_nrm = np.sqrt(np.einsum("ij,ij->i", V, V).astype(np.float64))
+            V = quantize(pdf["embedding"])
+            v_nrm = l2_norms(V)
             cos = (V @ C.T).astype(np.float64) / (v_nrm[:, None] * c_nrm[None, :])
             out = {
                 "vec_id": pdf["vec_id"].to_numpy().astype("int64"),
@@ -824,7 +809,7 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 {
                     "query_id": qidx,
                     "neighbor_id": pdf["vec_id"].to_numpy().astype("int64"),
-                    "cosine": np.floor(cos * 1e6 + 0.5) / 1e6,
+                    "cosine": mround_np(cos, 6),
                 }
             )
 
@@ -1064,19 +1049,14 @@ def _assign_to_centroids(e: DataFrame, out_col: str = "centroid"):
     import numpy as np
     import pandas as pd
 
-    cent_rows = e.filter(F.col("vec_id") < IVF_K).orderBy("vec_id").collect()
-    C = np.floor(
-        np.stack([np.asarray(r["embedding"], dtype=np.float64) for r in cent_rows])
-        * 1_000_000 + 0.5
-    ).astype(np.int64)
+    _, C, _ = head_vectors(e, IVF_K)
 
     def assign_df(src: DataFrame, _C=C) -> DataFrame:
         c_sq = np.einsum("ij,ij->i", _C, _C)
 
         def assign(batches):
             for pdf in batches:
-                E = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-                Xq = np.floor(E * 1_000_000 + 0.5).astype(np.int64)
+                Xq = quantize(pdf["embedding"])
                 d2 = (
                     np.einsum("ij,ij->i", Xq, Xq)[:, None]
                     - 2 * (Xq @ _C.T)
@@ -1236,37 +1216,14 @@ def kmeans_fit(
     At 100 TB: each iteration is two linear passes; centroids ride in the
     task closure; nothing driver-side ever scales with the corpus."""
     import numpy as np
-    import pandas as pd
 
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    C, _ = _assign_to_centroids(e)
+    C, assign_df = _assign_to_centroids(e)
     history: list[tuple[int, float, dict[int, int]]] = []
 
     for it in range(max_iter):
-        # re-derive the assignment closure from THIS iteration's centroids
-        # via the shared helper's math (same quantization + tie-break)
-        def _mk_assign(_C):
-            c_sq = np.einsum("ij,ij->i", _C, _C)
-
-            def assign(batches):
-                for pdf in batches:
-                    E = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-                    Xq = np.floor(E * 1_000_000 + 0.5).astype(np.int64)
-                    d2 = (
-                        np.einsum("ij,ij->i", Xq, Xq)[:, None]
-                        - 2 * (Xq @ _C.T)
-                        + c_sq[None, :]
-                    )
-                    yield pd.DataFrame(
-                        {
-                            "vec_id": pdf["vec_id"].astype("int64"),
-                            "centroid": np.argmin(d2, axis=1).astype("int32"),
-                        }
-                    )
-
-            return assign
-
-        assigned = e.mapInPandas(_mk_assign(C), "vec_id bigint, centroid int")
+        # this iteration's centroids through the shared assignment pass
+        assigned = assign_df(e, C)
         dims = (
             e.join(assigned, "vec_id")
             .selectExpr("centroid", "posexplode(embedding) AS (dim, v)")
@@ -1326,12 +1283,10 @@ def dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     def pairs_in_cluster(pdf: "pd.DataFrame") -> "pd.DataFrame":
         pdf = pdf.sort_values("vec_id", ignore_index=True)
         ids = pdf["vec_id"].to_numpy().astype(np.int64)
-        Xq = np.floor(
-            np.stack(pdf["embedding"].to_numpy()).astype(np.float64) * 1_000_000 + 0.5
-        ).astype(np.int64)
-        nrm = np.sqrt(np.einsum("ij,ij->i", Xq, Xq).astype(np.float64))
+        Xq = quantize(pdf["embedding"])
+        nrm = l2_norms(Xq)
         cos = (Xq @ Xq.T).astype(np.float64) / (nrm[:, None] * nrm[None, :])
-        cos = np.floor(cos * 1e6 + 0.5) / 1e6
+        cos = mround_np(cos, 6)
         iu, ju = np.triu_indices(len(ids), k=1)
         keep = cos[iu, ju] >= SEMDEDUP_TAU
         return pd.DataFrame(
@@ -1416,24 +1371,13 @@ def embedding_pq_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    cb_rows = e.filter(F.col("vec_id") < PQ_K).orderBy("vec_id").collect()
-    CB = np.floor(
-        np.stack([np.asarray(r["embedding"], dtype=np.float64) for r in cb_rows])
-        * QUANT + 0.5
-    ).astype(np.int64)
-    dim = CB.shape[1]
-    dm = dim // PQ_M
-    subcb = [CB[:, m * dm : (m + 1) * dm] for m in range(PQ_M)]
-    sub_n2 = [np.einsum("ij,ij->i", c, c) for c in subcb]
+    dm, subcb, sub_n2 = _pq_codebook(head_vectors(e, PQ_K)[1])
 
     def dist(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
-            V = np.floor(
-                np.stack(pdf["embedding"].to_numpy()).astype(np.float64) * QUANT
-                + 0.5
-            ).astype(np.int64)
+            V = quantize(pdf["embedding"])
             vn2 = np.einsum("ij,ij->i", V, V)
             err2 = np.zeros(len(V), dtype=np.int64)
             for m in range(PQ_M):
@@ -1606,7 +1550,7 @@ def sketch_countmin_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     the broadcast top-10 against the broadcast grid."""
     d = load_table(spark, sf_dir, "documents")
     toks = d.selectExpr(
-        r"explode(split(trim(lower(text)), '\\s+')) AS tok"
+        f"explode({WORD_TOKENS}) AS tok"
     ).filter("tok != ''")
     cells = (
         toks.selectExpr(
@@ -2075,7 +2019,7 @@ def _kmv_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sf0.1 before this projection; spread() fans the single-row-group scan
     # across the cluster first (r11)
     sh = (
-        d.selectExpr("source", r"split(trim(lower(text)), '\\s+') AS ts")
+        d.selectExpr("source", f"{WORD_TOKENS} AS ts")
         .filter("size(ts) >= 3")
         .selectExpr(
             "source",

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from tmapreduce_spark.catalog import QuerySpec
-from tmapreduce_spark.parity import mround
+from tmapreduce_spark.parity import mround, mround_np
 from tmapreduce_spark.sources.catalog import load_table, spread
 
 N_QUERIES = 5  # ann query set: vec_id 0..4
@@ -71,22 +71,6 @@ FROM embeddings
 """
 
 
-def collect_query_model(e: DataFrame, n_queries: int = N_QUERIES):
-    """Collect the (tiny) ANN query set as a quantized int64 numpy model:
-    (ids, Q matrix, norms). This is a model-side collect like the IVF
-    centroids — n_queries rows, never the data path."""
-    import numpy as np
-
-    rows = e.filter(F.col("vec_id") < n_queries).orderBy("vec_id").collect()
-    ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
-    Q = np.floor(
-        np.stack([np.asarray(r["embedding"], dtype=np.float64) for r in rows])
-        * QUANT + 0.5
-    ).astype(np.int64)
-    nrm = np.sqrt(np.einsum("ij,ij->i", Q, Q).astype(np.float64))
-    return ids, Q, nrm
-
-
 def topk_ranked(scored: DataFrame, k: int = TOP_K) -> DataFrame:
     """Per-query top-k on the (query_id, neighbor_id, cosine) stream; rounded
     score with vec_id tiebreak keeps ranks reproducible across engines."""
@@ -114,20 +98,18 @@ def ann_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    q_ids, Qm, q_nrm = collect_query_model(e)
+    q_ids, Qm, q_nrm = head_vectors(e, N_QUERIES)
 
     def score(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
             ids = pdf["vec_id"].to_numpy().astype(np.int64)
-            C = np.floor(
-                np.stack(pdf["embedding"].to_numpy()).astype(np.float64) * QUANT + 0.5
-            ).astype(np.int64)
+            C = quantize(pdf["embedding"])
             dots = C @ Qm.T  # exact int64
-            c_nrm = np.sqrt(np.einsum("ij,ij->i", C, C).astype(np.float64))
+            c_nrm = l2_norms(C)
             cos = dots.astype(np.float64) / (c_nrm[:, None] * q_nrm[None, :])
-            cos = np.floor(cos * 1e6 + 0.5) / 1e6
+            cos = mround_np(cos, 6)
             n, k = cos.shape
             out_q = np.tile(q_ids, n)
             out_n = np.repeat(ids, k)
@@ -185,10 +167,50 @@ FROM ranked WHERE rank <= {TOP_K}
 QUANT = 1_000_000
 
 
+def quantize(vectors):
+    """Vectors on the quantized grid: each component as int64 micro-units,
+    floor(x * QUANT + 0.5), the DuckDB side's :func:`_quant_duck`.
+    ``vectors`` is a sequence of equal-length vectors: an Arrow batch column
+    (float32 arrays) or collected rows' lists (float32 read as Python
+    floats). Both reach the same float64 values, since float32 widens to
+    float64 exactly."""
+    import numpy as np
+
+    return np.floor(np.stack(vectors).astype(np.float64) * QUANT + 0.5).astype(np.int64)
+
+
+def l2_norms(Q):
+    """Row L2 norms of a quantized matrix: sqrt of each exact int64 square
+    sum, the oracle's ``sqrt(CAST(qdot AS DOUBLE))``."""
+    import numpy as np
+
+    return np.sqrt(np.einsum("ij,ij->i", Q, Q).astype(np.float64))
+
+
+def head_vectors(e: DataFrame, k, *cols: str):
+    """Model-side read of a few corpus vectors, in vec_id order: the first
+    ``k`` (vec_id < k) or, when ``k`` is a list, those vec_ids. Returns
+    (ids, quantized matrix, norms) and then one array per extra column in
+    ``cols``. One ``collect`` of at most a few dozen rows (queries,
+    centroids, a codebook), never the data path."""
+    import numpy as np
+
+    cond = F.col("vec_id").isin(k) if isinstance(k, list) else F.col("vec_id") < k
+    rows = e.filter(cond).orderBy("vec_id").collect()
+    ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
+    Q = quantize([r["embedding"] for r in rows])
+    return (ids, Q, l2_norms(Q), *(np.array([r[c] for r in rows]) for c in cols))
+
+
 def _quant_duck(col: str) -> str:
     return (
         f"list_transform({col}, x -> CAST(floor(CAST(x AS DOUBLE) * {QUANT} + 0.5) AS BIGINT))"
     )
+
+
+def _quant_spark(col: str) -> str:
+    """Spark SQL form of :func:`quantize` for one array column."""
+    return f"transform({col}, x -> CAST(floor(CAST(x AS DOUBLE) * {QUANT} + 0.5) AS BIGINT))"
 
 
 def _qdot_duck(a: str, b: str) -> str:
@@ -264,6 +286,27 @@ def residue_bucket_expr(col: str, dim: int, fallback: str) -> str:
     return f"(CASE WHEN size({col}) = {dim} THEN {fast} ELSE {fallback} END)"
 
 
+def _bucket_spark() -> str:
+    """Spark SQL bucket id of the quantized array column ``qe``: the
+    residue-class unroll for 64-wide rows (the testdata embedding width),
+    and for any other width the generic form, one HOF fold per plane. Both
+    are the exact int64 plane dots of :func:`_buckets_of` and
+    :func:`_bucket_duck`. Only this multi-fold bucket gains from unrolling:
+    a single simple-lambda fold (a qdot or pair dot) measured ~40% faster
+    as a HOF than as 64 codegen'd GetArrayItem terms, so those stay HOFs."""
+    plane_dots = ", ".join(
+        f"aggregate(sequence(0, size(qe) - 1), CAST(0 AS BIGINT), "
+        f"(acc, i) -> acc + qe[i] * CAST((i * 31 + {j} * 17) % 7 - 3 AS BIGINT))"
+        for j in range(N_PLANES)
+    )
+    hof = (
+        f"aggregate(zip_with(array({plane_dots}), sequence(0, {N_PLANES - 1}), "
+        "(d, j) -> IF(d >= 0, shiftleft(CAST(1 AS BIGINT), j), CAST(0 AS BIGINT))), "
+        "CAST(0 AS BIGINT), (acc, v) -> acc + v)"
+    )
+    return residue_bucket_expr("qe", 64, hof)
+
+
 def _plane_dot_duck(j: int) -> str:
     # DuckDB lists are 1-based: weight index shifts by one. qe is the
     # quantized int64 embedding — the plane dot is exact integer arithmetic.
@@ -315,13 +358,12 @@ def blocked_pair_cosines(
         ids = pdf["vec_id"].to_numpy()
         order = np.argsort(ids)
         ids = ids[order]
-        E = np.stack(pdf["embedding"].to_numpy()[order]).astype(np.float64)
-        Q = np.floor(E * QUANT + 0.5).astype(np.int64)
+        Q = quantize(pdf["embedding"].to_numpy()[order])
         G = Q @ Q.T  # exact int64; |G| <= dim * (QUANT*max|x|)^2 << 2^53
         nrm = np.sqrt(G.diagonal().astype(np.float64))
         ia, ib = np.triu_indices(len(ids), k=1)
         cos = G[ia, ib].astype(np.float64) / (nrm[ia] * nrm[ib])
-        cos = np.floor(cos * 1e6 + 0.5) / 1e6
+        cos = mround_np(cos, 6)
         m = cos >= threshold
         return pd.DataFrame(
             {
@@ -334,39 +376,24 @@ def blocked_pair_cosines(
 
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "label", "embedding")
     counts = e.groupBy("label").agg(F.count(F.lit(1)).alias("block_n"))
-    # The bucket is a JVM integer HOF (the same exact int64 plane dots as
-    # _buckets_of), guarded by the block_n CASE: when no label is oversized
-    # only the cheap branch evaluates and the guard adds NO Python stage —
-    # the empty-guard bench cost is ~zero (an earlier mapInPandas variant
-    # added ~1 s of idle Arrow stage per run).
-    plane_dots = ", ".join(
-        f"aggregate(sequence(0, size(qe) - 1), CAST(0 AS BIGINT), "
-        f"(acc, i) -> acc + qe[i] * CAST((i * 31 + {j} * 17) % 7 - 3 AS BIGINT))"
-        for j in range(N_PLANES)
-    )
-    hof_sub_key = (
-        f"aggregate(zip_with(array({plane_dots}), sequence(0, {N_PLANES - 1}), "
-        "(d, j) -> IF(d >= 0, shiftleft(CAST(1 AS BIGINT), j), CAST(0 AS BIGINT))), "
-        "CAST(0 AS BIGINT), (acc, v) -> acc + v)"
-    )
-    # 64-wide fast path via the residue-class unroll (r13); only evaluates
-    # for oversized blocks, but at 100 TB that's exactly where the 8
-    # interpreted folds per row would run — same bits by construction.
-    sub_key_expr = residue_bucket_expr("qe", 64, hof_sub_key)
+    # The bucket is a JVM integer expression (the same exact int64 plane
+    # dots as _buckets_of), guarded by the block_n CASE: when no label is
+    # oversized only the cheap branch evaluates and the guard adds NO Python
+    # stage — the empty-guard bench cost is ~zero (an earlier mapInPandas
+    # variant added ~1 s of idle Arrow stage per run).
     sized = (
         e.join(F.broadcast(counts), "label")
         .withColumn(
             "qe",
             F.expr(
-                f"CASE WHEN block_n > {max_block} THEN transform(embedding, "
-                f"x -> CAST(floor(CAST(x AS DOUBLE) * {QUANT} + 0.5) AS BIGINT)) END"
+                f"CASE WHEN block_n > {max_block} THEN {_quant_spark('embedding')} END"
             ),
         )
         .withColumn(
             "sub_key",
             F.expr(
                 f"CASE WHEN block_n <= {max_block} THEN CAST(0 AS BIGINT) "
-                f"ELSE {sub_key_expr} END"
+                f"ELSE {_bucket_spark()} END"
             ),
         )
         .select("vec_id", "label", "embedding", "sub_key")
@@ -432,20 +459,18 @@ def ann_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    q_ids, Qm, q_nrm = collect_query_model(e)
+    q_ids, Qm, q_nrm = head_vectors(e, N_QUERIES)
 
     def score(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
             ids = pdf["vec_id"].to_numpy().astype(np.int64)
-            C = np.floor(
-                np.stack(pdf["embedding"].to_numpy()).astype(np.float64) * QUANT + 0.5
-            ).astype(np.int64)
+            C = quantize(pdf["embedding"])
             dots = C @ Qm.T
-            c_nrm = np.sqrt(np.einsum("ij,ij->i", C, C).astype(np.float64))
+            c_nrm = l2_norms(C)
             cos = dots.astype(np.float64) / (c_nrm[:, None] * q_nrm[None, :])
-            cos = np.floor(cos * 1e6 + 0.5) / 1e6
+            cos = mround_np(cos, 6)
             n, k = cos.shape
             out_q = np.tile(q_ids, n)
             out_n = np.repeat(ids, k)
@@ -569,25 +594,23 @@ def embedding_prefix_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    q_ids, Qm, q_nrm = collect_query_model(e)
+    q_ids, Qm, q_nrm = head_vectors(e, N_QUERIES)
     Qp = Qm[:, :PREFIX_DIM]
-    qp_nrm = np.sqrt(np.einsum("ij,ij->i", Qp, Qp).astype(np.float64))
+    qp_nrm = l2_norms(Qp)
 
     def score(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
             ids = pdf["vec_id"].to_numpy().astype(np.int64)
-            C = np.floor(
-                np.stack(pdf["embedding"].to_numpy()).astype(np.float64) * QUANT + 0.5
-            ).astype(np.int64)
+            C = quantize(pdf["embedding"])
             Cp = C[:, :PREFIX_DIM]
-            c_nrm = np.sqrt(np.einsum("ij,ij->i", C, C).astype(np.float64))
-            cp_nrm = np.sqrt(np.einsum("ij,ij->i", Cp, Cp).astype(np.float64))
+            c_nrm = l2_norms(C)
+            cp_nrm = l2_norms(Cp)
             cos_f = (C @ Qm.T).astype(np.float64) / (c_nrm[:, None] * q_nrm[None, :])
             cos_p = (Cp @ Qp.T).astype(np.float64) / (cp_nrm[:, None] * qp_nrm[None, :])
-            cos_f = np.floor(cos_f * 1e6 + 0.5) / 1e6
-            cos_p = np.floor(cos_p * 1e6 + 0.5) / 1e6
+            cos_f = mround_np(cos_f, 6)
+            cos_p = mround_np(cos_p, 6)
             n, k = cos_f.shape
             out_q = np.tile(q_ids, n)
             out_n = np.repeat(ids, k)
@@ -1046,10 +1069,7 @@ def embedding_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def score(batches, _C=C, _lab_ix=lab_ix):
         for pdf in batches:
-            X = np.floor(
-                np.stack(pdf["embedding"].to_numpy()).astype(np.float64) * 1_000_000
-                + 0.5
-            ).astype(np.int64)
+            X = quantize(pdf["embedding"])
             # exact int64 squared distances to every centroid
             diff = X[:, None, :] - _C[None, :, :]
             d2 = np.einsum("ijk,ijk->ij", diff, diff)
@@ -1176,7 +1196,7 @@ def embedding_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
 
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    q_ids, Qm, q_nrm = collect_query_model(e, n_queries=1)
+    q_ids, Qm, q_nrm = head_vectors(e, 1)
 
     def score(batches):
         import pandas as pd
@@ -1185,11 +1205,9 @@ def embedding_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             if not len(pdf):
                 continue
             ids = pdf["vec_id"].to_numpy().astype(np.int64)
-            C = np.floor(
-                np.stack(pdf["embedding"].to_numpy()).astype(np.float64) * QUANT + 0.5
-            ).astype(np.int64)
+            C = quantize(pdf["embedding"])
             dots = (C @ Qm.T).astype(np.float64).ravel()
-            c_nrm = np.sqrt(np.einsum("ij,ij->i", C, C).astype(np.float64))
+            c_nrm = l2_norms(C)
             rel_u = np.floor(dots / (c_nrm * q_nrm[0]) * 1e6 + 0.5).astype(np.int64)
             m = ids != q_ids[0]
             yield pd.DataFrame({"vec_id": ids[m], "rel_u": rel_u[m]})
@@ -1203,15 +1221,7 @@ def embedding_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand_ids = [int(r["vec_id"]) for r in cands]
     rel = {int(r["vec_id"]): int(r["rel_u"]) for r in cands}
     # C×C similarity matrix from the candidates' own vectors (model-side)
-    crows = (
-        e.filter(F.col("vec_id").isin(cand_ids)).orderBy("vec_id").collect()
-    )
-    ids = np.array([r["vec_id"] for r in crows], dtype=np.int64)
-    M = np.floor(
-        np.stack([np.asarray(r["embedding"], dtype=np.float64) for r in crows])
-        * QUANT + 0.5
-    ).astype(np.int64)
-    nrm = np.sqrt(np.einsum("ij,ij->i", M, M).astype(np.float64))
+    ids, M, nrm = head_vectors(e, cand_ids)
     G = (M @ M.T).astype(np.float64)
     sim_u = np.floor(G / (nrm[:, None] * nrm[None, :]) * 1e6 + 0.5).astype(np.int64)
     idx = {int(v): i for i, v in enumerate(ids)}
@@ -1334,14 +1344,7 @@ def retrieval_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding", "label")
-    qrows = e.filter(F.col("vec_id") < N_QUERIES).orderBy("vec_id").collect()
-    q_ids = np.array([r["vec_id"] for r in qrows], dtype=np.int64)
-    q_lab = np.array([r["label"] for r in qrows], dtype=np.int64)
-    Qm = np.floor(
-        np.stack([np.asarray(r["embedding"], dtype=np.float64) for r in qrows])
-        * QUANT + 0.5
-    ).astype(np.int64)
-    q_nrm = np.sqrt(np.einsum("ij,ij->i", Qm, Qm).astype(np.float64))
+    q_ids, Qm, q_nrm, q_lab = head_vectors(e, N_QUERIES, "label")
 
     def score(batches):
         for pdf in batches:
@@ -1349,13 +1352,11 @@ def retrieval_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
                 continue
             ids = pdf["vec_id"].to_numpy().astype(np.int64)
             labs = pdf["label"].to_numpy().astype(np.int64)
-            C = np.floor(
-                np.stack(pdf["embedding"].to_numpy()).astype(np.float64) * QUANT + 0.5
-            ).astype(np.int64)
+            C = quantize(pdf["embedding"])
             dots = C @ Qm.T
-            c_nrm = np.sqrt(np.einsum("ij,ij->i", C, C).astype(np.float64))
+            c_nrm = l2_norms(C)
             cos = dots.astype(np.float64) / (c_nrm[:, None] * q_nrm[None, :])
-            cos = np.floor(cos * 1e6 + 0.5) / 1e6
+            cos = mround_np(cos, 6)
             n, k = cos.shape
             out_q = np.tile(q_ids, n)
             out_ql = np.tile(q_lab, n)

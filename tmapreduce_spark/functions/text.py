@@ -18,8 +18,15 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from tmapreduce_spark.catalog import QuerySpec
 from tmapreduce_spark.functions.dedup import DEDUP_SPAN_SQL
-from tmapreduce_spark.parity import mavg, mround, mround_col
+from tmapreduce_spark.parity import WORD_TOKENS, cents, mavg, mround, mround_col
 from tmapreduce_spark.sources.catalog import load_table, spread
+
+
+def _word_tokens(d: DataFrame, key: str = "doc_id") -> DataFrame:
+    """(key, tok) for every non-empty :data:`WORD_TOKENS` token of ``d``."""
+    return d.select(key, F.explode(F.expr(WORD_TOKENS)).alias("tok")).filter(
+        F.col("tok") != ""
+    )
 
 
 def charcount(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -185,7 +192,7 @@ def lang_id_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
         "de": ["der", "die", "und", "das", "ist"],
         "zh": ["de5", "shi4", "le5", "zai4", "you3"],
     }
-    toks = F.split(F.trim(F.lower(F.col("text"))), "\\s+")
+    toks = F.expr(WORD_TOKENS)
     scores = {
         lang: F.size(
             F.array_intersect(F.array_distinct(toks), F.array(*[F.lit(w) for w in ws]))
@@ -366,7 +373,7 @@ def text_bigram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     d = load_table(spark, sf_dir, "documents")
-    toks = d.selectExpr("source", r"split(trim(lower(text)), '\\s+') AS toks")
+    toks = d.selectExpr("source", f"{WORD_TOKENS} AS toks")
     bigrams = toks.selectExpr(
         "source",
         # validity decided once per document from size(toks) — split tokens
@@ -657,7 +664,7 @@ def pipeline_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus side is the same map-side explode the dedup family uses."""
     d = load_table(spark, sf_dir, "documents")
     toks = d.selectExpr(
-        "doc_id", "source", "n_chars", r"split(trim(lower(text)), '\\s+') AS t"
+        "doc_id", "source", "n_chars", f"{WORD_TOKENS} AS t"
     ).filter(F.size("t") >= DECONTAM_W)
     sh = toks.selectExpr(
         "doc_id",
@@ -814,7 +821,7 @@ def text_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
     )
     toks = d.selectExpr(
-        "doc_id", r"split(trim(lower(text)), '\\s+') AS t"
+        "doc_id", f"{WORD_TOKENS} AS t"
     ).filter(F.size("t") >= 3)
     grams = toks.selectExpr(
         "doc_id",
@@ -1076,9 +1083,7 @@ def text_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     # N as a broadcast 1-row corpus stat — stays lazy, no driver action
     nd = d.agg(F.countDistinct("doc_id").alias("n_docs"))
-    toks = d.select(
-        "doc_id", F.explode(F.split(F.trim(F.lower(F.col("text"))), "\\s+")).alias("tok")
-    ).filter(F.col("tok") != "")
+    toks = _word_tokens(d)
     postings = toks.groupBy("tok", "doc_id").agg(F.count("*").alias("tf"))
     with_df = postings.withColumn(
         "df", F.count("*").over(Window.partitionBy("tok"))
@@ -1373,9 +1378,7 @@ def text_ngram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     the per-doc mean uses integer-micro summation (``mavg``) so reduction
     order can't move the result."""
     d = load_table(spark, sf_dir, "documents")
-    toks = d.select(
-        "doc_id", F.explode(F.split(F.trim(F.lower(F.col("text"))), "\\s+")).alias("tok")
-    ).filter(F.col("tok") != "")
+    toks = _word_tokens(d)
     unigram = toks.groupBy("tok").agg(F.count("*").alias("cnt"))
     # corpus total from the vocab-sized aggregate — NOT a second scan+explode
     # of documents (at 100 TB that would be an entire redundant corpus pass)
@@ -1506,7 +1509,7 @@ def text_pmi_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     twice as a BROADCAST — facts never reshuffle for the model lookups; the
     final top-50 is TakeOrderedAndProject over the bigram vocabulary."""
     d = load_table(spark, sf_dir, "documents")
-    toks = d.selectExpr(r"split(trim(lower(text)), '\\s+') AS toks")
+    toks = d.selectExpr(f"{WORD_TOKENS} AS toks")
     bigrams = toks.selectExpr(
         # per-document validity check instead of a per-bigram regex re-split
         # (equivalence argument at dedup._SHINGLES_SPARK_TOKS)
@@ -1707,7 +1710,7 @@ def text_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     observed bigrams only) exactly like the unigram model join; per-doc
     scoring is then shuffle-free until the final groupBy(doc_id)."""
     d = load_table(spark, sf_dir, "documents")
-    t = d.selectExpr("doc_id", r"split(trim(lower(text)), '\\s+') AS toks").filter(
+    t = d.selectExpr("doc_id", f"{WORD_TOKENS} AS toks").filter(
         F.expr("size(toks) >= 2")
     )
     bi = t.selectExpr(
@@ -1756,7 +1759,7 @@ def pipeline_contamination_report(spark: SparkSession, sf_dir: str) -> DataFrame
     so every aggregate partial-aggregates map-side."""
     d = load_table(spark, sf_dir, "documents")
     toks = d.selectExpr(
-        "doc_id", "source", r"split(trim(lower(text)), '\\s+') AS t"
+        "doc_id", "source", f"{WORD_TOKENS} AS t"
     ).filter(F.size("t") >= DECONTAM_W)
     sh = toks.selectExpr(
         "doc_id",
@@ -1956,7 +1959,7 @@ def text_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     cheapest model-based filter that exists — one shuffle keyed by doc_id."""
     d = load_table(spark, sf_dir, "documents")
     toks = d.selectExpr(
-        "doc_id", r"explode(split(trim(lower(text)), '\\s+')) AS tok"
+        "doc_id", f"explode({WORD_TOKENS}) AS tok"
     ).filter("tok <> ''")
     bucket = f"CAST(conv(substring(md5(tok), 1, 15), 16, 10) AS BIGINT) % {QC_DIM}"
     w_milli = f"(({bucket}) * {QC_MULT}) % {QC_MOD} - {(QC_MOD - 1) // 2}"
@@ -2166,7 +2169,7 @@ def pipeline_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = d.selectExpr(
         "doc_id",
         "source",
-        r"explode(split(trim(lower(text)), '\\s+')) AS tok",
+        f"explode({WORD_TOKENS}) AS tok",
     ).filter("tok <> ''")
     bucket = f"CAST(conv(substring(md5(tok), 1, 15), 16, 10) AS BIGINT) % {DSIR_DIM}"
     bucketed = toks.selectExpr("doc_id", "source", f"{bucket} AS b")
@@ -2485,7 +2488,7 @@ def text_lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     per_tok = (
         d.selectExpr(
-            "doc_id", r"explode(split(trim(lower(text)), '\\s+')) AS tok"
+            "doc_id", f"explode({WORD_TOKENS}) AS tok"
         )
         .filter(F.col("tok") != "")
         .groupBy("doc_id", "tok")
@@ -2559,7 +2562,7 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
     )
     counts = (
-        d.selectExpr(r"explode(split(trim(lower(text)), '\\s+')) AS tok")
+        d.selectExpr(f"explode({WORD_TOKENS}) AS tok")
         .filter(F.col("tok") != "")
         .groupBy("tok")
         .agg(F.count("*").alias("c"))
@@ -2690,7 +2693,7 @@ def _bpe_train(
     rounds). The checkpointed table is vocabulary-sized, ≪ corpus."""
     d = load_table(spark, sf_dir, "documents")
     words = (
-        d.selectExpr(r"explode(split(trim(lower(text)), '\\s+')) AS w")
+        d.selectExpr(f"explode({WORD_TOKENS}) AS w")
         .filter("w != ''")
         .groupBy("w")
         .agg(F.count("*").alias("freq"))
@@ -2807,7 +2810,7 @@ def tokenizer_apply_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_word = vocab.selectExpr("w", "CAST(size(s) AS BIGINT) AS n_tok")
     d = load_table(spark, sf_dir, "documents")
     toks = d.selectExpr(
-        "source", r"explode(split(trim(lower(text)), '\\s+')) AS w"
+        "source", f"explode({WORD_TOKENS}) AS w"
     ).filter("w != ''")
     return (
         toks.join(per_word, "w")
@@ -2849,6 +2852,17 @@ GROUP BY source
 BM25_TOP_K = 5  # characteristic terms per document
 
 
+def _bm25_weight(tf: str = "tf", df: str = "df", dl: str = "dl") -> str:
+    """Okapi BM25 weight of one term in one document as Spark SQL, over the
+    corpus stats columns ``n_docs`` and ``sum_dl``: k1 = 1.2, b = 0.75 and
+    the log-free idf of :func:`text_bm25_topk`."""
+    return (
+        f"(CAST(n_docs - {df} AS DOUBLE) + 0.5) / (CAST({df} AS DOUBLE) + 0.5)"
+        f" * (CAST({tf} AS DOUBLE) * 2.2) / (CAST({tf} AS DOUBLE)"
+        f" + 1.2 * (0.25 + 0.75 * CAST({dl} AS DOUBLE) * n_docs / sum_dl))"
+    )
+
+
 def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Okapi BM25 term scoring — the retrieval-era upgrade of
     :func:`text_tfidf_topk` (same postings substrate) with document-length
@@ -2867,9 +2881,7 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     d = load_table(spark, sf_dir, "documents")
-    toks = d.select(
-        "doc_id", F.explode(F.split(F.trim(F.lower(F.col("text"))), "\\s+")).alias("tok")
-    ).filter(F.col("tok") != "")
+    toks = _word_tokens(d)
     postings = toks.groupBy("tok", "doc_id").agg(F.count("*").alias("tf"))
     stats = postings.agg(
         F.countDistinct("doc_id").cast("bigint").alias("n_docs"),
@@ -2884,13 +2896,7 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "tf",
         "df",
         "dl",
-        mround(
-            "(CAST(n_docs - df AS DOUBLE) + 0.5) / (CAST(df AS DOUBLE) + 0.5)"
-            " * (CAST(tf AS DOUBLE) * 2.2) / (CAST(tf AS DOUBLE)"
-            " + 1.2 * (0.25 + 0.75 * CAST(dl AS DOUBLE) * n_docs / sum_dl))",
-            6,
-        )
-        + " AS bm25",
+        mround(_bm25_weight(), 6) + " AS bm25",
     )
     w = Window.partitionBy("doc_id").orderBy(F.desc("bm25"), F.asc("tok"))
     return (
@@ -2942,7 +2948,7 @@ QC_LABEL_CUT = 0.65
 def _qc_score_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     toks = d.selectExpr(
-        "doc_id", r"explode(split(trim(lower(text)), '\\s+')) AS tok"
+        "doc_id", f"explode({WORD_TOKENS}) AS tok"
     ).filter("tok <> ''")
     bucket = f"CAST(conv(substring(md5(tok), 1, 15), 16, 10) AS BIGINT) % {QC_DIM}"
     w_milli = f"(({bucket}) * {QC_MULT}) % {QC_MOD} - {(QC_MOD - 1) // 2}"
@@ -3110,7 +3116,66 @@ BM25_QUERIES: dict[str, list[str]] = {
     "q_streaming": ["stream", "batch"],
     "q_engine": ["spark", "query", "fast"],
 }
+BM25_TERMS = sorted({t for ts in BM25_QUERIES.values() for t in ts})
 BM25_SEARCH_TOP_K = 10
+
+
+def _qterms(spark: SparkSession) -> DataFrame:
+    """The query workload as (query_id, tok) rows."""
+    return spark.createDataFrame(
+        [(q, t) for q, ts in sorted(BM25_QUERIES.items()) for t in ts],
+        "query_id string, tok string",
+    )
+
+
+def _workload_per_doc(toks: DataFrame) -> DataFrame:
+    """One row per document with a token: its length ``dl`` and the count
+    ``tf{i}`` of each workload term ``BM25_TERMS[i]``. One groupBy(doc_id)
+    of conditional sums, so the full-vocabulary postings never shuffle; the
+    workload is fixed at plan time. Materialized once, since its consumers
+    (corpus stats, the term unpivot) read it several times."""
+    return (
+        toks.groupBy("doc_id")
+        .agg(
+            F.count("*").cast("bigint").alias("dl"),
+            *[
+                F.sum(F.when(F.col("tok") == t, 1).otherwise(0))
+                .cast("bigint")
+                .alias(f"tf{i}")
+                for i, t in enumerate(BM25_TERMS)
+            ],
+        )
+        .localCheckpoint()
+    )
+
+
+def _workload_postings(per_doc: DataFrame) -> DataFrame:
+    """(doc_id, dl, tok, tf) for each workload term a document holds: the
+    stack() unpivot of :func:`_workload_per_doc`, bounded by the workload,
+    not the vocabulary."""
+    stack_args = ", ".join(f"'{t}', tf{i}" for i, t in enumerate(BM25_TERMS))
+    return per_doc.selectExpr(
+        "doc_id", "dl", f"stack({len(BM25_TERMS)}, {stack_args}) AS (tok, tf)"
+    ).filter("tf > 0")
+
+
+def _bm25_workload_scored(toks: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """BM25 substrate of the query workload over the token frame ``toks``
+    (doc_id, tok): (scored, stats), where scored is (doc_id, tok, tf, dl,
+    bm25_micro) for every workload term a document holds, each weight as
+    exact integer micro-units so any sum of them is reduction-order-proof,
+    and stats is the 1-row (n_docs, sum_dl) corpus aggregate."""
+    per_doc = _workload_per_doc(toks)
+    stats = per_doc.agg(
+        F.count("*").cast("bigint").alias("n_docs"),
+        F.sum("dl").cast("bigint").alias("sum_dl"),
+    )
+    postings = _workload_postings(per_doc)
+    dfs = postings.groupBy("tok").agg(F.count("*").cast("bigint").alias("df"))
+    scored = (
+        postings.join(F.broadcast(dfs), "tok").crossJoin(F.broadcast(stats))
+    ).selectExpr("doc_id", "tok", "tf", "dl", f"{cents(_bm25_weight())} AS bm25_micro")
+    return scored, stats
 
 
 def text_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3136,50 +3201,9 @@ def text_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     d = load_table(spark, sf_dir, "documents")
-    toks = d.select(
-        "doc_id", F.explode(F.split(F.trim(F.lower(F.col("text"))), "\\s+")).alias("tok")
-    ).filter(F.col("tok") != "")
-    terms = sorted({t for ts in BM25_QUERIES.values() for t in ts})
-    per_doc = (
-        toks.groupBy("doc_id")
-        .agg(
-            F.count("*").cast("bigint").alias("dl"),
-            *[
-                F.sum(F.when(F.col("tok") == t, 1).otherwise(0))
-                .cast("bigint")
-                .alias(f"tf{i}")
-                for i, t in enumerate(terms)
-            ],
-        )
-        # consumed by stats, the df aggregate, and the scored unpivot —
-        # materialize the 1-row-per-doc table once
-        .localCheckpoint()
-    )
-    stats = per_doc.agg(
-        F.count("*").cast("bigint").alias("n_docs"),
-        F.sum("dl").cast("bigint").alias("sum_dl"),
-    )
-    stack_args = ", ".join(f"'{t}', tf{i}" for i, t in enumerate(terms))
-    enriched_q = per_doc.selectExpr(
-        "doc_id", "dl", f"stack({len(terms)}, {stack_args}) AS (tok, tf)"
-    ).filter("tf > 0")
-    dfs = enriched_q.groupBy("tok").agg(F.count("*").cast("bigint").alias("df"))
-    scored = (
-        enriched_q.join(F.broadcast(dfs), "tok").crossJoin(F.broadcast(stats))
-    ).selectExpr(
-        "doc_id",
-        "tok",
-        "CAST(floor(("
-        "(CAST(n_docs - df AS DOUBLE) + 0.5) / (CAST(df AS DOUBLE) + 0.5)"
-        " * (CAST(tf AS DOUBLE) * 2.2) / (CAST(tf AS DOUBLE)"
-        " + 1.2 * (0.25 + 0.75 * CAST(dl AS DOUBLE) * n_docs / sum_dl))"
-        ") * 1000000 + 0.5) AS BIGINT) AS bm25_micro",
-    )
-    qterms = spark.createDataFrame(
-        [(q, t) for q, ts in sorted(BM25_QUERIES.items()) for t in ts],
-        "query_id string, tok string",
-    )
-    hits = scored.join(F.broadcast(qterms), "tok").groupBy("query_id", "doc_id").agg(
+    toks = _word_tokens(d)
+    scored, _ = _bm25_workload_scored(toks)
+    hits = scored.join(F.broadcast(_qterms(spark)), "tok").groupBy("query_id", "doc_id").agg(
         F.count("*").cast("bigint").alias("n_hit_terms"),
         F.sum("bm25_micro").alias("score_micro"),
     )
@@ -3578,52 +3602,9 @@ def retrieval_rrf_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
     fusion join; rows outside a ranker's top-10 keep a NULL rank exactly
     as the outer join produced."""
     d = load_table(spark, sf_dir, "documents")
-    toks = d.select(
-        "doc_id",
-        F.explode(F.split(F.trim(F.lower(F.col("text"))), "\\s+")).alias("tok"),
-    ).filter(F.col("tok") != "")
-    terms = sorted({t for ts in BM25_QUERIES.values() for t in ts})
-    per_doc = (
-        toks.groupBy("doc_id")
-        .agg(
-            F.count("*").cast("bigint").alias("dl"),
-            *[
-                F.sum(F.when(F.col("tok") == t, 1).otherwise(0))
-                .cast("bigint")
-                .alias(f"tf{i}")
-                for i, t in enumerate(terms)
-            ],
-        )
-        # consumed by stats, the df aggregate, and the scored unpivot —
-        # materialize the 1-row-per-doc table once
-        .localCheckpoint()
-    )
-    stats = per_doc.agg(
-        F.count("*").cast("bigint").alias("n_docs"),
-        F.sum("dl").cast("bigint").alias("sum_dl"),
-    )
-    stack_args = ", ".join(f"'{t}', tf{i}" for i, t in enumerate(terms))
-    enriched_q = per_doc.selectExpr(
-        "doc_id", "dl", f"stack({len(terms)}, {stack_args}) AS (tok, tf)"
-    ).filter("tf > 0")
-    dfs = enriched_q.groupBy("tok").agg(F.count("*").cast("bigint").alias("df"))
-    scored = (
-        enriched_q.join(F.broadcast(dfs), "tok").crossJoin(F.broadcast(stats))
-    ).selectExpr(
-        "doc_id",
-        "tok",
-        "tf",
-        "CAST(floor(("
-        "(CAST(n_docs - df AS DOUBLE) + 0.5) / (CAST(df AS DOUBLE) + 0.5)"
-        " * (CAST(tf AS DOUBLE) * 2.2) / (CAST(tf AS DOUBLE)"
-        " + 1.2 * (0.25 + 0.75 * CAST(dl AS DOUBLE) * n_docs / sum_dl))"
-        ") * 1000000 + 0.5) AS BIGINT) AS bm25_micro",
-    )
-    qterms = spark.createDataFrame(
-        [(q, t) for q, ts in sorted(BM25_QUERIES.items()) for t in ts],
-        "query_id string, tok string",
-    )
-    hits = scored.join(F.broadcast(qterms), "tok").groupBy("query_id", "doc_id").agg(
+    toks = _word_tokens(d)
+    scored, _ = _bm25_workload_scored(toks)
+    hits = scored.join(F.broadcast(_qterms(spark)), "tok").groupBy("query_id", "doc_id").agg(
         F.count("*").cast("bigint").alias("n_matched"),
         F.sum("bm25_micro").alias("score_micro"),
         F.sum("tf").cast("bigint").alias("total_tf"),
@@ -4411,7 +4392,7 @@ def text_keyword_rake(spark: SparkSession, sf_dir: str) -> DataFrame:
     stop_list = ", ".join(f"'{s}'" for s in RAKE_STOPWORDS)
     toks = d.select(
         "doc_id",
-        F.posexplode(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias(
+        F.posexplode(F.expr(WORD_TOKENS)).alias(
             "pos", "tok"
         ),
     ).filter(F.col("tok") != "")
@@ -4741,36 +4722,12 @@ def retrieval_query_likelihood(spark: SparkSession, sf_dir: str) -> DataFrame:
     stack(); the dense leg is doclen x 5 queries — linear in documents,
     never in postings; top-10 per query via row_number, no global sort."""
     d = load_table(spark, sf_dir, "documents")
-    toks = d.select(
-        "doc_id",
-        F.explode(F.split(F.trim(F.lower(F.col("text"))), "\\s+")).alias("tok"),
-    ).filter(F.col("tok") != "")
-    terms = sorted({t for ts in BM25_QUERIES.values() for t in ts})
-    per_doc = (
-        toks.groupBy("doc_id")
-        .agg(
-            F.count("*").cast("bigint").alias("dl"),
-            *[
-                F.sum(F.when(F.col("tok") == t, 1).otherwise(0))
-                .cast("bigint")
-                .alias(f"tf{i}")
-                for i, t in enumerate(terms)
-            ],
-        )
-        # consumed by doclen, stats, and the qpost unpivot — materialize the
-        # 1-row-per-doc table once instead of re-tokenizing under each arm
-        .localCheckpoint()
-    )
+    toks = _word_tokens(d)
+    per_doc = _workload_per_doc(toks)
     stats = per_doc.agg(F.sum("dl").cast("bigint").alias("n_c"))
     doclen = per_doc.select("doc_id", "dl")
-    stack_args = ", ".join(f"'{t}', tf{i}" for i, t in enumerate(terms))
-    postings = per_doc.selectExpr(
-        "doc_id", f"stack({len(terms)}, {stack_args}) AS (tok, tf)"
-    ).filter("tf > 0")
-    qterms = spark.createDataFrame(
-        [(q, t) for q, ts in sorted(BM25_QUERIES.items()) for t in ts],
-        "query_id string, tok string",
-    )
+    postings = _workload_postings(per_doc)
+    qterms = _qterms(spark)
     ctf = postings.groupBy("tok").agg(F.sum("tf").cast("bigint").alias("ctf"))
     # A: matched-term kicker, grid-int per posting row
     a_term = _g9(
@@ -4913,50 +4870,9 @@ def retrieval_prf_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
     the relevance-model aggregation — and its dl window — runs over <= 50
     document term lists, bounded by the workload, never the corpus."""
     d = load_table(spark, sf_dir, "documents")
-    toks = d.select(
-        "doc_id",
-        F.explode(F.split(F.trim(F.lower(F.col("text"))), "\\s+")).alias("tok"),
-    ).filter(F.col("tok") != "")
-    terms = sorted({t for ts in BM25_QUERIES.values() for t in ts})
-    per_doc = (
-        toks.groupBy("doc_id")
-        .agg(
-            F.count("*").cast("bigint").alias("dl"),
-            *[
-                F.sum(F.when(F.col("tok") == t, 1).otherwise(0))
-                .cast("bigint")
-                .alias(f"tf{i}")
-                for i, t in enumerate(terms)
-            ],
-        )
-        # consumed by stats, the df aggregate, and the scored unpivot —
-        # materialize the 1-row-per-doc table once
-        .localCheckpoint()
-    )
-    stats = per_doc.agg(
-        F.count("*").cast("bigint").alias("n_docs"),
-        F.sum("dl").cast("bigint").alias("sum_dl"),
-    )
-    stack_args = ", ".join(f"'{t}', tf{i}" for i, t in enumerate(terms))
-    enriched_q = per_doc.selectExpr(
-        "doc_id", "dl", f"stack({len(terms)}, {stack_args}) AS (tok, tf)"
-    ).filter("tf > 0")
-    dfs = enriched_q.groupBy("tok").agg(F.count("*").cast("bigint").alias("df"))
-    scored = (
-        enriched_q.join(F.broadcast(dfs), "tok").crossJoin(F.broadcast(stats))
-    ).selectExpr(
-        "doc_id",
-        "tok",
-        "CAST(floor(("
-        "(CAST(n_docs - df AS DOUBLE) + 0.5) / (CAST(df AS DOUBLE) + 0.5)"
-        " * (CAST(tf AS DOUBLE) * 2.2) / (CAST(tf AS DOUBLE)"
-        " + 1.2 * (0.25 + 0.75 * CAST(dl AS DOUBLE) * n_docs / sum_dl))"
-        ") * 1000000 + 0.5) AS BIGINT) AS bm25_micro",
-    )
-    qterms = spark.createDataFrame(
-        [(q, t) for q, ts in sorted(BM25_QUERIES.items()) for t in ts],
-        "query_id string, tok string",
-    )
+    toks = _word_tokens(d)
+    scored, _ = _bm25_workload_scored(toks)
+    qterms = _qterms(spark)
     hits = scored.join(F.broadcast(qterms), "tok").groupBy("query_id", "doc_id").agg(
         F.sum("bm25_micro").alias("score_micro")
     )
@@ -5097,10 +5013,7 @@ def text_source_kl_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast 1-row aggregate, and the answer is a |sources|-row groupBy.
     Nothing after the first groupBy sees a corpus row."""
     d = load_table(spark, sf_dir, "documents")
-    toks = d.select(
-        "source",
-        F.explode(F.split(F.trim(F.lower(F.col("text"))), "\\s+")).alias("tok"),
-    ).filter(F.col("tok") != "")
+    toks = _word_tokens(d, "source")
     # One tokenize: the reduced cell table is materialized so the corpus
     # total and the marginal windows read the same blocks (rrf pattern) —
     # without this, both consumers re-expand the explode (2 Generates).
@@ -5345,7 +5258,7 @@ def eval_mrr_dual_ranker(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows bounded per query by WindowGroupLimit; the lane count grows
     with the QUERY workload, not the data."""
     d = load_table(spark, sf_dir, "documents")
-    qtok_list = sorted({t for ts in BM25_QUERIES.values() for t in ts})
+    qtok_list = BM25_TERMS
     n_q = len(BM25_QUERIES)  # 5, workload constant
     # ONE corpus pass, no keyed shuffle: the tf lanes are codegen'd array
     # counts over the once-projected token array (size(ts) minus the array
@@ -5359,7 +5272,7 @@ def eval_mrr_dual_ranker(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ranking.
     lanes = (
         spread(d.select("doc_id", "text"), spark)
-        .selectExpr("doc_id", r"split(trim(lower(text)), '\\s+') AS ts")
+        .selectExpr("doc_id", f"{WORD_TOKENS} AS ts")
         .selectExpr(
             "doc_id",
             "CAST(size(array_remove(ts, '')) AS BIGINT) AS dl",
@@ -5392,16 +5305,6 @@ def eval_mrr_dual_ranker(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-query structs below are plain sums of these columns — keeps the
     # Catalyst tree small, which is where a naive inline version spent
     # ~0.5s/run of pure driver analysis time, measured)
-    def _bm25_micro(i: int) -> str:
-        # identical scoring text to text_bm25_search, tf/df -> lane i
-        return (
-            "CAST(floor(("
-            f"(CAST(n_docs - df_{i} AS DOUBLE) + 0.5) / (CAST(df_{i} AS DOUBLE) + 0.5)"
-            f" * (CAST(tf_{i} AS DOUBLE) * 2.2) / (CAST(tf_{i} AS DOUBLE)"
-            f" + 1.2 * (0.25 + 0.75 * CAST(dl AS DOUBLE) * n_docs / sum_dl))"
-            ") * 1000000 + 0.5) AS BIGINT)"
-        )
-
     def _a9(i: int) -> str:
         return _g9(
             f"ln(1 + CAST(tf_{i} AS DOUBLE) * sum_dl"
@@ -5417,7 +5320,7 @@ def eval_mrr_dual_ranker(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         f"({b9}) AS b9",
         *[
-            f"(CASE WHEN tf_{i} > 0 THEN {_bm25_micro(i)}"
+            f"(CASE WHEN tf_{i} > 0 THEN {cents(_bm25_weight(f'tf_{i}', f'df_{i}'))}"
             f" ELSE CAST(0 AS BIGINT) END) AS bm_{i}"
             for i in nl
         ],
@@ -5636,7 +5539,7 @@ def text_heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # repartition replicates as four extra un-reused Exchanges (measured
     # r11, 11 -> 15) for no wall win at this entry's size.
     sh = (
-        d.selectExpr("doc_id", r"split(trim(lower(text)), '\\s+') AS ts")
+        d.selectExpr("doc_id", f"{WORD_TOKENS} AS ts")
         .filter("size(ts) >= 3")
         .selectExpr(
             "doc_id",
@@ -5772,10 +5675,7 @@ def text_burrows_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     a 10-row broadcast; the dense grid is |sources| x 10 and the pair
     matrix |sources|^2 / 2 — model-sized, independent of corpus volume."""
     d = load_table(spark, sf_dir, "documents")
-    toks = d.select(
-        "source",
-        F.explode(F.split(F.trim(F.lower(F.col("text"))), "\\s+")).alias("tok"),
-    ).filter(F.col("tok") != "")
+    toks = _word_tokens(d, "source")
     st = toks.groupBy("source", "tok").agg(
         F.count("*").cast("bigint").alias("cnt")
     ).localCheckpoint()
@@ -6041,7 +5941,7 @@ def pipeline_span_corruption(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.selectExpr(
             "doc_id",
             "source",
-            r"size(split(trim(lower(text)), '\\s+')) AS n_tok",
+            f"size({WORD_TOKENS}) AS n_tok",
         )
         .filter("n_tok >= 1")
         .selectExpr(
@@ -6139,9 +6039,9 @@ _EXPO_CASE = "CASE rank " + " ".join(
 
 def eval_exposure_fairness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per source: corpus document share vs share of total BM25-top-10
-    exposure across the query workload, and the disparity ratio. Rides the
-    dieted eval_mrr_dual_ranker substrate (doclen + query-token postings
-    slice, no materialized index).
+    exposure across the query workload, and the disparity ratio. Ranks on
+    the ``text_bm25_search`` substrate (:func:`_bm25_workload_scored`: one
+    materialized per-doc table of workload-term counts, no index).
 
     Determinism: ranks are row_number over integer-micro BM25 scores with
     doc_id tie-break; exposure weights are 1e-6-grid integer literals so
@@ -6152,51 +6052,13 @@ def eval_exposure_fairness(spark: SparkSession, sf_dir: str) -> DataFrame:
     share (one groupBy over documents) and the ranking substrate touch
     the corpus."""
     d = load_table(spark, sf_dir, "documents")
-    toks = d.select(
-        "doc_id",
-        F.explode(F.split(F.trim(F.lower(F.col("text"))), "\\s+")).alias("tok"),
-    ).filter(F.col("tok") != "")
-    qterms = spark.createDataFrame(
-        [(q, t) for q, ts in sorted(BM25_QUERIES.items()) for t in ts],
-        "query_id string, tok string",
-    )
-    qtok_list = sorted({t for ts in BM25_QUERIES.values() for t in ts})
-    doclen = toks.groupBy("doc_id").agg(
-        F.count("*").cast("bigint").alias("dl")
-    ).localCheckpoint()
-    corpus = doclen.agg(
-        F.count("*").cast("bigint").alias("n_docs"),
-        F.sum("dl").cast("bigint").alias("sum_dl"),
-    )
-    qpost = (
-        toks.filter(F.col("tok").isin(qtok_list))
-        .groupBy("tok", "doc_id")
-        .agg(F.count("*").alias("tf"))
-        .localCheckpoint()
-    )
-    qtok_stats = qpost.groupBy("tok").agg(
-        F.count("*").cast("bigint").alias("df"),
-        F.sum("tf").cast("bigint").alias("ctf"),
-    )
-    bm_scored = (
-        qpost.join(F.broadcast(qtok_stats), "tok")
-        .join(doclen, "doc_id")
-        .crossJoin(F.broadcast(corpus))
-        .selectExpr(
-            "doc_id",
-            "tok",
-            "CAST(floor(("
-            "(CAST(n_docs - df AS DOUBLE) + 0.5) / (CAST(df AS DOUBLE) + 0.5)"
-            " * (CAST(tf AS DOUBLE) * 2.2) / (CAST(tf AS DOUBLE)"
-            " + 1.2 * (0.25 + 0.75 * CAST(dl AS DOUBLE) * n_docs / sum_dl))"
-            ") * 1000000 + 0.5) AS BIGINT) AS bm25_micro",
-        )
-    )
+    toks = _word_tokens(d)
+    bm_scored, corpus = _bm25_workload_scored(toks)
     w_bm = Window.partitionBy("query_id").orderBy(
         F.desc("score_micro"), F.asc("doc_id")
     )
     top = (
-        bm_scored.join(F.broadcast(qterms), "tok")
+        bm_scored.join(F.broadcast(_qterms(spark)), "tok")
         .groupBy("query_id", "doc_id")
         .agg(F.sum("bm25_micro").alias("score_micro"))
         .withColumn("rank", F.row_number().over(w_bm).cast("bigint"))

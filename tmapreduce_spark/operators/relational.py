@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from tmapreduce_spark.catalog import QuerySpec
-from tmapreduce_spark.parity import DUCK, SPARK, cents, mavg, mround, msum2
+from tmapreduce_spark.parity import DUCK, SPARK, WORD_TOKENS, cents, mavg, mround, msum2
 from tmapreduce_spark.sources.catalog import load_table, spread
 
 
@@ -1073,7 +1073,7 @@ def scalar_posexplode(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id < 20 to keep the row count display-sized; DuckDB twin enumerates
     positions with a range->struct list since it lacks WITH ORDINALITY."""
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 20)
-    toks = d.selectExpr("doc_id", r"split(trim(lower(text)), '\\s+') AS toks")
+    toks = d.selectExpr("doc_id", f"{WORD_TOKENS} AS toks")
     return toks.selectExpr(
         "doc_id", "posexplode(toks) AS (pos, tok)"
     ).select("doc_id", F.col("pos").cast("bigint").alias("pos"), "tok")

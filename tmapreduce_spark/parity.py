@@ -47,6 +47,11 @@ from __future__ import annotations
 SPARK = "spark"
 DUCK = "duck"
 
+# The catalog's word tokenizer over ``documents.text`` as Spark SQL: lower
+# case, trim, split on whitespace runs. DuckDB spells the same tokens
+# ``string_split_regex(trim(lower(text)), '\s+')``.
+WORD_TOKENS = r"split(trim(lower(text)), '\\s+')"
+
 
 def _idiv(dialect: str) -> str:
     return "div" if dialect == SPARK else "//"
@@ -65,6 +70,16 @@ def mround_col(col, digits: int = 2):
 
     s = 10 ** digits
     return F.floor(col * s + F.lit(0.5)) / s
+
+
+def mround_np(x, digits: int = 2):
+    """numpy form of :func:`mround` for values computed in Python (Arrow
+    batches, driver-side models): the same IEEE ops on the same doubles, so
+    it equals either engine's ``mround`` of them."""
+    import numpy as np
+
+    s = 10 ** digits
+    return np.floor(x * s + 0.5) / s
 
 
 def cents(expr: str, micro: int = 1_000_000) -> str:

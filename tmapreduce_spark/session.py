@@ -13,7 +13,7 @@ from __future__ import annotations
 
 import os
 import time
-from collections.abc import Callable
+from collections.abc import Callable, Collection
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -66,14 +66,39 @@ def get_spark(
         # native type for — read as LONG nanos; sources.catalog converts to a
         # microsecond timestamp at load (SURVEY §7 hard-part 3).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # Python workers skip re-reading unchanged zip archives on sys.path
-        # at every task start (pyworker module docstring); executors import
-        # tmapreduce_spark already, for the engine's UDFs.
-        .config("spark.python.daemon.module", "tmapreduce_spark.pyworker")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
-    return builder.getOrCreate()
+    root = _package_root()
+    if root is not None:
+        # Python workers skip re-reading unchanged zip archives on sys.path
+        # at every task start (pyworker module docstring). Without a package
+        # directory to put on the workers' path, PySpark's own daemon runs.
+        builder = builder.config("spark.python.daemon.module", "tmapreduce_spark.pyworker")
+    spark = builder.getOrCreate()
+    if root is not None:
+        # The context's ``environment`` is the spark.executorEnv.* map every
+        # Python function carries to its workers. Merging here, not through
+        # the builder, keeps a PYTHONPATH the caller set in spark-defaults or
+        # on the command line, which a builder value would replace.
+        env = spark.sparkContext.environment
+        paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+        if root not in paths:
+            env["PYTHONPATH"] = os.pathsep.join([*paths, root])
+    return spark
+
+
+def _package_root() -> str | None:
+    """The directory holding the ``tmapreduce_spark`` package, which the
+    workers need on their path to start the daemon and to import the
+    engine's UDFs: the worker daemon starts from the JVM's working directory,
+    so a driver that found the package only through its own ``sys.path``
+    would leave every Python task failing. ``None`` when the package is not
+    imported from a directory (an installed zip, for instance)."""
+    import tmapreduce_spark
+
+    pkg = os.path.dirname(os.path.abspath(tmapreduce_spark.__file__))
+    return os.path.dirname(pkg) if os.path.isdir(pkg) else None
 
 
 def noop_run(
@@ -85,13 +110,17 @@ def noop_run(
     window: pinned checkpoints accumulate executor GC pressure across
     hundreds of queries, and a non-blocking release bleeds into the next
     query's timed window."""
-    jsc = spark.sparkContext._jsc
-    before = set(jsc.getPersistentRDDs().keySet().toArray())
+    before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
     t0 = time.perf_counter()
     fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
     elapsed = time.perf_counter() - t0
-    m = jsc.getPersistentRDDs()
-    for rid in list(m.keySet().toArray()):
-        if rid not in before:
-            m.get(rid).unpersist(True)
+    release_rdds(spark, keep=before)
     return elapsed
+
+
+def release_rdds(spark: SparkSession, keep: Collection[int] = ()) -> None:
+    """Unpersist, blocking, every persisted RDD whose id is not in ``keep``."""
+    m = spark.sparkContext._jsc.getPersistentRDDs()
+    for rid in list(m.keySet().toArray()):
+        if rid not in keep:
+            m.get(rid).unpersist(True)

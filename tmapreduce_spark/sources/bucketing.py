@@ -209,59 +209,6 @@ N_ANN_BUCKETED_QUERIES = 64
 ANN_LAYOUT_BUCKETS = 8
 
 
-def _spark_quant_expr(col: str) -> str:
-    """Quantize a float array to the shared int64 grid, JVM-side — the same
-    grid as similarity.QUANT, so every downstream dot is exact int64."""
-    from tmapreduce_spark.functions.similarity import QUANT
-
-    return (
-        f"transform({col}, x -> CAST(floor(CAST(x AS DOUBLE) * {QUANT} + 0.5)"
-        f" AS BIGINT))"
-    )
-
-
-_EMB_DIM = 64  # testdata embedding width; the unrolled fast paths below are
-               # guarded by size() so any other width takes the HOF fallback
-               # with identical integer results
-
-
-def _hof_bucket_expr() -> str:
-    """The dynamic-width HOF form of the bucket id (pre-r13 shape; kept as
-    the size()-guarded fallback and the reference implementation)."""
-    from tmapreduce_spark.functions.similarity import N_PLANES
-
-    plane_dots = ", ".join(
-        f"aggregate(sequence(0, size(qe) - 1), CAST(0 AS BIGINT), "
-        f"(acc, i) -> acc + qe[i] * CAST((i * 31 + {j} * 17) % 7 - 3 AS BIGINT))"
-        for j in range(N_PLANES)
-    )
-    return (
-        f"aggregate(zip_with(array({plane_dots}), sequence(0, {N_PLANES - 1}), "
-        "(d, j) -> IF(d >= 0, shiftleft(CAST(1 AS BIGINT), j), CAST(0 AS BIGINT))), "
-        "CAST(0 AS BIGINT), (acc, v) -> acc + v)"
-    )
-
-
-def _spark_bucket_expr() -> str:
-    """Hyperplane-LSH bucket id of the quantized column ``qe``, JVM-side:
-    the identical deterministic integer planes as similarity._buckets_of /
-    _bucket_duck, so numpy, Spark SQL, and DuckDB agree on every bucket bit
-    (exact int64 plane dots — no float sign ambiguity).
-
-    r13 (guide §4.1): the 64-wide fast path is the residue-class unroll
-    from :func:`tmapreduce_spark.functions.similarity.residue_bucket_expr`
-    (measured 4.6x on a 512k-row corpus pass — 8 interpreted folds x 64
-    elements collapse to 7 codegen'd residue sums + 56 multiply-adds); the
-    HOF form above stays as the size()-guarded fallback so any non-64
-    width is bit-identical. NOTE the boundary found while measuring: only
-    the MULTI-fold bucket wins from unrolling — a single simple-lambda
-    fold (the qdot/pair dots below) is ~40% FASTER as a HOF than as 64
-    codegen'd GetArrayItem terms, so those deliberately stay HOFs."""
-    from tmapreduce_spark.functions.similarity import residue_bucket_expr
-
-    return residue_bucket_expr("qe", _EMB_DIM, _hof_bucket_expr())
-
-
 def layout_ann_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN over an at-rest LSH-bucketed corpus layout — the large-query-set
     scale path that ``ann_lsh_topk``'s docstring names (functions/scale.py):
@@ -296,7 +243,11 @@ def layout_ann_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``src/tmapreduce/job.h:86-88`` — no at-rest layout exists to compare)."""
     from pyspark.sql import functions as F
 
-    from tmapreduce_spark.functions.similarity import topk_ranked
+    from tmapreduce_spark.functions.similarity import (
+        _bucket_spark,
+        _quant_spark,
+        topk_ranked,
+    )
 
     sf_tag, app, base = _session_layout(spark, sf_dir)
     tbl = f"embeddings_annbkt_{sf_tag}_{app}"
@@ -305,12 +256,12 @@ def layout_ann_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "embeddings")
         .select(
             "vec_id",
-            F.expr(_spark_quant_expr("embedding")).alias("qe"),
+            F.expr(_quant_spark("embedding")).alias("qe"),
         )
         .select(
             "vec_id",
             "qe",
-            F.expr(_spark_bucket_expr()).alias("bucket"),
+            F.expr(_bucket_spark()).alias("bucket"),
             # deliberately a HOF: a single simple-lambda fold beat the
             # 64-term GetArrayItem unroll by ~40% in the r13 micro-A/B
             F.expr(
