@@ -1,7 +1,10 @@
 from __future__ import annotations
 
+import functools
+import math
 import os
 
+import pandas as pd
 import pytest
 
 
@@ -43,6 +46,40 @@ def jobs_in_group(spark, group: str, fn) -> list[int]:
             sc.setLocalProperty(prop, None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     return sorted(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@functools.cache
+def catalog():
+    """``build_catalog()``, built once per test session."""
+    from tmapreduce_spark.catalog import build_catalog
+
+    return build_catalog()
+
+
+def run_entry(spark, name: str) -> pd.DataFrame:
+    """Catalog entry ``name`` run at the smoke scale factor, as pandas."""
+    return catalog()[name].fn(spark, SF_SMOKE).toPandas()
+
+
+def smoke_table(name: str, cols: str = "*") -> pd.DataFrame:
+    """The ``cols`` projection of smoke-scale table ``name``, read by DuckDB."""
+    import duckdb
+
+    return duckdb.sql(f"SELECT {cols} FROM '{SF_SMOKE}/{name}.parquet'").df()
+
+
+def mround6(x: float) -> float:
+    """Round half up on the 1e-6 grid, the rounding ``parity.mround(x, 6)``
+    gives on both engines. Test-side arithmetic, so references stay
+    independent of the package."""
+    return math.floor(x * 1_000_000 + 0.5) / 1_000_000
+
+
+def write_table(tmp_path, name: str, df: pd.DataFrame) -> str:
+    """Write ``df`` as ``<name>.parquet`` under ``tmp_path``; return the
+    directory, to pass as a scale-factor dir."""
+    df.to_parquet(tmp_path / f"{name}.parquet", index=False)
+    return str(tmp_path)
 
 
 def register_duck_views(con, sf_dir: str) -> None:

@@ -10,10 +10,9 @@ import math
 import pandas as pd
 import pytest
 
-from tests.conftest import SF_SMOKE, register_duck_views
-from tmapreduce_spark.catalog import build_catalog
+from tests.conftest import SF_SMOKE, catalog, register_duck_views
 
-CATALOG = build_catalog()
+CATALOG = catalog()
 ORACLE_NAMES = sorted(n for n, s in CATALOG.items() if s.oracle is not None)
 
 

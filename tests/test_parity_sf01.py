@@ -10,10 +10,9 @@ import os
 
 import pytest
 
-from tests.conftest import register_duck_views
-from tmapreduce_spark.catalog import build_catalog
+from tests.conftest import catalog, register_duck_views
 
-CATALOG = build_catalog()
+CATALOG = catalog()
 SF01 = "/root/testdata/sf0.1"
 
 pytestmark = pytest.mark.skipif(

@@ -10,7 +10,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, jobs_in_group
 from tmapreduce_spark.operators.relational import (
     filter_project,
     join_broadcast_dim,
@@ -565,19 +565,22 @@ def test_corpus_e2e_is_one_lazy_lineage(spark):
 
     from tmapreduce_spark.sources.catalog import load_table
 
-    tracker = spark.sparkContext.statusTracker()
+    # baseline: ONE load_table fires at most one parquet schema-read job
+    per_load = len(
+        jobs_in_group(
+            spark, "corpus_e2e_load", lambda: load_table(spark, SF_SMOKE, "documents")
+        )
+    )
 
-    def jobs():
-        return set(tracker.getJobIdsForGroup(None) or [])
-
-    # baseline: ONE load_table fires exactly one parquet schema-read job
-    before = jobs()
-    load_table(spark, SF_SMOKE, "documents")
-    per_load = len(jobs() - before)
-
-    before = jobs()
-    df = pipeline_corpus_e2e(spark, SF_SMOKE)
-    fired = len(jobs() - before)
+    built = []
+    fired = len(
+        jobs_in_group(
+            spark,
+            "corpus_e2e_build",
+            lambda: built.append(pipeline_corpus_e2e(spark, SF_SMOKE)),
+        )
+    )
+    df = built[0]
     # four components each load documents (schema reads only); anything more
     # would be an intermediate materialization between stages
     assert fired <= 4 * per_load, (

@@ -191,12 +191,14 @@ def head_vectors(e: DataFrame, k, *cols: str):
     """Model-side read of a few corpus vectors, in vec_id order: the first
     ``k`` (vec_id < k) or, when ``k`` is a list, those vec_ids. Returns
     (ids, quantized matrix, norms) and then one array per extra column in
-    ``cols``. One ``collect`` of at most a few dozen rows (queries,
-    centroids, a codebook), never the data path."""
+    ``cols``. One ``collect`` (one Spark job) of at most a few dozen rows
+    (queries, centroids, a codebook), never the data path; the rows are
+    sorted in the driver, since an ``orderBy`` would add a range-partition
+    sampling job and a sort job."""
     import numpy as np
 
     cond = F.col("vec_id").isin(k) if isinstance(k, list) else F.col("vec_id") < k
-    rows = e.filter(cond).orderBy("vec_id").collect()
+    rows = sorted(e.filter(cond).collect(), key=lambda r: r["vec_id"])
     ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
     Q = quantize([r["embedding"] for r in rows])
     return (ids, Q, l2_norms(Q), *(np.array([r[c] for r in rows]) for c in cols))
