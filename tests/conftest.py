@@ -75,13 +75,6 @@ def mround6(x: float) -> float:
     return math.floor(x * 1_000_000 + 0.5) / 1_000_000
 
 
-def write_table(tmp_path, name: str, df: pd.DataFrame) -> str:
-    """Write ``df`` as ``<name>.parquet`` under ``tmp_path``; return the
-    directory, to pass as a scale-factor dir."""
-    df.to_parquet(tmp_path / f"{name}.parquet", index=False)
-    return str(tmp_path)
-
-
 def register_duck_views(con, sf_dir: str) -> None:
     from tmapreduce_spark.sources.catalog import TABLES
 

@@ -1,59 +1,22 @@
-"""Analytics family (``operators/analytics.py``): statistical tests,
-time-series detectors, experiment readouts, profiles and diagnostics, each
-pinned against a brute-force recompute or a mathematical identity,
-independent of the DuckDB oracle. The first tests in the file also cover
-entries of other modules: EWMA recursion equivalence, CUSUM zero-sum, Markov
-row-stochasticity, RFM quartile balance, attribution horizon, classifier
-determinism, estimator calibration."""
+"""Semantic invariants for the round-5 analytics operators: EWMA recursion
+equivalence, CUSUM zero-sum, Markov row-stochasticity, RFM quartile balance,
+attribution horizon, classifier determinism, estimator calibration."""
 
 from __future__ import annotations
 
-import collections
-import hashlib
-import math
-from collections import defaultdict
-from datetime import timedelta
-
-import duckdb
-import numpy as np
-import pandas as pd
 from pyspark.sql import functions as F
 
-from tests.conftest import (
-    SF_CORRECT,
-    SF_SMOKE,
-    catalog,
-    run_entry,
-    smoke_table,
-    write_table,
-)
-from tmapreduce_spark.functions.dedup import NUM_PERMS, dedup_minhash_est_vs_exact
-from tmapreduce_spark.functions.similarity import embedding_dim_stats
-from tmapreduce_spark.functions.text import text_quality_classifier
-from tmapreduce_spark.operators.analytics import (
-    CUPED_SPLIT_TS,
-    PERM_B,
-    agg_welch_ttest,
-    diag_referential_orphans,
-    events_active_users_rolling,
-    events_cuped_adjusted_lift,
-    events_drawdown_max,
-    events_funnel_ttc,
-    events_gap_burstiness,
-    events_type_diversity,
-    skyline_pareto_orders,
-)
+from tests.conftest import SF_CORRECT, SF_SMOKE
 from tmapreduce_spark.operators.relational import (
     events_attribution_last_touch,
     events_cohort_ltv,
     events_markov_transitions,
     events_rfm_segments,
 )
-from tmapreduce_spark.operators.windows import (
-    EWMA_LAGS,
-    window_cusum_detect,
-    window_ewma,
-)
+from tmapreduce_spark.operators.windows import EWMA_LAGS, window_cusum_detect, window_ewma
+from tmapreduce_spark.functions.dedup import NUM_PERMS, dedup_minhash_est_vs_exact
+from tmapreduce_spark.functions.similarity import embedding_dim_stats
+from tmapreduce_spark.functions.text import text_quality_classifier
 from tmapreduce_spark.sources.catalog import load_table
 
 
@@ -379,1659 +342,3 @@ def test_zscore_is_shift_invariant_on_deviation(spark):
         if z0[k] is not None and z100[k] is not None
     ]
     assert diffs and max(diffs) <= 2e-6, max(diffs)
-
-
-def test_welch_matches_numpy_moments(spark):
-    """t statistic and Welch–Satterthwaite df recomputed from the raw cents
-    samples with numpy must agree to the mround(6) grid."""
-    import numpy as np
-
-    e = load_table(spark, SF_SMOKE, "events")
-    vals = {
-        t: np.array(
-            [
-                int(math.floor(r["value"] * 100 + 0.5))
-                for r in e.filter(
-                    (F.col("event_type") == t) & F.col("value").isNotNull()
-                ).collect()
-            ],
-            dtype=np.int64,
-        )
-        for t in ("click", "view")
-    }
-    a, b = vals["click"] / 100.0, vals["view"] / 100.0
-    va, vb = a.var(ddof=1), b.var(ddof=1)
-    se2 = va / len(a) + vb / len(b)
-    t = (a.mean() - b.mean()) / math.sqrt(se2)
-    df = se2 * se2 / (
-        va * va / (len(a) ** 2 * (len(a) - 1)) + vb * vb / (len(b) ** 2 * (len(b) - 1))
-    )
-    row = agg_welch_ttest(spark, SF_SMOKE).collect()[0]
-    assert row["n_a"] == len(a) and row["n_b"] == len(b)
-    assert abs(row["t_stat"] - t) < 2e-6
-    assert abs(row["welch_df"] - df) < 2e-6
-
-
-def test_cuped_theta_and_adjustment_definition(spark):
-    """theta must equal pooled cov(pre, post)/var(pre) over per-user cents
-    sums, and each arm's adjusted mean must equal
-    mean_post − θ·(mean_pre − global mean_pre)."""
-    import numpy as np
-
-    e = load_table(spark, SF_SMOKE, "events")
-    rows = e.filter(F.col("value").isNotNull()).selectExpr(
-        "user_id",
-        f"CASE WHEN ts < TIMESTAMP '{CUPED_SPLIT_TS}' THEN CAST(floor(value * 100 + 0.5) AS BIGINT) ELSE 0 END AS pre",
-        f"CASE WHEN ts >= TIMESTAMP '{CUPED_SPLIT_TS}' THEN CAST(floor(value * 100 + 0.5) AS BIGINT) ELSE 0 END AS post",
-    ).groupBy("user_id").agg(F.sum("pre").alias("pre"), F.sum("post").alias("post")).collect()
-    pre = np.array([r["pre"] for r in rows], dtype=np.float64)
-    post = np.array([r["post"] for r in rows], dtype=np.float64)
-    arm = np.array([r["user_id"] % 2 for r in rows])
-    n = len(pre)
-    theta = ((n * (pre * post).sum() - pre.sum() * post.sum())
-             / (n * (pre * pre).sum() - pre.sum() ** 2))
-    out = {r["arm"]: r for r in events_cuped_adjusted_lift(spark, SF_SMOKE).collect()}
-    assert abs(out[0]["theta"] - theta) < 2e-6
-    for g in (0, 1):
-        m_post = post[arm == g].mean() / 100
-        m_pre = pre[arm == g].mean() / 100
-        adj = m_post - theta * (m_pre - pre.mean() / 100)
-        assert abs(out[g]["mean_post_adjusted"] - adj) < 2e-6
-        assert abs(out[g]["mean_post"] - m_post) < 2e-6
-
-
-def test_pass_at_k_estimator_properties(spark):
-    """Estimator sanity on real data: bounded in [0, 1], monotone
-    non-decreasing in k (drawing more samples can only help), and the mean
-    over tasks exactly equals the hand-computed combinatorial definition
-    1 − C(n−c, k)/C(n, k)."""
-    from math import comb
-
-    from tmapreduce_spark.operators.analytics import PASS_AT_KS, eval_pass_at_k
-
-    rows = {r["k"]: r for r in eval_pass_at_k(spark, SF_SMOKE).collect()}
-    means = [rows[k]["mean_pass_at_k"] for k in sorted(rows)]
-    assert all(0.0 <= m <= 1.0 for m in means)
-
-    tasks = (
-        load_table(spark, SF_SMOKE, "events")
-        .groupBy("user_id")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(F.expr("CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END")).alias("c"),
-        )
-        .collect()
-    )
-    for k in PASS_AT_KS:
-        vals = [
-            1.0 - comb(r["n"] - r["c"], k) / comb(r["n"], k)
-            for r in tasks
-            if r["n"] >= k
-        ]
-        # the engine pre-rounds each estimator to the 1e-9 grid
-        grid = [int(math.floor(v * 1e9 + 0.5)) for v in vals]
-        expect = math.floor(sum(grid) / 1e9 / len(grid) * 1e6 + 0.5) / 1e6
-        assert rows[k]["n_tasks"] == len(vals)
-        assert abs(rows[k]["mean_pass_at_k"] - expect) < 1e-9
-    # monotone in k on the shared task subset (n >= max k)
-    big = [r for r in tasks if r["n"] >= max(PASS_AT_KS)]
-    for k1, k2 in zip(sorted(PASS_AT_KS), sorted(PASS_AT_KS)[1:]):
-        m1 = sum(1 - comb(r["n"] - r["c"], k1) / comb(r["n"], k1) for r in big)
-        m2 = sum(1 - comb(r["n"] - r["c"], k2) / comb(r["n"], k2) for r in big)
-        assert m2 >= m1
-
-
-def test_seasonal_decomposition_identity(spark):
-    """observed − trend − seasonal must equal residual on every row (to the
-    mround grid), and each (type, hour-of-day) group's residual must be
-    centered: the seasonal term absorbed the hour-of-day mean."""
-    from collections import defaultdict
-
-    from tmapreduce_spark.operators.analytics import events_seasonal_decompose
-
-    rows = events_seasonal_decompose(spark, SF_SMOKE).collect()
-    assert rows
-    by_hod = defaultdict(list)
-    for r in rows:
-        assert abs((r["observed"] - r["trend"] - r["seasonal"]) - r["residual"]) < 2e-6
-        by_hod[(r["event_type"], r["hour_of_day"])].append(
-            r["observed"] - r["trend"]
-        )
-    for (_t, _h), detr in by_hod.items():
-        seas = [r["seasonal"] for r in rows if (r["event_type"], r["hour_of_day"]) == (_t, _h)][0]
-        assert abs(sum(detr) / len(detr) - seas) < 2e-5
-
-
-def _dense_hourly_np(event_type: str | None = None) -> np.ndarray:
-    e = smoke_table("events", "ts, event_type")
-    hidx = (e["ts"].astype("datetime64[us]").astype("int64") // 10**6 // 3600)
-    lo, hi = int(hidx.min()), int(hidx.max())
-    mask = (e["event_type"] == event_type) if event_type else np.ones(len(e), bool)
-    counts = np.zeros(hi - lo + 1, dtype=np.int64)
-    for h in hidx[mask]:
-        counts[int(h) - lo] += 1
-    return counts
-
-
-def test_spearman_matches_pandas_recompute(spark):
-    got = run_entry(spark, "agg_spearman_corr").set_index("l_returnflag")
-    import duckdb
-
-    li = duckdb.sql(
-        f"SELECT l_returnflag, l_quantity, l_extendedprice"
-        f" FROM '{SF_SMOKE}/lineitem.parquet'"
-    ).df()
-    for flag, g in li.groupby("l_returnflag"):
-        rx = g["l_quantity"].rank(method="average").to_numpy()
-        ry = g["l_extendedprice"].rank(method="average").to_numpy()
-        rho = np.corrcoef(rx, ry)[0, 1]
-        assert got.loc[flag, "n"] == len(g)
-        assert abs(got.loc[flag, "rho_spearman"] - rho) < 2e-6, flag
-
-
-def test_acf_matches_numpy_recompute(spark):
-    got = run_entry(spark, "events_autocorrelation").set_index("lag")
-    x = _dense_hourly_np()
-    for lag in range(1, 13):
-        a, b = x[:-lag].astype(float), x[lag:].astype(float)
-        assert got.loc[lag, "n_pairs"] == len(a)
-        r = np.corrcoef(a, b)[0, 1]
-        assert abs(got.loc[lag, "acf"] - r) < 2e-6, lag
-
-
-def test_xcorr_lag0_and_symmetric_pair_counts(spark):
-    got = run_entry(spark, "events_xcorr_leadlag").set_index("lag")
-    v = _dense_hourly_np("view").astype(float)
-    p = _dense_hourly_np("purchase").astype(float)
-    r0 = np.corrcoef(v, p)[0, 1]
-    assert abs(got.loc[0, "xcorr"] - r0) < 2e-6
-    # corr(view_t, purchase_{t+L}) for L>0 == corr of shifted arrays
-    for lag in (-3, 2, 6):
-        if lag >= 0:
-            a, b = v[: len(v) - lag or None], p[lag:]
-        else:
-            a, b = v[-lag:], p[: len(p) + lag]
-        assert got.loc[lag, "n_pairs"] == len(a)
-        assert abs(got.loc[lag, "xcorr"] - np.corrcoef(a, b)[0, 1]) < 2e-6, lag
-
-
-def test_spectral_matches_numpy_recompute(spark):
-    from tmapreduce_spark.operators.analytics import _twiddle_rows
-
-    got = run_entry(spark, "events_spectral_energy").set_index("period")
-    x = _dense_hourly_np()
-    e = smoke_table("events", "ts")
-    lo = int(
-        (e["ts"].astype("datetime64[us]").astype("int64") // 10**6 // 3600).min()
-    )
-    tw = {(p, ph): (c, s) for p, ph, c, s in _twiddle_rows()}
-    for period in (24, 168):
-        cs = sum(
-            int(x[t]) * tw[(period, (lo + t) % period)][0] for t in range(len(x))
-        )
-        ss = sum(
-            int(x[t]) * tw[(period, (lo + t) % period)][1] for t in range(len(x))
-        )
-        assert got.loc[period, "cs_units"] == cs
-        assert got.loc[period, "ss_units"] == ss
-        amp = 2 * math.sqrt(float(cs) ** 2 + float(ss) ** 2) / 1e6 / len(x)
-        assert abs(got.loc[period, "amplitude"] - amp) < 2e-6
-        assert got.loc[period, "t_hours"] == len(x)
-
-
-def test_cramers_v_matches_pandas_recompute(spark):
-    got = run_entry(spark, "agg_cramers_v")
-    assert len(got) == 1
-    d = smoke_table("documents", "doc_id, lang, source, n_chars")
-    ct = pd.crosstab(d["lang"], d["source"]).to_numpy().astype(float)
-    n = ct.sum()
-    r = ct.sum(axis=1, keepdims=True)
-    c = ct.sum(axis=0, keepdims=True)
-    e = r @ c / n
-    chi2 = ((ct - e) ** 2 / e).sum()
-    v = np.sqrt(chi2 / (n * (min(ct.shape) - 1)))
-    row = got.iloc[0]
-    assert row["n"] == int(n)
-    assert row["n_langs"] == ct.shape[0] and row["n_sources"] == ct.shape[1]
-    assert abs(row["chi2"] - chi2) < 2e-5
-    assert abs(row["cramers_v"] - v) < 2e-6
-
-
-def test_srm_check_matches_python_hash(spark):
-    import duckdb
-
-    got = run_entry(spark, "events_srm_check")
-    assert len(got) == 1
-    users = duckdb.sql(
-        f"SELECT DISTINCT user_id FROM '{SF_SMOKE}/events.parquet'"
-    ).df()["user_id"]
-    arms = [
-        int(hashlib.md5(str(int(u)).encode()).hexdigest()[:15], 16) % 2
-        for u in users
-    ]
-    n_a = arms.count(0)
-    n_b = arms.count(1)
-    row = got.iloc[0]
-    assert row["n_a"] == n_a and row["n_b"] == n_b
-    chi = (n_a - n_b) ** 2 / (n_a + n_b)
-    assert abs(row["chi2"] - chi) < 2e-6
-    assert row["srm_flag"] == (1 if chi > 3.841 else 0)
-
-
-def test_mutual_information_matches_python_recompute(spark):
-    import duckdb
-
-    got = run_entry(spark, "agg_mutual_information")
-    assert len(got) == 1
-    d = duckdb.sql(
-        f"SELECT lang, source FROM '{SF_SMOKE}/documents.parquet'"
-    ).df()
-    ct = pd.crosstab(d["lang"], d["source"]).to_numpy().astype(float)
-    n = ct.sum()
-    p = ct / n
-    pl = p.sum(axis=1, keepdims=True)
-    ps = p.sum(axis=0, keepdims=True)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        mi = np.nansum(np.where(p > 0, p * np.log(p / (pl @ ps)), 0.0))
-    h_l = -np.sum(pl * np.log(pl))
-    h_s = -np.sum(ps * np.log(ps))
-    row = got.iloc[0]
-    assert abs(row["h_lang"] - h_l) < 2e-6
-    assert abs(row["h_source"] - h_s) < 2e-6
-    assert abs(row["mi_nats"] - mi) < 2e-6
-    assert abs(row["nmi"] - mi / math.sqrt(h_l * h_s)) < 2e-6
-    # information-theoretic invariants
-    assert -1e-9 <= row["mi_nats"] <= min(row["h_lang"], row["h_source"]) + 1e-9
-    assert -1e-9 <= row["nmi"] <= 1 + 1e-9
-
-
-def test_theil_sen_matches_python_recompute(spark):
-    import duckdb
-
-    got = run_entry(spark, "agg_theil_sen_trend")
-    assert len(got) == 1
-    m = duckdb.sql(
-        f"""SELECT year(o_orderdate) * 12 + month(o_orderdate) AS mi,
-                   CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
-                        AS BIGINT) AS c
-            FROM '{SF_SMOKE}/orders.parquet' GROUP BY 1 ORDER BY 1"""
-    ).df()
-    pts = list(zip(m["mi"].astype(int), m["c"].astype(int)))
-    slopes = []
-    for i in range(len(pts)):
-        for j in range(i + 1, len(pts)):
-            (mi, ci), (mj, cj) = pts[i], pts[j]
-            slopes.append(((cj - ci) / (mj - mi), mi, mj))
-    slopes.sort()
-    med = slopes[(len(slopes) + 1) // 2 - 1][0]
-    row = got.iloc[0]
-    assert row["n_months"] == len(pts)
-    assert row["n_pairs"] == len(slopes)
-    assert abs(row["sen_slope"] - med / 100) < 2e-4
-
-
-# ---------------------------------------------------------------------------
-# agg_skew_kurtosis
-# ---------------------------------------------------------------------------
-
-
-def test_skew_kurtosis_matches_numpy(spark):
-    import duckdb
-    import numpy as np
-
-    got = run_entry(spark, "agg_skew_kurtosis").set_index("o_orderpriority")
-    raw = duckdb.sql(
-        f"""SELECT o_orderpriority,
-                   CAST(floor(datediff('day', o_orderdate, l_shipdate) / 7.0)
-                        AS BIGINT) AS w
-            FROM '{SF_SMOKE}/lineitem.parquet'
-            JOIN '{SF_SMOKE}/orders.parquet' ON l_orderkey = o_orderkey"""
-    ).df()
-    for prio, grp in raw.groupby("o_orderpriority"):
-        w = grp["w"].to_numpy(dtype=np.float64)
-        n = len(w)
-        m1 = w.mean()
-        m2 = ((w - m1) ** 2).mean()
-        m3 = ((w - m1) ** 3).mean()
-        m4 = ((w - m1) ** 4).mean()
-        row = got.loc[prio]
-        assert row["n"] == n
-        assert math.isclose(row["mean_weeks"], m1, abs_tol=1e-5)
-        assert math.isclose(row["var_pop"], m2, abs_tol=1e-4)
-        assert math.isclose(row["skewness"], m3 / m2**1.5, abs_tol=1e-5)
-        assert math.isclose(row["kurtosis_excess"], m4 / m2**2 - 3, abs_tol=1e-5)
-
-
-def test_skew_kurtosis_power_sums_fit_int64_at_sf100():
-    """The documented headroom claim: 357^4 * (sf100 rows per group) < 2^63."""
-    max_w4 = 357**4
-    rows_per_group_sf100 = 600_000 * 1000 // 5  # lineitem sf100 / 5 priorities
-    assert max_w4 * rows_per_group_sf100 < 2**63
-
-
-def test_skew_kurtosis_plan_partial_aggregates(spark):
-    plan = (
-        catalog()["agg_skew_kurtosis"]
-        .fn(spark, SF_SMOKE)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert plan.count("HashAggregate") == 2  # partial + final
-    assert "BroadcastHashJoin" in plan
-
-
-# ---------------------------------------------------------------------------
-# agg_mann_kendall
-# ---------------------------------------------------------------------------
-
-
-def test_mann_kendall_matches_python_recompute(spark):
-    import duckdb
-
-    got = run_entry(spark, "agg_mann_kendall").iloc[0]
-    monthly = duckdb.sql(
-        f"""SELECT CAST(year(o_orderdate) * 12 + month(o_orderdate) AS BIGINT) AS mi,
-                   CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)) AS BIGINT) AS c
-            FROM '{SF_SMOKE}/orders.parquet' GROUP BY 1 ORDER BY 1"""
-    ).fetchall()
-    vals = [c for _, c in monthly]
-    n = len(vals)
-    s = sum(
-        (1 if vals[j] > vals[i] else -1 if vals[j] < vals[i] else 0)
-        for i in range(n) for j in range(i + 1, n)
-    )
-    from collections import Counter
-
-    ties = Counter(vals)
-    tie_term = sum(t * (t - 1) * (2 * t + 5) for t in ties.values())
-    var_num = n * (n - 1) * (2 * n + 5) - tie_term
-    assert got["n_months"] == n
-    assert got["s_stat"] == s
-    assert got["var_num"] == var_num
-    assert got["n_pairs"] == n * (n - 1) // 2
-    z = (s - 1) / math.sqrt(var_num / 18.0) if s > 0 else (
-        (s + 1) / math.sqrt(var_num / 18.0) if s < 0 else 0.0
-    )
-    assert math.isclose(got["z_stat"], z, abs_tol=1e-6)
-    assert math.isclose(got["tau"], s / (n * (n - 1) / 2), abs_tol=1e-6)
-    assert got["significant_95"] == (abs(z) > 1.959964)
-
-
-# ---------------------------------------------------------------------------
-# events_survival_km (right-censored Kaplan-Meier)
-# ---------------------------------------------------------------------------
-
-
-def test_km_matches_python_recompute(spark):
-    import duckdb
-
-    got = run_entry(spark, "events_survival_km")
-    rows = duckdb.sql(
-        f"""SELECT user_id,
-                   epoch_us(min(ts)) // 1000000 AS s0,
-                   epoch_us(max(ts)) // 1000000 AS s1
-            FROM '{SF_SMOKE}/events.parquet' GROUP BY user_id"""
-    ).fetchall()
-    h = max(s1 for _, _, s1 in rows)
-    users = [((s1 - s0) // 3600, (h - s1) // 3600 < 12) for _, s0, s1 in rows]
-    times = sorted({t for t, cens in users if not cens})
-    km, out = 1.0, {}
-    for t in times:
-        n_at_risk = sum(1 for s, _ in users if s >= t)
-        d = sum(1 for s, cens in users if s == t and not cens)
-        c = sum(1 for s, cens in users if s == t and cens)
-        km *= 1.0 - d / n_at_risk
-        out[t] = (d, c, n_at_risk, km)
-    assert len(got) == len(times)
-    for _, r in got.iterrows():
-        d, c, n, km_t = out[r["t"]]
-        assert (r["d"], r["c"], r["n_at_risk"]) == (d, c, n)
-        assert math.isclose(r["km_survival"], km_t, abs_tol=2e-6)
-
-
-def test_km_is_monotone_and_above_uncensored_tail(spark):
-    """KM survival is non-increasing; and with censored users removed from
-    the death count, the curve can never drop below the naive all-users
-    estimate evaluated at the same spans' tail."""
-    got = run_entry(spark, "events_survival_km").sort_values("t")
-    km = got["km_survival"].tolist()
-    assert all(a >= b - 1e-9 for a, b in zip(km, km[1:]))
-    assert (got["km_survival"] > 0).all() and (got["km_survival"] <= 1).all()
-    assert got["c"].sum() > 0 and got["d"].sum() > 0  # both branches exercised
-
-
-# ---------------------------------------------------------------------------
-# agg_permutation_test
-# ---------------------------------------------------------------------------
-
-
-def test_permutation_test_matches_python_recompute(spark):
-    import duckdb
-
-    rows = duckdb.sql(
-        f"""SELECT l_orderkey, l_linenumber, l_returnflag,
-                   CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)
-            FROM '{SF_SMOKE}/lineitem.parquet'
-            WHERE l_returnflag IN ('R', 'A')"""
-    ).fetchall()
-    sr = sum(c for _, _, f, c in rows if f == "R")
-    nr = sum(1 for r in rows if r[2] == "R")
-    sa = sum(c for _, _, f, c in rows if f == "A")
-    na = sum(1 for r in rows if r[2] == "A")
-    obs_milli = (1000 * sr) // nr - (1000 * sa) // na
-    hashes = [
-        (int(hashlib.md5(f"{ok}-{ln}".encode()).hexdigest()[:15], 16), c)
-        for ok, ln, _, c in rows
-    ]
-    n_extreme = 0
-    for b in range(1, PERM_B + 1):
-        s1 = n1 = s0 = n0 = 0
-        for h, c in hashes:
-            if (h >> (b - 1)) & 1:
-                s1 += c
-                n1 += 1
-            else:
-                s0 += c
-                n0 += 1
-        stat = (1000 * s1) // n1 - (1000 * s0) // n0
-        if abs(stat) >= abs(obs_milli):
-            n_extreme += 1
-    got = run_entry(spark, "agg_permutation_test").iloc[0]
-    assert int(got["n_r"]) == nr and int(got["n_a"]) == na
-    assert abs(float(got["obs_mean_diff"]) - obs_milli / 100000) < 1e-9
-    assert int(got["n_permutations"]) == PERM_B
-    assert int(got["n_extreme"]) == n_extreme
-    assert abs(float(got["p_value"]) - round((1 + n_extreme) / (PERM_B + 1), 6)) < 2e-6
-    assert 0.0 < float(got["p_value"]) <= 1.0
-
-
-# ---------------------------------------------------------------------------
-# window_peak_detect
-# ---------------------------------------------------------------------------
-
-
-def test_peak_detect_matches_python_recompute(spark):
-    from tmapreduce_spark.operators.analytics import (
-        PEAK_MIN_HEIGHT,
-        PEAK_NEIGHBORS,
-        _dense_hourly,
-    )
-
-    series = (
-        _dense_hourly(spark, SF_SMOKE).toPandas().sort_values("hidx").reset_index(drop=True)
-    )
-    ns = series["n"].tolist()
-    hs = series["hidx"].tolist()
-    want = {}
-    k = PEAK_NEIGHBORS
-    for i in range(k, len(ns) - k):
-        left = ns[i - k : i]
-        right = ns[i + 1 : i + 1 + k]
-        if ns[i] > max(left) and ns[i] > max(right) and ns[i] >= PEAK_MIN_HEIGHT:
-            want[hs[i]] = (ns[i], ns[i] - max(min(left), min(right)))
-    got = run_entry(spark, "window_peak_detect")
-    got_map = {
-        int(r["hidx"]): (int(r["peak_height"]), int(r["prominence"]))
-        for _, r in got.iterrows()
-    }
-    assert got_map == want
-    assert all(h >= PEAK_MIN_HEIGHT for h, _ in got_map.values())
-
-
-# ---------------------------------------------------------------------------
-# events_attribution_markov
-# ---------------------------------------------------------------------------
-
-
-def test_markov_attribution_matches_python_recompute(spark):
-    import duckdb
-    import math
-
-    from tmapreduce_spark.operators.analytics import MARKOV_ATTR_K
-
-    rows = duckdb.sql(
-        f"""SELECT user_id, event_type
-            FROM '{SF_SMOKE}/events.parquet'
-            ORDER BY user_id, epoch_us(ts), event_id"""
-    ).fetchall()
-    by_user: dict[int, list[str]] = collections.defaultdict(list)
-    for u, et in rows:
-        by_user[int(u)].append(et)
-    trans: collections.Counter = collections.Counter()
-    for seq in by_user.values():
-        if "purchase" in seq:
-            seq = seq[: seq.index("purchase") + 1]
-        states = ["conv" if s == "purchase" else s for s in seq]
-        trans[("start", states[0])] += 1
-        for a, b in zip(states, states[1:]):
-            trans[(a, b)] += 1
-        if states[-1] != "conv":
-            trans[(states[-1], "null")] += 1
-
-    def propagate(tr):
-        srcs = {s for s, _ in tr}
-        n_s = collections.Counter()
-        for (s, _), n in tr.items():
-            n_s[s] += n
-        states = srcs | {d for _, d in tr} | {"conv", "null"}
-        p9 = {s: (1_000_000_000 if s == "conv" else 0) for s in states}
-        for _ in range(MARKOV_ATTR_K):
-            p9 = {
-                s: 1_000_000_000
-                if s == "conv"
-                else 0
-                if s == "null" or s not in srcs
-                else sum(n * p9[d] for (x, d), n in tr.items() if x == s) // n_s[s]
-                for s in states
-            }
-        return p9.get("start", 0)
-
-    p_full = propagate(trans)
-    got = run_entry(spark, "events_attribution_markov").sort_values("channel")
-    channels = sorted(
-        {s for s, _ in trans} | {d for _, d in trans} - {"start", "conv", "null"}
-    )
-    channels = [c for c in channels if c not in ("start", "conv", "null")]
-    assert got["channel"].tolist() == channels
-    for _, r in got.iterrows():
-        c = r["channel"]
-        tr = collections.Counter()
-        for (s, d), n in trans.items():
-            if s != c:
-                tr[(s, "null" if d == c else d)] += n
-        p_rem = propagate(tr)
-        assert abs(r["p_conv_full"] - p_full / 1e9) < 1e-12
-        assert abs(r["p_conv_removed"] - p_rem / 1e9) < 1e-12
-        want_eff = math.floor((p_full - p_rem) / p_full * 1e6 + 0.5) / 1e6
-        assert abs(r["removal_effect"] - want_eff) < 1e-12
-        # removing a channel can only reduce (or not change) conversion
-        assert r["p_conv_removed"] <= r["p_conv_full"] + 1e-12
-        assert -1e-12 <= r["removal_effect"] <= 1.0
-
-
-def test_markov_sql_survives_channel_named_full():
-    """The oracle's full-scenario sentinel must not collide with an
-    event_type literally named 'full' (ADVICE r7): scenario labels are
-    'full' vs 'c:'||channel, with the removed channel carried in a
-    separate column. Checked duckdb-only against the same bounded
-    propagation in pure Python on journeys that contain a 'full' channel."""
-    import math
-
-    import duckdb
-
-    from tmapreduce_spark.operators.analytics import (
-        EVENTS_ATTRIBUTION_MARKOV_SQL,
-        MARKOV_ATTR_K,
-    )
-
-    con = duckdb.connect()
-    con.execute(
-        """CREATE VIEW events AS SELECT * FROM (VALUES
-             (1, 'full',     TIMESTAMP '2024-01-01 00:00:00', 1),
-             (1, 'email',    TIMESTAMP '2024-01-01 00:01:00', 2),
-             (1, 'purchase', TIMESTAMP '2024-01-01 00:02:00', 3),
-             (2, 'email',    TIMESTAMP '2024-01-01 00:00:00', 4),
-             (2, 'full',     TIMESTAMP '2024-01-01 00:01:00', 5),
-             (3, 'full',     TIMESTAMP '2024-01-01 00:00:00', 6),
-             (3, 'purchase', TIMESTAMP '2024-01-01 00:01:00', 7),
-             (4, 'ads',      TIMESTAMP '2024-01-01 00:00:00', 8)
-           ) v(user_id, event_type, ts, event_id)"""
-    )
-    got = (
-        con.execute(EVENTS_ATTRIBUTION_MARKOV_SQL)
-        .df()
-        .sort_values("channel")
-        .reset_index(drop=True)
-    )
-
-    journeys = [
-        ["start", "full", "email", "conv"],
-        ["start", "email", "full", "null"],
-        ["start", "full", "conv"],
-        ["start", "ads", "null"],
-    ]
-    trans: collections.Counter = collections.Counter()
-    for j in journeys:
-        for s, d in zip(j, j[1:]):
-            trans[(s, d)] += 1
-
-    def propagate(tr):
-        srcs = {s for s, _ in tr}
-        n_s = collections.Counter()
-        for (s, _), n in tr.items():
-            n_s[s] += n
-        states = srcs | {d for _, d in tr} | {"conv", "null"}
-        p9 = {s: (10**9 if s == "conv" else 0) for s in states}
-        for _ in range(MARKOV_ATTR_K):
-            p9 = {
-                s: 10**9
-                if s == "conv"
-                else 0
-                if s == "null" or s not in srcs
-                else sum(n * p9[d] for (x, d), n in tr.items() if x == s) // n_s[s]
-                for s in states
-            }
-        return p9.get("start", 0)
-
-    p_full = propagate(trans)
-    assert got["channel"].tolist() == ["ads", "email", "full"]
-    for _, r in got.iterrows():
-        c = r["channel"]
-        tr: collections.Counter = collections.Counter()
-        for (s, d), n in trans.items():
-            if s != c:
-                tr[(s, "null" if d == c else d)] += n
-        p_rem = propagate(tr)
-        assert abs(r["p_conv_full"] - p_full / 1e9) < 1e-12
-        assert abs(r["p_conv_removed"] - p_rem / 1e9) < 1e-12
-        want = math.floor((p_full - p_rem) / p_full * 1e6 + 0.5) / 1e6
-        assert abs(r["removal_effect"] - want) < 1e-12
-
-
-def test_quantile_cuts_recursion_matches_flat_and_bruteforce(spark):
-    """The r08 recursive grid narrowing in _exact_quantile_disc_cuts
-    (oversized candidate buckets recurse instead of over-fetching) must
-    produce the same exact percentile_disc values as the one-level walk
-    and as a brute-force sort."""
-    import tmapreduce_spark.operators.analytics as A
-    from tmapreduce_spark.sources.catalog import load_table
-
-    o = load_table(spark, SF_SMOKE, "orders")
-    fr = [(k, 10) for k in range(1, 10)]
-    flat = A._exact_quantile_disc_cuts(o, "o_totalprice", fr, buckets=65536)
-    saved = A._QCUT_FETCH_LIMIT
-    try:
-        A._QCUT_FETCH_LIMIT = 10  # force multi-level recursion at any size
-        rec = A._exact_quantile_disc_cuts(o, "o_totalprice", fr, buckets=8)
-    finally:
-        A._QCUT_FETCH_LIMIT = saved
-    assert rec == flat
-    vals = sorted(v[0] for v in o.select("o_totalprice").collect())
-    n = len(vals)
-    brute = [vals[max(1, -((-k * n) // 10)) - 1] for k in range(1, 10)]
-    assert flat == brute
-
-
-def test_anova_identities(spark):
-    got = run_entry(spark, "agg_anova_oneway").iloc[0]
-    # recompute from raw data: cells partition the table
-    o = duckdb.sql(
-        f"SELECT o_orderpriority, o_totalprice FROM '{SF_SMOKE}/orders.parquet'"
-    ).df()
-    assert got["n_total"] == len(o)
-    assert got["k_groups"] == o["o_orderpriority"].nunique() == 5
-    # SSB + SSW = SST and both are non-negative
-    grand = o["o_totalprice"].mean()
-    sst = ((o["o_totalprice"] - grand) ** 2).sum()
-    ssb = sum(
-        len(g) * (g["o_totalprice"].mean() - grand) ** 2
-        for _, g in o.groupby("o_orderpriority")
-    )
-    assert got["ss_between"] >= 0 and got["ss_within"] >= 0
-    assert abs(got["ss_between"] - ssb) / ssb < 1e-6
-    assert abs((got["ss_between"] + got["ss_within"]) - sst) / sst < 1e-6
-    # eta^2 = SSB / SST and F consistency
-    assert abs(got["eta_squared"] - ssb / sst) < 1e-5
-    f = (ssb / 4) / ((sst - ssb) / (len(o) - 5))
-    assert abs(got["f_stat"] - f) / f < 1e-5
-
-
-def test_did_cells_partition_and_contrast(spark):
-    got = run_entry(spark, "events_did_lift").iloc[0]
-    e = duckdb.sql(
-        f"""SELECT user_id % 2 = 0 AS treat, epoch_us(ts) AS us, value
-            FROM '{SF_SMOKE}/events.parquet' WHERE event_type = 'purchase'"""
-    ).df()
-    post = 1_705_363_200_000_000
-    # the four count cells partition the purchase slice
-    n_cells = (
-        got["n_treat_pre"] + got["n_treat_post"]
-        + got["n_ctrl_pre"] + got["n_ctrl_post"]
-    )
-    assert n_cells == len(e)
-    assert got["n_treat_pre"] == ((e.treat) & (e.us < post)).sum()
-    assert got["n_ctrl_post"] == ((~e.treat) & (e.us >= post)).sum()
-    # the DiD contrast equals the rounded-mean recombination to rounding slack
-    did = (got["mean_treat_post"] - got["mean_treat_pre"]) - (
-        got["mean_ctrl_post"] - got["mean_ctrl_pre"]
-    )
-    assert abs(did - got["did_estimate"]) < 4e-6
-    # independent float-path recompute of the estimate itself
-    def mean(t, lo, hi):
-        s = e[(e.treat == t) & (e.us >= lo) & (e.us < hi)]
-        return s.value.mean()
-
-    ind = (mean(True, post, 1 << 62) - mean(True, 0, post)) - (
-        mean(False, post, 1 << 62) - mean(False, 0, post)
-    )
-    assert abs(ind - got["did_estimate"]) < 1e-4
-
-
-def test_tukey_hsd_identities(spark):
-    got = run_entry(spark, "agg_tukey_hsd")
-    assert len(got) == 10  # C(5,2) priority pairs
-    o = duckdb.sql(
-        f"SELECT o_orderpriority, o_totalprice FROM '{SF_SMOKE}/orders.parquet'"
-    ).df()
-    groups = {p: g["o_totalprice"] for p, g in o.groupby("o_orderpriority")}
-    grand = o["o_totalprice"].mean()
-    ssb = sum(len(g) * (g.mean() - grand) ** 2 for g in groups.values())
-    sst = ((o["o_totalprice"] - grand) ** 2).sum()
-    msw = (sst - ssb) / (len(o) - len(groups))
-    for _, r in got.iterrows():
-        a, b = groups[r["prio_a"]], groups[r["prio_b"]]
-        assert r["n_a"] == len(a) and r["n_b"] == len(b)
-        diff = a.mean() - b.mean()
-        assert abs(r["mean_diff"] - diff) < 5e-3
-        q = abs(diff) / ((msw / 2 * (1 / len(a) + 1 / len(b))) ** 0.5)
-        assert abs(r["q_stat"] - q) < 1e-4
-
-
-def test_cuped_identities(spark):
-    got = run_entry(spark, "events_cuped_lift").iloc[0]
-    e = duckdb.sql(
-        f"""SELECT user_id, epoch_us(ts) >= 1705363200000000 AS post, value
-            FROM '{SF_SMOKE}/events.parquet' WHERE event_type = 'purchase'"""
-    ).df()
-    per = e.pivot_table(
-        index="user_id", columns="post", values="value", aggfunc="sum", fill_value=0
-    ).rename(columns={False: "x", True: "y"})
-    for c in ("x", "y"):
-        if c not in per:
-            per[c] = 0.0
-    import numpy as np
-
-    x, y = per["x"].values, per["y"].values
-    treat = per.index.values % 2 == 0
-    assert got["n_users"] == len(per)
-    assert got["n_treat"] == treat.sum()
-    theta = np.cov(x, y, bias=True)[0, 1] / x.var()
-    assert abs(got["theta"] - theta) < 1e-3
-    lift_raw = y[treat].mean() - y[~treat].mean()
-    lift_adj = lift_raw - theta * (x[treat].mean() - x[~treat].mean())
-    assert abs(got["lift_raw"] - lift_raw) < 1e-2
-    assert abs(got["lift_adjusted"] - lift_adj) < 1e-2
-    rho = np.corrcoef(x, y)[0, 1]
-    assert abs(got["var_ratio"] - (1 - rho * rho)) < 1e-3
-
-
-def test_brown_forsythe_identity(spark):
-    got = run_entry(spark, "agg_levene_brown_forsythe").iloc[0]
-    o = duckdb.sql(
-        f"""SELECT o_orderpriority p, floor(o_totalprice*100+0.5) v
-            FROM '{SF_SMOKE}/orders.parquet'"""
-    ).df()
-    med = o.groupby("p")["v"].apply(lambda s: s.sort_values().iloc[(len(s) - 1) // 2])
-    z = (o.v - o.p.map(med)).abs()
-    groups = [z[o.p == p] for p in sorted(o.p.unique())]
-    n, k = len(o), len(groups)
-    assert got["n_total"] == n and got["k_groups"] == k
-    assert got["df1"] == k - 1 and got["df2"] == n - k
-    zbar = z.mean()
-    num = sum(len(g) * (g.mean() - zbar) ** 2 for g in groups) / (k - 1)
-    den = sum(((g - g.mean()) ** 2).sum() for g in groups) / (n - k)
-    assert abs(got["w_stat"] - num / den) < 1e-4
-    assert got["ss_between_z"] >= 0 and got["ss_within_z"] >= 0
-
-
-def test_kruskal_wallis_identity(spark):
-    got = run_entry(spark, "agg_kruskal_wallis").iloc[0]
-    o = duckdb.sql(
-        f"""SELECT o_orderpriority p,
-                   CAST(floor(o_totalprice + 0.5) AS BIGINT) v
-            FROM '{SF_SMOKE}/orders.parquet'"""
-    ).df()
-    n, k = len(o), o.p.nunique()
-    assert got["n_total"] == n and got["k_groups"] == k
-    # exact tie sum
-    c = o.v.value_counts()
-    assert got["tie_sum"] == int((c**3 - c).sum())
-    # H from pandas average ranks (mid-rank ties)
-    r = o.v.rank(method="average")
-    h = 12.0 / (n * (n + 1)) * sum(
-        r[o.p == p].sum() ** 2 / (o.p == p).sum() for p in o.p.unique()
-    ) - 3 * (n + 1)
-    c_corr = 1 - (c**3 - c).sum() / (n**3 - n)
-    assert abs(got["h_stat"] - h) < 1e-4
-    assert abs(got["h_corrected"] - h / c_corr) < 1e-4
-    assert abs(got["epsilon_sq"] - (h - k + 1) / (n - k)) < 1e-5
-
-
-def test_jarque_bera_identity(spark):
-    got = run_entry(spark, "agg_jarque_bera").set_index("event_type")
-    e = duckdb.sql(
-        f"""SELECT event_type t, CAST(floor(value) AS BIGINT) w
-            FROM '{SF_SMOKE}/events.parquet'"""
-    ).df()
-    for t, g in e.groupby("t"):
-        w = g.w.astype(float)
-        n = len(w)
-        m = w.mean()
-        m2 = ((w - m) ** 2).mean()
-        g1 = ((w - m) ** 3).mean() / m2**1.5
-        g2 = ((w - m) ** 4).mean() / m2**2 - 3
-        jb = n / 6 * (g1**2 + g2**2 / 4)
-        row = got.loc[t]
-        assert row["n"] == n
-        assert abs(row["skewness"] - g1) < 1e-5, t
-        assert abs(row["kurtosis_excess"] - g2) < 1e-5, t
-        assert abs(row["jb_stat"] - jb) / jb < 1e-5, t
-
-
-def test_ljung_box_identity(spark):
-    got = run_entry(spark, "events_ljung_box").iloc[0]
-    hours = duckdb.sql(
-        f"""SELECT epoch_us(date_trunc('hour', ts)) // 3600000000 AS h
-            FROM '{SF_SMOKE}/events.parquet'"""
-    ).df()
-    lo, hi = int(hours.h.min()), int(hours.h.max())
-    x = np.zeros(hi - lo + 1, dtype=np.int64)
-    for h, c in hours.h.value_counts().items():
-        x[int(h) - lo] = c
-    n = len(x)
-    assert got["n_obs"] == n and got["h_lags"] == 12
-    m = x.mean()
-    c0 = ((x - m) ** 2).sum()
-    q = 0.0
-    for k in range(1, 13):
-        ck = ((x[:-k] - m) * (x[k:] - m)).sum()
-        q += (ck / c0) ** 2 / (n - k)
-    q *= n * (n + 2)
-    assert abs(got["q_stat"] - q) / q < 1e-5
-
-
-def test_friedman_identity(spark):
-    got = run_entry(spark, "agg_friedman").iloc[0]
-    o = duckdb.sql(
-        f"""SELECT strftime(o_orderdate, '%Y-%m') m, o_orderpriority p,
-                   floor(o_totalprice*100+0.5) vq
-            FROM '{SF_SMOKE}/orders.parquet'"""
-    ).df()
-    cells = o.groupby(["m", "p"]).vq.agg(["sum", "count"])
-    cells["mean"] = cells["sum"] / cells["count"]
-    piv = cells["mean"].unstack()
-    piv = piv.dropna()  # complete blocks only
-    b, k = piv.shape
-    assert got["b_blocks"] == b and got["k_treatments"] == k
-    ranks = piv.rank(axis=1, method="first")  # priority order breaks ties
-    rj = ranks.sum(axis=0)
-    chi2 = 12.0 / (b * k * (k + 1)) * (rj**2).sum() - 3 * b * (k + 1)
-    assert abs(got["chi2_stat"] - chi2) < 1e-4
-    assert abs(got["kendall_w"] - chi2 / (b * (k - 1))) < 1e-5
-
-
-def test_grubbs_identity(spark):
-    got = run_entry(spark, "agg_grubbs_test").set_index("o_orderpriority")
-    o = duckdb.sql(
-        f"""SELECT o_orderpriority p, floor(o_totalprice*100+0.5) v
-            FROM '{SF_SMOKE}/orders.parquet'"""
-    ).df()
-    for p, g in o.groupby("p"):
-        v = g.v.astype(float)
-        m, sd = v.mean(), v.std(ddof=1)
-        gstat = max(v.max() - m, m - v.min()) / sd
-        row = got.loc[p]
-        assert row["n"] == len(v)
-        assert abs(row["g_stat"] - gstat) < 1e-5, p
-        assert row["tail"] == ("upper" if v.max() - m >= m - v.min() else "lower")
-        assert abs(row["sd_price"] - sd / 100) < 1e-4
-
-
-def test_pot_identity(spark):
-    got = run_entry(spark, "events_peak_over_threshold").set_index("event_type")
-    e = duckdb.sql(
-        f"""SELECT event_type t, CAST(floor(value*1e6+0.5) AS BIGINT) v
-            FROM '{SF_SMOKE}/events.parquet'"""
-    ).df()
-    for t, g in e.groupby("t"):
-        v = g.v.sort_values().reset_index(drop=True)
-        # quantile_disc(0.9): smallest value with cume_dist >= 0.9
-        import math
-        u = int(v.iloc[math.ceil(0.9 * len(v)) - 1])
-        exc = g.v[g.v > u]
-        row = got.loc[t]
-        assert row["n"] == len(g)
-        assert row["threshold_p90"] == u / 1e6, t
-        assert row["n_exceed"] == len(exc), t
-        assert abs(row["mean_excess"] - (exc - u).mean() / 1e6) < 1e-5, t
-        assert row["max_value"] == g.v.max() / 1e6
-
-
-def test_wilcoxon_identity(spark):
-    got = run_entry(spark, "agg_wilcoxon_signed_rank").iloc[0]
-    med = duckdb.sql(
-        f"""WITH o AS (
-              SELECT strftime(o_orderdate, '%Y-%m') m, o_orderpriority p,
-                     CAST(floor(o_totalprice*100+0.5) AS BIGINT) vq
-              FROM '{SF_SMOKE}/orders.parquet'
-              WHERE o_orderpriority IN ('1-URGENT', '5-LOW'))
-            SELECT m, p, CAST(quantile_disc(vq, 0.5) AS BIGINT) med
-            FROM o GROUP BY m, p"""
-    ).df()
-    piv = med.pivot(index="m", columns="p", values="med").dropna()
-    d = (piv["1-URGENT"] - piv["5-LOW"]).astype("int64")
-    d = d[d != 0]
-    n = len(d)
-    assert got["n_pairs"] == n
-    r = d.abs().rank(method="average")
-    wp = r[d > 0].sum()
-    assert got["w_plus"] == wp
-    assert got["w_minus"] == n * (n + 1) / 2 - wp
-    c = d.abs().value_counts()
-    tie = int((c**3 - c).sum())
-    assert got["tie_sum"] == tie
-    var = n * (n + 1) * (2 * n + 1) / 24 - tie / 48
-    z = (wp - n * (n + 1) / 4) / var**0.5
-    assert abs(got["z_stat"] - z) < 1e-5
-    # W+ + W- exhausts the rank mass
-    assert got["w_plus"] + got["w_minus"] == n * (n + 1) / 2
-
-
-def test_conversion_ztest_identity(spark):
-    got = run_entry(spark, "events_conversion_ztest").iloc[0]
-    pu = duckdb.sql(
-        f"""SELECT user_id,
-                   max(CASE WHEN event_type = 'purchase' AND value > 200
-                       THEN 1 ELSE 0 END) c
-            FROM '{SF_SMOKE}/events.parquet' GROUP BY user_id"""
-    ).df()
-    t, c = pu[pu.user_id % 2 == 0], pu[pu.user_id % 2 != 0]
-    assert got["n_treat"] == len(t) and got["n_ctrl"] == len(c)
-    assert got["x_treat"] == t.c.sum() and got["x_ctrl"] == c.c.sum()
-    p1, p0 = t.c.mean(), c.c.mean()
-    pp = pu.c.mean()
-    z = (p1 - p0) / (pp * (1 - pp) * (1 / len(t) + 1 / len(c))) ** 0.5
-    assert abs(got["z_stat"] - z) < 1e-5
-    # non-degenerate by construction: both rates strictly inside (0, 1)
-    assert 0 < got["rate_treat"] < 1 and 0 < got["rate_ctrl"] < 1
-
-
-def test_bartlett_identity(spark):
-    import math
-
-    got = run_entry(spark, "agg_bartlett_test").iloc[0]
-    o = duckdb.sql(
-        f"""SELECT o_orderpriority p, floor(o_totalprice*100+0.5) v
-            FROM '{SF_SMOKE}/orders.parquet'"""
-    ).df()
-    groups = [g.v.astype(float) for _, g in o.groupby("p")]
-    n, k = len(o), len(groups)
-    assert got["n_total"] == n and got["k_groups"] == k
-    s2 = [g.var(ddof=1) for g in groups]
-    sp2 = sum((len(g) - 1) * v for g, v in zip(groups, s2)) / (n - k)
-    t_num = (n - k) * math.log(sp2) - sum(
-        (len(g) - 1) * math.log(v) for g, v in zip(groups, s2)
-    )
-    c = 1 + (sum(1 / (len(g) - 1) for g in groups) - 1 / (n - k)) / (3 * (k - 1))
-    assert abs(got["correction_c"] - c) < 1e-5
-    assert abs(got["bartlett_t"] - t_num / c) < 1e-4
-    assert got["bartlett_t"] >= 0
-
-
-def test_cochran_armitage_identity(spark):
-    got = run_entry(spark, "agg_cochran_armitage").iloc[0]
-    o = duckdb.sql(
-        f"""SELECT o_orderpriority p,
-                   CAST(o_totalprice > 300000 AS INT) big
-            FROM '{SF_SMOKE}/orders.parquet'"""
-    ).df()
-    tab = o.groupby("p").big.agg(["count", "sum"]).sort_index()
-    n = tab["count"].to_numpy(dtype=float)
-    x = tab["sum"].to_numpy(dtype=float)
-    w = np.arange(1, 6, dtype=float)
-    nn, xx = n.sum(), x.sum()
-    pbar = xx / nn
-    num = (w * (x - n * pbar)).sum()
-    var = pbar * (1 - pbar) * ((w * w * n).sum() - (w * n).sum() ** 2 / nn)
-    assert got["n_total"] == nn and got["n_big"] == xx
-    assert abs(got["z_trend"] - num / var**0.5) < 1e-5
-    # non-degenerate: rate strictly inside (0, 1)
-    assert 0 < got["rate_overall"] < 1
-
-
-def test_herfindahl_identity(spark):
-    got = run_entry(spark, "agg_herfindahl").iloc[0]
-    rev = duckdb.sql(
-        f"""SELECT p_brand,
-                   sum(floor(l_extendedprice * (1 - l_discount) * 1e6 + 0.5)) r
-            FROM '{SF_SMOKE}/lineitem.parquet'
-            JOIN '{SF_SMOKE}/part.parquet' ON l_partkey = p_partkey
-            GROUP BY p_brand"""
-    ).df()
-    shares = 100 * rev.r / rev.r.sum()
-    hhi = (shares**2).sum()
-    n = len(rev)
-    assert got["n_brands"] == n
-    assert abs(got["hhi"] - hhi) < 1e-3
-    assert abs(got["top_share_pct"] - shares.max()) < 1e-4
-    assert abs(got["effective_brands"] - 10000 / hhi) < 1e-3
-    # HHI bounds: equal split floor 10000/n, monopoly ceiling 10000
-    assert 10000 / n - 1e-6 <= got["hhi"] <= 10000
-
-
-def test_power_mde_consistency(spark):
-    got = run_entry(spark, "events_experiment_power_mde").iloc[0]
-    z = run_entry(spark, "events_conversion_ztest").iloc[0]
-    # identical per-user cells as the z-test entry
-    assert got["n_treat"] == z["n_treat"] and got["n_ctrl"] == z["n_ctrl"]
-    p = (z["x_treat"] + z["x_ctrl"]) / (z["n_treat"] + z["n_ctrl"])
-    se = (p * (1 - p) * (1 / z["n_treat"] + 1 / z["n_ctrl"])) ** 0.5
-    mde = (1.959964 + 0.841621) * se
-    assert abs(got["baseline_rate"] - p) < 1e-5
-    assert abs(got["mde_abs"] - mde) < 1e-5
-    assert abs(got["mde_rel"] - mde / p) < 1e-4
-    # sanity: with these arm sizes the experiment can only see large lifts
-    assert got["mde_abs"] > 0
-
-
-def test_event_study_identities(spark):
-    got = run_entry(spark, "events_did_event_study")
-    assert len(got) == 10
-    assert list(got.period) == list(range(10))
-    assert list(got.is_post) == [0] * 5 + [1] * 5
-    e = duckdb.sql(
-        f"""SELECT user_id % 2 = 0 AS t,
-                   (epoch_us(ts) - 1704067200000000) // 259200000000 AS per,
-                   value
-            FROM '{SF_SMOKE}/events.parquet' WHERE event_type = 'purchase'"""
-    ).df()
-    # per-period diff recompute and the baseline-netting identity
-    pre = e[e.per < 5]
-    bl = pre[pre.t].value.mean() - pre[~pre.t].value.mean()
-    for _, row in got.iterrows():
-        g = e[e.per == row.period]
-        diff = g[g.t].value.mean() - g[~g.t].value.mean()
-        assert abs(row["diff"] - diff) < 1e-4, row.period
-        assert abs(row["coef"] - (diff - bl)) < 1e-4, row.period
-    # the n-weighted mean of pre-period coefficients is ~0 by construction
-    pre_rows = got[got.is_post == 0]
-    w = (pre_rows.n_treat + pre_rows.n_ctrl).to_numpy(dtype=float)
-    assert abs((pre_rows.coef.to_numpy() * w).sum() / w.sum()) < 0.2
-
-
-def test_mad_robust_bruteforce(spark):
-    got = run_entry(spark, "agg_mad_robust").set_index("o_orderpriority")
-    o = smoke_table("orders")
-    o["c"] = np.floor(o.o_totalprice * 100 + 0.5).astype("int64")
-    for prio, g in o.groupby("o_orderpriority"):
-        c = np.sort(g.c.values)
-        med = c[(len(c) - 1) // 2] if len(c) % 2 else c[len(c) // 2 - 1]
-        # percentile_disc(0.5): smallest value with cume_dist >= 0.5
-        med = np.sort(c)[int(np.ceil(0.5 * len(c))) - 1]
-        adev = np.sort(np.abs(g.c.values - med))
-        mad = adev[int(np.ceil(0.5 * len(adev))) - 1]
-        assert got.loc[prio, "median_price"] == med / 100
-        assert got.loc[prio, "mad_price"] == mad / 100
-        n_out = int((np.abs(g.c.values - med) * 10000 > 44478 * mad).sum())
-        assert got.loc[prio, "n_robust_outliers"] == n_out
-        assert got.loc[prio, "n"] == len(g)
-
-
-def test_gtest_identities(spark):
-    got = run_entry(spark, "agg_gtest_independence").iloc[0]
-    o = smoke_table("orders")
-    tab = o.groupby(["o_orderpriority", "o_orderstatus"]).size()
-    n = len(o)
-    r = o.groupby("o_orderpriority").size()
-    c = o.groupby("o_orderstatus").size()
-    g = 2 * sum(
-        obs * math.log(obs * n / (r[p] * c[s]))
-        for (p, s), obs in tab.items()
-    )
-    assert got["n"] == n
-    assert got["dof"] == (r.size - 1) * (c.size - 1)
-    assert abs(got["g_stat"] - g) < 1e-4
-    assert got["g_stat"] >= 0 or abs(got["g_stat"]) < 1e-6
-
-
-def test_runs_test_bruteforce(spark):
-    got = run_entry(spark, "agg_runs_test").iloc[0]
-    o = smoke_table("orders")
-    o["c"] = np.floor(o.o_totalprice * 100 + 0.5).astype("int64")
-    days = o.groupby("o_orderdate").c.sum().sort_index()
-    med = np.sort(days.values)[int(np.ceil(0.5 * len(days))) - 1]
-    s = (days[days != med] > med).astype(int).values
-    runs = 1 + int((s[1:] != s[:-1]).sum())
-    n1, n2 = int(s.sum()), int(len(s) - s.sum())
-    n = n1 + n2
-    assert got["n_days"] == n and got["n_above"] == n1 and got["n_below"] == n2
-    assert got["n_runs"] == runs
-    mu = 1 + 2 * n1 * n2 / n
-    var = 2 * n1 * n2 * (2 * n1 * n2 - n) / (n * n * (n - 1))
-    assert abs(got["expected_runs"] - mu) < 1e-5
-    assert abs(got["z_stat"] - (runs - mu) / math.sqrt(var)) < 1e-5
-
-
-def test_durbin_watson_bruteforce(spark):
-    got = run_entry(spark, "agg_durbin_watson").iloc[0]
-    o = smoke_table("orders")
-    o["c"] = np.floor(o.o_totalprice * 100 + 0.5).astype("int64")
-    days = o.groupby("o_orderdate").c.sum().sort_index().values.astype(float)
-    e = days - days.mean()
-    dw = float((np.diff(e) ** 2).sum() / (e**2).sum())
-    assert got["n_days"] == len(days)
-    assert abs(got["dw_stat"] - dw) < 1e-5
-    assert 0 < got["dw_stat"] < 4
-
-
-def test_circadian_identities(spark):
-    got = run_entry(spark, "events_circadian_profile").set_index("event_type")
-    e = smoke_table("events")
-    e["hod"] = pd.to_datetime(e.ts).dt.hour
-    for t, g in e.groupby("event_type"):
-        ang = 2 * np.pi * g.hod.values / 24
-        x, y = np.cos(ang).mean(), np.sin(ang).mean()
-        r = math.hypot(x, y)
-        assert got.loc[t, "n"] == len(g)
-        assert abs(got.loc[t, "mean_x"] - x) < 1e-5
-        assert abs(got.loc[t, "mean_y"] - y) < 1e-5
-        assert abs(got.loc[t, "resultant_r"] - r) < 1e-5
-        assert abs(got.loc[t, "circ_variance"] - (1 - r)) < 1e-5
-        assert 0 <= got.loc[t, "resultant_r"] <= 1
-
-
-def test_haar_energy_bruteforce(spark):
-    got = run_entry(spark, "events_haar_energy").set_index("level")
-    e = smoke_table("events")
-    # force ns resolution: the parquet ts is us-resolution and pandas keeps
-    # it, so a bare astype(int64) would be microseconds
-    hidx = (
-        pd.to_datetime(e.ts).astype("datetime64[ns]").astype("int64")
-        // (3600 * 10**9)
-    ).values
-    lo = hidx.min()
-    counts = np.zeros(512, dtype="int64")
-    for h in hidx:
-        if h - lo < 512:
-            counts[h - lo] += 1
-    total = 0
-    energies = {}
-    for lvl in range(1, 10):
-        blk = 1 << lvl
-        half = blk >> 1
-        d = [
-            counts[b : b + half].sum() - counts[b + half : b + blk].sum()
-            for b in range(0, 512, blk)
-        ]
-        energies[lvl] = int(sum(x * x for x in d))
-        total += energies[lvl]
-        assert got.loc[lvl, "energy"] == energies[lvl]
-        assert got.loc[lvl, "n_blocks"] == 512 // blk
-        assert got.loc[lvl, "block_hours"] == blk
-    for lvl in range(1, 10):
-        assert (
-            got.loc[lvl, "energy_share"]
-            == math.floor(energies[lvl] / total * 1e6 + 0.5) / 1e6
-        )
-
-
-def test_slo_burn_identities(spark):
-    got = run_entry(spark, "events_slo_burn_rate")
-    e = smoke_table("events")
-    widx = (
-        pd.to_datetime(e.ts).astype("datetime64[ns]").astype("int64")
-        // (6 * 3600 * 10**9)
-    )
-    grp = e.assign(w=widx).groupby("w")
-    assert got.n_events.sum() == len(e)
-    err = grp.apply(
-        lambda g: int((g.event_type == "error").sum()), include_groups=False
-    )
-    n = grp.size()
-    assert got.n_errors.sum() == int(err.sum())
-    # burn and flag consistency on every window
-    for _, row in got.iterrows():
-        assert row.fast_burn == (1 if 40 * row.n_errors > 12 * row.n_events else 0)
-        want = math.floor(4 * row.n_errors / row.n_events * 1e6 + 0.5) / 1e6
-        assert row.burn_rate == want
-    # non-degenerate: both healthy and breaching windows exist at smoke SF
-    assert 0 < got.fast_burn.sum() < len(got)
-
-
-def test_runs_test_var0_is_null_not_nan(spark, duck, tmp_path):
-    """Exactly one above-median and one below-median day: 2*n1*n2 = n makes
-    the variance 0 — z_stat must be NULL (both engines), never NaN."""
-    from tmapreduce_spark.operators.analytics import QUERIES
-
-    orders = pd.DataFrame(
-        {
-            "o_orderkey": [1, 2, 3],
-            "o_custkey": [1, 1, 1],
-            "o_orderstatus": ["O", "O", "O"],
-            "o_totalprice": [1.0, 2.0, 3.0],
-            "o_orderdate": pd.to_datetime(
-                ["2024-01-01", "2024-01-02", "2024-01-03"]
-            ),
-            "o_orderpriority": ["1-URGENT"] * 3,
-        }
-    )
-    sf = write_table(tmp_path, "orders", orders)
-    row = QUERIES["agg_runs_test"].fn(spark, sf).collect()[0]
-    assert row["n_above"] == 1 and row["n_below"] == 1
-    assert row["z_stat"] is None, row
-    assert row["expected_runs"] == 2.0
-    duck.execute(
-        f"CREATE OR REPLACE VIEW orders AS SELECT * FROM '{sf}/orders.parquet'"
-    )
-    drow = duck.execute(QUERIES["agg_runs_test"].oracle).df().iloc[0]
-    assert pd.isna(drow["z_stat"]) and not math.isnan(drow["expected_runs"])
-
-
-def test_haar_energy_flat_window_is_null_not_nan(spark, tmp_path):
-    """A constant hourly series (1 event in each of the 512 window hours):
-    every detail energy is 0, so energy_share is NULL at every level —
-    the 0/0 case the r10 advice flagged."""
-    from tmapreduce_spark.operators.analytics import QUERIES
-
-    ts = pd.date_range("2024-01-01", periods=512, freq="h")
-    events = pd.DataFrame(
-        {
-            "event_id": range(512),
-            "ts": ts,
-            "user_id": [1] * 512,
-            "event_type": ["view"] * 512,
-            "value": [1.0] * 512,
-            "props": ["{}"] * 512,
-        }
-    )
-    sf = write_table(tmp_path, "events", events)
-    rows = QUERIES["events_haar_energy"].fn(spark, sf).collect()
-    assert len(rows) == 9
-    for r in rows:
-        assert r["energy"] == 0
-        assert r["energy_share"] is None, r
-
-
-def test_active_users_matches_bruteforce(spark):
-    """WAU from the interval-contribution trick must equal the naive
-    per-day COUNT(DISTINCT user over trailing 7 days), and DAU <= WAU."""
-    rows = {r["day"]: r for r in events_active_users_rolling(spark, SF_SMOKE).collect()}
-    e = load_table(spark, SF_SMOKE, "events")
-    raw = e.selectExpr("user_id", "CAST(ts AS DATE) AS day").distinct().collect()
-    by_day: dict = defaultdict(set)
-    for r in raw:
-        by_day[r["day"]].add(r["user_id"])
-    days = sorted(by_day)
-    assert len(rows) == len(days)
-    for d in days:
-        wau = len({u for off in range(7) for u in by_day.get(d - timedelta(days=off), ())})
-        got = rows[d.strftime("%Y-%m-%d")]
-        assert got["dau"] == len(by_day[d])
-        assert got["wau7"] == wau, (d, got["wau7"], wau)
-        assert got["dau"] <= got["wau7"]
-
-
-def test_drawdown_bruteforce_and_bounds(spark):
-    """max_drawdown recomputed from the raw per-user running series; always
-    >= 0 and peak >= final."""
-    got = {r["user_id"]: r for r in events_drawdown_max(spark, SF_SMOKE).collect()}
-    e = load_table(spark, SF_SMOKE, "events")
-    per_user: dict = defaultdict(list)
-    for r in e.select(
-        "user_id", F.unix_micros("ts").alias("us"), "event_id", "value"
-    ).collect():
-        per_user[r["user_id"]].append((r["us"], r["event_id"], r["value"]))
-    for uid, evs in per_user.items():
-        evs.sort()
-        cum, peak, dd = 0, None, 0
-        for _, _, v in evs:
-            import math
-
-            cum += math.floor(v * 1_000_000 + 0.5)
-            peak = cum if peak is None else max(peak, cum)
-            dd = max(dd, peak - cum)
-        r = got[uid]
-        assert round(r["max_drawdown"] * 1e6) == dd
-        assert r["max_drawdown"] >= 0
-        assert r["peak_value"] >= r["final_value"]
-
-
-def test_type_diversity_bounds(spark):
-    """Simpson diversity lives in [0, 1); exactly 0 iff one event type."""
-    for r in events_type_diversity(spark, SF_SMOKE).collect():
-        assert 0 <= r["simpson_diversity"] < 1
-        assert (r["simpson_diversity"] == 0) == (r["n_types"] == 1)
-        assert r["n_types"] <= r["n_events"]
-
-
-def test_burstiness_cv2_nonnegative(spark):
-    """Cauchy-Schwarz: n*sum(g^2) >= sum(g)^2, so CV^2 >= 0 whenever
-    defined; n_gaps is exactly the user's event count minus one."""
-    e = load_table(spark, SF_SMOKE, "events")
-    n_by_user = {
-        r["user_id"]: r["n"]
-        for r in e.groupBy("user_id").agg(F.count("*").alias("n")).collect()
-    }
-    rows = events_gap_burstiness(spark, SF_SMOKE).collect()
-    assert rows
-    for r in rows:
-        assert r["n_gaps"] == n_by_user[r["user_id"]] - 1
-        if r["cv2"] is not None:
-            assert r["cv2"] >= 0
-        assert r["mean_gap_s"] >= 0
-
-
-def test_skyline_is_exactly_the_nondominated_set(spark):
-    """Brute-force strict 2-D dominance over ALL orders must reproduce the
-    two-level sweep's frontier exactly."""
-    o = load_table(spark, SF_SMOKE, "orders")
-    pts = [
-        (r["o_orderdate"], int(r["o_totalprice"] * 100 + 0.5), r["o_orderkey"])
-        for r in o.select("o_orderkey", "o_orderdate", "o_totalprice").collect()
-    ]
-    expect = {
-        k
-        for d, p, k in pts
-        if not any(d2 < d and p2 > p for d2, p2, _ in pts)
-    }
-    got = {r["o_orderkey"] for r in skyline_pareto_orders(spark, SF_SMOKE).collect()}
-    assert got == expect
-
-
-def test_referential_integrity_holds_on_fixture(spark):
-    """TPC-H-ish generators keep FKs consistent — every edge must audit to
-    zero orphans, and distinct FKs can't exceed child rows."""
-    rows = diag_referential_orphans(spark, SF_SMOKE).collect()
-    assert len(rows) == 5
-    for r in rows:
-        assert r["n_orphans"] == 0, r
-        assert 0 < r["n_distinct_fk"] <= r["n_child"]
-
-
-def test_funnel_ttc_bucket_consistency(spark):
-    """Mean delay must sit inside its bucket's bounds and conversions can't
-    exceed the purchase count."""
-    bounds = {
-        "0_lt_1m": (0, 60),
-        "1_lt_1h": (60, 3600),
-        "2_lt_6h": (3600, 21600),
-        "3_lt_24h": (21600, 86400),
-    }
-    e = load_table(spark, SF_SMOKE, "events")
-    n_purchases = e.filter("event_type = 'purchase'").count()
-    rows = events_funnel_ttc(spark, SF_SMOKE).collect()
-    assert rows
-    assert sum(r["n_conversions"] for r in rows) <= n_purchases
-    for r in rows:
-        lo, hi = bounds[r["bucket"]]
-        assert lo <= r["mean_delay_s"] <= hi, r
-
-
-def test_abc_classes_partition_and_pareto_shape(spark):
-    """A/B/C partition all parts; class revenue shares bracket their
-    definitions (A >= ~80% only if enough concentration — at minimum A's
-    per-part mean revenue must exceed C's)."""
-    from tmapreduce_spark.operators.analytics import agg_abc_classification
-    from tmapreduce_spark.sources.catalog import load_table as lt
-
-    rows = {r["abc_class"]: r for r in agg_abc_classification(spark, SF_SMOKE).collect()}
-    assert set(rows) == {"A", "B", "C"}
-    n_parts = (
-        lt(spark, SF_SMOKE, "lineitem").select("l_partkey").distinct().count()
-    )
-    assert sum(r["n_parts"] for r in rows.values()) == n_parts
-    mean = {k: rows[k]["revenue"] / rows[k]["n_parts"] for k in rows}
-    assert mean["A"] > mean["B"] > mean["C"]
-
-
-def test_equidepth_bins_cover_and_order(spark):
-    """Bins tile the value range in order (bin k's max <= bin k+1's min),
-    rows sum to the table count, and depths are near-equal on the
-    mostly-distinct price column (within 2% of n/10)."""
-    from tmapreduce_spark.operators.analytics import agg_equidepth_histogram
-    from tmapreduce_spark.sources.catalog import load_table as lt
-
-    rows = sorted(
-        agg_equidepth_histogram(spark, SF_SMOKE).collect(), key=lambda r: r["bin"]
-    )
-    n = lt(spark, SF_SMOKE, "orders").count()
-    assert sum(r["n_rows"] for r in rows) == n
-    for a, b in zip(rows, rows[1:]):
-        assert a["bin_max"] <= b["bin_min"]
-    for r in rows:
-        assert abs(r["n_rows"] - n / 10) <= max(2, 0.02 * n), r
-
-
-def test_hourweek_shares_sum_to_one(spark):
-    """Traffic shares over the <=168 cells must sum to ~1 and every count
-    is positive."""
-    from tmapreduce_spark.operators.analytics import events_hourweek_profile
-
-    rows = events_hourweek_profile(spark, SF_SMOKE).collect()
-    assert 1 < len(rows) <= 168
-    assert all(0 <= r["dow"] <= 6 and 0 <= r["hod"] <= 23 for r in rows)
-    assert abs(sum(r["traffic_share"] for r in rows) - 1.0) < 1e-3
-
-
-def test_snapshot_asof_is_latest_before_cutoff(spark):
-    """Brute-force: per user, the reported row is the max-(us, event_id)
-    event at or before the cutoff, and users with no prior events are
-    absent."""
-    from tmapreduce_spark.operators.analytics import _SNAPSHOT_TS, events_snapshot_asof
-    from tmapreduce_spark.sources.catalog import load_table as lt
-
-    got = {r["user_id"]: r for r in events_snapshot_asof(spark, SF_SMOKE).collect()}
-    e = lt(spark, SF_SMOKE, "events")
-    pre = e.filter(f"ts <= TIMESTAMP '{_SNAPSHOT_TS}'").selectExpr(
-        "user_id", "event_id", "event_type", "unix_micros(ts) AS us"
-    ).collect()
-    best: dict = {}
-    for r in pre:
-        k = (r["us"], r["event_id"])
-        if r["user_id"] not in best or k > best[r["user_id"]][0]:
-            best[r["user_id"]] = (k, r["event_type"])
-    assert set(got) == set(best)
-    for uid, ((us, _), ety) in best.items():
-        assert got[uid]["last_us"] == us
-        assert got[uid]["last_type"] == ety
-
-
-def test_open_daily_sweep_conserves_and_stays_nonnegative(spark):
-    """Sum(opened) = sum(closed) = lineitem count (every synthesized
-    interval both opens and closes), the running concurrency is never
-    negative, and a spot-day brute-force recount matches."""
-    from tmapreduce_spark.operators.analytics import lineitem_open_daily
-    from tmapreduce_spark.sources.catalog import load_table as lt
-
-    rows = sorted(lineitem_open_daily(spark, SF_SMOKE).collect(), key=lambda r: r["day"])
-    n = lt(spark, SF_SMOKE, "lineitem").count()
-    assert sum(r["opened"] for r in rows) == n
-    assert sum(r["closed"] for r in rows) == n
-    assert all(r["open_end"] >= 0 for r in rows)
-    assert rows[-1]["open_end"] == 0, "all intervals must close by the last day"
-    # brute-force the middle day
-    mid = rows[len(rows) // 2]["day"]
-    ivs = lt(spark, SF_SMOKE, "lineitem").selectExpr(
-        "CAST(l_shipdate AS DATE) AS s",
-        "date_add(CAST(l_shipdate AS DATE),"
-        " CAST(1 + (l_orderkey + l_linenumber) % 30 AS INT)) AS e",
-    ).collect()
-    from datetime import date
-
-    md = date.fromisoformat(mid)
-    expect = sum(1 for r in ivs if r["s"] <= md < r["e"])
-    assert {r["day"]: r["open_end"] for r in rows}[mid] == expect
-
-
-def test_ols2_recovers_planted_coefficients(spark):
-    """Fit on a synthetic exactly-linear frame: y = 7*x1 - 3*x2 + 11 must
-    come back with the planted coefficients to the mround grid."""
-    import pandas as pd
-
-    from tmapreduce_spark.operators.analytics import _ols2_exprs
-
-    pdf = pd.DataFrame(
-        {
-            "l_returnflag": ["X"] * 60,
-            "l_quantity": [float(i % 13 + 1) for i in range(60)],
-            "l_discount": [((i * 7) % 11) / 100.0 for i in range(60)],
-        }
-    )
-    pdf["l_extendedprice"] = 7 * pdf["l_quantity"] - 3 * (pdf["l_discount"] * 100) + 11
-    df = spark.createDataFrame(pdf)
-    from pyspark.sql import functions as SF
-
-    out = df.groupBy("l_returnflag").agg(
-        *[SF.expr(sql).alias(name) for name, sql in _ols2_exprs().items()]
-    ).collect()[0]
-    assert abs(out["beta_qty"] - 7) < 1e-4
-    assert abs(out["beta_disc_pt"] - (-3)) < 1e-4
-    assert abs(out["intercept"] - 11) < 1e-3
-
-
-def test_rolling_median_bruteforce(spark):
-    """Sorted-frame median must equal Python statistics.median over the
-    same trailing 20-row frame per user."""
-    import statistics
-
-    from tmapreduce_spark.operators.analytics import _RMED_FRAME, window_rolling_median
-    from tmapreduce_spark.sources.catalog import load_table as lt
-
-    got = {
-        (r["user_id"], r["event_id"]): r["roll_med"]
-        for r in window_rolling_median(spark, SF_SMOKE).collect()
-    }
-    e = lt(spark, SF_SMOKE, "events")
-    per_user: dict = defaultdict(list)
-    for r in e.selectExpr(
-        "user_id", "event_id", "unix_micros(ts) AS us", "value"
-    ).collect():
-        per_user[r["user_id"]].append((r["us"], r["event_id"], r["value"]))
-    for uid, evs in per_user.items():
-        evs.sort()
-        for i in range(len(evs)):
-            frame = [v for _, _, v in evs[max(0, i - _RMED_FRAME) : i + 1]]
-            exp = statistics.median(frame)
-            assert abs(got[(uid, evs[i][1])] - exp) <= 1e-6, (uid, i)
-
-
-def test_pk_uniqueness_fixture_is_clean(spark):
-    """Every keyed fixture table must audit to zero duplicate surplus and
-    zero null keys."""
-    from tmapreduce_spark.operators.analytics import diag_pk_uniqueness
-
-    rows = diag_pk_uniqueness(spark, SF_SMOKE).collect()
-    assert len(rows) == 9
-    for r in rows:
-        assert r["n_dup_surplus"] == 0, r
-        assert r["n_null_keys"] == 0, r
-        assert r["n_rows"] == r["n_distinct"]
-
-
-def test_rate_spike_bruteforce_baseline(spark):
-    """spike_ratio recomputed from the raw hourly counts with the same
-    wall-clock RANGE baseline; warmup rows (< 6 baseline buckets) are
-    absent; is_spike iff ratio >= 3 on the exact-integer comparison."""
-    from tmapreduce_spark.operators.analytics import (
-        _SPIKE_LOOKBACK,
-        _SPIKE_WARMUP,
-        events_rate_spike,
-    )
-    from tmapreduce_spark.sources.catalog import load_table as lt
-
-    e = lt(spark, SF_SMOKE, "events")
-    hourly: dict = {}
-    for r in e.selectExpr(
-        "event_type",
-        "CAST(unix_micros(date_trunc('hour', ts)) div 3600000000 AS BIGINT) AS h",
-    ).collect():
-        hourly[(r["event_type"], r["h"])] = hourly.get((r["event_type"], r["h"]), 0) + 1
-    got = {(r["event_type"], r["hidx"]): r for r in events_rate_spike(spark, SF_SMOKE).collect()}
-    for (ety, h), n in hourly.items():
-        base = [
-            hourly[(ety, h2)]
-            for h2 in range(h - _SPIKE_LOOKBACK, h)
-            if (ety, h2) in hourly
-        ]
-        if len(base) < _SPIKE_WARMUP:
-            assert (ety, h) not in got
-            continue
-        r = got[(ety, h)]
-        assert r["n"] == n
-        exp = n * len(base) / sum(base)
-        assert abs(r["spike_ratio"] - exp) < 2e-6
-        assert r["is_spike"] == (3 * sum(base) <= n * len(base))
-
-
-def test_rolling_mad_flag_bruteforce(spark):
-    """Baseline median/MAD and the outlier decision recomputed in Python
-    over the same strictly-preceding 21-row frames; warmup rows absent."""
-    import statistics
-
-    from tmapreduce_spark.operators.analytics import (
-        _RMAD_FRAME,
-        _RMAD_WARMUP,
-        window_rolling_mad_flag,
-    )
-    from tmapreduce_spark.sources.catalog import load_table as lt
-
-    got = {
-        (r["user_id"], r["event_id"]): r
-        for r in window_rolling_mad_flag(spark, SF_SMOKE).collect()
-    }
-    e = lt(spark, SF_SMOKE, "events")
-    per_user: dict = defaultdict(list)
-    for r in e.selectExpr(
-        "user_id", "event_id", "unix_micros(ts) AS us", "value"
-    ).collect():
-        per_user[r["user_id"]].append((r["us"], r["event_id"], r["value"]))
-    n_expected = 0
-    for uid, evs in per_user.items():
-        evs.sort()
-        for i, (_, eid, v) in enumerate(evs):
-            frame = [x for _, _, x in evs[max(0, i - _RMAD_FRAME) : i]]
-            if len(frame) < _RMAD_WARMUP:
-                assert (uid, eid) not in got
-                continue
-            n_expected += 1
-            med = statistics.median(frame)
-            mad = statistics.median([abs(x - med) for x in frame])
-            r = got[(uid, eid)]
-            assert abs(r["baseline_med"] - med) <= 1e-6
-            assert abs(r["baseline_mad"] - mad) <= 1e-6
-            assert r["is_outlier"] == (abs(v - med) > 3 * mad)
-    assert len(got) == n_expected
-
-
-def test_cohort_repeat_rate_consistency(spark):
-    """Cohort sizes partition the customer base; repeat_rate in [0, 1];
-    orders_per_customer >= 1; total orders conserved."""
-    from tmapreduce_spark.operators.analytics import orders_cohort_repeat_rate
-    from tmapreduce_spark.sources.catalog import load_table as lt
-
-    rows = orders_cohort_repeat_rate(spark, SF_SMOKE).collect()
-    o = lt(spark, SF_SMOKE, "orders")
-    assert sum(r["n_customers"] for r in rows) == o.select("o_custkey").distinct().count()
-    assert sum(r["total_orders"] for r in rows) == o.count()
-    for r in rows:
-        assert 0 <= r["repeat_rate"] <= 1
-        assert r["orders_per_customer"] >= 1
-
-
-def test_change_point_split_equals_cusum_peak(spark):
-    """Estimator identity: the change-point objective |S_t*(n-t) -
-    (S_n-S_t)*t| equals |n*S_t - t*S_n| — the CUSUM statistic — so
-    events_change_point's split position must coincide with
-    window_cusum_detect's peak position for every user (both break ties to
-    the earliest index; the fixture has no NULL values, so both operators
-    index the same event sequence)."""
-    from tests.conftest import SF_SMOKE
-    from tmapreduce_spark.operators.analytics import events_change_point
-    from tmapreduce_spark.operators.windows import window_cusum_detect
-
-    split = {
-        r["user_id"]: int(r["split_t"])
-        for r in events_change_point(spark, SF_SMOKE).collect()
-    }
-    peak_col = next(
-        c for c in window_cusum_detect(spark, SF_SMOKE).columns
-        if c in ("peak_rn", "rn", "peak_pos", "peak_t")
-    )
-    peak = {
-        r["user_id"]: int(r[peak_col])
-        for r in window_cusum_detect(spark, SF_SMOKE).collect()
-    }
-    assert split, "no users"
-    for u, t in split.items():
-        assert peak[u] == t, (u, peak[u], t)

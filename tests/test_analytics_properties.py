@@ -10,11 +10,7 @@ the analytics operators, against brute-force models — pure Python, no Spark:
   -earlier max + prior-month max reproduces global strict 2-D dominance for
   ANY point set;
 - Misra-Gries-style fixed-point rescale (embedding_pca_power): the integer
-  rescale keeps every component in [-SCALE, SCALE] and preserves sign;
-- Haar energies (events_haar_energy): Parseval's identity and invariance of
-  the detail energies under a constant shift;
-- runs count (agg_runs_test): 1 + adjacent sign changes equals the
-  run-length count.
+  rescale keeps every component in [-SCALE, SCALE] and preserves sign.
 """
 
 from __future__ import annotations
@@ -417,65 +413,3 @@ def test_wilcoxon_rank_mass_and_tie_sum(diffs):
     assert w2p + w2m == n * (n + 1)
     c = Counter(abs(x) for x in d)
     assert sum(t**3 - t for t in c.values()) >= 0
-
-
-# --- Haar energy core (events_haar_energy) --------------------------------
-
-
-def _haar_energies(counts: list[int]) -> dict[int, int]:
-    n = len(counts)
-    levels = n.bit_length() - 1
-    out = {}
-    for lvl in range(1, levels + 1):
-        blk, half = 1 << lvl, 1 << (lvl - 1)
-        d = [
-            sum(counts[b : b + half]) - sum(counts[b + half : b + blk])
-            for b in range(0, n, blk)
-        ]
-        out[lvl] = sum(x * x for x in d)
-    return out
-
-
-@given(st.lists(st.integers(min_value=0, max_value=1000), min_size=64, max_size=64))
-@settings(max_examples=200, deadline=None)
-def test_haar_parseval_identity(counts):
-    """Orthogonality of the unnormalized Haar basis: sum over levels of
-    energy_j / 2^j plus S^2/n equals sum c^2 exactly — the invariant that
-    makes the per-level integer energies a true decomposition and not just
-    ad-hoc statistics. Exact in rationals: checked with integer
-    cross-multiplication (common denominator n = 2^levels)."""
-    n = len(counts)
-    energies = _haar_energies(counts)
-    s = sum(counts)
-    # n * sum(c^2) == sum_j (n / 2^j) * E_j + s^2
-    lhs = n * sum(c * c for c in counts)
-    rhs = sum((n >> j) * e for j, e in energies.items()) + s * s
-    assert lhs == rhs
-
-
-@given(st.lists(st.integers(min_value=0, max_value=100), min_size=64, max_size=64),
-       st.integers(min_value=0, max_value=1000))
-@settings(max_examples=100, deadline=None)
-def test_haar_dc_shift_leaves_detail_invariant(counts, shift):
-    """Adding a constant to every cell leaves every DETAIL energy unchanged
-    (Haar details are differences) — the property that makes the levels a
-    pure variability readout independent of the base rate."""
-    assert _haar_energies(counts) == _haar_energies([c + shift for c in counts])
-
-
-# --- Runs-test core (agg_runs_test) ----------------------------------------
-
-
-@given(st.lists(st.integers(min_value=0, max_value=1), min_size=2, max_size=400))
-@settings(max_examples=200, deadline=None)
-def test_runs_count_identity(signs):
-    """R = 1 + number of adjacent sign changes (the lag formulation both
-    engines run) equals the direct run-length-encoding count."""
-    lag_runs = 1 + sum(1 for a, b in zip(signs, signs[1:]) if a != b)
-    rle_runs = len([1 for i, s in enumerate(signs) if i == 0 or s != signs[i - 1]])
-    assert lag_runs == rle_runs
-    # bounds: 1 <= R <= n, and R <= 2*min(n1,n2)+1
-    n1 = sum(signs)
-    n2 = len(signs) - n1
-    assert 1 <= lag_runs <= len(signs)
-    assert lag_runs <= 2 * min(n1, n2) + 1

@@ -1,32 +1,14 @@
-"""Dedup and graph family (``functions/dedup.py``). Scale guards: the
-stop-shingle document-frequency cap in ``dedup_ngram_jaccard`` (VERDICT r01's
-one perf-weak flag) must bound the pair-join fan-out without changing any
-answer. The graph operators over the near-duplicate pairs (k-core, label
-propagation, link prediction, modularity, clustering, components, BFS) and
-the dedup audits against pure-Python recomputes."""
+"""Dedup-family scale guards: the stop-shingle document-frequency cap in
+``dedup_ngram_jaccard`` (VERDICT r01's one perf-weak flag) must bound the
+pair-join fan-out without changing any answer."""
 
 from __future__ import annotations
 
-import collections
-import itertools
-import math
-from collections import defaultdict
-
-import duckdb
-import numpy as np
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_SMOKE, catalog, run_entry, smoke_table
-from tmapreduce_spark.functions.dedup import (
-    _BFS_MAX_HOPS,
-    _BFS_SEED_MOD,
-    SHINGLE_DF_CAP,
-    dedup_minhash_pairs,
-    dedup_ngram_jaccard,
-    graph_reachability_bfs,
-)
+from tests.conftest import SF_SMOKE
+from tmapreduce_spark.functions.dedup import SHINGLE_DF_CAP, dedup_ngram_jaccard
 
 
 def _as_sorted_tuples(df):
@@ -326,420 +308,3 @@ def test_interval_overlap_canonical_bucket_exactly_once_property():
         assert canon in a_buckets and canon in b_buckets
 
     check()
-
-
-def test_kcore_matches_python_peel_to_fixpoint(spark):
-    """Independent peel WITHOUT a round bound: proves the engines' fixed
-    6-round unroll reaches the fixpoint at fixture scale (slack bound)."""
-    pairs = catalog()["dedup_minhash_pairs"].fn(spark, SF_SMOKE).toPandas()
-    adj: dict[int, set[int]] = {}
-    for a, b in zip(pairs["doc_a"], pairs["doc_b"]):
-        adj.setdefault(int(a), set()).add(int(b))
-        adj.setdefault(int(b), set()).add(int(a))
-    got = run_entry(spark, "graph_kcore").set_index("doc_id")
-    assert set(got.index) == set(adj)
-    for k, col in ((2, "in_2core"), (3, "in_3core")):
-        alive = set(adj)
-        while True:
-            drop = {v for v in alive if len(adj[v] & alive) < k}
-            if not drop:
-                break
-            alive -= drop
-        assert set(got.index[got[col] == 1]) == alive, k
-    for v in adj:
-        assert got.loc[v, "degree"] == len(adj[v])
-
-
-def test_label_propagation_matches_python_recompute(spark):
-    from tmapreduce_spark.functions.dedup import _LP_ROUNDS, _LP_SEED_MOD
-
-    pairs = catalog()["dedup_minhash_pairs"].fn(spark, SF_SMOKE).toPandas()
-    adj: dict[int, set[int]] = {}
-    for a, b in zip(pairs["doc_a"], pairs["doc_b"]):
-        adj.setdefault(int(a), set()).add(int(b))
-        adj.setdefault(int(b), set()).add(int(a))
-    docs = smoke_table("documents", "doc_id, lang")
-    lang = dict(zip(docs["doc_id"], docs["lang"]))
-    labels = {
-        v: (lang[v] if v % _LP_SEED_MOD == 0 else None) for v in adj
-    }
-    seeds = {v for v in adj if v % _LP_SEED_MOD == 0}
-    for _ in range(_LP_ROUNDS):
-        nxt = {}
-        for v in adj:
-            if v in seeds:
-                nxt[v] = labels[v]
-                continue
-            votes: dict[str, int] = {}
-            for u in adj[v]:
-                if labels[u] is not None:
-                    votes[labels[u]] = votes.get(labels[u], 0) + 1
-            if votes:
-                best = sorted(votes.items(), key=lambda kv: (-kv[1], kv[0]))[0][0]
-                nxt[v] = best
-            else:
-                nxt[v] = labels[v]
-        labels = nxt
-    got = run_entry(spark, "graph_label_propagation").set_index("doc_id")
-    assert set(got.index) == set(adj)
-    for v in adj:
-        assert got.loc[v, "is_seed"] == (1 if v in seeds else 0)
-        expect = labels[v]
-        val = got.loc[v, "label"]
-        assert (pd.isna(val) and expect is None) or val == expect, v
-
-
-def test_link_prediction_matches_python_recompute(spark):
-    import duckdb
-
-    got = run_entry(spark, "graph_link_prediction")
-    li = duckdb.sql(
-        f"SELECT DISTINCT l_orderkey, l_partkey FROM '{SF_SMOKE}/lineitem.parquet'"
-    ).df()
-    baskets: dict[int, set[int]] = {}
-    for o, p in zip(li["l_orderkey"], li["l_partkey"]):
-        baskets.setdefault(int(o), set()).add(int(p))
-    pair_n: dict[tuple[int, int], int] = {}
-    for parts in baskets.values():
-        sp = sorted(parts)
-        for i in range(len(sp)):
-            for j in range(i + 1, len(sp)):
-                k = (sp[i], sp[j])
-                pair_n[k] = pair_n.get(k, 0) + 1
-    edges = {k for k, n in pair_n.items() if n >= 2}
-    adj: dict[int, set[int]] = {}
-    for a, b in edges:
-        adj.setdefault(a, set()).add(b)
-        adj.setdefault(b, set()).add(a)
-    expect = {}
-    nodes = sorted(adj)
-    for x in nodes:
-        nb = sorted(adj[x])
-        for i in range(len(nb)):
-            for j in range(i + 1, len(nb)):
-                k = (nb[i], nb[j])
-                expect[k] = expect.get(k, 0) + 1
-    expect = {
-        k: cn
-        for k, cn in expect.items()
-        if cn >= 2 and k not in edges
-    }
-    assert set(zip(got["part_a"], got["part_b"])) == set(expect)
-    for _, r in got.iterrows():
-        a, b = int(r["part_a"]), int(r["part_b"])
-        cn = expect[(a, b)]
-        da, db = len(adj[a]), len(adj[b])
-        assert r["common_neighbors"] == cn
-        assert r["deg_a"] == da and r["deg_b"] == db
-        assert abs(r["jaccard"] - cn / (da + db - cn)) < 2e-6
-
-
-# ---------------------------------------------------------------------------
-# graph_modularity
-# ---------------------------------------------------------------------------
-
-
-def test_modularity_matches_python_recompute(spark):
-    import duckdb
-    from collections import Counter, defaultdict
-
-    got = run_entry(spark, "graph_modularity")
-    edges = duckdb.sql(
-        f"""WITH items AS (SELECT DISTINCT l_orderkey, l_partkey
-                           FROM '{SF_SMOKE}/lineitem.parquet')
-            SELECT a.l_partkey, b.l_partkey
-            FROM items a JOIN items b
-              ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-            GROUP BY 1, 2 HAVING count(*) >= 2"""
-    ).fetchall()
-    brand = dict(duckdb.sql(
-        f"SELECT p_partkey, p_brand FROM '{SF_SMOKE}/part.parquet'"
-    ).fetchall())
-    m = len(edges)
-    e_c, d_c, nodes = Counter(), Counter(), defaultdict(set)
-    for a, b in edges:
-        if brand[a] == brand[b]:
-            e_c[brand[a]] += 1
-        d_c[brand[a]] += 1
-        d_c[brand[b]] += 1
-        nodes[brand[a]].add(a)
-        nodes[brand[b]].add(b)
-    q = sum(e_c[c] / m - (d_c[c] / (2 * m)) ** 2 for c in d_c)
-    for _, r in got.iterrows():
-        c = r["brand"]
-        assert r["e_c"] == e_c[c] and r["d_c"] == d_c[c]
-        assert r["n_nodes"] == len(nodes[c])
-        assert math.isclose(
-            r["contribution"], e_c[c] / m - (d_c[c] / (2 * m)) ** 2, abs_tol=1e-6
-        )
-        assert math.isclose(r["modularity_q"], q, abs_tol=1e-5)
-    # sanity: modularity of any partition is in [-0.5, 1]
-    assert -0.5 <= got["modularity_q"].iloc[0] <= 1.0
-
-
-# ---------------------------------------------------------------------------
-# graph_clustering_coeff
-# ---------------------------------------------------------------------------
-
-
-def test_clustering_coeff_matches_python_recompute(spark):
-    from tmapreduce_spark.functions.dedup import dedup_minhash_pairs
-
-    edges = {
-        (int(r["doc_a"]), int(r["doc_b"]))
-        for _, r in dedup_minhash_pairs(spark, SF_SMOKE)
-        .select("doc_a", "doc_b")
-        .toPandas()
-        .iterrows()
-    }
-    adj: dict[int, set[int]] = collections.defaultdict(set)
-    for a, b in edges:
-        adj[a].add(b)
-        adj[b].add(a)
-    got = run_entry(spark, "graph_clustering_coeff")
-    assert set(got["doc_id"]) == set(adj)
-    for _, r in got.iterrows():
-        v = int(r["doc_id"])
-        deg = len(adj[v])
-        tri = sum(
-            1 for u, w in itertools.combinations(sorted(adj[v]), 2) if w in adj[u]
-        )
-        assert int(r["degree"]) == deg
-        assert int(r["n_triangles"]) == tri, v
-        if deg < 2:
-            assert pd.isna(r["clustering_coeff"])
-        else:
-            cc = 2 * tri / (deg * (deg - 1))
-            assert abs(float(r["clustering_coeff"]) - round(cc, 6)) < 2e-6
-            assert 0.0 <= float(r["clustering_coeff"]) <= 1.0
-
-
-def test_clustering_coeff_triangle_identity(spark):
-    """Σ_v tri(v) = 3·(global triangle count) — each triangle has 3 corners."""
-    got = run_entry(spark, "graph_clustering_coeff")
-    total3 = int(got["n_triangles"].sum())
-    assert total3 % 3 == 0
-
-
-# ---------------------------------------------------------------------------
-# dedup_lsh_scurve
-# ---------------------------------------------------------------------------
-
-
-def test_lsh_scurve_theory_and_empirical(spark):
-    from tmapreduce_spark.functions.dedup import BAND_R, NUM_PERMS, dedup_minhash_pairs
-
-    got = run_entry(spark, "dedup_lsh_scurve").sort_values("jaccard_lo")
-    assert len(got) == 20  # s20 = 0..19; bucket 0 keeps jaccard < 0.05 visible
-    assert got["jaccard_lo"].iloc[0] == 0.0 and got["detect_prob"].iloc[0] == 0.0
-    b = NUM_PERMS // BAND_R
-    for _, r in got.iterrows():
-        s = r["jaccard_lo"]
-        want = 1.0 - (1.0 - s**BAND_R) ** b
-        assert abs(r["detect_prob"] - round(want, 6)) < 2e-6
-    # S-curve is monotone increasing
-    probs = got["detect_prob"].tolist()
-    assert probs == sorted(probs)
-    # empirical bucket counts sum to the verified pair count
-    n_pairs = dedup_minhash_pairs(spark, SF_SMOKE).count()
-    assert int(got["n_pairs"].sum()) == n_pairs
-
-
-def test_leakage_safe_split_invariants(spark):
-    got = run_entry(spark, "pipeline_leakage_safe_split").iloc[0]
-    # the safe assignment NEVER leaks a near-dup edge across the split
-    assert got["leaked_edges_safe"] == 0
-    # the naive doc_id hash demonstrably does (the whole point of the op)
-    assert got["leaked_edges_naive"] > 0
-    assert got["n_train_safe"] + got["n_val_safe"] == got["n_docs"]
-    assert got["n_train_naive"] + got["n_val_naive"] == got["n_docs"]
-    # ~80/20 with hash noise
-    assert 0.7 < got["n_train_safe"] / got["n_docs"] < 0.9
-    # cluster-consistency recomputed independently: components from the CC
-    # entry itself, split by md5 of the representative
-    cc = run_entry(spark, "dedup_cluster_resolve")
-    import hashlib
-
-    def bucket(k: int) -> int:
-        return int(hashlib.md5(str(k).encode()).hexdigest()[:8], 16) % 100
-
-    reps = dict(zip(cc.doc_id, cc.cluster_id))
-    n_docs = duckdb.sql(
-        f"SELECT count(*) FROM '{SF_SMOKE}/documents.parquet'"
-    ).fetchone()[0]
-    n_train = sum(
-        1 for d in range(n_docs) if bucket(reps.get(d, d)) < 80
-    )
-    assert n_train == got["n_train_safe"]
-
-
-def test_cc_min_labels_spark_equals_union_find(spark):
-    """The factored _cc_min_labels (now shared by dedup_cluster_resolve and
-    the leakage-safe split) against union-find ground truth on adversarial
-    fixed graphs: a long path (worst-case diameter), a star, two cliques
-    joined by a bridge, and isolated pairs."""
-    from tmapreduce_spark.functions.dedup import _cc_min_labels
-
-    graphs = {
-        "path": [(i, i + 1) for i in range(10, 24)],
-        "star": [(50, i) for i in range(51, 60)],
-        "cliques_bridge": [
-            (a, b) for a in range(100, 104) for b in range(100, 104) if a < b
-        ]
-        + [(a, b) for a in range(200, 204) for b in range(200, 204) if a < b]
-        + [(103, 200)],
-        "pairs": [(300, 301), (302, 303), (304, 305)],
-    }
-    for name, pairs in graphs.items():
-        # ground truth via union-find
-        parent = {}
-
-        def find(a):
-            while parent[a] != a:
-                parent[a] = parent[parent[a]]
-                a = parent[a]
-            return a
-
-        for a, b in pairs:
-            parent.setdefault(a, a)
-            parent.setdefault(b, b)
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        want = {n: find(n) for n in parent}
-        e = spark.createDataFrame(pairs, "doc_a bigint, doc_b bigint")
-        edges = e.unionAll(e.selectExpr("doc_b AS doc_a", "doc_a AS doc_b"))
-        got = {
-            r["doc_id"]: r["label"] for r in _cc_min_labels(edges).collect()
-        }
-        assert got == want, name
-
-
-def test_boundary_stitch_bruteforce(spark):
-    got = run_entry(spark, "dedup_boundary_stitch")
-    docs = duckdb.sql(
-        f"SELECT doc_id, text FROM '{SF_SMOKE}/documents.parquet'"
-    ).df()
-    texts = dict(zip(docs.doc_id, docs.text))
-    # brute force: all pairs, maximal suffix/prefix overlap in [12, 256]
-    want = {}
-    by_prefix = {}
-    for b_id, tb in texts.items():
-        if len(tb) >= 12:
-            by_prefix.setdefault(tb[:12], []).append(b_id)
-    for a_id, ta in texts.items():
-        if len(ta) < 12:
-            continue
-        for b_id in by_prefix.get(ta[-12:], []):
-            if a_id == b_id:
-                continue
-            tb = texts[b_id]
-            best = 0
-            for L in range(12, min(256, len(ta), len(tb)) + 1):
-                if ta[-L:] == tb[:L]:
-                    best = L
-            if best:
-                want[(a_id, b_id)] = best
-    have = {(r.doc_a, r.doc_b): r.overlap_len for r in got.itertuples()}
-    assert have == want
-    assert len(have) > 0  # non-trivial at the smoke SF (13 pairs)
-
-
-def test_mcnemar_consistent_with_overlap_audit(spark):
-    got = run_entry(spark, "eval_mcnemar_dedup").iloc[0]
-    audit = run_entry(spark, "dedup_methods_overlap").set_index(
-        ["method_a", "method_b"]
-    )
-    row = audit.loc[("minhash", "simhash")]
-    assert got["n_minhash"] == row["n_a"]
-    assert got["n_simhash"] == row["n_b"]
-    assert got["n_both"] == row["n_both"]
-    b, c = got["n_only_minhash"], got["n_only_simhash"]
-    assert got["n_minhash"] == got["n_both"] + b
-    assert got["n_simhash"] == got["n_both"] + c
-    # Edwards continuity correction clamps at zero (r09 ADVICE): equal
-    # nonzero discordant cells give exactly 0, never 1/(b+c)
-    want = 0.0 if b + c == 0 else max(abs(b - c) - 1, 0) ** 2 / (b + c)
-    assert abs(got["chi2_mcnemar"] - want) < 1e-6
-    n_docs = duckdb.sql(
-        f"SELECT count(*) FROM '{SF_SMOKE}/documents.parquet'"
-    ).fetchone()[0]
-    assert got["n_docs"] == n_docs
-
-
-def test_assortativity_identity(spark):
-    got = run_entry(spark, "graph_assortativity").iloc[0]
-    pairs = run_entry(spark, "dedup_minhash_pairs")[["doc_a", "doc_b"]]
-    e = pd.concat(
-        [
-            pairs.rename(columns={"doc_a": "src", "doc_b": "dst"}),
-            pairs.rename(columns={"doc_a": "dst", "doc_b": "src"}),
-        ],
-        ignore_index=True,
-    )
-    deg = e.groupby("src").size()
-    dx = e.src.map(deg).astype(float)
-    dy = e.dst.map(deg).astype(float)
-    assert got["n_dir_edges"] == len(e)
-    r = np.corrcoef(dx, dy)[0, 1]
-    assert abs(got["assortativity"] - r) < 1e-5
-    # the smoke-SF near-dup graph is a union of cliques (exact-duplicate
-    # families), and within a k-clique every edge joins two degree-(k-1)
-    # nodes — assortativity exactly 1 is the CORRECT structural value,
-    # not a bug (a star graph would read -1; mixed corpora land between)
-    assert got["assortativity"] == 1.0
-
-
-def test_capture_recapture_identities(spark):
-    got = run_entry(spark, "eval_capture_recapture_dedup").iloc[0]
-    n1, n2, m = got.n_minhash, got.n_simhash, got.n_both
-    nhat = (n1 + 1) * (n2 + 1) / (m + 1) - 1
-    assert abs(got.n_hat_chapman - nhat) < 1e-4
-    assert got.n_observed == n1 + n2 - m
-    assert got.est_undetected == max(
-        math.floor((nhat - got.n_observed) * 1e6 + 0.5) / 1e6, 0
-    )
-    assert 0 < got.est_coverage <= 1 + 1e-9
-    # consistency with the McNemar entry's cells
-    mc = run_entry(spark, "eval_mcnemar_dedup").iloc[0]
-    assert got.n_minhash == mc.n_minhash and got.n_simhash == mc.n_simhash
-    assert got.n_both == mc.n_both
-
-
-def test_bfs_layering_invariants(spark):
-    """Hop 0 rows are exactly the seed set; every hop-h node (h >= 1) has at
-    least one neighbor at hop h-1 and no neighbor at hop < h-1 (BFS min-hop
-    proof); hops bounded at _BFS_MAX_HOPS."""
-    hops = {r["doc_id"]: r["hop"] for r in graph_reachability_bfs(spark, SF_SMOKE).collect()}
-    edges = [
-        (r["doc_a"], r["doc_b"])
-        for r in dedup_minhash_pairs(spark, SF_SMOKE).select("doc_a", "doc_b").collect()
-    ]
-    nbr: dict = defaultdict(set)
-    for a, b in edges:
-        nbr[a].add(b)
-        nbr[b].add(a)
-    seeds = {n for n in nbr if n % _BFS_SEED_MOD == 0}
-    assert seeds, "fixture must yield a non-empty seed set"
-    assert {n for n, h in hops.items() if h == 0} == seeds
-    for n, h in hops.items():
-        assert 0 <= h <= _BFS_MAX_HOPS
-        if h > 0:
-            best = min(hops.get(m, _BFS_MAX_HOPS + 1) for m in nbr[n])
-            assert best == h - 1, (n, h, best)
-
-
-def test_component_sizes_conserve_docs(spark):
-    """Size histogram re-aggregates the CC labels exactly: sum(size *
-    n_clusters) = clustered docs = sum(n_docs); sizes >= 2."""
-    from tmapreduce_spark.functions.dedup import (
-        dedup_cluster_resolve,
-        graph_component_sizes,
-    )
-
-    rows = graph_component_sizes(spark, SF_SMOKE).collect()
-    n_docs_labeled = dedup_cluster_resolve(spark, SF_SMOKE).count()
-    assert sum(r["n_docs"] for r in rows) == n_docs_labeled
-    for r in rows:
-        assert r["cluster_size"] >= 2
-        assert r["n_docs"] == r["cluster_size"] * r["n_clusters"]

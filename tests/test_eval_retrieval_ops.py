@@ -2,10 +2,8 @@
 full independent pure-Python recompute, the workload rankers built on it
 (RRF fusion, PRF expansion, dual-ranker MRR, exposure fairness),
 confusion-matrix sweep vs a direct per-threshold recount, calibration-bin
-mass conservation, compaction-plan greedy-packing equivalence,
-winsorized/trimmed means vs numpy on the raw column, and the text module's
-other ``eval_*``/``retrieval_*`` entries (ROC/PR AUC, Brier decomposition,
-isotonic calibration, kappa, query likelihood) against recomputes."""
+mass conservation, compaction-plan greedy-packing equivalence, and
+winsorized/trimmed means vs numpy on the raw column."""
 
 from __future__ import annotations
 
@@ -16,10 +14,11 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-from tests.conftest import SF_SMOKE, catalog, mround6, run_entry
+from tests.conftest import SF_SMOKE, mround6, run_entry
 from tmapreduce_spark.functions.text import (
     BM25_TOP_K,
     COMPACT_TARGET_BYTES,
+    QC_LABEL_CUT,
     _qc_score_label,
     eval_calibration_bins,
     eval_threshold_sweep,
@@ -356,184 +355,3 @@ def test_exposure_fairness_identities(spark):
     # disparity is genuinely non-uniform on this corpus (some sources get
     # buried, some over-exposed) — the audit has signal
     assert got.disparity_ratio.min() < 0.9 < got.disparity_ratio.max()
-
-
-def _pav_sequential(n: np.ndarray, pos: np.ndarray) -> np.ndarray:
-    """Textbook pool-adjacent-violators over (weight, value) pairs."""
-    blocks = [[float(p), float(w)] for p, w in zip(pos, n)]  # [pos_sum, n_sum]
-    out_blocks: list[list[float]] = []
-    for b in blocks:
-        out_blocks.append(b)
-        while (
-            len(out_blocks) >= 2
-            and out_blocks[-2][0] * out_blocks[-1][1]
-            >= out_blocks[-1][0] * out_blocks[-2][1]
-        ):
-            b2 = out_blocks.pop()
-            out_blocks[-1][0] += b2[0]
-            out_blocks[-1][1] += b2[1]
-    fit = []
-    for p, w in out_blocks:
-        fit.extend([p / w] * int(round(w)))
-    # expand by bin (weights are bin supports; rebuild per-bin values)
-    vals, i = [], 0
-    for w in n:
-        vals.append(fit[i])
-        i += int(w)
-    return np.array(vals)
-
-
-def test_isotonic_matches_sequential_pav(spark):
-    got = run_entry(spark, "eval_isotonic_calibration").sort_values("bin")
-    fit = got["iso_fit"].to_numpy()
-    # monotone non-decreasing, in [0, 1]
-    assert (np.diff(fit) >= -1e-12).all()
-    assert (fit >= 0).all() and (fit <= 1).all()
-    # mass preservation: support-weighted fit total == total positives
-    assert abs((got["n"] * got["iso_fit"]).sum() - got["n_pos"].sum()) < (
-        got["n"].sum() * 2e-6
-    )
-    ref = _pav_sequential(got["n"].to_numpy(), got["n_pos"].to_numpy())
-    assert np.abs(fit - ref).max() < 2e-6
-
-
-def test_confusion_runtime_plan_reuses_cells_exchange(spark):
-    """The scale claim: row/column marginals and the overall stats all hang
-    off ONE corpus aggregation — the AQE-final plan must carry a
-    ReusedExchange (corpus scanned once, not per marginal)."""
-    df = catalog()["eval_confusion_multiclass"].fn(spark, SF_SMOKE)
-    df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "ReusedExchange" in plan
-
-
-def _score_label(spark) -> pd.DataFrame:
-    from tmapreduce_spark.functions.text import _qc_score_label
-
-    return _qc_score_label(spark, SF_SMOKE).toPandas()
-
-
-# ---------------------------------------------------------------------------
-# eval_auc_roc
-# ---------------------------------------------------------------------------
-
-
-def test_auc_roc_matches_python_recompute(spark):
-    per = _score_label(spark)
-    got = run_entry(spark, "eval_auc_roc").iloc[0]
-    # midrank AUC recomputed directly from the per-doc scores
-    df = per.sort_values("score_micro").reset_index(drop=True)
-    df["rank"] = df.index + 1
-    avg = df.groupby("score_micro")["rank"].transform("mean")
-    n_pos = int(per["label"].sum())
-    n_neg = len(per) - n_pos
-    rank_pos = float(avg[df["label"] == 1].sum())
-    auc = (rank_pos - n_pos * (n_pos + 1) / 2) / (n_pos * n_neg)
-    assert got["n_pos"] == n_pos and got["n_neg"] == n_neg
-    assert abs(got["auc_roc"] - round(auc, 6)) < 2e-6
-    assert abs(got["gini"] - (2 * got["auc_roc"] - 1)) < 2e-6
-    assert 0.0 <= got["auc_roc"] <= 1.0
-
-
-# ---------------------------------------------------------------------------
-# eval_pr_auc
-# ---------------------------------------------------------------------------
-
-
-def test_pr_auc_matches_python_recompute(spark):
-    per = _score_label(spark)
-    got = run_entry(spark, "eval_pr_auc").iloc[0]
-    by = (
-        per.groupby("score_micro")
-        .agg(n_s=("label", "size"), p_s=("label", "sum"))
-        .sort_index(ascending=False)
-    )
-    cum_n = cum_tp = 0
-    ap_micro = 0
-    for _, r in by.iterrows():
-        cum_n += int(r["n_s"])
-        cum_tp += int(r["p_s"])
-        ap_micro += (int(r["p_s"]) * cum_tp * 1_000_000) // cum_n
-    n_pos = int(per["label"].sum())
-    assert got["n_pos"] == n_pos and got["n_total"] == len(per)
-    assert abs(got["pr_auc"] - round(ap_micro / 1e6 / n_pos, 6)) < 2e-6
-    assert 0.0 <= got["pr_auc"] <= 1.0
-
-
-# ---------------------------------------------------------------------------
-# eval_brier_decomposition
-# ---------------------------------------------------------------------------
-
-
-def test_brier_decomposition_matches_python_recompute(spark):
-    per = _score_label(spark)
-    got = run_entry(spark, "eval_brier_decomposition").iloc[0]
-    n = len(per)
-    brier = float(
-        ((per["score_micro"] - 1_000_000 * per["label"]) ** 2).sum()
-    ) / 1e12 / n
-    ybar = per["label"].sum() / n
-    bins = per.assign(bin=per["score_micro"] // 20000).groupby("bin")
-    rel9 = res9 = 0
-    for _, g in bins:
-        nk = len(g)
-        sbar = g["score_micro"].sum() / 1e6 / nk
-        yk = g["label"].sum() / nk
-        rel9 += int((nk * (sbar - yk) ** 2) * 1e9 + 0.5)
-        res9 += int((nk * (yk - ybar) ** 2) * 1e9 + 0.5)
-    assert int(got["n_docs"]) == n
-    assert abs(got["brier"] - round(brier, 6)) < 2e-6
-    assert abs(got["reliability"] - round(rel9 / 1e9 / n, 6)) < 2e-6
-    assert abs(got["resolution"] - round(res9 / 1e9 / n, 6)) < 2e-6
-    assert abs(got["uncertainty"] - round(ybar * (1 - ybar), 6)) < 2e-6
-    # the Murphy identity holds up to within-bin forecast variance
-    assert abs(got["brier_binned"] - got["brier"]) < 0.02
-    assert got["reliability"] >= 0 and got["resolution"] >= 0
-
-
-def test_cohens_kappa_identity(spark):
-    got = run_entry(spark, "eval_cohens_kappa").iloc[0]
-    po, pe, k = got["observed_agreement"], got["expected_agreement"], got["kappa"]
-    # kappa = (po - pe) / (1 - pe), to the 1e-6 output rounding
-    assert abs(k - (po - pe) / (1 - pe)) < 5e-6
-    assert 0 <= po <= 1 and 0 <= pe <= 1 and -1 <= k <= 1
-    assert got["agree_n"] == round(po * got["n_items"])
-    # the raters are genuinely non-degenerate on the synthetic corpus:
-    # observed agreement is strictly inside (0, 1)
-    assert 0 < got["agree_n"] < got["n_items"]
-
-
-def test_query_likelihood_semantics(spark):
-    got = run_entry(spark, "retrieval_query_likelihood")
-    # 5 queries x top-10, ranks dense 1..10, log-likelihood scores negative
-    assert len(got) == 50
-    assert set(got.groupby("query_id")["rank"].apply(list).map(tuple)) == {
-        tuple(range(1, 11))
-    }
-    assert (got["score"] < 0).all()
-    # within a query, score is non-increasing in rank
-    for _, g in got.groupby("query_id"):
-        s = g.sort_values("rank")["score"].values
-        assert (s[:-1] >= s[1:] - 1e-9).all()
-    # independent recompute of one query's best score (dense full formula)
-    import math
-
-    from tmapreduce_spark.functions.text import BM25_QUERIES, QL_MU
-
-    toks = duckdb.sql(
-        f"""SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '\\s+')) AS tok
-            FROM '{SF_SMOKE}/documents.parquet'"""
-    ).df()
-    toks = toks[toks.tok != ""]
-    n_c = len(toks)
-    q = "q_hash_join"
-    terms = BM25_QUERIES[q]
-    dl = toks.groupby("doc_id").size()
-    best = got[got.query_id == q].sort_values("rank").iloc[0]
-    doc = best["doc_id"]
-    score = 0.0
-    for t in terms:
-        tf = ((toks.doc_id == doc) & (toks.tok == t)).sum()
-        ctf = (toks.tok == t).sum()
-        score += math.log((tf + QL_MU * ctf / n_c) / (dl[doc] + QL_MU))
-    assert abs(score - best["score"]) < 1e-4

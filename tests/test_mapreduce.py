@@ -5,10 +5,9 @@ from __future__ import annotations
 
 from collections import Counter
 
-import duckdb
 import pytest
 
-from tests.conftest import SF_SMOKE, jobs_in_group, run_entry
+from tests.conftest import jobs_in_group
 from tmapreduce_spark.mapreduce import (
     IN_DRIVER_MAX_CHARS,
     JOB_RESULT_TIMEOUT_SECOND,
@@ -621,61 +620,3 @@ def test_apply_df_ordered_groups_each_key_once_across_partitions(spark):
             f"v{i:03d}" for i in sorted(j for j in range(140) if f"k{j % 7}" == k)
         )
         assert k in vals and expected in vals, (k, vals)
-
-
-def test_mr_secondary_sort_order_contract(spark):
-    """The secondary-sort reduce must be ORDER-PROOF: feeding the same kvs
-    in reversed input order yields byte-identical results, and a sample
-    customer's sequence equals the pandas chronological recompute."""
-    from tmapreduce_spark.mapreduce import MapReduceEngine
-
-    o = duckdb.sql(
-        f"""SELECT CAST(o_custkey AS VARCHAR) AS key,
-                   strftime(o_orderdate, '%Y-%m-%d')
-                     || lpad(CAST(o_orderkey AS VARCHAR), 12, '0')
-                     || '|' || o_orderstatus AS value
-            FROM '{SF_SMOKE}/orders.parquet'"""
-    ).df()
-    eng = MapReduceEngine(spark)
-    fwd = eng.apply_df(
-        spark.createDataFrame(o), "secondarysort"
-    ).toPandas().sort_values(["key", "result"], ignore_index=True)
-    rev = eng.apply_df(
-        spark.createDataFrame(o.iloc[::-1]), "secondarysort"
-    ).toPandas().sort_values(["key", "result"], ignore_index=True)
-    assert fwd.equals(rev)
-    # pandas recompute of one customer's chronological status string
-    got = run_entry(spark, "mr_secondary_sort")
-    key = got.key.iloc[0]
-    seqs = got[(got.key == key) & (got.result != key)]
-    ours = o[o.key == key].value.sort_values()
-    want = "".join(v.split("|", 1)[1] for v in ours)
-    assert list(seqs.result) == [want]
-
-
-def test_mr_inverted_index_contract_and_postings(spark):
-    """Reference (key, result) contract: exactly two rows per token — the
-    token itself and its posting list; postings are sorted distinct doc ids
-    that really contain the token."""
-    from collections import defaultdict as dd
-
-    from tmapreduce_spark.operators.mapreduce_queries import mr_inverted_index
-    from tmapreduce_spark.sources.catalog import load_table as lt
-
-    rows = mr_inverted_index(spark, SF_SMOKE).collect()
-    by_key: dict = dd(list)
-    for r in rows:
-        by_key[r["key"]].append(r["result"])
-    docs = lt(spark, SF_SMOKE, "documents").select("doc_id", "text").collect()
-    postings: dict = dd(set)
-    for d in docs:
-        for w in d["text"].strip().split():
-            postings[w].add(str(d["doc_id"]))
-    assert set(by_key) == set(postings)
-    for tok, results in by_key.items():
-        assert len(results) == 2
-        assert tok in results
-        ids = next(x for x in results if x != tok or results.count(tok) == 2)
-        if ids == tok and ",".join(sorted(postings[tok])) != tok:
-            ids = [x for x in results if x != tok][0]
-        assert ",".join(sorted(postings[tok])) in results

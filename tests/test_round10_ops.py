@@ -11,28 +11,11 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-from tests.conftest import SF_SMOKE
-from tmapreduce_spark.catalog import build_catalog
-
-CAT = build_catalog()
-
-
-def _run(spark, name: str) -> pd.DataFrame:
-    return CAT[name].fn(spark, SF_SMOKE).toPandas()
-
-
-def _orders() -> pd.DataFrame:
-    return duckdb.sql(
-        f"SELECT * FROM '{SF_SMOKE}/orders.parquet'"
-    ).df()
-
-
-def _events() -> pd.DataFrame:
-    return duckdb.sql(f"SELECT * FROM '{SF_SMOKE}/events.parquet'").df()
+from tests.conftest import SF_SMOKE, run_entry, smoke_table
 
 
 def test_bucketed_groupby_equals_plain_groupby(spark):
-    got = _run(spark, "layout_bucketed_groupby").set_index("n_items")
+    got = run_entry(spark, "layout_bucketed_groupby").set_index("n_items")
     li = duckdb.sql(
         f"""SELECT l_orderkey, count(*) AS n_items,
                    sum(CAST(floor(l_extendedprice * (1 - l_discount) * 1000000
@@ -50,8 +33,8 @@ def test_bucketed_groupby_equals_plain_groupby(spark):
 
 
 def test_mad_robust_bruteforce(spark):
-    got = _run(spark, "agg_mad_robust").set_index("o_orderpriority")
-    o = _orders()
+    got = run_entry(spark, "agg_mad_robust").set_index("o_orderpriority")
+    o = smoke_table("orders")
     o["c"] = np.floor(o.o_totalprice * 100 + 0.5).astype("int64")
     for prio, g in o.groupby("o_orderpriority"):
         c = np.sort(g.c.values)
@@ -68,8 +51,8 @@ def test_mad_robust_bruteforce(spark):
 
 
 def test_gtest_identities(spark):
-    got = _run(spark, "agg_gtest_independence").iloc[0]
-    o = _orders()
+    got = run_entry(spark, "agg_gtest_independence").iloc[0]
+    o = smoke_table("orders")
     tab = o.groupby(["o_orderpriority", "o_orderstatus"]).size()
     n = len(o)
     r = o.groupby("o_orderpriority").size()
@@ -85,8 +68,8 @@ def test_gtest_identities(spark):
 
 
 def test_runs_test_bruteforce(spark):
-    got = _run(spark, "agg_runs_test").iloc[0]
-    o = _orders()
+    got = run_entry(spark, "agg_runs_test").iloc[0]
+    o = smoke_table("orders")
     o["c"] = np.floor(o.o_totalprice * 100 + 0.5).astype("int64")
     days = o.groupby("o_orderdate").c.sum().sort_index()
     med = np.sort(days.values)[int(np.ceil(0.5 * len(days))) - 1]
@@ -103,8 +86,8 @@ def test_runs_test_bruteforce(spark):
 
 
 def test_durbin_watson_bruteforce(spark):
-    got = _run(spark, "agg_durbin_watson").iloc[0]
-    o = _orders()
+    got = run_entry(spark, "agg_durbin_watson").iloc[0]
+    o = smoke_table("orders")
     o["c"] = np.floor(o.o_totalprice * 100 + 0.5).astype("int64")
     days = o.groupby("o_orderdate").c.sum().sort_index().values.astype(float)
     e = days - days.mean()
@@ -115,8 +98,8 @@ def test_durbin_watson_bruteforce(spark):
 
 
 def test_cume_dist_bruteforce(spark):
-    got = _run(spark, "window_cume_dist")
-    o = _orders()
+    got = run_entry(spark, "window_cume_dist")
+    o = smoke_table("orders")
     for prio, g in o.groupby("o_orderpriority"):
         sub = got[got.o_orderpriority == prio].sort_values("rn")
         assert len(sub) == 8
@@ -133,16 +116,16 @@ def test_cume_dist_bruteforce(spark):
 
 
 def test_select_scalar_identities(spark):
-    got = _run(spark, "subquery_select_scalar")
-    o = _orders()
+    got = run_entry(spark, "subquery_select_scalar")
+    o = smoke_table("orders")
     assert (got.global_max_price == o.o_totalprice.max()).all()
     assert abs(got.revenue_share.sum() - 1) < 1e-4
     assert got.n_orders.sum() == len(o)
 
 
 def test_circadian_identities(spark):
-    got = _run(spark, "events_circadian_profile").set_index("event_type")
-    e = _events()
+    got = run_entry(spark, "events_circadian_profile").set_index("event_type")
+    e = smoke_table("events")
     e["hod"] = pd.to_datetime(e.ts).dt.hour
     for t, g in e.groupby("event_type"):
         ang = 2 * np.pi * g.hod.values / 24
@@ -157,8 +140,8 @@ def test_circadian_identities(spark):
 
 
 def test_haar_energy_bruteforce(spark):
-    got = _run(spark, "events_haar_energy").set_index("level")
-    e = _events()
+    got = run_entry(spark, "events_haar_energy").set_index("level")
+    e = smoke_table("events")
     # force ns resolution: the parquet ts is us-resolution and pandas keeps
     # it, so a bare astype(int64) would be microseconds
     hidx = (
@@ -192,8 +175,8 @@ def test_haar_energy_bruteforce(spark):
 
 
 def test_slo_burn_identities(spark):
-    got = _run(spark, "events_slo_burn_rate")
-    e = _events()
+    got = run_entry(spark, "events_slo_burn_rate")
+    e = smoke_table("events")
     widx = (
         pd.to_datetime(e.ts).astype("datetime64[ns]").astype("int64")
         // (6 * 3600 * 10**9)
@@ -214,15 +197,11 @@ def test_slo_burn_identities(spark):
     assert 0 < got.fast_burn.sum() < len(got)
 
 
-def _docs() -> pd.DataFrame:
-    return duckdb.sql(f"SELECT * FROM '{SF_SMOKE}/documents.parquet'").df()
-
-
 def test_heaps_fit_bruteforce(spark):
-    got = _run(spark, "text_heaps_law_fit").iloc[0]
+    got = run_entry(spark, "text_heaps_law_fit").iloc[0]
     import re
 
-    d = _docs()
+    d = smoke_table("documents")
     rows = []
     for _, r in d.iterrows():
         ts = [t for t in re.split(r"\s+", r.text.strip().lower()) if t]
@@ -251,12 +230,12 @@ def test_heaps_fit_bruteforce(spark):
 
 
 def test_burrows_delta_bruteforce(spark):
-    got = _run(spark, "text_burrows_delta")
+    got = run_entry(spark, "text_burrows_delta")
     assert len(got) == 20 * 19 // 2
     assert (got.delta >= 0).all()
     import re
 
-    d = _docs()
+    d = smoke_table("documents")
     rows = []
     for _, r in d.iterrows():
         for t in re.split(r"\s+", r.text.strip().lower()):
@@ -290,13 +269,13 @@ def test_burrows_delta_bruteforce(spark):
 
 
 def test_cross_perplexity_structure(spark):
-    got = _run(spark, "text_cross_perplexity")
+    got = run_entry(spark, "text_cross_perplexity")
     assert len(got) == 400
     diag = got[got.source_a == got.source_b]
     assert len(diag) == 20 and (diag.excess_nats == 0).all()
     assert (got.h_cross > 0).all()
     # brute-force one off-diagonal pair
-    d = _docs()
+    d = smoke_table("documents")
     cells: dict[tuple[str, str], int] = {}
     for _, r in d.iterrows():
         if len(r.text) < 2:
@@ -326,8 +305,8 @@ def test_span_corruption_bruteforce(spark):
     import hashlib
     import re
 
-    got = _run(spark, "pipeline_span_corruption").set_index("source")
-    d = _docs()
+    got = run_entry(spark, "pipeline_span_corruption").set_index("source")
+    d = smoke_table("documents")
 
     def start(doc_id, p):
         if p < 0:
@@ -364,7 +343,7 @@ def test_span_corruption_bruteforce(spark):
 
 
 def test_kmv_jaccard_identities(spark):
-    got = _run(spark, "sketch_kmv_jaccard")
+    got = run_entry(spark, "sketch_kmv_jaccard")
     assert len(got) == 20 * 19 // 2
     assert (got.k_used <= 64).all() and (got.k_used > 0).all()
     assert ((got.j_kmv >= 0) & (got.j_kmv <= 1)).all()
@@ -376,7 +355,7 @@ def test_kmv_jaccard_identities(spark):
     import hashlib
     import re
 
-    d = _docs()
+    d = smoke_table("documents")
     sets: dict[str, set] = {}
     for _, r in d.iterrows():
         ts = [t for t in re.split(r"\s+", r.text.strip().lower()) if t]
@@ -402,7 +381,7 @@ def test_kmv_jaccard_identities(spark):
 
 
 def test_capture_recapture_identities(spark):
-    got = _run(spark, "eval_capture_recapture_dedup").iloc[0]
+    got = run_entry(spark, "eval_capture_recapture_dedup").iloc[0]
     n1, n2, m = got.n_minhash, got.n_simhash, got.n_both
     nhat = (n1 + 1) * (n2 + 1) / (m + 1) - 1
     assert abs(got.n_hat_chapman - nhat) < 1e-4
@@ -412,7 +391,7 @@ def test_capture_recapture_identities(spark):
     )
     assert 0 < got.est_coverage <= 1 + 1e-9
     # consistency with the McNemar entry's cells
-    mc = _run(spark, "eval_mcnemar_dedup").iloc[0]
+    mc = run_entry(spark, "eval_mcnemar_dedup").iloc[0]
     assert got.n_minhash == mc.n_minhash and got.n_simhash == mc.n_simhash
     assert got.n_both == mc.n_both
 
@@ -423,8 +402,8 @@ def test_hist_equalize_bruteforce(spark):
         _synth_container,
     )
 
-    got = _run(spark, "multimodal_hist_equalize").set_index("doc_id")
-    d = _docs()
+    got = run_entry(spark, "multimodal_hist_equalize").set_index("doc_id")
+    d = smoke_table("documents")
     assert len(got) == len(d)
     # brute-force a handful of docs across both container formats
     for _, r in pd.concat([d.head(4), d.tail(3)]).iterrows():

@@ -13,9 +13,8 @@ from __future__ import annotations
 import math
 
 import pandas as pd
-import pytest
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, mround6
 
 
 def _write(tmp_path, name: str, df: pd.DataFrame) -> str:
@@ -144,12 +143,6 @@ def _h_int(prefix: str, val, nhex: int) -> int:
     return int(hashlib.md5(f"{prefix}{val}".encode()).hexdigest()[:nhex], 16)
 
 
-def _mr6(x: float) -> float:
-    import math
-
-    return math.floor(x * 1_000_000 + 0.5) / 1_000_000
-
-
 def test_kmv_distinct_brute_force_recompute(spark):
     """Recompute every sketch_kmv_distinct output value in pure Python from
     the parquet fixture — exact equality, including the estimator branch's
@@ -185,8 +178,8 @@ def test_kmv_distinct_brute_force_recompute(spark):
         assert r["n_events"] == n_events[t]
         assert r["exact_users"] == len(users)
         assert r["k_used"] == k_used
-        assert r["kmv_users"] == _mr6(est)
-        assert r["rel_err"] == _mr6(abs(est - len(users)) / len(users))
+        assert r["kmv_users"] == mround6(est)
+        assert r["rel_err"] == mround6(abs(est - len(users)) / len(users))
 
 
 def test_sample_quantiles_brute_force_recompute(spark):
@@ -221,7 +214,7 @@ def test_sample_quantiles_brute_force_recompute(spark):
             assert r["sample_n"] == len(samp_sorted)
             assert r["est_value"] == est
             assert r["exact_value"] == exact
-            assert r["rel_err"] == _mr6(abs(est - exact) / exact)
+            assert r["rel_err"] == mround6(abs(est - exact) / exact)
 
 
 def test_hll_md5_merge_brute_force_recompute(spark):
@@ -265,5 +258,5 @@ def test_hll_md5_merge_brute_force_recompute(spark):
         assert r["exact_users"] == exact
         assert r["v_zero"] == v_zero
         assert r["harmonic_num"] == num
-        assert r["hll_users"] == _mr6(est)
-        assert r["rel_err"] == _mr6(abs(est - exact) / exact)
+        assert r["hll_users"] == mround6(est)
+        assert r["rel_err"] == mround6(abs(est - exact) / exact)

@@ -12,8 +12,6 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from tests.conftest import SF_SMOKE
-
 
 def _hof_bucket(col: str) -> str:
     from tmapreduce_spark.functions.similarity import N_PLANES

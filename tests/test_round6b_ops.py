@@ -9,29 +9,12 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
-import pytest
 
-from tests.conftest import SF_SMOKE
-from tmapreduce_spark.catalog import build_catalog
-
-CAT = build_catalog()
-
-
-def _run(spark, name: str) -> pd.DataFrame:
-    return CAT[name].fn(spark, SF_SMOKE).toPandas()
-
-
-def _events(columns: str = "*") -> pd.DataFrame:
-    import duckdb
-
-    return duckdb.sql(
-        f"SELECT {columns} FROM '{SF_SMOKE}/events.parquet'"
-    ).df()
+from tests.conftest import SF_SMOKE, catalog, run_entry, smoke_table
 
 
 def _dense_hourly_np(event_type: str | None = None) -> np.ndarray:
-    e = _events("ts, event_type")
+    e = smoke_table("events", "ts, event_type")
     hidx = (e["ts"].astype("datetime64[us]").astype("int64") // 10**6 // 3600)
     lo, hi = int(hidx.min()), int(hidx.max())
     mask = (e["event_type"] == event_type) if event_type else np.ones(len(e), bool)
@@ -42,7 +25,7 @@ def _dense_hourly_np(event_type: str | None = None) -> np.ndarray:
 
 
 def test_spearman_matches_pandas_recompute(spark):
-    got = _run(spark, "agg_spearman_corr").set_index("l_returnflag")
+    got = run_entry(spark, "agg_spearman_corr").set_index("l_returnflag")
     import duckdb
 
     li = duckdb.sql(
@@ -58,7 +41,7 @@ def test_spearman_matches_pandas_recompute(spark):
 
 
 def test_acf_matches_numpy_recompute(spark):
-    got = _run(spark, "events_autocorrelation").set_index("lag")
+    got = run_entry(spark, "events_autocorrelation").set_index("lag")
     x = _dense_hourly_np()
     for lag in range(1, 13):
         a, b = x[:-lag].astype(float), x[lag:].astype(float)
@@ -68,7 +51,7 @@ def test_acf_matches_numpy_recompute(spark):
 
 
 def test_xcorr_lag0_and_symmetric_pair_counts(spark):
-    got = _run(spark, "events_xcorr_leadlag").set_index("lag")
+    got = run_entry(spark, "events_xcorr_leadlag").set_index("lag")
     v = _dense_hourly_np("view").astype(float)
     p = _dense_hourly_np("purchase").astype(float)
     r0 = np.corrcoef(v, p)[0, 1]
@@ -86,9 +69,9 @@ def test_xcorr_lag0_and_symmetric_pair_counts(spark):
 def test_spectral_matches_numpy_recompute(spark):
     from tmapreduce_spark.operators.analytics import _twiddle_rows
 
-    got = _run(spark, "events_spectral_energy").set_index("period")
+    got = run_entry(spark, "events_spectral_energy").set_index("period")
     x = _dense_hourly_np()
-    e = _events("ts")
+    e = smoke_table("events", "ts")
     lo = int(
         (e["ts"].astype("datetime64[us]").astype("int64") // 10**6 // 3600).min()
     )
@@ -133,7 +116,7 @@ def _pav_sequential(n: np.ndarray, pos: np.ndarray) -> np.ndarray:
 
 
 def test_isotonic_matches_sequential_pav(spark):
-    got = _run(spark, "eval_isotonic_calibration").sort_values("bin")
+    got = run_entry(spark, "eval_isotonic_calibration").sort_values("bin")
     fit = got["iso_fit"].to_numpy()
     # monotone non-decreasing, in [0, 1]
     assert (np.diff(fit) >= -1e-12).all()
@@ -149,12 +132,12 @@ def test_isotonic_matches_sequential_pav(spark):
 def test_kcore_matches_python_peel_to_fixpoint(spark):
     """Independent peel WITHOUT a round bound: proves the engines' fixed
     6-round unroll reaches the fixpoint at fixture scale (slack bound)."""
-    pairs = CAT["dedup_minhash_pairs"].fn(spark, SF_SMOKE).toPandas()
+    pairs = catalog()["dedup_minhash_pairs"].fn(spark, SF_SMOKE).toPandas()
     adj: dict[int, set[int]] = {}
     for a, b in zip(pairs["doc_a"], pairs["doc_b"]):
         adj.setdefault(int(a), set()).add(int(b))
         adj.setdefault(int(b), set()).add(int(a))
-    got = _run(spark, "graph_kcore").set_index("doc_id")
+    got = run_entry(spark, "graph_kcore").set_index("doc_id")
     assert set(got.index) == set(adj)
     for k, col in ((2, "in_2core"), (3, "in_3core")):
         alive = set(adj)

@@ -10,22 +10,7 @@ from fractions import Fraction
 import numpy as np
 import pandas as pd
 
-from tests.conftest import SF_SMOKE
-from tmapreduce_spark.catalog import build_catalog
-
-CAT = build_catalog()
-
-
-def _run(spark, name: str) -> pd.DataFrame:
-    return CAT[name].fn(spark, SF_SMOKE).toPandas()
-
-
-def _docs() -> pd.DataFrame:
-    import duckdb
-
-    return duckdb.sql(
-        f"SELECT doc_id, lang, source, n_chars FROM '{SF_SMOKE}/documents.parquet'"
-    ).df()
+from tests.conftest import SF_SMOKE, catalog, run_entry, smoke_table
 
 
 def _md5_60bit(s: str) -> int:
@@ -33,9 +18,9 @@ def _md5_60bit(s: str) -> int:
 
 
 def test_cramers_v_matches_pandas_recompute(spark):
-    got = _run(spark, "agg_cramers_v")
+    got = run_entry(spark, "agg_cramers_v")
     assert len(got) == 1
-    d = _docs()
+    d = smoke_table("documents", "doc_id, lang, source, n_chars")
     ct = pd.crosstab(d["lang"], d["source"]).to_numpy().astype(float)
     n = ct.sum()
     r = ct.sum(axis=1, keepdims=True)
@@ -51,8 +36,8 @@ def test_cramers_v_matches_pandas_recompute(spark):
 
 
 def test_cv_folds_matches_python_hash(spark):
-    got = _run(spark, "pipeline_cv_folds")
-    d = _docs()
+    got = run_entry(spark, "pipeline_cv_folds")
+    d = smoke_table("documents", "doc_id, lang, source, n_chars")
     d["fold"] = [(_md5_60bit(str(i)) % 5) for i in d["doc_id"]]
     ref = (
         d.groupby(["fold", "source"])
@@ -84,8 +69,8 @@ def test_dp_counts_matches_exact_cdf(spark):
         if abs(k) == DP_NOISE_B:
             p += Fraction(1, 3) * Fraction(1, 2 ** DP_NOISE_B)
         assert abs((hi - lo) - int(p * G)) <= 1, k
-    got = _run(spark, "pipeline_dp_counts")
-    d = _docs()
+    got = run_entry(spark, "pipeline_dp_counts")
+    d = smoke_table("documents", "doc_id, lang, source, n_chars")
     true = d.groupby("lang").size()
     for _, r in got.iterrows():
         assert r["n_true"] == true[r["lang"]]
@@ -96,9 +81,9 @@ def test_dp_counts_matches_exact_cdf(spark):
 
 
 def test_kendall_matches_python_recompute(spark):
-    exact = CAT["ann_topk_cosine"].fn(spark, SF_SMOKE).toPandas()
-    approx = CAT["ann_ivf_topk"].fn(spark, SF_SMOKE).toPandas()
-    got = _run(spark, "eval_rank_kendall").set_index("query_id")
+    exact = catalog()["ann_topk_cosine"].fn(spark, SF_SMOKE).toPandas()
+    approx = catalog()["ann_ivf_topk"].fn(spark, SF_SMOKE).toPandas()
+    got = run_entry(spark, "eval_rank_kendall").set_index("query_id")
     e = {
         (q, n): r
         for q, n, r in zip(exact["query_id"], exact["neighbor_id"], exact["rank"])
@@ -128,12 +113,13 @@ def test_kendall_matches_python_recompute(spark):
 def test_label_propagation_matches_python_recompute(spark):
     from tmapreduce_spark.functions.dedup import _LP_ROUNDS, _LP_SEED_MOD
 
-    pairs = CAT["dedup_minhash_pairs"].fn(spark, SF_SMOKE).toPandas()
+    pairs = catalog()["dedup_minhash_pairs"].fn(spark, SF_SMOKE).toPandas()
     adj: dict[int, set[int]] = {}
     for a, b in zip(pairs["doc_a"], pairs["doc_b"]):
         adj.setdefault(int(a), set()).add(int(b))
         adj.setdefault(int(b), set()).add(int(a))
-    lang = dict(zip(_docs()["doc_id"], _docs()["lang"]))
+    docs = smoke_table("documents", "doc_id, lang")
+    lang = dict(zip(docs["doc_id"], docs["lang"]))
     labels = {
         v: (lang[v] if v % _LP_SEED_MOD == 0 else None) for v in adj
     }
@@ -154,7 +140,7 @@ def test_label_propagation_matches_python_recompute(spark):
             else:
                 nxt[v] = labels[v]
         labels = nxt
-    got = _run(spark, "graph_label_propagation").set_index("doc_id")
+    got = run_entry(spark, "graph_label_propagation").set_index("doc_id")
     assert set(got.index) == set(adj)
     for v in adj:
         assert got.loc[v, "is_seed"] == (1 if v in seeds else 0)
@@ -169,7 +155,7 @@ def test_wav_tone_probe_matches_python_recompute(spark):
     table, which IS the contract)."""
     import math
 
-    got = _run(spark, "multimodal_wav_tone_probe")
+    got = run_entry(spark, "multimodal_wav_tone_probe")
     import duckdb
 
     docs = duckdb.sql(

@@ -10,14 +10,7 @@ import math
 import numpy as np
 import pandas as pd
 
-from tests.conftest import SF_SMOKE
-from tmapreduce_spark.catalog import build_catalog
-
-CAT = build_catalog()
-
-
-def _run(spark, name: str) -> pd.DataFrame:
-    return CAT[name].fn(spark, SF_SMOKE).toPandas()
+from tests.conftest import SF_SMOKE, run_entry
 
 
 def test_assoc_rules_matches_python_recompute(spark):
@@ -27,7 +20,7 @@ def test_assoc_rules_matches_python_recompute(spark):
     )
     import duckdb
 
-    got = _run(spark, "orders_assoc_rules")
+    got = run_entry(spark, "orders_assoc_rules")
     li = duckdb.sql(
         f"SELECT DISTINCT l_orderkey, l_partkey FROM '{SF_SMOKE}/lineitem.parquet'"
     ).df()
@@ -74,7 +67,7 @@ def test_assoc_rules_matches_python_recompute(spark):
 def test_srm_check_matches_python_hash(spark):
     import duckdb
 
-    got = _run(spark, "events_srm_check")
+    got = run_entry(spark, "events_srm_check")
     assert len(got) == 1
     users = duckdb.sql(
         f"SELECT DISTINCT user_id FROM '{SF_SMOKE}/events.parquet'"
@@ -95,7 +88,7 @@ def test_srm_check_matches_python_hash(spark):
 def test_mutual_information_matches_python_recompute(spark):
     import duckdb
 
-    got = _run(spark, "agg_mutual_information")
+    got = run_entry(spark, "agg_mutual_information")
     assert len(got) == 1
     d = duckdb.sql(
         f"SELECT lang, source FROM '{SF_SMOKE}/documents.parquet'"
@@ -123,7 +116,7 @@ def test_bollinger_matches_numpy_recompute(spark):
     from tmapreduce_spark.operators.windows import BB_WIN
     import duckdb
 
-    got = _run(spark, "window_bollinger_bands").sort_values("day").reset_index(
+    got = run_entry(spark, "window_bollinger_bands").sort_values("day").reset_index(
         drop=True
     )
     daily = duckdb.sql(

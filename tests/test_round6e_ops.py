@@ -4,19 +4,10 @@ readability scores."""
 
 from __future__ import annotations
 
-import math
 import re
 
-import pandas as pd
 
-from tests.conftest import SF_SMOKE
-from tmapreduce_spark.catalog import build_catalog
-
-CAT = build_catalog()
-
-
-def _run(spark, name: str) -> pd.DataFrame:
-    return CAT[name].fn(spark, SF_SMOKE).toPandas()
+from tests.conftest import SF_SMOKE, run_entry
 
 
 def test_jaro_winkler_blocking_loses_nothing_vs_brand_only(spark):
@@ -26,7 +17,7 @@ def test_jaro_winkler_blocking_loses_nothing_vs_brand_only(spark):
     threshold would keep on this corpus."""
     import duckdb
 
-    got = _run(spark, "join_jaro_winkler")
+    got = run_entry(spark, "join_jaro_winkler")
     wide = duckdb.sql(
         f"""SELECT a.p_partkey AS part_a, b.p_partkey AS part_b,
                    jaro_winkler_similarity(a.p_name, b.p_name) AS sim
@@ -46,7 +37,7 @@ def test_jaro_winkler_blocking_loses_nothing_vs_brand_only(spark):
 def test_link_prediction_matches_python_recompute(spark):
     import duckdb
 
-    got = _run(spark, "graph_link_prediction")
+    got = run_entry(spark, "graph_link_prediction")
     li = duckdb.sql(
         f"SELECT DISTINCT l_orderkey, l_partkey FROM '{SF_SMOKE}/lineitem.parquet'"
     ).df()
@@ -91,7 +82,7 @@ def test_link_prediction_matches_python_recompute(spark):
 def test_theil_sen_matches_python_recompute(spark):
     import duckdb
 
-    got = _run(spark, "agg_theil_sen_trend")
+    got = run_entry(spark, "agg_theil_sen_trend")
     assert len(got) == 1
     m = duckdb.sql(
         f"""SELECT year(o_orderdate) * 12 + month(o_orderdate) AS mi,
@@ -116,7 +107,7 @@ def test_theil_sen_matches_python_recompute(spark):
 def test_readability_matches_python_recompute(spark):
     import duckdb
 
-    got = _run(spark, "text_readability").set_index("doc_id")
+    got = run_entry(spark, "text_readability").set_index("doc_id")
     docs = duckdb.sql(
         f"SELECT doc_id, text FROM '{SF_SMOKE}/documents.parquet' LIMIT 40"
     ).df()

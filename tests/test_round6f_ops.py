@@ -7,11 +7,8 @@ from __future__ import annotations
 import math
 import re
 
-import pandas as pd
-import pytest
 
-from tests.conftest import SF_SMOKE
-from tmapreduce_spark.catalog import build_catalog
+from tests.conftest import SF_SMOKE, catalog, run_entry
 from tmapreduce_spark.operators.advanced import (
     GEO_CELL,
     GEO_MX,
@@ -21,12 +18,6 @@ from tmapreduce_spark.operators.advanced import (
     LPM_LENS,
     LPM_SPACE,
 )
-
-CAT = build_catalog()
-
-
-def _run(spark, name: str) -> pd.DataFrame:
-    return CAT[name].fn(spark, SF_SMOKE).toPandas()
 
 
 def _keys(path: str, col: str) -> list[int]:
@@ -44,7 +35,7 @@ def test_geo_knn_matches_brute_force_python(spark):
     """Brute-force Python 1-NN over the full supplier set, restricted to the
     3x3 cell neighborhood, must agree row-for-row (including the -1
     empty-neighborhood sentinel and the (d2, suppkey) tie-break)."""
-    got = _run(spark, "join_geo_grid_knn").set_index("c_custkey")
+    got = run_entry(spark, "join_geo_grid_knn").set_index("c_custkey")
     custs = _keys(f"{SF_SMOKE}/customer.parquet", "c_custkey")
     supps = _keys(f"{SF_SMOKE}/supplier.parquet", "s_suppkey")
     sloc = {k: (k * GEO_MX % GEO_SPAN, k * GEO_MY % GEO_SPAN) for k in supps}
@@ -72,7 +63,7 @@ def test_geo_knn_matches_brute_force_python(spark):
 def test_geo_knn_plan_broadcasts_small_side_only(spark):
     """The supplier side (9x exploded) must broadcast; the probe side must
     never hit a nested-loop or cartesian plan."""
-    df = CAT["join_geo_grid_knn"].fn(spark, SF_SMOKE)
+    df = catalog()["join_geo_grid_knn"].fn(spark, SF_SMOKE)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
@@ -82,7 +73,7 @@ def test_geo_knn_plan_broadcasts_small_side_only(spark):
 def test_geo_knn_has_matches_and_sentinels(spark):
     """The fixture geometry must exercise BOTH branches: real neighbors and
     empty 3x3 neighborhoods."""
-    got = _run(spark, "join_geo_grid_knn")
+    got = run_entry(spark, "join_geo_grid_knn")
     assert (got["nn_suppkey"] >= 0).any()
     assert (got["nn_suppkey"] == -1).any()
     matched = got[got["nn_suppkey"] >= 0]
@@ -96,7 +87,7 @@ def test_geo_knn_has_matches_and_sentinels(spark):
 
 
 def test_lpm_matches_python_recompute(spark):
-    got = _run(spark, "join_ip_cidr_lpm").set_index("c_custkey")
+    got = run_entry(spark, "join_ip_cidr_lpm").set_index("c_custkey")
     custs = _keys(f"{SF_SMOKE}/customer.parquet", "c_custkey")
     supps = _keys(f"{SF_SMOKE}/supplier.parquet", "s_suppkey")
     routes: dict[tuple[int, int], int] = {}
@@ -121,7 +112,7 @@ def test_lpm_matches_python_recompute(spark):
 def test_lpm_exercises_multiple_lengths(spark):
     """The fixture must produce matches at more than one prefix length AND
     unrouted customers, or the LPM precedence logic is untested."""
-    got = _run(spark, "join_ip_cidr_lpm")
+    got = run_entry(spark, "join_ip_cidr_lpm")
     lens = set(got["matched_len"])
     assert 0 in lens, "expected some unrouted customers"
     assert len(lens - {0}) >= 2, f"need >=2 matched prefix lengths, got {lens}"
@@ -130,7 +121,7 @@ def test_lpm_exercises_multiple_lengths(spark):
 def test_lpm_plan_is_three_broadcast_joins_no_probe_shuffle(spark):
     """The probe (customer) side must reach the output through broadcast
     joins only — LPM never shuffles or explodes the big side."""
-    df = CAT["join_ip_cidr_lpm"].fn(spark, SF_SMOKE)
+    df = catalog()["join_ip_cidr_lpm"].fn(spark, SF_SMOKE)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("BroadcastHashJoin") == 3
     assert "CartesianProduct" not in plan
@@ -147,7 +138,7 @@ def test_skew_kurtosis_matches_numpy(spark):
     import duckdb
     import numpy as np
 
-    got = _run(spark, "agg_skew_kurtosis").set_index("o_orderpriority")
+    got = run_entry(spark, "agg_skew_kurtosis").set_index("o_orderpriority")
     raw = duckdb.sql(
         f"""SELECT o_orderpriority,
                    CAST(floor(datediff('day', o_orderdate, l_shipdate) / 7.0)
@@ -179,7 +170,7 @@ def test_skew_kurtosis_power_sums_fit_int64_at_sf100():
 
 def test_skew_kurtosis_plan_partial_aggregates(spark):
     plan = (
-        CAT["agg_skew_kurtosis"]
+        catalog()["agg_skew_kurtosis"]
         .fn(spark, SF_SMOKE)
         ._jdf.queryExecution()
         .executedPlan()
@@ -195,8 +186,8 @@ def test_skew_kurtosis_plan_partial_aggregates(spark):
 
 
 def test_confusion_matches_pandas_recompute(spark):
-    cells = _run(spark, "lang_id_heuristic")
-    got = _run(spark, "eval_confusion_multiclass").set_index("cls")
+    cells = run_entry(spark, "lang_id_heuristic")
+    got = run_entry(spark, "eval_confusion_multiclass").set_index("cls")
     classes = sorted(cells["label"].unique())
     tp_all = 0
     f1s = []
@@ -227,7 +218,7 @@ def test_confusion_runtime_plan_reuses_cells_exchange(spark):
     """The scale claim: row/column marginals and the overall stats all hang
     off ONE corpus aggregation — the AQE-final plan must carry a
     ReusedExchange (corpus scanned once, not per marginal)."""
-    df = CAT["eval_confusion_multiclass"].fn(spark, SF_SMOKE)
+    df = catalog()["eval_confusion_multiclass"].fn(spark, SF_SMOKE)
     df.collect()
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "ReusedExchange" in plan
@@ -244,7 +235,7 @@ def test_silhouette_matches_numpy_recompute(spark):
     import duckdb
     import numpy as np
 
-    got = _run(spark, "embedding_silhouette").set_index("label")
+    got = run_entry(spark, "embedding_silhouette").set_index("label")
     raw = duckdb.sql(
         f"SELECT vec_id, label, embedding FROM '{SF_SMOKE}/embeddings.parquet'"
     ).df()
@@ -274,7 +265,7 @@ def test_silhouette_matches_numpy_recompute(spark):
 
 
 def test_silhouette_bounded_and_sane(spark):
-    got = _run(spark, "embedding_silhouette")
+    got = run_entry(spark, "embedding_silhouette")
     assert (got["mean_silhouette"] <= 1.0).all()
     assert (got["mean_silhouette"] >= -1.0).all()
     assert got["n"].sum() == 500  # every vector scored exactly once
@@ -282,7 +273,7 @@ def test_silhouette_bounded_and_sane(spark):
 
 def test_silhouette_is_one_arrow_pass(spark):
     plan = (
-        CAT["embedding_silhouette"]
+        catalog()["embedding_silhouette"]
         .fn(spark, SF_SMOKE)
         ._jdf.queryExecution()
         .executedPlan()
@@ -302,7 +293,7 @@ def test_skipping_audit_tells_the_layout_story(spark):
     best; Z-order (customer x price dims) prunes the price probe best;
     natural order prunes nothing; nobody ever skips a zone that contains a
     matching row (scanned >= matching, so read_amp >= 1)."""
-    got = _run(spark, "layout_skipping_audit").set_index("layout")
+    got = run_entry(spark, "layout_skipping_audit").set_index("layout")
     nat, ds, zo = got.loc["natural"], got.loc["date_sorted"], got.loc["zorder"]
     assert ds["skipped_date"] > nat["skipped_date"]
     assert ds["skipped_date"] > zo["skipped_date"]
@@ -321,7 +312,7 @@ def test_skipping_audit_zone_accounting(spark):
 
     from tmapreduce_spark.operators.advanced import SKIP_CHUNK
 
-    got = _run(spark, "layout_skipping_audit")
+    got = run_entry(spark, "layout_skipping_audit")
     n = duckdb.sql(f"SELECT count(*) FROM '{SF_SMOKE}/orders.parquet'").fetchone()[0]
     want_zones = -(-n // SKIP_CHUNK)
     assert (got["n_zones"] == want_zones).all()
@@ -375,7 +366,7 @@ def test_patch_features_matches_independent_decode(spark):
 
     import duckdb
 
-    got = _run(spark, "multimodal_patch_features")
+    got = run_entry(spark, "multimodal_patch_features")
     docs = duckdb.sql(
         f"SELECT doc_id, text FROM '{SF_SMOKE}/documents.parquet'"
     ).fetchall()
@@ -398,7 +389,7 @@ def test_patch_features_matches_independent_decode(spark):
 
 
 def test_patch_features_every_doc_has_full_grid(spark):
-    got = _run(spark, "multimodal_patch_features")
+    got = run_entry(spark, "multimodal_patch_features")
     per_doc = got.groupby("doc_id").size()
     assert (per_doc == 4).all()
     # patches partition the image: sums of patch pixels = w*h per doc
@@ -417,7 +408,7 @@ def test_patch_features_every_doc_has_full_grid(spark):
 def test_mann_kendall_matches_python_recompute(spark):
     import duckdb
 
-    got = _run(spark, "agg_mann_kendall").iloc[0]
+    got = run_entry(spark, "agg_mann_kendall").iloc[0]
     monthly = duckdb.sql(
         f"""SELECT CAST(year(o_orderdate) * 12 + month(o_orderdate) AS BIGINT) AS mi,
                    CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)) AS BIGINT) AS c
@@ -454,7 +445,7 @@ def test_mann_kendall_matches_python_recompute(spark):
 def test_truncation_loss_matches_python_recompute(spark):
     import duckdb
 
-    got = _run(spark, "pipeline_truncation_loss")
+    got = run_entry(spark, "pipeline_truncation_loss")
     docs = duckdb.sql(
         f"SELECT source, text FROM '{SF_SMOKE}/documents.parquet'"
     ).fetchall()
@@ -476,7 +467,7 @@ def test_truncation_loss_matches_python_recompute(spark):
 
 def test_truncation_loss_monotone_in_ctx(spark):
     """Longer context must never lose MORE tokens (per source)."""
-    got = _run(spark, "pipeline_truncation_loss")
+    got = run_entry(spark, "pipeline_truncation_loss")
     for source, grp in got.groupby("source"):
         g = grp.sort_values("ctx_len")
         assert g["tokens_lost"].is_monotonic_decreasing
@@ -491,7 +482,7 @@ def test_truncation_loss_monotone_in_ctx(spark):
 def test_udtf_analyze_schema_follows_constant_arg(spark):
     """The analyze() hook must derive a DIFFERENT typed schema per constant
     n — the polymorphism the fixed-signature UDTF can't express."""
-    _run(spark, "udf_udtf_analyze")  # registers ngrams_udtf
+    run_entry(spark, "udf_udtf_analyze")  # registers ngrams_udtf
     two = spark.sql("SELECT g.* FROM (SELECT 'a b c' AS t) v, LATERAL ngrams_udtf(v.t, 2) g")
     four = spark.sql("SELECT g.* FROM (SELECT 'a b c d e' AS t) v, LATERAL ngrams_udtf(v.t, 4) g")
     assert two.columns == ["pos", "w0", "w1"]
@@ -503,7 +494,7 @@ def test_udtf_analyze_schema_follows_constant_arg(spark):
 
 
 def test_udtf_analyze_trigrams_sane(spark):
-    got = _run(spark, "udf_udtf_analyze")
+    got = run_entry(spark, "udf_udtf_analyze")
     # every trigram's first word at pos p equals the second word at pos p-1
     one_doc = got[got["doc_id"] == got["doc_id"].iloc[0]].sort_values("pos")
     w0, w1 = one_doc["w0"].tolist(), one_doc["w1"].tolist()
@@ -516,7 +507,7 @@ def test_udtf_analyze_trigrams_sane(spark):
 
 
 def test_variant_roundtrip_and_introspection(spark):
-    got = _run(spark, "scalar_variant")
+    got = run_entry(spark, "scalar_variant")
     # a string field read as bigint must try_variant_get -> NULL on EVERY row
     assert (got["n_bad_casts"] == got["n_events"]).all()
     # coalesced construction keeps the variant schema constant
@@ -536,7 +527,7 @@ def test_modularity_matches_python_recompute(spark):
     import duckdb
     from collections import Counter, defaultdict
 
-    got = _run(spark, "graph_modularity")
+    got = run_entry(spark, "graph_modularity")
     edges = duckdb.sql(
         f"""WITH items AS (SELECT DISTINCT l_orderkey, l_partkey
                            FROM '{SF_SMOKE}/lineitem.parquet')
@@ -583,7 +574,7 @@ def test_dataset_hash_order_independent_and_sensitive(spark):
 
     import duckdb
 
-    got = _run(spark, "pipeline_dataset_hash").set_index("source")
+    got = run_entry(spark, "pipeline_dataset_hash").set_index("source")
     docs = duckdb.sql(
         f"SELECT source, text FROM '{SF_SMOKE}/documents.parquet'"
     ).fetchall()
@@ -621,7 +612,7 @@ def test_dataset_hash_order_independent_and_sensitive(spark):
 def test_km_matches_python_recompute(spark):
     import duckdb
 
-    got = _run(spark, "events_survival_km")
+    got = run_entry(spark, "events_survival_km")
     rows = duckdb.sql(
         f"""SELECT user_id,
                    epoch_us(min(ts)) // 1000000 AS s0,
@@ -649,7 +640,7 @@ def test_km_is_monotone_and_above_uncensored_tail(spark):
     """KM survival is non-increasing; and with censored users removed from
     the death count, the curve can never drop below the naive all-users
     estimate evaluated at the same spans' tail."""
-    got = _run(spark, "events_survival_km").sort_values("t")
+    got = run_entry(spark, "events_survival_km").sort_values("t")
     km = got["km_survival"].tolist()
     assert all(a >= b - 1e-9 for a, b in zip(km, km[1:]))
     assert (got["km_survival"] > 0).all() and (got["km_survival"] <= 1).all()

@@ -10,20 +10,13 @@ import itertools
 
 import pandas as pd
 
-from tests.conftest import SF_SMOKE
-from tmapreduce_spark.catalog import build_catalog
+from tests.conftest import SF_SMOKE, run_entry
 from tmapreduce_spark.functions.text import (
     RAKE_MAX_PHRASE,
     RAKE_STOPWORDS,
     RAKE_TOP_K,
 )
 from tmapreduce_spark.operators.analytics import PERM_B
-
-CAT = build_catalog()
-
-
-def _run(spark, name: str) -> pd.DataFrame:
-    return CAT[name].fn(spark, SF_SMOKE).toPandas()
 
 
 def _score_label(spark) -> pd.DataFrame:
@@ -39,7 +32,7 @@ def _score_label(spark) -> pd.DataFrame:
 
 def test_auc_roc_matches_python_recompute(spark):
     per = _score_label(spark)
-    got = _run(spark, "eval_auc_roc").iloc[0]
+    got = run_entry(spark, "eval_auc_roc").iloc[0]
     # midrank AUC recomputed directly from the per-doc scores
     df = per.sort_values("score_micro").reset_index(drop=True)
     df["rank"] = df.index + 1
@@ -61,7 +54,7 @@ def test_auc_roc_matches_python_recompute(spark):
 
 def test_pr_auc_matches_python_recompute(spark):
     per = _score_label(spark)
-    got = _run(spark, "eval_pr_auc").iloc[0]
+    got = run_entry(spark, "eval_pr_auc").iloc[0]
     by = (
         per.groupby("score_micro")
         .agg(n_s=("label", "size"), p_s=("label", "sum"))
@@ -130,7 +123,7 @@ def test_rake_matches_python_recompute(spark):
         for r in duckdb.sql(f"SELECT text FROM '{SF_SMOKE}/documents.parquet'").fetchall()
     ]
     want = _python_rake(texts)
-    got = _run(spark, "text_keyword_rake")
+    got = run_entry(spark, "text_keyword_rake")
     got_rows = [
         (r["phrase"], int(r["n_words"]), int(r["n_occurrences"]), float(r["rake_score"]))
         for _, r in got.iterrows()
@@ -139,7 +132,7 @@ def test_rake_matches_python_recompute(spark):
 
 
 def test_rake_phrases_are_stopword_free_and_bounded(spark):
-    got = _run(spark, "text_keyword_rake")
+    got = run_entry(spark, "text_keyword_rake")
     assert len(got) <= RAKE_TOP_K
     for _, r in got.iterrows():
         words = r["phrase"].split(" ")
@@ -170,7 +163,7 @@ def test_clustering_coeff_matches_python_recompute(spark):
     for a, b in edges:
         adj[a].add(b)
         adj[b].add(a)
-    got = _run(spark, "graph_clustering_coeff")
+    got = run_entry(spark, "graph_clustering_coeff")
     assert set(got["doc_id"]) == set(adj)
     for _, r in got.iterrows():
         v = int(r["doc_id"])
@@ -190,7 +183,7 @@ def test_clustering_coeff_matches_python_recompute(spark):
 
 def test_clustering_coeff_triangle_identity(spark):
     """Σ_v tri(v) = 3·(global triangle count) — each triangle has 3 corners."""
-    got = _run(spark, "graph_clustering_coeff")
+    got = run_entry(spark, "graph_clustering_coeff")
     total3 = int(got["n_triangles"].sum())
     assert total3 % 3 == 0
 
@@ -231,7 +224,7 @@ def test_permutation_test_matches_python_recompute(spark):
         stat = (1000 * s1) // n1 - (1000 * s0) // n0
         if abs(stat) >= abs(obs_milli):
             n_extreme += 1
-    got = _run(spark, "agg_permutation_test").iloc[0]
+    got = run_entry(spark, "agg_permutation_test").iloc[0]
     assert int(got["n_r"]) == nr and int(got["n_a"]) == na
     assert abs(float(got["obs_mean_diff"]) - obs_milli / 100000) < 1e-9
     assert int(got["n_permutations"]) == PERM_B
@@ -247,7 +240,7 @@ def test_permutation_test_matches_python_recompute(spark):
 
 def test_brier_decomposition_matches_python_recompute(spark):
     per = _score_label(spark)
-    got = _run(spark, "eval_brier_decomposition").iloc[0]
+    got = run_entry(spark, "eval_brier_decomposition").iloc[0]
     n = len(per)
     brier = float(
         ((per["score_micro"] - 1_000_000 * per["label"]) ** 2).sum()
@@ -279,7 +272,7 @@ def test_brier_decomposition_matches_python_recompute(spark):
 def test_lsh_scurve_theory_and_empirical(spark):
     from tmapreduce_spark.functions.dedup import BAND_R, NUM_PERMS, dedup_minhash_pairs
 
-    got = _run(spark, "dedup_lsh_scurve").sort_values("jaccard_lo")
+    got = run_entry(spark, "dedup_lsh_scurve").sort_values("jaccard_lo")
     assert len(got) == 20  # s20 = 0..19; bucket 0 keeps jaccard < 0.05 visible
     assert got["jaccard_lo"].iloc[0] == 0.0 and got["detect_prob"].iloc[0] == 0.0
     b = NUM_PERMS // BAND_R
@@ -309,7 +302,7 @@ def test_mmr_rerank_greedy_invariants(spark):
         QUANT,
     )
 
-    got = _run(spark, "embedding_mmr_rerank").sort_values("pick_order")
+    got = run_entry(spark, "embedding_mmr_rerank").sort_values("pick_order")
     assert len(got) == MMR_PICKS
     assert got["pick_order"].tolist() == list(range(1, MMR_PICKS + 1))
     assert got["vec_id"].nunique() == MMR_PICKS
@@ -368,7 +361,7 @@ def test_rolling_p90_matches_python_recompute(spark):
 
     from tmapreduce_spark.operators.windows import ROLL_P90_W
 
-    got = _run(spark, "window_rolling_p90")
+    got = run_entry(spark, "window_rolling_p90")
     rows = duckdb.sql(
         f"""SELECT user_id, epoch_us(ts), event_id
             FROM '{SF_SMOKE}/events.parquet' ORDER BY user_id, 2, 3"""
@@ -417,7 +410,7 @@ def test_peak_detect_matches_python_recompute(spark):
         right = ns[i + 1 : i + 1 + k]
         if ns[i] > max(left) and ns[i] > max(right) and ns[i] >= PEAK_MIN_HEIGHT:
             want[hs[i]] = (ns[i], ns[i] - max(min(left), min(right)))
-    got = _run(spark, "window_peak_detect")
+    got = run_entry(spark, "window_peak_detect")
     got_map = {
         int(r["hidx"]): (int(r["peak_height"]), int(r["prominence"]))
         for _, r in got.iterrows()
@@ -475,7 +468,7 @@ def test_markov_attribution_matches_python_recompute(spark):
         return p9.get("start", 0)
 
     p_full = propagate(trans)
-    got = _run(spark, "events_attribution_markov").sort_values("channel")
+    got = run_entry(spark, "events_attribution_markov").sort_values("channel")
     channels = sorted(
         {s for s, _ in trans} | {d for _, d in trans} - {"start", "conv", "null"}
     )

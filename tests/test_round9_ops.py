@@ -8,18 +8,11 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-from tests.conftest import SF_SMOKE
-from tmapreduce_spark.catalog import build_catalog
-
-CAT = build_catalog()
-
-
-def _run(spark, name: str) -> pd.DataFrame:
-    return CAT[name].fn(spark, SF_SMOKE).toPandas()
+from tests.conftest import SF_SMOKE, catalog, run_entry
 
 
 def test_anova_identities(spark):
-    got = _run(spark, "agg_anova_oneway").iloc[0]
+    got = run_entry(spark, "agg_anova_oneway").iloc[0]
     # recompute from raw data: cells partition the table
     o = duckdb.sql(
         f"SELECT o_orderpriority, o_totalprice FROM '{SF_SMOKE}/orders.parquet'"
@@ -43,7 +36,7 @@ def test_anova_identities(spark):
 
 
 def test_did_cells_partition_and_contrast(spark):
-    got = _run(spark, "events_did_lift").iloc[0]
+    got = run_entry(spark, "events_did_lift").iloc[0]
     e = duckdb.sql(
         f"""SELECT user_id % 2 = 0 AS treat, epoch_us(ts) AS us, value
             FROM '{SF_SMOKE}/events.parquet' WHERE event_type = 'purchase'"""
@@ -74,7 +67,7 @@ def test_did_cells_partition_and_contrast(spark):
 
 
 def test_cohens_kappa_identity(spark):
-    got = _run(spark, "eval_cohens_kappa").iloc[0]
+    got = run_entry(spark, "eval_cohens_kappa").iloc[0]
     po, pe, k = got["observed_agreement"], got["expected_agreement"], got["kappa"]
     # kappa = (po - pe) / (1 - pe), to the 1e-6 output rounding
     assert abs(k - (po - pe) / (1 - pe)) < 5e-6
@@ -86,7 +79,7 @@ def test_cohens_kappa_identity(spark):
 
 
 def test_query_likelihood_semantics(spark):
-    got = _run(spark, "retrieval_query_likelihood")
+    got = run_entry(spark, "retrieval_query_likelihood")
     # 5 queries x top-10, ranks dense 1..10, log-likelihood scores negative
     assert len(got) == 50
     assert set(got.groupby("query_id")["rank"].apply(list).map(tuple)) == {
@@ -122,7 +115,7 @@ def test_query_likelihood_semantics(spark):
 
 
 def test_source_kl_nonneg_and_recompute(spark):
-    got = _run(spark, "text_source_kl_divergence").set_index("source")
+    got = run_entry(spark, "text_source_kl_divergence").set_index("source")
     assert (got["kl_nats"] >= 0).all()
     import numpy as np
 
@@ -144,7 +137,7 @@ def test_source_kl_nonneg_and_recompute(spark):
 
 
 def test_deletion_cascade_reconciliation(spark):
-    got = _run(spark, "pipeline_deletion_cascade").set_index("tbl")
+    got = run_entry(spark, "pipeline_deletion_cascade").set_index("tbl")
     assert list(got.index) == ["customer", "orders", "lineitem"]
     # independent recompute of every level from raw parquet
     c = duckdb.sql(f"SELECT c_custkey FROM '{SF_SMOKE}/customer.parquet'").df()
@@ -168,7 +161,7 @@ def test_deletion_cascade_reconciliation(spark):
 
 
 def test_leakage_safe_split_invariants(spark):
-    got = _run(spark, "pipeline_leakage_safe_split").iloc[0]
+    got = run_entry(spark, "pipeline_leakage_safe_split").iloc[0]
     # the safe assignment NEVER leaks a near-dup edge across the split
     assert got["leaked_edges_safe"] == 0
     # the naive doc_id hash demonstrably does (the whole point of the op)
@@ -179,7 +172,7 @@ def test_leakage_safe_split_invariants(spark):
     assert 0.7 < got["n_train_safe"] / got["n_docs"] < 0.9
     # cluster-consistency recomputed independently: components from the CC
     # entry itself, split by md5 of the representative
-    cc = _run(spark, "dedup_cluster_resolve")
+    cc = run_entry(spark, "dedup_cluster_resolve")
     import hashlib
 
     def bucket(k: int) -> int:
@@ -196,7 +189,7 @@ def test_leakage_safe_split_invariants(spark):
 
 
 def test_tukey_hsd_identities(spark):
-    got = _run(spark, "agg_tukey_hsd")
+    got = run_entry(spark, "agg_tukey_hsd")
     assert len(got) == 10  # C(5,2) priority pairs
     o = duckdb.sql(
         f"SELECT o_orderpriority, o_totalprice FROM '{SF_SMOKE}/orders.parquet'"
@@ -216,7 +209,7 @@ def test_tukey_hsd_identities(spark):
 
 
 def test_cuped_identities(spark):
-    got = _run(spark, "events_cuped_lift").iloc[0]
+    got = run_entry(spark, "events_cuped_lift").iloc[0]
     e = duckdb.sql(
         f"""SELECT user_id, epoch_us(ts) >= 1705363200000000 AS post, value
             FROM '{SF_SMOKE}/events.parquet' WHERE event_type = 'purchase'"""
@@ -286,7 +279,7 @@ def test_cc_min_labels_spark_equals_union_find(spark):
 
 
 def test_brown_forsythe_identity(spark):
-    got = _run(spark, "agg_levene_brown_forsythe").iloc[0]
+    got = run_entry(spark, "agg_levene_brown_forsythe").iloc[0]
     o = duckdb.sql(
         f"""SELECT o_orderpriority p, floor(o_totalprice*100+0.5) v
             FROM '{SF_SMOKE}/orders.parquet'"""
@@ -308,7 +301,7 @@ def test_brown_forsythe_identity(spark):
 
 
 def test_kruskal_wallis_identity(spark):
-    got = _run(spark, "agg_kruskal_wallis").iloc[0]
+    got = run_entry(spark, "agg_kruskal_wallis").iloc[0]
     o = duckdb.sql(
         f"""SELECT o_orderpriority p,
                    CAST(floor(o_totalprice + 0.5) AS BIGINT) v
@@ -331,7 +324,7 @@ def test_kruskal_wallis_identity(spark):
 
 
 def test_jarque_bera_identity(spark):
-    got = _run(spark, "agg_jarque_bera").set_index("event_type")
+    got = run_entry(spark, "agg_jarque_bera").set_index("event_type")
     e = duckdb.sql(
         f"""SELECT event_type t, CAST(floor(value) AS BIGINT) w
             FROM '{SF_SMOKE}/events.parquet'"""
@@ -355,7 +348,7 @@ def test_char_entropy_identity(spark):
     import collections
     import math
 
-    got = _run(spark, "text_char_entropy").set_index("source")
+    got = run_entry(spark, "text_char_entropy").set_index("source")
     docs = duckdb.sql(
         f"SELECT source, text FROM '{SF_SMOKE}/documents.parquet'"
     ).df()
@@ -396,7 +389,7 @@ def test_jl_distortion_matches_numpy(spark):
         JL_SAMPLE,
     )
 
-    got = _run(spark, "embedding_jl_distortion").iloc[0]
+    got = run_entry(spark, "embedding_jl_distortion").iloc[0]
     emb = duckdb.sql(
         f"""SELECT embedding FROM '{SF_SMOKE}/embeddings.parquet'
             WHERE vec_id < {JL_SAMPLE} ORDER BY vec_id"""
@@ -424,7 +417,7 @@ def test_jl_distortion_matches_numpy(spark):
 
 
 def test_incremental_rollup_reconciles(spark):
-    got = _run(spark, "pipeline_incremental_rollup")
+    got = run_entry(spark, "pipeline_incremental_rollup")
     o = duckdb.sql(
         f"""SELECT o_orderkey k, o_totalprice p,
                    strftime(o_orderdate, '%Y-%m') m
@@ -461,7 +454,7 @@ def round_half_up_cents(s_micro: int) -> float:
 
 
 def test_ljung_box_identity(spark):
-    got = _run(spark, "events_ljung_box").iloc[0]
+    got = run_entry(spark, "events_ljung_box").iloc[0]
     hours = duckdb.sql(
         f"""SELECT epoch_us(date_trunc('hour', ts)) // 3600000000 AS h
             FROM '{SF_SMOKE}/events.parquet'"""
@@ -483,7 +476,7 @@ def test_ljung_box_identity(spark):
 
 
 def test_friedman_identity(spark):
-    got = _run(spark, "agg_friedman").iloc[0]
+    got = run_entry(spark, "agg_friedman").iloc[0]
     o = duckdb.sql(
         f"""SELECT strftime(o_orderdate, '%Y-%m') m, o_orderpriority p,
                    floor(o_totalprice*100+0.5) vq
@@ -503,7 +496,7 @@ def test_friedman_identity(spark):
 
 
 def test_boundary_stitch_bruteforce(spark):
-    got = _run(spark, "dedup_boundary_stitch")
+    got = run_entry(spark, "dedup_boundary_stitch")
     docs = duckdb.sql(
         f"SELECT doc_id, text FROM '{SF_SMOKE}/documents.parquet'"
     ).df()
@@ -536,7 +529,7 @@ def test_boundary_stitch_bruteforce(spark):
 
 
 def test_grubbs_identity(spark):
-    got = _run(spark, "agg_grubbs_test").set_index("o_orderpriority")
+    got = run_entry(spark, "agg_grubbs_test").set_index("o_orderpriority")
     o = duckdb.sql(
         f"""SELECT o_orderpriority p, floor(o_totalprice*100+0.5) v
             FROM '{SF_SMOKE}/orders.parquet'"""
@@ -553,7 +546,7 @@ def test_grubbs_identity(spark):
 
 
 def test_pot_identity(spark):
-    got = _run(spark, "events_peak_over_threshold").set_index("event_type")
+    got = run_entry(spark, "events_peak_over_threshold").set_index("event_type")
     e = duckdb.sql(
         f"""SELECT event_type t, CAST(floor(value*1e6+0.5) AS BIGINT) v
             FROM '{SF_SMOKE}/events.parquet'"""
@@ -573,8 +566,8 @@ def test_pot_identity(spark):
 
 
 def test_mcnemar_consistent_with_overlap_audit(spark):
-    got = _run(spark, "eval_mcnemar_dedup").iloc[0]
-    audit = _run(spark, "dedup_methods_overlap").set_index(
+    got = run_entry(spark, "eval_mcnemar_dedup").iloc[0]
+    audit = run_entry(spark, "dedup_methods_overlap").set_index(
         ["method_a", "method_b"]
     )
     row = audit.loc[("minhash", "simhash")]
@@ -595,7 +588,7 @@ def test_mcnemar_consistent_with_overlap_audit(spark):
 
 
 def test_scd2_pit_partitions_the_fact(spark):
-    got = _run(spark, "join_scd2_point_in_time")
+    got = run_entry(spark, "join_scd2_point_in_time")
     n_li = duckdb.sql(
         f"SELECT count(*) FROM '{SF_SMOKE}/lineitem.parquet'"
     ).fetchone()[0]
@@ -636,7 +629,7 @@ def test_scd2_pit_partitions_the_fact(spark):
 
 
 def test_wilcoxon_identity(spark):
-    got = _run(spark, "agg_wilcoxon_signed_rank").iloc[0]
+    got = run_entry(spark, "agg_wilcoxon_signed_rank").iloc[0]
     med = duckdb.sql(
         f"""WITH o AS (
               SELECT strftime(o_orderdate, '%Y-%m') m, o_orderpriority p,
@@ -666,7 +659,7 @@ def test_wilcoxon_identity(spark):
 
 
 def test_conversion_ztest_identity(spark):
-    got = _run(spark, "events_conversion_ztest").iloc[0]
+    got = run_entry(spark, "events_conversion_ztest").iloc[0]
     pu = duckdb.sql(
         f"""SELECT user_id,
                    max(CASE WHEN event_type = 'purchase' AND value > 200
@@ -687,7 +680,7 @@ def test_conversion_ztest_identity(spark):
 def test_bloom_fpr_bruteforce(spark):
     import hashlib
 
-    got = _run(spark, "sketch_bloom_fpr_audit").iloc[0]
+    got = run_entry(spark, "sketch_bloom_fpr_audit").iloc[0]
     keys = duckdb.sql(
         f"SELECT o_orderkey FROM '{SF_SMOKE}/orders.parquet'"
     ).df().o_orderkey.tolist()
@@ -738,7 +731,7 @@ def test_mr_secondary_sort_order_contract(spark):
     ).toPandas().sort_values(["key", "result"], ignore_index=True)
     assert fwd.equals(rev)
     # pandas recompute of one customer's chronological status string
-    got = _run(spark, "mr_secondary_sort")
+    got = run_entry(spark, "mr_secondary_sort")
     key = got.key.iloc[0]
     seqs = got[(got.key == key) & (got.result != key)]
     ours = o[o.key == key].value.sort_values()
@@ -752,7 +745,7 @@ def test_mr_secondary_sort_order_contract(spark):
 def test_bartlett_identity(spark):
     import math
 
-    got = _run(spark, "agg_bartlett_test").iloc[0]
+    got = run_entry(spark, "agg_bartlett_test").iloc[0]
     o = duckdb.sql(
         f"""SELECT o_orderpriority p, floor(o_totalprice*100+0.5) v
             FROM '{SF_SMOKE}/orders.parquet'"""
@@ -772,7 +765,7 @@ def test_bartlett_identity(spark):
 
 
 def test_cochran_armitage_identity(spark):
-    got = _run(spark, "agg_cochran_armitage").iloc[0]
+    got = run_entry(spark, "agg_cochran_armitage").iloc[0]
     o = duckdb.sql(
         f"""SELECT o_orderpriority p,
                    CAST(o_totalprice > 300000 AS INT) big
@@ -793,8 +786,8 @@ def test_cochran_armitage_identity(spark):
 
 
 def test_assortativity_identity(spark):
-    got = _run(spark, "graph_assortativity").iloc[0]
-    pairs = _run(spark, "dedup_minhash_pairs")[["doc_a", "doc_b"]]
+    got = run_entry(spark, "graph_assortativity").iloc[0]
+    pairs = run_entry(spark, "dedup_minhash_pairs")[["doc_a", "doc_b"]]
     e = pd.concat(
         [
             pairs.rename(columns={"doc_a": "src", "doc_b": "dst"}),
@@ -819,7 +812,7 @@ def test_assortativity_identity(spark):
 
 
 def test_herfindahl_identity(spark):
-    got = _run(spark, "agg_herfindahl").iloc[0]
+    got = run_entry(spark, "agg_herfindahl").iloc[0]
     rev = duckdb.sql(
         f"""SELECT p_brand,
                    sum(floor(l_extendedprice * (1 - l_discount) * 1e6 + 0.5)) r
@@ -839,8 +832,8 @@ def test_herfindahl_identity(spark):
 
 
 def test_power_mde_consistency(spark):
-    got = _run(spark, "events_experiment_power_mde").iloc[0]
-    z = _run(spark, "events_conversion_ztest").iloc[0]
+    got = run_entry(spark, "events_experiment_power_mde").iloc[0]
+    z = run_entry(spark, "events_conversion_ztest").iloc[0]
     # identical per-user cells as the z-test entry
     assert got["n_treat"] == z["n_treat"] and got["n_ctrl"] == z["n_ctrl"]
     p = (z["x_treat"] + z["x_ctrl"]) / (z["n_treat"] + z["n_ctrl"])
@@ -860,7 +853,7 @@ def test_bucketed_join_entry_plan_is_exchange_free(spark):
     not serve the priority key)."""
     from tmapreduce_spark.plans.explain import physical_plan
 
-    df = CAT["layout_bucketed_join"].fn(spark, SF_SMOKE)
+    df = catalog()["layout_bucketed_join"].fn(spark, SF_SMOKE)
     plan = physical_plan(df)
     # tree section only (details re-list every node, including the rollup
     # exchange, and would false-positive a substring check)
@@ -882,7 +875,7 @@ def test_bucketed_join_entry_plan_is_exchange_free(spark):
 
 
 def test_event_study_identities(spark):
-    got = _run(spark, "events_did_event_study")
+    got = run_entry(spark, "events_did_event_study")
     assert len(got) == 10
     assert list(got.period) == list(range(10))
     assert list(got.is_post) == [0] * 5 + [1] * 5

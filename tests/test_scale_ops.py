@@ -1,24 +1,18 @@
-"""Scale family (``functions/scale.py``): LSH ANN recall vs brute force,
-salted aggregation equivalence, and the sketches (count-min, KMV, HLL,
-Bloom, sample quantiles) against brute-force recomputes, their accuracy
-bounds and their degenerate-input branches."""
+"""Tests for scale-path operators: LSH ANN recall vs brute force, salted
+aggregation equivalence, sketch accuracy bounds."""
 
 from __future__ import annotations
 
-import math
 import zlib
 
-import duckdb
-from hypothesis import given, settings
-from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_CORRECT, SF_SMOKE, mround6, run_entry, smoke_table
+from tests.conftest import SF_CORRECT
 from tmapreduce_spark.functions.scale import (
     ann_lsh_topk,
-    salted_token_counts,
     sketch_kmv_distinct,
     sketch_sample_quantiles,
+    salted_token_counts,
 )
 from tmapreduce_spark.functions.similarity import ann_topk_cosine
 from tmapreduce_spark.functions.text import wordcount
@@ -317,334 +311,3 @@ def test_kmeans_fit_converges_and_is_deterministic(spark):
     C2, hist2 = kmeans_fit(spark, SF_CORRECT, max_iter=5)
     assert np.array_equal(C1, C2)
     assert [h[1] for h in hist1] == [h[1] for h in hist2]
-
-
-def test_countmin_overestimate_invariant_for_every_token(spark):
-    """CM guarantee on the WHOLE vocabulary (the catalog query audits only
-    the top-10): estimate >= true count for every token, with the python
-    md5 mirror independently reproducing the engine's hash/cell layout."""
-    import hashlib
-    from collections import Counter
-
-    from tmapreduce_spark.functions.scale import CM_D, CM_W
-
-    wf = Counter()
-    for r in (
-        load_table(spark, SF_SMOKE, "documents")
-        .selectExpr(r"explode(split(trim(lower(text)), '\\s+')) AS tok")
-        .filter("tok != ''")
-        .groupBy("tok")
-        .agg(F.count("*").alias("c"))
-        .collect()
-    ):
-        wf[r["tok"]] = r["c"]
-
-    def col(tok: str, row: int) -> int:
-        return int(hashlib.md5(f"{tok}#{row}".encode()).hexdigest()[:8], 16) % CM_W
-
-    cells = Counter()
-    for tok, c in wf.items():
-        for r in range(CM_D):
-            cells[(r, col(tok, r))] += c
-    for tok, c in wf.items():
-        est = min(cells[(r, col(tok, r))] for r in range(CM_D))
-        assert est >= c, (tok, est, c)
-
-    # and the python mirror must agree with the engine's audit rows
-    from tmapreduce_spark.functions.scale import sketch_countmin_exact
-
-    for row in sketch_countmin_exact(spark, SF_SMOKE).collect():
-        est = min(cells[(r, col(row["tok"], r))] for r in range(CM_D))
-        assert row["cm_estimate"] == est
-        assert row["true_cnt"] == wf[row["tok"]]
-        assert row["overestimate"] >= 0
-
-
-def test_ndcg_bounds_and_perfect_ranking(spark):
-    """NDCG must land in [0, 1]; a query whose IVF list reproduces the
-    exact list rank-for-rank must score exactly 1."""
-    from tmapreduce_spark.functions.scale import ann_ivf_topk, eval_ndcg_ivf
-    from tmapreduce_spark.functions.similarity import ann_topk_cosine
-
-    rows = {r["query_id"]: r for r in eval_ndcg_ivf(spark, SF_SMOKE).collect()}
-    assert rows
-    for r in rows.values():
-        assert 0.0 <= r["ndcg"] <= 1.0
-        assert 0 <= r["n_exact_hits"] <= 10
-
-    # full independent recompute (same 1e-9 grid) from the two rankings —
-    # covers every query, and by construction a rank-for-rank match would
-    # hit the compile-time ideal DCG exactly (ndcg = 1)
-    from tmapreduce_spark.functions.scale import NDCG_DISCOUNTS, NDCG_IDCG9
-
-    exact = {}
-    for r in ann_topk_cosine(spark, SF_SMOKE).collect():
-        exact.setdefault(r["query_id"], {})[r["neighbor_id"]] = 11 - r["rank"]
-    approx = {}
-    for r in ann_ivf_topk(spark, SF_SMOKE).collect():
-        approx.setdefault(r["query_id"], {})[r["rank"]] = r["neighbor_id"]
-    for q, ranked in approx.items():
-        dcg9 = sum(
-            int(
-                exact[q].get(nb, 0) * NDCG_DISCOUNTS[rank - 1] * 1_000_000_000
-                + 0.5
-            )
-            for rank, nb in ranked.items()
-        )
-        want = math.floor(dcg9 / NDCG_IDCG9 * 1e6 + 0.5) / 1e6
-        assert rows[q]["ndcg"] == want, (q, rows[q]["ndcg"], want)
-
-
-def test_bloom_fpr_bruteforce(spark):
-    import hashlib
-
-    got = run_entry(spark, "sketch_bloom_fpr_audit").iloc[0]
-    keys = duckdb.sql(
-        f"SELECT o_orderkey FROM '{SF_SMOKE}/orders.parquet'"
-    ).df().o_orderkey.tolist()
-    n = len(keys)
-    m = 1 << ((10 * n - 1).bit_length())
-    assert got["n_keys"] == n and got["m_bits"] == m
-
-    def pos(j, key):
-        # Kirsch-Mitzenmacher: one md5 per key, pos_j = h1 + j*h2 mod m
-        d = hashlib.md5(f"bf:{key}".encode()).hexdigest()
-        h1 = int(d[:15], 16) % m
-        h2 = (int(d[15:30], 16) % m) | 1
-        return (h1 + j * h2) % m
-
-    bits = {pos(j, k) for k in keys for j in range(7)}
-    assert got["n_bits_set"] == len(bits)
-    # probe offset is derived in-plan as max(o_orderkey) + 1 (r09 ADVICE:
-    # a fixed 1e9 stops being provably-absent once TPC-H keys pass 1e9)
-    off = max(keys) + 1
-    fp = sum(1 for k in keys if all(pos(j, k + off) in bits for j in range(7)))
-    assert got["n_false_positives"] == fp
-    # the audit is calibrated: measured within 3x of theory (both nonzero
-    # at the smoke SF thanks to the 10-bits/key in-plan sizing)
-    assert got["fpr_theory"] > 0
-    assert got["n_false_positives"] > 0
-    assert got["fpr_measured"] <= 3 * got["fpr_theory"] + 1e-3
-
-
-def test_kmv_jaccard_identities(spark):
-    got = run_entry(spark, "sketch_kmv_jaccard")
-    assert len(got) == 20 * 19 // 2
-    assert (got.k_used <= 64).all() and (got.k_used > 0).all()
-    assert ((got.j_kmv >= 0) & (got.j_kmv <= 1)).all()
-    assert ((got.j_exact >= 0) & (got.j_exact <= 1)).all()
-    # the estimate is calibrated: mean abs error well under the k=64
-    # binomial noise floor ~ 1/sqrt(64) = 0.125
-    assert got.abs_err.mean() < 0.125
-    # brute-force one pair end to end
-    import hashlib
-    import re
-
-    d = smoke_table("documents")
-    sets: dict[str, set] = {}
-    for _, r in d.iterrows():
-        ts = [t for t in re.split(r"\s+", r.text.strip().lower()) if t]
-        if len(ts) < 3:
-            continue
-        sets.setdefault(r.source, set()).update(
-            " ".join(ts[i : i + 3]) for i in range(len(ts) - 2)
-        )
-    a, b = sorted(sets)[0], sorted(sets)[1]
-    j_exact = len(sets[a] & sets[b]) / len(sets[a] | sets[b])
-    def sk(src):
-        hs = sorted(
-            int(hashlib.md5(f"kmv:{s}".encode()).hexdigest()[:15], 16)
-            for s in sets[src]
-        )
-        return hs[:64]
-    sa, sb = set(sk(a)), set(sk(b))
-    merged = sorted(sa | sb)[:64]
-    j_kmv = sum(1 for h in merged if h in sa and h in sb) / len(merged)
-    row = got[(got.source_a == a) & (got.source_b == b)].iloc[0]
-    assert abs(row.j_exact - j_exact) < 2e-6
-    assert abs(row.j_kmv - j_kmv) < 2e-6
-
-
-# --- KMV core (sketch_kmv_jaccard) ------------------------------------------
-
-
-@given(st.sets(st.integers(min_value=0, max_value=10**12), min_size=1, max_size=40),
-       st.sets(st.integers(min_value=0, max_value=10**12), min_size=1, max_size=40))
-@settings(max_examples=200, deadline=None)
-def test_kmv_exact_when_union_fits(a, b):
-    """When |A union B| <= k the KMV estimate IS the exact Jaccard — the
-    sketch degrades gracefully to truth on small sets (k=64 here, inputs
-    capped at 40+40). Hashes are the identity map: KMV's guarantee is
-    about ORDER STATISTICS of the hash values, so any injective map
-    exhibits it."""
-    k = 64
-    union = sorted(a | b)[:k]
-    est = sum(1 for h in union if h in a and h in b) / len(union)
-    exact = len(a & b) / len(a | b)
-    if len(a | b) <= k:
-        assert math.isclose(est, exact)
-    else:
-        assert 0 <= est <= 1
-
-
-def test_kmv_distinct_exact_branch_at_smoke(spark):
-    """sf0.001 has 15 users/type (< k=32): the KMV sketch holds every hash,
-    so the estimate is EXACT and rel_err is 0 on every row."""
-    from tmapreduce_spark.functions.scale import sketch_kmv_distinct
-
-    for r in sketch_kmv_distinct(spark, SF_SMOKE).collect():
-        assert r["k_used"] == r["exact_users"] <= 32
-        assert r["kmv_users"] == float(r["exact_users"])
-        assert r["rel_err"] == 0.0
-
-
-def test_quantile_sketch_full_sample_at_smoke(spark):
-    """sf0.001 orders (~500/status) fit entirely in the k=1024 sample, so
-    est_value == exact_value on every row (the sample IS the partition)."""
-    from tmapreduce_spark.functions.scale import sketch_sample_quantiles
-
-    for r in sketch_sample_quantiles(spark, SF_SMOKE).collect():
-        assert r["est_value"] == r["exact_value"], r
-        assert r["rel_err"] == 0.0
-
-
-def test_hll_registers_are_md5_derived_and_engine_neutral(duck):
-    """The HLL oracle recomputes the Spark estimate because the registers
-    derive from md5, not an engine sketch: pin one register's value by
-    recomputing rho by hand for a single user hash."""
-    h, idx, w = duck.execute(
-        "SELECT CAST(('0x' || substring(md5('hll:' || CAST(7 AS VARCHAR)), 1, 10)) AS BIGINT) AS h,"
-        " CAST(('0x' || substring(md5('hll:' || CAST(7 AS VARCHAR)), 1, 10)) AS BIGINT) % 256,"
-        " CAST(('0x' || substring(md5('hll:' || CAST(7 AS VARCHAR)), 1, 10)) AS BIGINT) // 256"
-    ).fetchone()
-    assert h == idx + 256 * w
-    rho_sql = duck.execute(
-        f"SELECT CASE WHEN {w} = 0 THEN 33 ELSE 33 - length(bin(CAST({w} AS BIGINT))) END"
-    ).fetchone()[0]
-    rho_py = 33 - w.bit_length() if w else 33
-    assert rho_sql == rho_py
-
-
-def _h_int(prefix: str, val, nhex: int) -> int:
-    import hashlib
-
-    return int(hashlib.md5(f"{prefix}{val}".encode()).hexdigest()[:nhex], 16)
-
-
-def test_kmv_distinct_brute_force_recompute(spark):
-    """Recompute every sketch_kmv_distinct output value in pure Python from
-    the parquet fixture — exact equality, including the estimator branch's
-    one double division."""
-    import duckdb
-
-    from tmapreduce_spark.functions.scale import (
-        HASH60_MAX,
-        KMV_DISTINCT_K,
-        sketch_kmv_distinct,
-    )
-
-    got = {r["event_type"]: r for r in sketch_kmv_distinct(spark, SF_SMOKE).collect()}
-    con = duckdb.connect()
-    raw = con.execute(
-        f"SELECT event_type, user_id FROM '{SF_SMOKE}/events.parquet'"
-    ).fetchall()
-    by_type: dict = {}
-    n_events: dict = {}
-    for t, u in raw:
-        by_type.setdefault(t, set()).add(u)
-        n_events[t] = n_events.get(t, 0) + 1
-    assert set(got) == set(by_type)
-    for t, users in by_type.items():
-        hs = sorted(_h_int("adk:", u, 15) for u in users)
-        k_used = min(KMV_DISTINCT_K, len(hs))
-        h_k = hs[k_used - 1]
-        if k_used < KMV_DISTINCT_K:
-            est = float(k_used)
-        else:
-            est = (KMV_DISTINCT_K - 1) * float(HASH60_MAX) / float(h_k)
-        r = got[t]
-        assert r["n_events"] == n_events[t]
-        assert r["exact_users"] == len(users)
-        assert r["k_used"] == k_used
-        assert r["kmv_users"] == mround6(est)
-        assert r["rel_err"] == mround6(abs(est - len(users)) / len(users))
-
-
-def test_sample_quantiles_brute_force_recompute(spark):
-    """Recompute every sketch_sample_quantiles row in pure Python: same
-    bottom-k-by-hash sample, same type-1 discrete index, raw doubles."""
-    import duckdb
-    import math
-
-    from tmapreduce_spark.functions.scale import QSK_K, sketch_sample_quantiles
-
-    got = {
-        (r["o_orderstatus"], r["pct"]): r
-        for r in sketch_sample_quantiles(spark, SF_SMOKE).collect()
-    }
-    con = duckdb.connect()
-    raw = con.execute(
-        f"SELECT o_orderstatus, o_totalprice, o_orderkey FROM '{SF_SMOKE}/orders.parquet'"
-    ).fetchall()
-    by_st: dict = {}
-    for st, v, k in raw:
-        by_st.setdefault(st, []).append((v, k))
-    assert {s for s, _ in got} == set(by_st)
-    for st, rows in by_st.items():
-        samp = sorted(rows, key=lambda vk: (_h_int("qsk:", vk[1], 15), vk[1]))[:QSK_K]
-        samp_sorted = sorted(samp)          # (v, okey) — value then key
-        full_sorted = sorted(rows)
-        for tag, q in (("p50", 0.5), ("p90", 0.9), ("p99", 0.99)):
-            i_s = int(math.floor((len(samp_sorted) - 1) * q))
-            i_f = int(math.floor((len(full_sorted) - 1) * q))
-            est, exact = samp_sorted[i_s][0], full_sorted[i_f][0]
-            r = got[(st, tag)]
-            assert r["sample_n"] == len(samp_sorted)
-            assert r["est_value"] == est
-            assert r["exact_value"] == exact
-            assert r["rel_err"] == mround6(abs(est - exact) / exact)
-
-
-def test_hll_md5_merge_brute_force_recompute(spark):
-    """Recompute the full HLL pipeline in pure Python — registers, daily
-    max-merge, exact harmonic numerator, both estimator branches — and
-    match the Spark entry exactly."""
-    import duckdb
-    import math
-
-    from tmapreduce_spark.functions.scale import _HLL_A, sketch_hll_md5_merge
-
-    got = {r["event_type"]: r for r in sketch_hll_md5_merge(spark, SF_SMOKE).collect()}
-    con = duckdb.connect()
-    raw = con.execute(
-        f"SELECT event_type, CAST(ts AS DATE) AS day, user_id"
-        f" FROM '{SF_SMOKE}/events.parquet'"
-    ).fetchall()
-    regs: dict = {}
-    days: dict = {}
-    users: dict = {}
-    n_events: dict = {}
-    for t, day, u in raw:
-        n_events[t] = n_events.get(t, 0) + 1
-        days.setdefault(t, set()).add(day)
-        users.setdefault(t, set()).add(u)
-        h = _h_int("hll:", u, 10)
-        idx, w = h % 256, h // 256
-        rho = 33 - w.bit_length() if w else 33
-        key = (t, idx)
-        regs[key] = max(regs.get(key, 0), rho)  # daily->overall max merges
-    A = float(_HLL_A)
-    for t, r in got.items():
-        m = {i: v for (tt, i), v in regs.items() if tt == t}
-        v_zero = 256 - len(m)
-        num = sum(1 << (33 - v) for v in m.values()) + v_zero * (1 << 33)
-        raw_est = A / float(num)
-        est = 256.0 * math.log(256.0 / v_zero) if (raw_est <= 640.0 and v_zero > 0) else raw_est
-        exact = len(users[t])
-        assert r["n_days"] == len(days[t])
-        assert r["n_events"] == n_events[t]
-        assert r["exact_users"] == exact
-        assert r["v_zero"] == v_zero
-        assert r["harmonic_num"] == num
-        assert r["hll_users"] == mround6(est)
-        assert r["rel_err"] == mround6(abs(est - exact) / exact)

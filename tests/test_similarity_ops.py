@@ -3,20 +3,17 @@
 by hyperplane LSH bucket so the intra-block quadratic stays bounded when one
 label dominates, with the DuckDB oracle applying the identical rule. The
 at-rest LSH-bucketed ANN layout (``layout_ann_bucketed``) against a
-brute-force recompute, the residue-class bucket expression, and the
-embedding entries (silhouette, MMR rerank, JL distortion, hard negatives,
-rank Kendall) against numpy recomputes."""
+brute-force recompute."""
 
 from __future__ import annotations
 
 import math
 
-import duckdb
 import numpy as np
 import pandas as pd
 import pytest
 
-from tests.conftest import SF_SMOKE, catalog, jobs_in_group, run_entry
+from tests.conftest import SF_SMOKE, jobs_in_group
 from tmapreduce_spark.functions.similarity import (
     QUANT,
     _buckets_of,
@@ -416,306 +413,3 @@ def test_head_vectors_is_one_job_in_vec_id_order(spark):
         assert len(ids) == (len(k) if isinstance(k, list) else k)
         np.testing.assert_array_equal(Q, quantize([r["embedding"] for r in rows]))
         np.testing.assert_array_equal(nrm, l2_norms(Q))
-
-
-def test_kendall_matches_python_recompute(spark):
-    exact = catalog()["ann_topk_cosine"].fn(spark, SF_SMOKE).toPandas()
-    approx = catalog()["ann_ivf_topk"].fn(spark, SF_SMOKE).toPandas()
-    got = run_entry(spark, "eval_rank_kendall").set_index("query_id")
-    e = {
-        (q, n): r
-        for q, n, r in zip(exact["query_id"], exact["neighbor_id"], exact["rank"])
-    }
-    for q, g in approx.groupby("query_id"):
-        common = [
-            (int(r["rank"]), e[(q, r["neighbor_id"])])
-            for _, r in g.iterrows()
-            if (q, r["neighbor_id"]) in e
-        ]
-        common.sort()
-        conc = disc = 0
-        for i in range(len(common)):
-            for j in range(i + 1, len(common)):
-                if common[i][1] < common[j][1]:
-                    conc += 1
-                elif common[i][1] > common[j][1]:
-                    disc += 1
-        assert got.loc[q, "n_common"] == len(common)
-        assert got.loc[q, "concordant"] == conc
-        assert got.loc[q, "discordant"] == disc
-        if len(common) >= 2:
-            tau = (conc - disc) / (len(common) * (len(common) - 1) / 2)
-            assert abs(got.loc[q, "tau"] - tau) < 2e-6
-
-
-# ---------------------------------------------------------------------------
-# embedding_silhouette
-# ---------------------------------------------------------------------------
-
-
-def test_silhouette_matches_numpy_recompute(spark):
-    """Independent float64/numpy recompute of the centroid silhouette (same
-    quantization grid) must agree to the rounding tolerance per label."""
-    import duckdb
-    import numpy as np
-
-    got = run_entry(spark, "embedding_silhouette").set_index("label")
-    raw = duckdb.sql(
-        f"SELECT vec_id, label, embedding FROM '{SF_SMOKE}/embeddings.parquet'"
-    ).df()
-    X = np.floor(
-        np.stack(raw["embedding"].to_numpy()).astype(np.float64) * 1_000_000 + 0.5
-    ).astype(np.int64)
-    labels = sorted(raw["label"].unique())
-    C = np.zeros((len(labels), X.shape[1]), dtype=np.int64)
-    for i, lab in enumerate(labels):
-        sub = X[raw["label"].to_numpy() == lab]
-        C[i] = np.floor(sub.sum(axis=0) / len(sub) + 0.5).astype(np.int64)
-    own = raw["label"].map({lab: i for i, lab in enumerate(labels)}).to_numpy()
-    diff = X[:, None, :] - C[None, :, :]
-    d2 = np.einsum("ijk,ijk->ij", diff, diff)
-    rows = np.arange(len(raw))
-    a2 = d2[rows, own].astype(np.float64)
-    d2m = d2.copy()
-    d2m[rows, own] = np.iinfo(np.int64).max
-    b2 = d2m.min(axis=1).astype(np.float64)
-    s = (np.sqrt(b2) - np.sqrt(a2)) / np.sqrt(np.maximum(a2, b2))
-    for i, lab in enumerate(labels):
-        mask = own == i
-        row = got.loc[lab]
-        assert row["n"] == mask.sum()
-        assert row["n_misassigned"] == int((b2[mask] < a2[mask]).sum())
-        assert math.isclose(row["mean_silhouette"], s[mask].mean(), abs_tol=2e-6)
-
-
-def test_silhouette_bounded_and_sane(spark):
-    got = run_entry(spark, "embedding_silhouette")
-    assert (got["mean_silhouette"] <= 1.0).all()
-    assert (got["mean_silhouette"] >= -1.0).all()
-    assert got["n"].sum() == 500  # every vector scored exactly once
-
-
-def test_silhouette_is_one_arrow_pass(spark):
-    plan = (
-        catalog()["embedding_silhouette"]
-        .fn(spark, SF_SMOKE)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert plan.count("MapInPandas") == 1
-    assert "CartesianProduct" not in plan  # the L-fan-out lives in numpy, not the plan
-
-
-# ---------------------------------------------------------------------------
-# embedding_mmr_rerank
-# ---------------------------------------------------------------------------
-
-
-def test_mmr_rerank_greedy_invariants(spark):
-    import numpy as np
-
-    from tmapreduce_spark.functions.similarity import (
-        MMR_CANDIDATES,
-        MMR_PICKS,
-        QUANT,
-    )
-
-    got = run_entry(spark, "embedding_mmr_rerank").sort_values("pick_order")
-    assert len(got) == MMR_PICKS
-    assert got["pick_order"].tolist() == list(range(1, MMR_PICKS + 1))
-    assert got["vec_id"].nunique() == MMR_PICKS
-    # pick 1 is pure relevance: its mmr is 0.7 * its relevance
-    p1 = got.iloc[0]
-    assert abs(p1["mmr_score"] - 0.7 * p1["relevance"]) < 1e-9
-    # pick 1 has the max relevance of all picks
-    assert p1["relevance"] == got["relevance"].max()
-    # full python recompute of the greedy sequence from raw embeddings
-    import duckdb
-
-    rows = duckdb.sql(
-        f"SELECT vec_id, embedding FROM '{SF_SMOKE}/embeddings.parquet'"
-    ).fetchall()
-    ids = np.array([r[0] for r in rows], dtype=np.int64)
-    E = np.floor(
-        np.stack([np.asarray(r[1], dtype=np.float64) for r in rows]) * QUANT + 0.5
-    ).astype(np.int64)
-    nrm = np.sqrt(np.einsum("ij,ij->i", E, E).astype(np.float64))
-    qi = int(np.where(ids == 0)[0][0])
-    dots = (E @ E[qi]).astype(np.float64)
-    rel_u = np.floor(dots / (nrm * nrm[qi]) * 1e6 + 0.5).astype(np.int64)
-    order = sorted(
-        [(int(-rel_u[i]), int(ids[i])) for i in range(len(ids)) if ids[i] != 0]
-    )[:MMR_CANDIDATES]
-    cand = [v for _, v in order]
-    relm = {v: -r for r, v in order}
-    pos = {int(v): i for i, v in enumerate(ids)}
-    picked = []
-    remaining = sorted(cand)
-    for _ in range(MMR_PICKS):
-        best = None
-        for d in remaining:
-            # max over picked sims, UNclamped — a negative max is a diversity
-            # bonus for anti-similar docs (matches the engine and the oracle)
-            sus = []
-            for p in picked:
-                g = float(E[pos[d]] @ E[pos[p]])
-                sus.append(int(np.floor(g / (nrm[pos[d]] * nrm[pos[p]]) * 1e6 + 0.5)))
-            ms = max(sus) if sus else 0
-            m10 = 7 * relm[d] - 3 * ms
-            if best is None or (-m10, d) < best[0]:
-                best = ((-m10, d), d)
-        picked.append(best[1])
-        remaining.remove(best[1])
-    assert got["vec_id"].tolist() == picked
-
-
-def test_hard_negatives_match_numpy_bruteforce(spark):
-    """retrieval_hard_negatives must equal a numpy brute-force recompute:
-    per anchor, the top-10 cosine neighbors among DIFFERENT-label vectors
-    on the same quantized-int64 grid with the same (cosine desc, id asc)
-    tiebreak."""
-    import numpy as np
-
-    from tmapreduce_spark.functions.similarity import HN_TOP_K, N_QUERIES, QUANT
-    from tmapreduce_spark.sources.catalog import load_table
-
-    got = run_entry(spark, "retrieval_hard_negatives")
-    rows = (
-        load_table(spark, SF_SMOKE, "embeddings")
-        .select("vec_id", "embedding", "label")
-        .collect()
-    )
-    ids = np.array([r["vec_id"] for r in rows])
-    labs = np.array([r["label"] for r in rows])
-    M = np.floor(
-        np.stack([np.asarray(r["embedding"], dtype=np.float64) for r in rows])
-        * QUANT + 0.5
-    ).astype(np.int64)
-    nrm = np.sqrt(np.einsum("ij,ij->i", M, M).astype(np.float64))
-    for qi in np.where(ids < N_QUERIES)[0]:
-        cos = (M @ M[qi]).astype(np.float64) / (nrm * nrm[qi])
-        cos = np.floor(cos * 1e6 + 0.5) / 1e6
-        cand = [
-            (-cos[j], ids[j]) for j in range(len(ids)) if labs[j] != labs[qi]
-        ]
-        want = sorted(cand)[:HN_TOP_K]
-        mine = got[got["query_id"] == ids[qi]].sort_values("rank")
-        assert len(mine) == len(want)
-        assert mine["neighbor_id"].tolist() == [v for _, v in want]
-        assert all(mine["query_label"] != mine["neighbor_label"])
-        assert np.allclose(mine["cosine"].to_numpy(), [-c for c, _ in want])
-
-
-def test_jl_distortion_matches_numpy(spark):
-    import numpy as np
-
-    from tmapreduce_spark.functions.similarity import (
-        _JL_SIGNS,
-        JL_K,
-        JL_SAMPLE,
-    )
-
-    got = run_entry(spark, "embedding_jl_distortion").iloc[0]
-    emb = duckdb.sql(
-        f"""SELECT embedding FROM '{SF_SMOKE}/embeddings.parquet'
-            WHERE vec_id < {JL_SAMPLE} ORDER BY vec_id"""
-    ).df()
-    x = np.floor(np.stack(emb.embedding.values).astype(np.float64) * 1e6 + 0.5)
-    x = x.astype(np.int64)
-    s = np.array(_JL_SIGNS, dtype=np.int64)  # (k, dim)
-    y = x @ s.T  # (n, k) exact ints (magnitudes << 2^53 via int64 matmul)
-    n = x.shape[0]
-    ratios = []
-    for a in range(n):
-        dx2 = ((x[a] - x[a + 1 :]) ** 2).sum(axis=1)
-        dy2 = ((y[a] - y[a + 1 :]) ** 2).sum(axis=1)
-        keep = dx2 > 0
-        r = dy2[keep] / (JL_K * dx2[keep])
-        ratios.extend(np.floor(r * 1e6 + 0.5).astype(np.int64).tolist())
-    ratios = np.array(ratios, dtype=np.int64)
-    assert got["n_pairs"] == len(ratios) == n * (n - 1) // 2
-    assert got["min_ratio"] == ratios.min() / 1e6
-    assert got["max_ratio"] == ratios.max() / 1e6
-    mean = np.floor(ratios.sum() / 1e6 / len(ratios) * 1e6 + 0.5) / 1e6
-    assert got["mean_ratio"] == mean
-    # JL sanity: the sign projection is unbiased, so the mean concentrates
-    assert 0.85 <= got["mean_ratio"] <= 1.15
-
-
-def _hof_bucket(col: str) -> str:
-    from tmapreduce_spark.functions.similarity import N_PLANES
-
-    plane_dots = ", ".join(
-        f"aggregate(sequence(0, size({col}) - 1), CAST(0 AS BIGINT), "
-        f"(acc, i) -> acc + {col}[i] * CAST((i * 31 + {j} * 17) % 7 - 3 AS BIGINT))"
-        for j in range(N_PLANES)
-    )
-    return (
-        f"aggregate(zip_with(array({plane_dots}), sequence(0, {N_PLANES - 1}), "
-        "(d, j) -> IF(d >= 0, shiftleft(CAST(1 AS BIGINT), j), CAST(0 AS BIGINT))), "
-        "CAST(0 AS BIGINT), (acc, v) -> acc + v)"
-    )
-
-
-def test_residue_bucket_expr_matches_hof_and_numpy(spark):
-    """Fast path (dim 64): residue unroll == HOF fold == numpy _buckets_of
-    on random int64 rows spanning negative/positive components."""
-    from pyspark.sql import functions as F
-
-    from tmapreduce_spark.functions.similarity import (
-        _buckets_of,
-        residue_bucket_expr,
-    )
-
-    rng = np.random.default_rng(13)
-    rows = [(i, rng.integers(-(10**6), 10**6, 64).astype("int64").tolist())
-            for i in range(128)]
-    df = spark.createDataFrame(rows, "id bigint, qe array<bigint>")
-    expr = residue_bucket_expr("qe", 64, _hof_bucket("qe"))
-    got = {
-        r["id"]: (r["fast"], r["hof"])
-        for r in df.select(
-            "id",
-            F.expr(expr).alias("fast"),
-            F.expr(_hof_bucket("qe")).alias("hof"),
-        ).collect()
-    }
-    Q = np.stack([np.array(q, dtype=np.int64) for _, q in rows])
-    want = _buckets_of(Q).tolist()
-    for (i, _), w in zip(rows, want):
-        assert got[i] == (w, w), (i, got[i], w)
-
-
-def test_residue_bucket_expr_non64_width_takes_fallback(spark):
-    """A non-64 width must route through the HOF fallback and still match
-    numpy — the size() CASE guard is what makes the unroll safe."""
-    from pyspark.sql import functions as F
-
-    from tmapreduce_spark.functions.similarity import (
-        _buckets_of,
-        residue_bucket_expr,
-    )
-
-    rng = np.random.default_rng(31)
-    rows = [(i, rng.integers(-(10**6), 10**6, 24).astype("int64").tolist())
-            for i in range(32)]
-    df = spark.createDataFrame(rows, "id bigint, qe array<bigint>")
-    expr = residue_bucket_expr("qe", 64, _hof_bucket("qe"))
-    got = {r["id"]: r["b"] for r in df.select("id", F.expr(expr).alias("b")).collect()}
-    Q = np.stack([np.array(q, dtype=np.int64) for _, q in rows])
-    want = _buckets_of(Q).tolist()
-    for (i, _), w in zip(rows, want):
-        assert got[i] == w, (i, got[i], w)
-
-
-def test_residue_bucket_expr_rejects_dim_below_seven():
-    """Below width 7 some residue class has no term, which would render
-    an empty ``()`` sum; the builder refuses with a Python error instead of
-    leaving a Catalyst parse failure for plan time."""
-    from tmapreduce_spark.functions.similarity import residue_bucket_expr
-
-    for dim in (0, 1, 6):
-        with pytest.raises(ValueError, match="dim >= 7"):
-            residue_bucket_expr("qe", dim, "0")
-    assert "()" not in residue_bucket_expr("qe", 7, "0")

@@ -1,7 +1,5 @@
 """Source/sink coverage: KV ingestion from JSON/CSV/text (the REST-payload
-analog, FIXTURES §1), parquet write round-trips, partitioned writes, the
-Python DataSource (``sources/pysource.py``) and the bucketed layouts
-(``sources/bucketing.py``)."""
+analog, FIXTURES §1), parquet write round-trips, partitioned writes."""
 
 from __future__ import annotations
 
@@ -10,11 +8,10 @@ import json
 import os
 import shutil
 
-import duckdb
 import pytest
 from pyspark.sql import DataFrame, SparkSession
 
-from tests.conftest import SF_SMOKE, catalog, jobs_in_group, run_entry
+from tests.conftest import SF_SMOKE, jobs_in_group
 from tmapreduce_spark.sources.catalog import TABLES, load_table, parquet_schema
 
 KVS = [("1", "alpha"), ("2", "bravo"), ("3", "charlie")]
@@ -442,149 +439,3 @@ def test_launch_stream_restart_resumes_exactly_once(spark, tmp_path):
         _drain_launch_stream(spark, spool_dir, protocol, out, ckpt)
         third = spark.read.parquet(out).collect()
         assert len(third) == len(second), protocol
-
-
-# ---------------------------------------------------------------------------
-# source_python_custom (Spark 4 Python DataSource connector)
-# ---------------------------------------------------------------------------
-
-
-def test_synthgrid_source_partitioned_scan(spark):
-    """The connector must produce the requested split surface (8 partitions)
-    and exactly the deterministic rows — distributed generation, no driver
-    materialization."""
-    from tmapreduce_spark.sources.pysource import (
-        SYNTH_HASH,
-        SYNTH_ROWS,
-        SYNTH_SPACE,
-        read_synthgrid,
-    )
-
-    df = read_synthgrid(spark)
-    assert df.rdd.getNumPartitions() == 8
-    assert df.count() == SYNTH_ROWS
-    sample = {r["i"]: (r["h"], r["label"]) for r in df.filter("i < 20").collect()}
-    for i in range(20):
-        assert sample[i] == (i * SYNTH_HASH % SYNTH_SPACE, f"g{i % 7}")
-
-
-def test_synthgrid_source_option_override(spark):
-    from tmapreduce_spark.sources.pysource import read_synthgrid
-
-    df = read_synthgrid(spark, num_rows=1000, num_parts=3)
-    assert df.rdd.getNumPartitions() == 3
-    assert df.count() == 1000
-    # contiguous non-overlapping splits cover [0, n) exactly once
-    assert df.select("i").distinct().count() == 1000
-
-
-def test_bucketed_join_entry_plan_is_exchange_free(spark):
-    """The catalog entry's JOIN subplan must actually run bucket-to-bucket:
-    SortMergeJoin present, zero Exchange touching the join (the final
-    5-row priority rollup may exchange — the join key partitioning does
-    not serve the priority key)."""
-    from tmapreduce_spark.plans.explain import physical_plan
-
-    df = catalog()["layout_bucketed_join"].fn(spark, SF_SMOKE)
-    plan = physical_plan(df)
-    # tree section only (details re-list every node, including the rollup
-    # exchange, and would false-positive a substring check)
-    tree = plan.split("\n\n")[0]
-    assert "SortMergeJoin" in tree
-    below_join = tree[tree.index("SortMergeJoin"):]
-    assert "Exchange" not in below_join, below_join
-    # the one exchange in the whole plan is the 5-row priority rollup,
-    # ABOVE the join — the join key itself never reshuffles
-    assert tree.count("Exchange") == 1, tree
-    got = df.toPandas().sort_values("o_orderpriority", ignore_index=True)
-    want = duckdb.sql(
-        f"""SELECT o_orderpriority, count(*) n
-            FROM '{SF_SMOKE}/lineitem.parquet'
-            JOIN '{SF_SMOKE}/orders.parquet' ON l_orderkey = o_orderkey
-            GROUP BY 1 ORDER BY 1"""
-    ).df()
-    assert list(got.n_items) == list(want.n)
-
-
-def test_bucketed_groupby_equals_plain_groupby(spark):
-    got = run_entry(spark, "layout_bucketed_groupby").set_index("n_items")
-    li = duckdb.sql(
-        f"""SELECT l_orderkey, count(*) AS n_items,
-                   sum(CAST(floor(l_extendedprice * (1 - l_discount) * 1000000
-                                  + 0.5) AS BIGINT)) AS rev_micro
-            FROM '{SF_SMOKE}/lineitem.parquet' GROUP BY l_orderkey"""
-    ).df()
-    hist = li.groupby("n_items").agg(n=("l_orderkey", "size"),
-                                     rev=("rev_micro", "sum"))
-    assert got["n_orders"].sum() == li.shape[0]
-    for k, row in hist.iterrows():
-        assert got.loc[k, "n_orders"] == row["n"]
-        # presentation: micro sum -> half-up at cents grid -> dollars
-        want = ((row["rev"] + 5000) // 10000) / 100
-        assert got.loc[k, "revenue"] == want
-
-
-def test_synthgrid_filter_pushdown(spark):
-    """Spark 4.1 Python DataSource filter pushdown: range predicates on the
-    index column must reach the reader (PushedFilters in the plan), narrow
-    the GENERATION bounds (unit-level), leave unsupported predicates to
-    Spark, and not change any result."""
-    from pyspark.sql.datasource import (
-        EqualTo,
-        GreaterThanOrEqual,
-        IsNotNull,
-        LessThan,
-    )
-
-    from tmapreduce_spark.plans import physical_plan
-    from tmapreduce_spark.sources.pysource import SynthGridReader, read_synthgrid
-
-    # unit: accepted filters narrow bounds and are consumed; others returned
-    r = SynthGridReader({})
-    leftover = list(
-        r.pushFilters(
-            [GreaterThanOrEqual(("i",), 100), LessThan(("i",), 200),
-             IsNotNull(("i",)), EqualTo(("label",), "g1")]
-        )
-    )
-    assert r.lo_bound == 100 and r.hi_bound == 200
-    assert {type(f).__name__ for f in leftover} == {"IsNotNull", "EqualTo"}
-    parts = r.partitions()
-    assert parts[0].lo == 100 and parts[-1].hi == 200
-
-    # end-to-end: plan shows PushedFilters; results equal the unpruned scan
-    df = read_synthgrid(spark).filter("i >= 49000 AND i < 49500 AND h % 2 = 0")
-    plan = physical_plan(df)
-    assert "PushedFilters: [GreaterThanOrEqual(i,49000), LessThan(i,49500)]" in plan
-    got = sorted(r.i for r in df.collect())
-    want = sorted(
-        r.i for r in read_synthgrid(spark).collect()
-        if 49000 <= r.i < 49500 and r.h % 2 == 0
-    )
-    assert got == want and len(got) == 250
-
-
-def test_synthgrid_arrow_path_equals_row_path(spark):
-    """The connector's Arrow fast path (vectorized RecordBatch per split)
-    must be byte-identical to the row-iterator form, compose with filter
-    pushdown, and keep the oracle-paired entry unchanged."""
-    from tmapreduce_spark.sources.pysource import SynthGridDataSource
-
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    spark.dataSource.register(SynthGridDataSource)
-
-    def rd(arrow):
-        return (
-            spark.read.format("synthgrid")
-            .option("num_rows", "20000")
-            .option("arrow", "true" if arrow else "false")
-            .load()
-        )
-
-    a = sorted(map(tuple, rd(True).collect()))
-    b = sorted(map(tuple, rd(False).collect()))
-    assert a == b and len(a) == 20000
-    # pushdown composes with the Arrow batches
-    fa = sorted(map(tuple, rd(True).filter("i >= 19990").collect()))
-    fb = sorted(map(tuple, rd(False).filter("i >= 19990").collect()))
-    assert fa == fb and len(fa) == 10

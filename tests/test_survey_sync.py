@@ -241,15 +241,3 @@ def test_committed_window_skips_the_newest_record():
     green = {n for n, row in newest.items() if all(row.get(k) is True for k in _GREEN)}
     head = list(build_catalog())[:50]
     assert not set(head) & green, sorted(set(head) & green)
-
-
-def test_test_modules_are_named_by_family_not_round():
-    """Tests are filed by operator family: the module whose ``QUERIES``
-    defines the entry a test runs, or the module a tested helper comes from.
-    No test module is named after the round or wave that added it."""
-    stale = sorted(
-        p.name
-        for p in Path(__file__).parent.glob("test_*.py")
-        if re.search(r"round\d|wave\d", p.stem)
-    )
-    assert not stale, stale

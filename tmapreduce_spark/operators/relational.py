@@ -3075,7 +3075,7 @@ SELECT event_type AS tag,
        CAST(count(*) AS BIGINT) AS n_bad_casts,
        -- Spark-version pin (r06 advice): this literal is Spark 4.1's
        -- schema_of_variant rendering for the constant variant shape built
-       -- above. tests/test_relational_ops.py::test_variant_roundtrip_and_
+       -- above. tests/test_round6f_ops.py::test_variant_roundtrip_and_
        -- introspection asserts Spark's LIVE schema_of_variant output equals
        -- this same string, so a Spark upgrade that changes the rendering
        -- fails that test loudly (engine fine, literal stale) instead of

@@ -713,7 +713,7 @@ QUERIES: dict[str, QuerySpec] = {
 # At warehouse scale derive the offset as the next power of 10 above
 # max(o_orderkey) in BOTH twins (it is a literal in the oracle SQL, so bake
 # the derived value into both at plan-build time). A fixture guard pins the
-# bound: tests/test_tpch_extra_ops.py::test_cdc_insert_offset_clears_max_key.
+# bound: tests/test_round8_ops.py::test_cdc_insert_offset_clears_max_key.
 CDC_INSERT_KEY_OFFSET = 100_000_000
 
 
